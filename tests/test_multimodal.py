@@ -1391,13 +1391,11 @@ def test_m3_video_codec_cross_container_equality(spark):
     """m3's two lossless containers of the same luma planes must produce
     bit-identical rollup rows; MJPEG of the same frames rides the same
     pipeline and lands close (lossy), pinned approximately."""
-    from tts_etl_pipeline_spark.operators.multimodal import (
-        QUERIES as MMQ,
-        _encode_y4m,
-        _m3_clips,
-    )
+    from tts_etl_pipeline_spark.operators.multimodal import _encode_y4m, _m3_clips
+    from tts_etl_pipeline_spark.registry import all_queries
 
-    rows = {r["container"]: r for r in MMQ["m3_video_codec_features"](spark, "").collect()}
+    m3 = all_queries()["m3_video_codec_features"]
+    rows = {r["container"]: r for r in m3(spark, "").collect()}
     assert set(rows) == {"avi", "y4m"}
     a, y = rows["avi"], rows["y4m"]
     assert (a["avg_luma_mean"], a["avg_luma_std"], a["n_sampled_frames"]) == (

@@ -609,6 +609,32 @@ def test_unpartitioned_windows_annotated():
     )
 
 
+def test_checkpoints_and_scratch_dirs_go_through_the_helpers():
+    """functions/checkpoints.py is the one discipline for intermediates:
+    `materialize` holds the package's only localCheckpoint call (so a
+    configured checkpoint dir reaches every query) and operators get temp
+    dirs only from `scratch_dir` (so a failed write cannot leak one)."""
+    import pathlib
+
+    import tts_etl_pipeline_spark
+
+    pkg = pathlib.Path(tts_etl_pipeline_spark.__file__).parent
+    offenders = []
+    for py in sorted(pkg.rglob("*.py")):
+        rel = py.relative_to(pkg).as_posix()
+        for i, line in enumerate(py.read_text().splitlines()):
+            if line.lstrip().startswith("#"):
+                continue
+            if ".localCheckpoint(" in line and rel != "functions/checkpoints.py":
+                offenders.append(f"{rel}:{i + 1}: {line.strip()}")
+            if "tempfile.mkdtemp(" in line and rel.startswith("operators/"):
+                offenders.append(f"{rel}:{i + 1}: {line.strip()}")
+    assert not offenders, (
+        "use functions.checkpoints.materialize / scratch_dir instead:\n"
+        + "\n".join(offenders)
+    )
+
+
 def test_r3_salted_join_widens_key_and_keeps_sum_exact(spark, sf_dir):
     """r3 must genuinely join on the WIDENED (user_id, salt) key — the
     whole point of salting — and must not broadcast the replicated dim by
@@ -738,23 +764,21 @@ def test_j2_bucketed_join_no_exchange_below_join(spark, sf_dir):
         spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
 
 
-def test_j3_partition_filter_prunes_at_metadata_level(spark, sf_dir):
+def test_j3_partition_filter_prunes_at_metadata_level(spark, sf_dir, tmp_path):
     """The one-day predicate must be consumed ENTIRELY by partition
     pruning: PartitionFilters carries the event_date equality and the
     data-level PushedFilters stays empty (no row-group skipping needed —
     unmatched partition directories are never even listed)."""
     from tts_etl_pipeline_spark.operators.relational import _j3_pruned_scan
 
-    one_day, cleanup = _j3_pruned_scan(spark, sf_dir)
-    try:
-        plan = physical_plan(one_day.groupBy("event_type").count())
-        m = re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
-        assert m and "event_date" in m.group(1), plan
-        assert not pushed_filters(one_day), plan
-    finally:
-        cleanup()
+    one_day = _j3_pruned_scan(spark, sf_dir, str(tmp_path))
+    plan = physical_plan(one_day.groupBy("event_type").count())
+    m = re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
+    assert m and "event_date" in m.group(1), plan
+    assert not pushed_filters(one_day), plan
 
-def test_j4_dynamic_partition_pruning_subquery_in_fact_scan(spark, sf_dir):
+
+def test_j4_dynamic_partition_pruning_subquery_in_fact_scan(spark, sf_dir, tmp_path):
     """The weekend predicate lives on the DIM side, so the fact scan cannot
     be pruned statically — the plan must instead carry a DPP subquery
     (`dynamicpruning#N`) inside PartitionFilters, evaluated from the
@@ -762,14 +786,11 @@ def test_j4_dynamic_partition_pruning_subquery_in_fact_scan(spark, sf_dir):
     (DPP's reuse-broadcast mode — the subquery costs nothing extra)."""
     from tts_etl_pipeline_spark.operators.relational import _j4_dpp_join
 
-    joined, cleanup = _j4_dpp_join(spark, sf_dir)
-    try:
-        plan = physical_plan(joined.groupBy("event_type").count())
-        m = re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
-        assert m and "dynamicpruning" in m.group(1), plan
-        assert "BroadcastHashJoin" in plan, plan
-    finally:
-        cleanup()
+    joined = _j4_dpp_join(spark, sf_dir, str(tmp_path))
+    plan = physical_plan(joined.groupBy("event_type").count())
+    m = re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
+    assert m and "dynamicpruning" in m.group(1), plan
+    assert "BroadcastHashJoin" in plan, plan
 
 
 def test_q23_one_fact_scan_one_fact_grain_exchange(spark, sf_dir):
@@ -1080,8 +1101,8 @@ def test_rebalance_scan_fired_path_and_guard(spark, tmp_path):
     from tts_etl_pipeline_spark.plans.inspect import count_shuffles, physical_plan
     from tts_etl_pipeline_spark.sources.tables import (
         REBALANCE_MIN_BYTES,
-        _natural_splits,
         rebalance_scan,
+        table_stats,
     )
 
     sf = str(tmp_path)
@@ -1092,7 +1113,7 @@ def test_rebalance_scan_fired_path_and_guard(spark, tmp_path):
         .coalesce(1)
         .write.parquet(os.path.join(sf, "big.parquet"))
     )
-    splits, nbytes = _natural_splits(sf, "big")
+    nbytes, splits, _ = table_stats(sf, "big")
     assert nbytes > REBALANCE_MIN_BYTES and splits == 1
     df = spark.read.parquet(os.path.join(sf, "big.parquet"))
     per_task = 128 << 10
@@ -1115,7 +1136,7 @@ def test_rebalance_scan_fired_path_and_guard(spark, tmp_path):
         .coalesce(1)
         .write.parquet(os.path.join(sf, "small.parquet"))
     )
-    _, small_bytes = _natural_splits(sf, "small")
+    small_bytes = table_stats(sf, "small").bytes
     assert small_bytes < REBALANCE_MIN_BYTES
     sdf = spark.read.parquet(os.path.join(sf, "small.parquet"))
     assert rebalance_scan(sdf, spark, sf, "small", per_task_bytes=per_task) is sdf

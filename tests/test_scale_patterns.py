@@ -137,15 +137,18 @@ def test_materialize_uses_reliable_checkpoint_when_configured(spark, sf_dir, tmp
     """materialize() must switch every operator to fault-tolerant
     checkpointing when a checkpoint dir is configured — same results, with
     the intermediates written to the reliable dir instead of executor-local
-    block storage (VERDICT r2 item 8)."""
+    block storage (VERDICT r2 item 8). Writer queries (j5: write, read
+    back, drop the scratch dir) included."""
     from tts_etl_pipeline_spark.functions.checkpoints import materialize
     from tts_etl_pipeline_spark.operators.dedup import d3_jaccard_neardup_pairs
     from tts_etl_pipeline_spark.operators.grouping import s5_bag_semantics
+    from tts_etl_pipeline_spark.operators.relational import j5_pyds_writer_roundtrip
 
     sc = spark.sparkContext
     assert sc.getCheckpointDir() is None
     base_s5 = sorted(map(tuple, s5_bag_semantics(spark, sf_dir).collect()))
     base_d3 = sorted(map(tuple, d3_jaccard_neardup_pairs(spark, sf_dir).collect()))
+    base_j5 = sorted(map(tuple, j5_pyds_writer_roundtrip(spark, sf_dir).collect()))
 
     ckpt = tmp_path / "ckpt"
     sc.setCheckpointDir(str(ckpt))
@@ -153,6 +156,10 @@ def test_materialize_uses_reliable_checkpoint_when_configured(spark, sf_dir, tmp
         assert sorted(map(tuple, s5_bag_semantics(spark, sf_dir).collect())) == base_s5
         assert sorted(map(tuple, d3_jaccard_neardup_pairs(spark, sf_dir).collect())) == base_d3
         assert any(ckpt.rglob("rdd-*")), "no reliable checkpoint was written"
+        before = set(ckpt.rglob("rdd-*"))
+        j5 = j5_pyds_writer_roundtrip(spark, sf_dir)
+        assert set(ckpt.rglob("rdd-*")) - before, "j5 bypassed materialize"
+        assert sorted(map(tuple, j5.collect())) == base_j5
         small = materialize(spark.range(5))
         assert small.count() == 5
     finally:
@@ -160,6 +167,22 @@ def test_materialize_uses_reliable_checkpoint_when_configured(spark, sf_dir, tmp
         # the session-scoped suite keeps using localCheckpoint
         getattr(sc._jsc.sc(), "checkpointDir_$eq")(sc._jvm.scala.Option.apply(None))
         assert sc.getCheckpointDir() is None
+
+
+def test_scratch_dir_removed_when_body_raises():
+    """A writer that fails mid-write must not leak its temp directory."""
+    import os
+
+    from tts_etl_pipeline_spark.functions.checkpoints import scratch_dir
+
+    with pytest.raises(RuntimeError, match="write failed"):
+        with scratch_dir("test_scratch_") as tmp:
+            seen = tmp
+            with open(os.path.join(tmp, "part-0.parquet"), "wb") as f:
+                f.write(b"partial")
+            raise RuntimeError("write failed")
+    assert os.path.basename(seen).startswith("test_scratch_")
+    assert not os.path.exists(seen)
 
 
 def test_salted_join_spreads_duplicate_hot_key_rows(spark):

@@ -8,7 +8,7 @@ construction because Catalyst won't hoist filters across a Python UDF.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from tts_etl_pipeline_spark.audio import params as P
@@ -65,11 +65,3 @@ def text_quality_gate() -> Column:
 def saved_ok() -> Column:
     """F7 (pa.py:348-352): drop rows whose WAV export failed."""
     return F.col("wav_path").isNotNull()
-
-
-def apply_audio_gates(df: DataFrame) -> DataFrame:
-    return df.filter(audio_quality_gate())
-
-
-def apply_text_gates(df: DataFrame) -> DataFrame:
-    return df.filter(text_quality_gate())

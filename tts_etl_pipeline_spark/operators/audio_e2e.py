@@ -16,42 +16,38 @@ so the rows-only count is stable across runs.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-QUERIES: dict = {}
-ORACLES: dict = {}
+from tts_etl_pipeline_spark import registry
+from tts_etl_pipeline_spark.functions.checkpoints import materialize, scratch_dir
 
 
+@registry.query("p1_audio_pipeline_e2e")
 def p1_audio_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reference pipeline E2E over synth fixtures; returns metadata rows.
 
     `sf_dir` is unused (the audio pipeline reads WAVs, not the star schema);
     it is part of the driver's uniform query signature.
     """
-    import shutil
-
     from tts_etl_pipeline_spark.audio.pipeline import run_pipeline
     from tts_etl_pipeline_spark.audio.synth import write_fixture_dir
-    from tts_etl_pipeline_spark.functions.checkpoints import materialize
 
     # private per-call scratch dir: a fixed world-readable /tmp name would
     # race concurrent driver/pytest runs and is a symlink hazard on shared
     # hosts (ADVICE r2); mkdtemp is mode-0700 and collision-free
-    scratch = tempfile.mkdtemp(prefix="tts_etl_p1_e2e_")
-    wav_dir = os.path.join(scratch, "wavs")
-    out_dir = os.path.join(scratch, "clips")
-    table_path = os.path.join(scratch, "processed_data")
-    try:
+    with scratch_dir("tts_etl_p1_e2e_") as scratch:
+        wav_dir = os.path.join(scratch, "wavs")
+        out_dir = os.path.join(scratch, "clips")
+        table_path = os.path.join(scratch, "processed_data")
         write_fixture_dir(wav_dir)
         run_pipeline(
             spark, wav_dir, out_dir, table_path, asr_model="fake", refresh=True
         )
         # Project to run-invariant columns: wav_path embeds the scratch dir,
         # so surface only its basename; round floats to dodge FFT libm
-        # jitter. Materialize before the finally deletes the scratch files.
+        # jitter.
         return materialize(
             spark.read.parquet(table_path)
             .select(
@@ -67,8 +63,3 @@ def p1_audio_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .orderBy("original_name", "start_ms")
         )
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
-
-
-QUERIES["p1_audio_pipeline_e2e"] = p1_audio_pipeline_e2e

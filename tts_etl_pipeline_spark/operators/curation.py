@@ -12,7 +12,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from tts_etl_pipeline_spark.functions.checkpoints import materialize
+from tts_etl_pipeline_spark import registry
+from tts_etl_pipeline_spark.functions.checkpoints import materialize, scratch_dir
 from tts_etl_pipeline_spark.functions.exact import money
 from tts_etl_pipeline_spark.sources.tables import (
     rebalance_scan,
@@ -21,26 +22,13 @@ from tts_etl_pipeline_spark.sources.tables import (
     table,
 )
 
-QUERIES: dict = {}
-ORACLES: dict = {}
-
-
-def _register(name: str, oracle: str | None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
-
 
 # ---------------------------------------------------------------------------
 # c1 — deterministic hash sampling: ~10% of documents selected by an md5
 # bucket of the key. Reproducible across engines, runs, and cluster sizes —
 # the only sane way to sample in a pipeline whose outputs get audited.
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "c1_hash_sample",
     """
     SELECT lang, COUNT(*) AS n_sampled, MIN(doc_id) AS first_doc
@@ -70,7 +58,7 @@ def c1_hash_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 BIN_WIDTH = 50_000
 
 
-@_register(
+@registry.query(
     "c2_price_histogram",
     f"""
     SELECT CAST(floor(o_totalprice / {BIN_WIDTH}) AS BIGINT) AS bin,
@@ -106,7 +94,7 @@ def c2_price_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 # array (the n-gram primitive behind language ID and shingle dedup),
 # top-15 bigrams by frequency.
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "c3_bigram_profile",
     """
     SELECT bigram, COUNT(*) AS freq
@@ -144,7 +132,7 @@ def c3_bigram_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 # alphabetically-first name — the near-duplicate-label check a catalog
 # cleanup runs. levenshtein is built-in (JVM-side) in both engines.
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "c4_levenshtein_catalog",
     """
     SELECT p_brand,
@@ -190,7 +178,7 @@ def c4_levenshtein_catalog(spark: SparkSession, sf_dir: str) -> DataFrame:
 STRATA_PCT = {"en": 10, "de": 50, "fr": 50}  # % kept per lang; others 100
 
 
-@_register(
+@registry.query(
     "c5_stratified_hash_sample",
     """
     SELECT lang, COUNT(*) AS n_sampled, MIN(doc_id) AS first_doc,
@@ -237,7 +225,7 @@ def c5_stratified_hash_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 # join, so at 100 TB the anti join compares key columns only (and AQE
 # broadcasts the dimension side); the fact table is never widened.
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "dq1_referential_integrity",
     """
     SELECT 'lineitem.l_orderkey->orders' AS edge,
@@ -291,7 +279,7 @@ def dq1_referential_integrity(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the schema-drift canary every ingest pipeline runs. One scan, one partial+
 # final aggregation; every statistic is computed in the same pass.
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "dq2_column_profile",
     """
     SELECT 'o_custkey' AS col,
@@ -370,7 +358,7 @@ def dq2_column_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 _C6_SW = "', '".join(["the", "a", "of", "and", "to", "in", "is", "it"])
 
 
-@_register(
+@registry.query(
     "c6_corpus_curation_funnel",
     f"""
     WITH scored AS (
@@ -410,7 +398,6 @@ _C6_SW = "', '".join(["the", "a", "of", "and", "to", "in", "is", "it"])
     """,
 )
 def c6_corpus_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tts_etl_pipeline_spark.functions.checkpoints import materialize
     from tts_etl_pipeline_spark.operators.textstats import STOPWORDS
 
     docs = table(spark, sf_dir, "documents")
@@ -468,7 +455,7 @@ def c6_corpus_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the per-(split, lang) audit a data card reports. At 100 TB the bucket
 # expression is a pure per-row map — no shuffle until the tiny audit agg.
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "c7_train_val_test_split",
     """
     SELECT split, lang, COUNT(*) AS n_docs,
@@ -527,7 +514,7 @@ def c7_train_val_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 SOURCE_QUOTA = 40
 
 
-@_register(
+@registry.query(
     "c8_source_quota_cap",
     f"""
     SELECT source,
@@ -575,7 +562,7 @@ def c8_source_quota_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
 # join is key+two-date projected before shuffling, so at 100 TB the
 # exchange carries three small columns per side, never the wide fact rows.
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "dq3_temporal_consistency",
     """
     SELECT o_orderstatus,
@@ -622,7 +609,7 @@ def dq3_temporal_consistency(spark: SparkSession, sf_dir: str) -> DataFrame:
 # joins; embeddings' id side is broadcast-size here and AQE picks the
 # broadcast at scale when one side stays small.
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "dq4_embedding_coverage",
     """
     SELECT d.lang,
@@ -675,7 +662,7 @@ def dq4_embedding_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
 MIX_ALPHA = 0.5  # temperature: 1.0 = natural mixture, 0.0 = uniform
 
 
-@_register(
+@registry.query(
     "c9_mixture_downsample",
     """
     WITH masses AS (
@@ -707,8 +694,6 @@ MIX_ALPHA = 0.5  # temperature: 1.0 = natural mixture, 0.0 = uniform
     """,
 )
 def c9_mixture_downsample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tts_etl_pipeline_spark.functions.checkpoints import materialize
-
     docs = table(spark, sf_dir, "documents")
     masses = docs.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -783,7 +768,7 @@ UPSAMPLE_ALPHA = 0.5  # temperature; 0.5 = sqrt-flatten (matches c9)
 UPSAMPLE_MAX_EPOCHS = 4.0  # cap on the repeat factor
 
 
-@_register(
+@registry.query(
     "c10_mixture_upsample",
     f"""
     WITH masses AS (
@@ -821,8 +806,6 @@ UPSAMPLE_MAX_EPOCHS = 4.0  # cap on the repeat factor
     """,
 )
 def c10_mixture_upsample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tts_etl_pipeline_spark.functions.checkpoints import materialize
-
     docs = table(spark, sf_dir, "documents")
     masses = docs.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -886,7 +869,7 @@ def c10_mixture_upsample(spark: SparkSession, sf_dir: str) -> DataFrame:
 DRIFT_SPLIT = "1998-04-01"  # midpoint of the fixture's 1995..2001 range
 
 
-@_register(
+@registry.query(
     "dq5_distribution_drift",
     f"""
     WITH cat AS (
@@ -913,8 +896,6 @@ DRIFT_SPLIT = "1998-04-01"  # midpoint of the fixture's 1995..2001 range
     """,
 )
 def dq5_distribution_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tts_etl_pipeline_spark.functions.checkpoints import materialize
-
     split = F.lit(DRIFT_SPLIT).cast("timestamp")
     orders = table(spark, sf_dir, "orders").select("o_orderpriority", "o_orderdate")
     cat = materialize(
@@ -965,7 +946,7 @@ def dq5_distribution_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 # broadcast; three hash aggregations on the same small key, no sorts of
 # the fact table (percentile is a hash aggregate, not a sort).
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "dq6_robust_outlier_audit",
     """
     WITH cents AS (
@@ -1000,8 +981,6 @@ def dq5_distribution_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def dq6_robust_outlier_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tts_etl_pipeline_spark.functions.checkpoints import materialize
-
     orders = table(spark, sf_dir, "orders")
     cents = materialize(
         orders.select(
@@ -1060,7 +1039,7 @@ _MANIFEST_KEYS = [
 ]
 
 
-@_register(
+@registry.query(
     "c11_dataset_manifest",
     "\nUNION ALL\n".join(
         f"""SELECT '{t}' AS table_name, COUNT(*) AS n_rows,
@@ -1105,7 +1084,7 @@ def c11_dataset_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
 # stage sees <= (cap x sources) rows (control-plane sized), never the
 # corpus. The same two-phase trick as c8's hot-key top-N.
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "c12_curriculum_interleave",
     """
     WITH ranked AS (
@@ -1189,7 +1168,7 @@ def c12_curriculum_interleave(spark: SparkSession, sf_dir: str) -> DataFrame:
 RECIPE_MIN_TOKENS = 10
 
 
-@_register(
+@registry.query(
     "c13_pretraining_recipe",
     f"""
     WITH gated AS (
@@ -1244,8 +1223,6 @@ RECIPE_MIN_TOKENS = 10
     """,
 )
 def c13_pretraining_recipe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tts_etl_pipeline_spark.functions.checkpoints import materialize
-
     docs = table(spark, sf_dir, "documents")
     norm = F.lower(F.trim(F.coalesce("text", F.lit(""))))
     n_tokens = F.size(F.split(norm, " "))
@@ -1314,7 +1291,7 @@ def c13_pretraining_recipe(spark: SparkSession, sf_dir: str) -> DataFrame:
 # extra Exchange); the per-constraint report is a constant-width unpivot
 # of the 1-row aggregate — no second scan (pinned by the scan sweep).
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "dq7_constraint_suite",
     """
     WITH agg AS (
@@ -1413,7 +1390,7 @@ def dq7_constraint_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (the q3 discipline), orders joins 1:1 on its key, and the final rollup
 # is |priorities| rows with map-side partials.
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "dq8_order_total_reconciliation",
     """
     WITH li AS (
@@ -1484,7 +1461,7 @@ def dq8_order_total_reconciliation(spark: SparkSession, sf_dir: str) -> DataFram
 # the money sum follows the decimal discipline (functions/exact.py), and
 # the date range is emitted as ISO strings.
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "dq9_observed_metrics",
     """
     SELECT CAST(COUNT(*) AS BIGINT) AS n_rows,
@@ -1625,7 +1602,7 @@ def _c14_skyline_pdf(pdf):
     return pdf[keep]
 
 
-@_register(
+@registry.query(
     "c14_pareto_skyline",
     """
     WITH feat AS (
@@ -1716,10 +1693,9 @@ def c14_pareto_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
 # are one hash-agg per snapshot over |langs| groups; the diff joins two
 # |langs|-row relations. Shares use integer division (10000·n DIV total) so
 # the oracle — which recomputes both vintages straight from the source
-# table with the same modular split — is hash-exact. The result is
-# localCheckpoint'ed before the temp table is deleted (the j3 discipline).
+# table with the same modular split — is hash-exact.
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "dq10_version_drift",
     """
     WITH old_p AS (
@@ -1758,13 +1734,9 @@ def c14_pareto_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def dq10_version_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from tts_etl_pipeline_spark.sources.versioned import read_version, write_version
 
-    tmp = tempfile.mkdtemp(prefix="dq10_")
-    try:
+    with scratch_dir("dq10_") as tmp:
         path = f"{tmp}/docs_versioned"
         docs = table(spark, sf_dir, "documents").select(
             "doc_id", "lang", "n_chars"
@@ -1785,7 +1757,7 @@ def dq10_version_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         # materialize the |langs|-row profiles: each feeds BOTH the drift
         # join and its totals aggregate, and without truncation the two
         # consumers would scan each snapshot's files twice (invisible to
-        # the scan sweep behind the final localCheckpoint — review
+        # the scan sweep behind the final materialize — review
         # finding r7)
         old_p = materialize(
             profile(read_version(spark, path, v_old), "n_old", "chars_old")
@@ -1809,7 +1781,7 @@ def dq10_version_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ),
             ).otherwise(F.lit(0)).cast("bigint")
 
-        out = (
+        return materialize(
             old_p.join(new_p, "lang", "full_outer")
             .crossJoin(F.broadcast(tot))
             .select(
@@ -1829,9 +1801,6 @@ def dq10_version_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .orderBy("lang")
         )
-        return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -1851,7 +1820,7 @@ def dq10_version_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 # shares is a 1-row aggregate of the materialized 9-row relation (no
 # second fact scan, no unpartitioned window over data).
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "dq11_benford_audit",
     """
     WITH c AS (

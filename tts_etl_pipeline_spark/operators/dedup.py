@@ -26,28 +26,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from tts_etl_pipeline_spark import registry
 from tts_etl_pipeline_spark.functions.checkpoints import materialize
 from tts_etl_pipeline_spark.sources.tables import rebalance_scan, scaled_broadcast, table
-
-QUERIES: dict = {}
-ORACLES: dict = {}
-
-
-def _register(name: str, oracle: str | None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
 
 
 # ---------------------------------------------------------------------------
 # d1 — exact dedup by content fingerprint: canonical representative = min
 # doc_id per normalized-text group. One hash-agg shuffle on the fingerprint.
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "d1_exact_dedup",
     """
     SELECT COUNT(*) AS n_groups,
@@ -79,7 +67,7 @@ def d1_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # d2 — exact full-row dedup over a projection (the dropDuplicates primitive).
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "d2_distinct_rows",
     """
     SELECT lang, source, COUNT(*) AS n
@@ -151,7 +139,7 @@ _PAIRS_CTES = f"""
     )"""
 
 
-@_register(
+@registry.query(
     "d3_jaccard_neardup_pairs",
     f"""
     WITH {_PAIRS_CTES}
@@ -202,10 +190,11 @@ def _jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # LITERAL instead of aggregating the checkpointed index into a 1-row
     # broadcast (two agg stages + a broadcast build per run, r14). Fallback
     # to the in-query aggregate when the footer is unreadable (remote path).
-    from tts_etl_pipeline_spark.sources.tables import table_row_count
+    from tts_etl_pipeline_spark.sources.tables import table_stats
 
     df_tok = tok.groupBy("token").agg(F.count(F.lit(1)).alias("n"))
-    n_total = table_row_count(sf_dir, "documents")
+    stats = table_stats(sf_dir, "documents", rows=True)
+    n_total = None if stats is None else stats.rows
     if n_total is not None:
         cap = F.lit(min(MAX_DF_FRACTION * n_total, float(MAX_DF_ABSOLUTE)))
         keep_tokens = df_tok.filter(F.col("n") <= cap).select("token")
@@ -302,10 +291,8 @@ def _min_label_propagation(sym: DataFrame, max_iters: int = 25) -> DataFrame:
     return labels
 
 
-
-@_register(
-    "d8_neardup_components",
-    f"""
+# d8's oracle: d9 computes the same clustering, so it shares it
+_D8_ORACLE = f"""
     WITH RECURSIVE {_PAIRS_CTES},
     sym AS (
       SELECT id_a AS src, id_b AS dst FROM jpairs
@@ -320,8 +307,10 @@ def _min_label_propagation(sym: DataFrame, max_iters: int = 25) -> DataFrame:
     SELECT node AS doc_id, CAST(MIN(label) AS BIGINT) AS component
     FROM reach GROUP BY node
     ORDER BY doc_id
-    """,
-)
+    """
+
+
+@registry.query("d8_neardup_components", _D8_ORACLE)
 def d8_neardup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = _jaccard_pairs(spark, sf_dir).select("id_a", "id_b")
     sym = pairs.selectExpr("id_a AS src", "id_b AS dst").unionAll(
@@ -342,9 +331,9 @@ def d8_neardup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 # CHAIN costs propagation one shuffle round per hop, while star contraction
 # halves the graph's height every other round.
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "d9_neardup_components_bigstar",
-    ORACLES["d8_neardup_components"],  # same clustering contract, same oracle
+    _D8_ORACLE,  # same clustering contract, same oracle
 )
 def d9_neardup_components_bigstar(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tts_etl_pipeline_spark.functions.graph import connected_components
@@ -368,7 +357,7 @@ def d9_neardup_components_bigstar(spark: SparkSession, sf_dir: str) -> DataFrame
 # the oracle runs; at 100 TB the bloom turns "shuffle the whole batch
 # against the corpus key set" into "shuffle only the suspected dups".
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "d10_incremental_dedup",
     """
     SELECT b.doc_id, b.lang, b.n_chars
@@ -408,9 +397,10 @@ def d10_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # table; max() keeps the historical floor so small corpora don't get a
     # degenerate tiny filter. Fallback: the old count() job if the footer
     # is unreadable (remote path).
-    from tts_etl_pipeline_spark.sources.tables import _natural_splits, table_row_count
+    from tts_etl_pipeline_spark.sources.tables import table_stats
 
-    n_total = table_row_count(sf_dir, "documents")
+    stats = table_stats(sf_dir, "documents", rows=True)
+    n_total = None if stats is None else stats.rows
     n_items = max(100_000, n_total if n_total is not None else corpus_fps.count())
 
     # distributed bloom build: one partial filter per partition, OR-merged —
@@ -443,8 +433,8 @@ def d10_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # scan split count from the file layout (files-granular lower bound,
     # same estimator as the rebalance guard) — the .rdd conversion this
     # replaces forced a full second physical planning of the corpus scan
-    # just to read its partition count
-    n_parts, _ = _natural_splits(sf_dir, "documents")
+    # just to read its partition count (unknown layout: no tree level)
+    n_parts = 0 if stats is None else stats.splits
     if n_parts > FAN_IN:
         partials = partials.repartition(
             max(1, n_parts // FAN_IN)
@@ -485,7 +475,7 @@ def d10_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # shingles via a self-expressible substring sequence. Demonstrates shingle
 # construction relationally (sequence + transform), oracle-checkable.
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "d4_char_shingles",
     """
     SELECT doc_id,
@@ -581,7 +571,7 @@ _D11_ROWS_PER_BAND = 8
 _D11_SIM = 0.8
 
 
-@_register("d11_banded_minhash_neardup", None)  # hash-family => rows-only
+@registry.query("d11_banded_minhash_neardup")  # hash-family => rows-only
 def d11_banded_minhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents")
     tok = docs.select(
@@ -638,7 +628,7 @@ def d11_banded_minhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # 4x16-bit bands; pairs agreeing on any band are candidates, verified by
 # hamming distance. Deterministic but hash-family-specific => rows-only.
 # ---------------------------------------------------------------------------
-@_register("d6_simhash_neardup", None)
+@registry.query("d6_simhash_neardup")
 def d6_simhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents")
     tok = docs.select(
@@ -701,7 +691,7 @@ def d6_simhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (longest text, lowest doc_id) — the "keep best" policy a curation pipeline
 # applies, expressed as min_by over a struct ordering in both engines.
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "d7_dedup_representatives",
     """
     SELECT lang, COUNT(*) AS n_kept,
@@ -751,7 +741,7 @@ def d7_dedup_representatives(spark: SparkSession, sf_dir: str) -> DataFrame:
 # left join and one cluster-keyed min — nothing quadratic, no new scans
 # (documents re-read once for the verdict join).
 # ---------------------------------------------------------------------------
-@_register("d12_neardup_dedup_e2e", None)  # hash-family => rows-only
+@registry.query("d12_neardup_dedup_e2e")  # hash-family => rows-only
 def d12_neardup_dedup_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window as W
 
@@ -790,7 +780,7 @@ def d12_neardup_dedup_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
 CONTAM_NGRAM = 8
 
 
-@_register(
+@registry.query(
     "d13_benchmark_contamination",
     f"""
     WITH toks AS (
@@ -917,7 +907,7 @@ SPAN_NGRAM = 8
 MAX_SPAN_DF_ABSOLUTE = 2500
 
 
-@_register(
+@registry.query(
     "d15_duplicated_spans",
     f"""
     WITH toks AS (
@@ -1074,7 +1064,7 @@ MIN_SHINGLES = 5
 CONTAIN_NGRAM = 5
 
 
-@_register(
+@registry.query(
     "d16_containment_pairs",
     f"""
     WITH tok AS (

@@ -13,21 +13,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from tts_etl_pipeline_spark import registry
 from tts_etl_pipeline_spark.functions.checkpoints import materialize
 from tts_etl_pipeline_spark.sources.tables import rebalance_scan, table
-
-QUERIES: dict = {}
-ORACLES: dict = {}
-
-
-def _register(name: str, oracle: str | None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
 
 
 def add_json_k(df: DataFrame) -> DataFrame:
@@ -50,7 +38,7 @@ def hourly_event_counts(df: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------------------
 # e1 — JSON extraction + aggregation by event type.
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "e1_json_extract_agg",
     """
     SELECT event_type,
@@ -81,7 +69,7 @@ def e1_json_extract_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 # e2 — tumbling-window (1 hour) event counts: the batch twin of the
 # streaming aggregation in streaming/events_stream.py.
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "e2_hourly_event_counts",
     """
     SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS hour,
@@ -111,7 +99,7 @@ def e2_hourly_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 # user (lag + cumulative-sum-of-flags window). The streaming analogue is a
 # session window with gap timeout; this batch form is the oracle-checkable one.
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "e3_user_sessions",
     """
     WITH flagged AS (
@@ -170,7 +158,7 @@ def e3_user_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
 # per-entity rollup shape that dominates 100 TB event workloads: partial aggs
 # map-side, one shuffle on user_id.
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "e4_user_value_stats",
     """
     SELECT user_id,
@@ -205,7 +193,7 @@ def e4_user_value_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # per-user first day (operating on ~rows/day_dups), and the tiny
 # (cohort_day, day_offset) grid agg. The classic growth-analytics query.
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "e5_cohort_retention",
     """
     WITH activity AS (
@@ -252,7 +240,7 @@ def e5_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
 # scan; the checkpoint materializes the minute grain so the three-grain
 # union does not re-derive it per branch.
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "h1_time_rollup_hierarchy",
     """
     WITH minute AS (
@@ -322,7 +310,7 @@ def h1_time_rollup_hierarchy(spark: SparkSession, sf_dir: str) -> DataFrame:
 # global rollup. At 100 TB: events shuffle once on user_id and everything
 # else is map-side; no sort, no join, no second scan.
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "e6_conversion_funnel",
     """
     WITH fv AS (
@@ -401,7 +389,7 @@ def e6_conversion_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 # inputs); latencies surfaced in seconds rounded to 1 ms grain.
 # The join shuffles on user_id only after both sides are key+ts projected.
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "e7_conversion_latency",
     """
     WITH pairs AS (
@@ -471,7 +459,7 @@ def e7_conversion_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
 # satisfies the groupBy — no second Exchange). Bars are bounded
 # (days x types), so the agg output is tiny everywhere.
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "h2_daily_value_bars",
     """
     WITH ranked AS (
@@ -541,7 +529,7 @@ def h2_daily_value_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
 # aggregation is order-independent and the final double is exact (the
 # g5/st1 idiom).
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "e8_last_touch_attribution",
     """
     WITH attributed AS (
@@ -604,7 +592,7 @@ def e8_last_touch_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 # over the fact rows. Probabilities are ratios of exact integer counts,
 # rounded to 6 places so both engines emit the same literal.
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "e9_event_transitions",
     """
     WITH paired AS (
@@ -665,7 +653,7 @@ def e9_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
 # calendar size) and the gap test is a left anti join between two
 # calendar-bounded relations; at 100 TB nothing here grows except the scan.
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "h3_hourly_gap_audit",
     """
     WITH present AS (
@@ -757,7 +745,7 @@ def h3_hourly_gap_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 H4_POINTS = 24
 
 
-@_register("h4_lttb_downsample", None)
+@registry.query("h4_lttb_downsample")
 def h4_lttb_downsample(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
 
@@ -809,7 +797,7 @@ def h4_lttb_downsample(spark: SparkSession, sf_dir: str) -> DataFrame:
 # fallback; for fixed patterns this window form stays JVM-side — the
 # scale path.
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "e10_funnel_pattern_match",
     """
     WITH base AS (
@@ -948,7 +936,7 @@ def e10_funnel_pattern_match(spark: SparkSession, sf_dir: str) -> DataFrame:
 H5_TRAIN_WEEKS = 3
 
 
-@_register(
+@registry.query(
     "h5_seasonal_backtest",
     f"""
     WITH cents AS (
@@ -1061,7 +1049,7 @@ def h5_seasonal_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Emits one row per session, not per user, so the island assignment itself
 # is what the oracle hash-checks.
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "e11_native_session_window",
     """
     WITH flagged AS (
@@ -1127,7 +1115,7 @@ def e11_native_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ingest-quality audit column. All outputs are integer counts/sums, so the
 # DuckDB json_extract_string twin is hash-exact.
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "e12_variant_extract",
     """
     SELECT event_type,
@@ -1188,7 +1176,7 @@ def e12_variant_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
 # 100 TB the partition key (day) bounds every window's state, and the
 # whole query is a single events scan.
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "h6_time_weighted_average",
     """
     WITH seq AS (
@@ -1270,7 +1258,7 @@ def h6_time_weighted_average(spark: SparkSession, sf_dir: str) -> DataFrame:
 # keep both engines on identical integer seconds; outputs are picks and
 # counts only.
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "e13_dynamic_gap_sessions",
     """
     WITH ev AS (

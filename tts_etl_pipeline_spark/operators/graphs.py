@@ -31,25 +31,13 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from tts_etl_pipeline_spark.functions.checkpoints import materialize
+from tts_etl_pipeline_spark import registry
+from tts_etl_pipeline_spark.functions.checkpoints import materialize, scratch_dir
 from tts_etl_pipeline_spark.sources.tables import (
     scaled_broadcast,
     table,
     table_disk_bytes,
 )
-
-QUERIES: dict = {}
-ORACLES: dict = {}
-
-
-def _register(name: str, oracle: str | None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
 
 
 PR_DAMPING = 0.85
@@ -221,7 +209,7 @@ def pagerank(edges: DataFrame, damping: float = PR_DAMPING,
 # (rank·n·10⁴ rounded to int) ONLY for display stability of the trailing
 # digits; ordering and the pinned numpy parity use the raw doubles.
 # ---------------------------------------------------------------------------
-@_register("pr1_copurchase_pagerank", None)
+@registry.query("pr1_copurchase_pagerank")
 def pr1_copurchase_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = materialize(copurchase_edges(spark, sf_dir))
     ranks = pagerank(edges)
@@ -268,7 +256,7 @@ TRI_TOP_K = 25
 # what SQL expresses naturally, and the equality of the two algorithms is
 # part of what the driver checks).
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "pr2_triangle_clustering",
     """
     WITH pairs AS (
@@ -409,7 +397,7 @@ BFS_MAX_HOPS = 20
 # Output is the per-distance histogram — bounded at 21 rows regardless of
 # scale, the driver-friendly projection of the full distance vector.
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "pr3_bfs_hop_distances",
     """
     WITH RECURSIVE pairs AS (
@@ -542,7 +530,7 @@ PR4_CENTER_CAP = 60
 PR4_TOP_K = 30
 
 
-@_register(
+@registry.query(
     "pr4_link_prediction",
     f"""
     WITH pairs AS (
@@ -647,7 +635,7 @@ PR5_K = 3
 PR5_MAX_ROUNDS = 30
 
 
-@_register(
+@registry.query(
     "pr5_kcore_decomposition",
     f"""
     WITH RECURSIVE pairs AS (
@@ -739,7 +727,7 @@ def pr5_kcore_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
 PR6_TOP_K = 50
 
 
-@_register(
+@registry.query(
     "pr6_copurchase_components",
     f"""
     WITH RECURSIVE pairs AS (
@@ -813,7 +801,7 @@ def pr6_copurchase_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 # value equality proves the incremental path converges to the batch
 # fixpoint node-for-node.
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "pr7_incremental_components",
     """
     WITH RECURSIVE e AS (
@@ -837,9 +825,6 @@ def pr6_copurchase_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def pr7_incremental_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from pyspark.sql import Window
 
     from tts_etl_pipeline_spark.sources.ivm import (
@@ -852,9 +837,8 @@ def pr7_incremental_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     orders = table(spark, sf_dir, "orders").select("o_orderkey")
-    base = tempfile.mkdtemp(prefix="pr7_")
-    pe, st = f"{base}/edges", f"{base}/state"
-    try:
+    with scratch_dir("pr7_") as base:
+        pe, st = f"{base}/edges", f"{base}/state"
         # global-sort: the chain fixture needs one total order over
         # o_orderkey to define "consecutive"; fixture construction only —
         # the OPERATOR under test (maintain_components_from_cdf) never
@@ -901,10 +885,7 @@ def pr7_incremental_components(spark: SparkSession, sf_dir: str) -> DataFrame:
                 raise RuntimeError("an edge delete must refuse")
             except ValueError:
                 pass
-        return (
+        return materialize(
             read_maintained_components(spark, st)
             .orderBy("node")
-            .localCheckpoint(eager=True)  # materialize before tmp vanishes
         )
-    finally:
-        shutil.rmtree(base, ignore_errors=True)

@@ -12,25 +12,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from tts_etl_pipeline_spark import registry
 from tts_etl_pipeline_spark.functions.checkpoints import materialize
 from tts_etl_pipeline_spark.functions.exact import SQL_DISC_PRICE, disc_price, money
 from tts_etl_pipeline_spark.sources.tables import rebalance_scan, table
 
-QUERIES: dict = {}
-ORACLES: dict = {}
 
-
-def _register(name: str, oracle: str | None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
-
-
-@_register(
+@registry.query(
     "g1_rollup_revenue",
     f"""
     SELECT COALESCE(l_returnflag, 'ALL') AS returnflag,
@@ -80,7 +68,7 @@ def g1_rollup_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@registry.query(
     "g2_cube_orders",
     """
     SELECT COALESCE(o_orderstatus, 'ALL') AS orderstatus,
@@ -116,7 +104,7 @@ def g2_cube_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@registry.query(
     "g3_grouping_sets",
     """
     SELECT COALESCE(l_returnflag, 'ALL') AS returnflag,
@@ -142,7 +130,7 @@ def g3_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@registry.query(
     "s1_set_ops",
     """
     WITH c95 AS (SELECT DISTINCT o_custkey FROM orders
@@ -189,7 +177,7 @@ def s1_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     return both.unionAll(only95).unionAll(either).orderBy("bucket")
 
 
-@_register(
+@registry.query(
     "g4_distinct_aggregates",
     """
     SELECT c_mktsegment,
@@ -224,7 +212,7 @@ def g4_distinct_aggregates(spark: SparkSession, sf_dir: str) -> DataFrame:
 # evolution union a long-lived pipeline needs (positional UNION would
 # silently misalign).
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "s2_union_by_name",
     """
     SELECT entity_type, COUNT(*) AS n,
@@ -272,7 +260,7 @@ def s2_union_by_name(spark: SparkSession, sf_dir: str) -> DataFrame:
 # null-safe equality, and COALESCE'd output — the three-valued-logic corners
 # every engine must agree on.
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "s3_null_group_semantics",
     """
     SELECT COALESCE(status_nn, '(open)') AS status,
@@ -312,7 +300,7 @@ def s3_null_group_semantics(spark: SparkSession, sf_dir: str) -> DataFrame:
 # null patterns on either side drive the presence classification (the
 # three-way churn split only a full outer join can produce in one pass).
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "s4_full_outer_reconcile",
     """
     WITH early AS (
@@ -383,7 +371,7 @@ def s4_full_outer_reconcile(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Same trick scales: integer moments combine associatively, so partial
 # aggregation / AQE re-aggregation stays exact.
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "g6_stat_moments",
     """
     SELECT l_returnflag, n,
@@ -453,7 +441,7 @@ def g6_stat_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
 # then replicating min/difference — one shuffle on the value key, no join.
 # Folding to (op, q, n) keeps the result grain auditable.
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "s5_bag_semantics",
     """
     WITH a AS (SELECT CAST(l_quantity AS BIGINT) AS q FROM lineitem WHERE l_returnflag = 'R'),
@@ -507,7 +495,7 @@ def s5_bag_semantics(spark: SparkSession, sf_dir: str) -> DataFrame:
 # BroadcastNestedLoopJoin, WindowGroupLimit present). DuckDB runs the same
 # LATERAL text natively.
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "s6_lateral_topk_per_nation",
     """
     SELECT n.n_name, l.c_name, l.c_acctbal
@@ -548,7 +536,7 @@ def s6_lateral_topk_per_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
 # IS NOT DISTINCT FROM. The join-key audit twin of s3's null-GROUPING
 # semantics.
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "s7_nullsafe_join",
     """
     WITH dim AS (

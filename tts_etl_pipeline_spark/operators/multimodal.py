@@ -51,6 +51,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from tts_etl_pipeline_spark import registry
+from tts_etl_pipeline_spark.functions.checkpoints import materialize
+
 # one row per media object (or per chunk of an oversized object)
 MEDIA_SCHEMA = T.StructType(
     [
@@ -82,18 +85,6 @@ FEATURE_SCHEMA = "media_id string, modality string, feature array<float>, feat_d
 # Keep single binary cells far below Spark's 2 GB byte-array ceiling; real
 # deployments tune this to executor memory / maxPartitionBytes.
 MAX_CHUNK_BYTES = 64 * 1024 * 1024
-
-
-def ingest_binary_dir(spark, path: str, modality: str, glob: str = "*") -> DataFrame:
-    """binaryFile scan -> MEDIA_SCHEMA rows (chunking applied)."""
-    raw = spark.read.format("binaryFile").option("pathGlobFilter", glob).load(path)
-    return chunk_media(
-        raw.select(
-            F.element_at(F.split("path", "/"), -1).alias("media_id"),
-            F.lit(modality).alias("modality"),
-            "content",
-        )
-    )
 
 
 def chunk_media(df: DataFrame, max_chunk_bytes: int = MAX_CHUNK_BYTES) -> DataFrame:
@@ -852,21 +843,7 @@ def extract_features(media_df: DataFrame, dim: int = 64) -> DataFrame:
     return media_df.mapInPandas(gen, FEATURE_SCHEMA)
 
 
-QUERIES: dict = {}
-ORACLES: dict = {}
-
-
-def _register(name: str, oracle: str | None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
-
-
-@_register(
+@registry.query(
     "m1_embedding_stats",
     """
     SELECT label,
@@ -912,7 +889,7 @@ def m1_embedding_stats(spark, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@registry.query(
     "j1_docs_embeddings_join",
     """
     SELECT lang,
@@ -989,7 +966,7 @@ def _m2_images() -> list:
     return out
 
 
-@_register("m2_image_codec_features", None)
+@registry.query("m2_image_codec_features")
 def m2_image_codec_features(spark, sf_dir: str) -> DataFrame:
     """`sf_dir` unused (synthesized media, the uniform query signature)."""
     from tts_etl_pipeline_spark.functions.gif import encode_gif
@@ -1055,7 +1032,7 @@ def _encode_y4m(frames: list, fps: int) -> bytes:
     return head + b"".join(b"FRAME\n" + f.tobytes() + chroma for f in frames)
 
 
-@_register("m3_video_codec_features", None)
+@registry.query("m3_video_codec_features")
 def m3_video_codec_features(spark, sf_dir: str) -> DataFrame:
     """`sf_dir` unused (synthesized media, the uniform query signature)."""
     rows = []
@@ -1117,7 +1094,7 @@ def _m4_signals() -> list:
     return out
 
 
-@_register("m4_audio_codec_features", None)
+@registry.query("m4_audio_codec_features")
 def m4_audio_codec_features(spark, sf_dir: str) -> DataFrame:
     """`sf_dir` unused (synthesized media, the uniform query signature)."""
     from tts_etl_pipeline_spark.audio.codecs import (
@@ -1280,11 +1257,9 @@ def _m5_media() -> list:
     return rows
 
 
-@_register("m5_image_dhash_neardup", None)
+@registry.query("m5_image_dhash_neardup")
 def m5_image_dhash_neardup(spark, sf_dir: str) -> DataFrame:
     """`sf_dir` unused (synthesized media, the uniform query signature)."""
-    from tts_etl_pipeline_spark.functions.checkpoints import materialize
-
     raw = spark.createDataFrame(
         [(mid, "image", payload) for mid, payload in _m5_media()],
         "media_id string, modality string, content binary",
@@ -1386,11 +1361,10 @@ def _m6_clips() -> list:
     return out
 
 
-@_register("m6_audio_fingerprint_neardup", None)
+@registry.query("m6_audio_fingerprint_neardup")
 def m6_audio_fingerprint_neardup(spark, sf_dir: str) -> DataFrame:
     """`sf_dir` unused (synthesized media, the uniform query signature)."""
     from tts_etl_pipeline_spark.audio.decode import decode_wav_bytes
-    from tts_etl_pipeline_spark.functions.checkpoints import materialize
 
     raw = spark.createDataFrame(
         [(mid, "audio", payload) for mid, payload in _m6_clips()],

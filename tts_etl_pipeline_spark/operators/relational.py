@@ -12,7 +12,7 @@ base table's measured bytes stay under BROADCAST_LIMIT_BYTES and otherwise
 leaves the strategy to AQE's runtime size check (a hard hint would bypass it
 and OOM at 100x).
 
-Each query has a matching entry in ORACLES with identical column aliases —
+Each query registers oracle SQL with identical column aliases —
 the driver sorts columns by name and value-hashes, so aliases and numeric
 representations (see functions/exact.py) must match bit-for-bit.
 """
@@ -22,12 +22,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from tts_etl_pipeline_spark import registry
 from tts_etl_pipeline_spark.functions.bands import (
     USER_STATE_HIST_CTES,
     user_state_hist_ctes,
     user_state_hist_ctes_where,
 )
-from tts_etl_pipeline_spark.functions.checkpoints import materialize
+from tts_etl_pipeline_spark.functions.checkpoints import materialize, scratch_dir
 from tts_etl_pipeline_spark.functions.exact import (
     FRAC,
     SQL_CHARGE,
@@ -39,19 +40,6 @@ from tts_etl_pipeline_spark.functions.exact import (
 )
 from tts_etl_pipeline_spark.sources.tables import rebalance_scan, scaled_broadcast, table
 
-QUERIES: dict = {}
-ORACLES: dict = {}
-
-
-def _register(name: str, oracle: str | None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
-
 
 # ---------------------------------------------------------------------------
 # q1 — pricing summary (flagship): scan -> filter -> hash agg -> sort.
@@ -59,7 +47,7 @@ def _register(name: str, oracle: str | None):
 # the parquet scan; aggregation is a partial+final hash agg (map-side combine)
 # so the shuffle carries only 6 groups x 8 aggregates.
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "q1_pricing_summary",
     f"""
     SELECT l_returnflag, l_linestatus,
@@ -114,7 +102,7 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 # shuffle pair, and the revenue agg happens on the join keys so AQE can
 # coalesce. Deterministic top-k via unique o_orderkey tiebreak.
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "q3_shipping_priority",
     f"""
     SELECT l_orderkey,
@@ -160,7 +148,7 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q4 — order priority check: EXISTS semi-join. Spark: left_semi join, which
 # shuffles only the distinct join keys of the probe side after AQE.
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "q4_order_priority",
     """
     SELECT o_orderpriority, COUNT(*) AS order_count
@@ -192,7 +180,7 @@ def q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
 # all broadcast; lineitem⋈orders is the single big shuffle. The c_nationkey =
 # s_nationkey constraint is applied as a post-join filter exactly like TPC-H.
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "q5_local_supplier",
     f"""
     SELECT n_name, CAST(SUM({SQL_DISC_PRICE}) AS DOUBLE) AS revenue
@@ -234,7 +222,7 @@ def q5_local_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q6 — forecast revenue: pure scan-side filters + single global sum (no
 # shuffle beyond the 1-row final agg). All three predicates push into parquet.
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "q6_forecast_revenue",
     """
     SELECT CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2))
@@ -263,7 +251,7 @@ def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q7 — volume shipping between nation pairs: self-joined broadcast dim
 # (nation as n1/n2) around the fact join; year extraction on the ship date.
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "q7_volume_shipping",
     f"""
     SELECT supp_nation, cust_nation, l_year,
@@ -335,7 +323,7 @@ def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
 # no partsupp table in this schema, so profit = disc_price over a p_name
 # substring filter). part/supplier/nation broadcast; one fact shuffle.
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "q9_product_profit",
     f"""
     SELECT nation, o_year, CAST(SUM(amount) AS DOUBLE) AS sum_profit
@@ -377,7 +365,7 @@ def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q10 — returned items: top-20 customers by lost revenue. Aggregation keyed on
 # the customer attributes after broadcasting customer/nation onto the fact.
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "q10_returned_items",
     f"""
     SELECT c_custkey, c_name,
@@ -430,7 +418,7 @@ def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the join input is one row per customer, not one per order — at 100 TB this
 # turns a fact-sized shuffle into a dimension-sized one.
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "q13_customer_distribution",
     """
     SELECT c_count, COUNT(*) AS custdist
@@ -468,7 +456,7 @@ def q13_customer_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q14 — promo revenue share: conditional aggregation (CASE inside SUM).
 # Identical double-division shape on both sides keeps bits equal.
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "q14_promo_revenue",
     f"""
     SELECT (100.0 * CAST(SUM(CASE WHEN p_type = 'PROMO' THEN {SQL_DISC_PRICE}
@@ -507,7 +495,7 @@ def q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 # The textbook form (IN-subquery + re-join + re-GROUP BY) would scan and
 # shuffle lineitem twice.
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "q18_large_volume_customer",
     """
     SELECT c_name, c_custkey, o_orderkey,
@@ -557,7 +545,7 @@ def q18_large_volume_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Catalyst extracts the common l_partkey = p_partkey equi-condition and keeps
 # the OR as a post-join residual on the broadcast join.
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "q19_discounted_revenue",
     f"""
     SELECT CAST(SUM({SQL_DISC_PRICE}) AS DOUBLE) AS revenue
@@ -587,7 +575,7 @@ def q19_discounted_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q22 — customers with above-average balance and no orders: scalar subquery
 # (broadcast single-row) + LEFT ANTI join, grouped by nation prefix.
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "q22_global_sales_opportunity",
     """
     SELECT c_nationkey,
@@ -629,7 +617,7 @@ def q22_global_sales_opportunity(spark: SparkSession, sf_dir: str) -> DataFrame:
 # so the plan is guaranteed: per-part avg is dimension-sized, broadcast onto
 # the fact scan, zero correlated re-execution.
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "q17_small_quantity_revenue",
     """
     SELECT CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2))) AS DOUBLE) / 7.0
@@ -673,7 +661,7 @@ def q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q2-style — cheapest supplier per nation: min-per-group + join-back on the
 # (group, min) pair. Both the min table and supplier are broadcastable.
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "q2_min_balance_supplier",
     """
     SELECT n_name, s_name, CAST(s_acctbal AS DOUBLE) AS s_acctbal
@@ -706,7 +694,7 @@ def q2_min_balance_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q15-style — top revenue supplier(s): agg -> global max -> equality join
 # back (the view-based TPC-H Q15 shape without a view).
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "q15_top_supplier",
     f"""
     WITH revenue AS (
@@ -754,7 +742,7 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
 # share the linear-interpolation definition on doubles — verified bit-exact
 # in the harness at sf0.001 and sf0.01.
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "q21_price_percentiles",
     """
     SELECT o_orderpriority,
@@ -787,7 +775,7 @@ def q21_price_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 # year. Nested conditional aggregation over the full star join; all dims
 # broadcast, single fact shuffle for the (year) aggregation.
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "q8_market_share",
     f"""
     SELECT o_year,
@@ -861,7 +849,7 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
 # lineitems, bucketed by how long after the order date they shipped, with
 # the TPC-H Q12 high/low-priority split.
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "q12_shipping_delay",
     """
     SELECT delay_bucket,
@@ -912,7 +900,7 @@ def q12_shipping_delay(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (s_suppkey is a key; l_suppkey is a non-null FK). With nullable keys,
 # NOT IN's three-valued logic would need a null-aware anti join instead.
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "q16_parts_supplier_relationship",
     """
     SELECT p_brand, p_type, p_size,
@@ -952,12 +940,12 @@ def q16_parts_supplier_relationship(spark: SparkSession, sf_dir: str) -> DataFra
 # per-part revenue. Exercises the scalar-aggregate-subquery shape. Plan note:
 # a naive crossJoin(broadcast(part_rev.agg(total))) would recompute part_rev
 # — Spark has no DAG reuse without caching, so the fact table would be
-# scanned and shuffled TWICE. localCheckpoint materializes the part-grain
+# scanned and shuffled TWICE. materialize() checkpoints the part-grain
 # aggregate once; the global total then folds as an ordinary parallel
 # aggregate (one partial row per partition) rather than an unpartitioned
 # window that drags the whole part grain through a single task.
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "q11_important_parts",
     f"""
     WITH part_rev AS (
@@ -1014,7 +1002,7 @@ def q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
 # part's total shipped quantity (per-part share via pre-agg at two grains,
 # both dimension-sized after aggregation -> broadcast join-back).
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "q20_dominant_suppliers",
     """
     SELECT s_name, p_name,
@@ -1109,7 +1097,7 @@ def _j2_joined_bucketed(spark: SparkSession, sf_dir: str):
     return joined, drop
 
 
-@_register(
+@registry.query(
     "j2_bucketed_colocated_join",
     """
     SELECT o_orderpriority,
@@ -1124,7 +1112,7 @@ def _j2_joined_bucketed(spark: SparkSession, sf_dir: str):
 def j2_bucketed_colocated_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined, drop = _j2_joined_bucketed(spark, sf_dir)
     try:
-        return (
+        return materialize(
             joined.groupBy("o_orderpriority")
             .agg(
                 F.count(F.lit(1)).alias("n_items"),
@@ -1133,7 +1121,6 @@ def j2_bucketed_colocated_join(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .alias("total_price"),
             )
             .orderBy("o_orderpriority")
-            .localCheckpoint(eager=True)  # materialize before the drop
         )
     finally:
         drop()
@@ -1156,23 +1143,18 @@ def j2_bucketed_colocated_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 J3_DAY = "2024-01-15"
 
 
-def _j3_pruned_scan(spark: SparkSession, sf_dir: str):
-    """Write the partitioned layout and return (one_day_df, cleanup_fn)."""
-    import shutil
-    import tempfile
-
-    tmp = tempfile.mkdtemp(prefix="j3_")
+def _j3_pruned_scan(spark: SparkSession, sf_dir: str, tmp: str) -> DataFrame:
+    """Write the partitioned layout under `tmp`; return the one-day scan."""
     path = f"{tmp}/events_by_day"
     ev = table(spark, sf_dir, "events").withColumn(
         "event_date", F.col("ts").cast("date")
     )
     ev.write.partitionBy("event_date").mode("overwrite").parquet(path)
     back = spark.read.schema(ev.schema).parquet(path)
-    one_day = back.filter(F.col("event_date") == F.lit(J3_DAY).cast("date"))
-    return one_day, (lambda: shutil.rmtree(tmp, ignore_errors=True))
+    return back.filter(F.col("event_date") == F.lit(J3_DAY).cast("date"))
 
 
-@_register(
+@registry.query(
     "j3_partition_pruned_scan",
     f"""
     SELECT event_type,
@@ -1186,10 +1168,10 @@ def _j3_pruned_scan(spark: SparkSession, sf_dir: str):
     """,
 )
 def j3_partition_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    one_day, cleanup = _j3_pruned_scan(spark, sf_dir)
-    try:
-        return (
-            one_day.groupBy("event_type")
+    with scratch_dir("j3_") as tmp:
+        return materialize(
+            _j3_pruned_scan(spark, sf_dir, tmp)
+            .groupBy("event_type")
             .agg(
                 F.count(F.lit(1)).alias("n_events"),
                 F.countDistinct("user_id").alias("n_users"),
@@ -1198,10 +1180,7 @@ def j3_partition_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .alias("sum_value"),
             )
             .orderBy("event_type")
-            .localCheckpoint(eager=True)  # materialize before tmp vanishes
         )
-    finally:
-        cleanup()
 
 
 # ---------------------------------------------------------------------------
@@ -1223,7 +1202,7 @@ def j3_partition_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Integer-cents state with DIV keeps the recurrence bit-exact in both
 # engines (DuckDB's // is the integer-division twin).
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "r4_recursive_carryover",
     """
     WITH RECURSIVE monthly AS (
@@ -1297,12 +1276,8 @@ def r4_recursive_carryover(spark: SparkSession, sf_dir: str) -> DataFrame:
 # from the same frame before the fact write so the layout build scans the
 # source once. Oracle proves layout + DPP are semantically invisible.
 # ---------------------------------------------------------------------------
-def _j4_dpp_join(spark: SparkSession, sf_dir: str):
-    """Write the partitioned fact + day dim; return (joined_df, cleanup)."""
-    import shutil
-    import tempfile
-
-    tmp = tempfile.mkdtemp(prefix="j4_")
+def _j4_dpp_join(spark: SparkSession, sf_dir: str, tmp: str) -> DataFrame:
+    """Write the partitioned fact + day dim under `tmp`; return their join."""
     ev = table(spark, sf_dir, "events").withColumn(
         "event_date", F.col("ts").cast("date")
     )
@@ -1321,11 +1296,10 @@ def _j4_dpp_join(spark: SparkSession, sf_dir: str):
     dim = spark.read.parquet(f"{tmp}/j4_day_dim").filter(
         F.col("dow").isin(1, 7)  # weekend
     )
-    joined = fact.join(dim, "event_date")
-    return joined, (lambda: shutil.rmtree(tmp, ignore_errors=True))
+    return fact.join(dim, "event_date")
 
 
-@_register(
+@registry.query(
     "j4_dynamic_partition_pruning",
     """
     SELECT event_type,
@@ -1339,10 +1313,10 @@ def _j4_dpp_join(spark: SparkSession, sf_dir: str):
     """,
 )
 def j4_dynamic_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
-    joined, cleanup = _j4_dpp_join(spark, sf_dir)
-    try:
-        return (
-            joined.groupBy("event_type")
+    with scratch_dir("j4_") as tmp:
+        return materialize(
+            _j4_dpp_join(spark, sf_dir, tmp)
+            .groupBy("event_type")
             .agg(
                 F.count(F.lit(1)).alias("n_events"),
                 F.countDistinct("user_id").alias("n_users"),
@@ -1351,10 +1325,7 @@ def j4_dynamic_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .alias("sum_value"),
             )
             .orderBy("event_type")
-            .localCheckpoint(eager=True)  # materialize before tmp vanishes
         )
-    finally:
-        cleanup()
 
 
 # ---------------------------------------------------------------------------
@@ -1368,11 +1339,10 @@ def j4_dynamic_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
 # format's write+read pair is semantically invisible, the same
 # layout-invisibility contract j2 (bucketing) and j3/j4 (partitioning)
 # pin for the built-in formats. Executors write their partitions
-# directly (payload never crosses the driver); the aggregate is
-# localCheckpoint'ed before the temp dir is removed (the j3 discipline).
+# directly (payload never crosses the driver).
 # Completes B14: read (batch + pushdown), stream (st11), and now write.
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "j5_pyds_writer_roundtrip",
     """
     SELECT lang,
@@ -1386,20 +1356,16 @@ def j4_dynamic_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def j5_pyds_writer_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from tts_etl_pipeline_spark.sources.pyds import register_sources
 
     register_sources(spark)
-    tmp = tempfile.mkdtemp(prefix="j5_")
-    try:
+    with scratch_dir("j5_") as tmp:
         docs = table(spark, sf_dir, "documents").select(
             "doc_id", "lang", "source", "text"
         )
         docs.write.format("jsonl_docs").mode("append").option("path", tmp).save()
         back = spark.read.format("jsonl_docs").option("path", tmp).load()
-        return (
+        return materialize(
             back.groupBy("lang")
             .agg(
                 F.count(F.lit(1)).alias("n_docs"),
@@ -1408,10 +1374,7 @@ def j5_pyds_writer_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.max("doc_id").cast("bigint").alias("max_doc"),
             )
             .orderBy("lang")
-            .localCheckpoint(eager=True)  # materialize before tmp vanishes
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -1430,7 +1393,7 @@ def j5_pyds_writer_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 # directory/partition, wrong as a default over a million-file table
 # (that is what the round's versioned-table manifests are for).
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "j6_mergeschema_scan",
     """
     WITH v1 AS (
@@ -1453,11 +1416,7 @@ def j5_pyds_writer_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def j6_mergeschema_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
-    tmp = tempfile.mkdtemp(prefix="j6_")
-    try:
+    with scratch_dir("j6_") as tmp:
         orders = table(spark, sf_dir, "orders")
         v1 = orders.filter(F.col("o_orderkey") % 2 == 0).select(
             "o_orderkey", "o_orderdate", "o_totalprice"
@@ -1470,7 +1429,7 @@ def j6_mergeschema_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         back = spark.read.option("mergeSchema", "true").parquet(
             f"{tmp}/t/vintage=1", f"{tmp}/t/vintage=2"
         )
-        return (
+        return materialize(
             back.groupBy(
                 F.coalesce("o_orderpriority", F.lit("<pre-schema>")).alias(
                     "priority"
@@ -1484,10 +1443,7 @@ def j6_mergeschema_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.min("o_orderkey").cast("bigint").alias("min_key"),
             )
             .orderBy("priority")
-            .localCheckpoint(eager=True)  # materialize before tmp vanishes
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -1507,7 +1463,7 @@ def j6_mergeschema_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 # partitioning, so the fact data shuffles ONCE; supplier names join behind
 # the broadcast size guard and the top-25 is a TakeOrdered, no global sort.
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "q23_waiting_suppliers",
     """
     SELECT s.s_name, COUNT(*) AS numwait
@@ -1616,7 +1572,7 @@ J7_FILES = 16
 _J7_MIN_SPREAD = 100  # min (max-min) per dimension for the contract to bind
 
 
-@_register(
+@registry.query(
     "j7_zorder_pruned_scan",
     """
     WITH b AS (
@@ -1638,9 +1594,6 @@ _J7_MIN_SPREAD = 100  # min (max-min) per dimension for the contract to bind
     """,
 )
 def j7_zorder_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from tts_etl_pipeline_spark.sources.zorder import (
         PruningRegressionError,
         file_column_ranges,
@@ -1663,9 +1616,8 @@ def j7_zorder_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     chi = 0 if empty else b.cmin + (b.cmax - b.cmin) * 4 // 10
     plo = 0 if empty else b.pmin + (b.pmax - b.pmin) * 2 // 10
     phi = 0 if empty else b.pmin + (b.pmax - b.pmin) * 4 // 10
-    tmp = tempfile.mkdtemp(prefix="j7_")
-    path = f"{tmp}/orders_zorder"
-    try:
+    with scratch_dir("j7_") as tmp:
+        path = f"{tmp}/orders_zorder"
         cols = orders.select("o_custkey", "price_cents")
         if empty:  # nothing to cluster; keep the read/agg path identical
             cols.write.parquet(path)
@@ -1700,7 +1652,7 @@ def j7_zorder_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "files skippable for the interior rectangle"
                 )
         back = spark.read.parquet(path)
-        return (
+        return materialize(
             back.filter(
                 F.col("o_custkey").between(clo, chi)
                 & F.col("price_cents").between(plo, phi)
@@ -1710,10 +1662,7 @@ def j7_zorder_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.countDistinct("o_custkey").alias("n_custs"),
                 F.sum("price_cents").cast("bigint").alias("sum_cents"),
             )
-            .localCheckpoint(eager=True)  # materialize before tmp vanishes
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -1734,7 +1683,7 @@ def j7_zorder_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 # unavoidable cost of any merge) + an atomic manifest commit; the audit
 # aggregate is one partial+final pass over the merged snapshot.
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "j8_merge_upsert_audit",
     """
     WITH t AS (
@@ -1767,9 +1716,6 @@ def j7_zorder_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def j8_merge_upsert_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from tts_etl_pipeline_spark.sources.versioned import (
         merge_upsert,
         read_version,
@@ -1784,15 +1730,14 @@ def j8_merge_upsert_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     source = orders.filter(F.col("o_orderkey") % 3 == 0).select(
         "o_orderkey", "o_orderstatus", (cents * 2).cast("bigint").alias("cents")
     )
-    base = tempfile.mkdtemp(prefix="j8_")
-    path = f"{base}/orders_tbl"
-    try:
+    with scratch_dir("j8_") as base:
+        path = f"{base}/orders_tbl"
         write_version(target, path)  # v1: the seed commit
         merge_upsert(  # v2: THE MERGE under test
             spark, path, source, key="o_orderkey", delete_on="o_orderstatus = 'F'"
         )
         back = read_version(spark, path)
-        return (
+        return materialize(
             back.groupBy(F.col("o_orderstatus").alias("status"))
             .agg(
                 F.count(F.lit(1)).alias("n_rows"),
@@ -1801,10 +1746,7 @@ def j8_merge_upsert_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.max("o_orderkey").cast("bigint").alias("max_key"),
             )
             .orderBy("status")
-            .localCheckpoint(eager=True)  # materialize before tmp vanishes
         )
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -1830,7 +1772,7 @@ J9_FILES = 16
 _J9_MIN_SPREAD = 100  # min key spread for the pruning contract to bind
 
 
-@_register(
+@registry.query(
     "j9_manifest_pruned_scan",
     """
     WITH b AS (
@@ -1846,9 +1788,6 @@ _J9_MIN_SPREAD = 100  # min key spread for the pruning contract to bind
     """,
 )
 def j9_manifest_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from tts_etl_pipeline_spark.sources.versioned import (
         read_version_pruned,
         write_version,
@@ -1866,9 +1805,8 @@ def j9_manifest_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     empty = b.kmin is None  # empty-table sweep: no rows -> no band
     klo = 0 if empty else b.kmin + (b.kmax - b.kmin) * 2 // 10
     khi = 0 if empty else b.kmin + (b.kmax - b.kmin) * 4 // 10
-    base = tempfile.mkdtemp(prefix="j9_")
-    path = f"{base}/orders_keyed"
-    try:
+    with scratch_dir("j9_") as base:
+        path = f"{base}/orders_keyed"
         write_version(
             orders.repartitionByRange(J9_FILES, "o_orderkey"),
             path,
@@ -1887,16 +1825,13 @@ def j9_manifest_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
                 f"manifest pruning degraded: only {skipped}/{total} files "
                 "skipped for the interior key band"
             )
-        return (
+        return materialize(
             pruned.agg(
                 F.count(F.lit(1)).alias("n_orders"),
                 F.countDistinct("o_custkey").alias("n_custs"),
                 F.sum("cents").cast("bigint").alias("sum_cents"),
             )
-            .localCheckpoint(eager=True)  # materialize before tmp vanishes
         )
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -1918,7 +1853,7 @@ def j9_manifest_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 # fold is one current-x-batch full-outer join + an atomic overwrite
 # commit; closed history passes through untouched (never rejoined).
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "j10_scd2_history",
     f"""
     WITH {USER_STATE_HIST_CTES}
@@ -1932,17 +1867,13 @@ def j9_manifest_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def j10_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from tts_etl_pipeline_spark.functions.bands import N_BANDS, band_states
     from tts_etl_pipeline_spark.sources.scd import scd2_apply
     from tts_etl_pipeline_spark.sources.versioned import read_version
 
     states, _, _, _, _ = band_states(spark, sf_dir)
-    base = tempfile.mkdtemp(prefix="j10_")
-    path = f"{base}/user_state_dim"
-    try:
+    with scratch_dir("j10_") as base:
+        path = f"{base}/user_state_dim"
         for i in range(1, N_BANDS + 1):
             batch = states.filter(F.col("band") == i).select(
                 "user_id",
@@ -1951,7 +1882,7 @@ def j10_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             scd2_apply(spark, path, batch, "user_id", ["event_type"], "eff")
         hist = read_version(spark, path)
-        return (
+        return materialize(
             hist.groupBy(F.col("event_type").alias("state"))
             .agg(
                 F.count(F.lit(1)).alias("n_versions"),
@@ -1964,10 +1895,7 @@ def j10_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .alias("closed_span_us"),
             )
             .orderBy("state")
-            .localCheckpoint(eager=True)  # materialize before tmp vanishes
         )
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -1981,7 +1909,7 @@ def j10_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (application side >= 10 GB, creation side <= 10 MB after its filter);
 # at fixture scale the size gate is lowered INSIDE the query and restored
 # in finally (conf leaks poison every later query — the u7 scripting-flag
-# lesson), with the aggregate localCheckpoint'ed while the scoped plan is
+# lesson), with the aggregate materialized while the scoped plan is
 # live (physical planning is lazy; an unmaterialized return would re-plan
 # AFTER the conf restore and silently lose the rehearsal). The broadcast
 # threshold is scoped off for the same reason: orders('P') at 100 TB is
@@ -1992,7 +1920,7 @@ def j10_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
 # in-query with a typed error, gated on both sides being non-empty (the
 # rule legitimately declines on empty statistics).
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "j11_runtime_bloom_join",
     """
     SELECT l.l_returnflag AS returnflag,
@@ -2055,7 +1983,7 @@ def j11_runtime_bloom_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         # materialize UNDER the scoped confs: planning is lazy, and the
         # driver collects after this function restored them
-        return out.localCheckpoint(eager=True)
+        return materialize(out)
     finally:
         spark.conf.set(_SCAN_GATE, old_gate)
         spark.conf.set(_BCAST, old_bcast)
@@ -2078,7 +2006,7 @@ def j11_runtime_bloom_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 # current-x-batch join + an O(changed) commit; closed bytes are never
 # read or written again.
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "j12_scd2_incremental_fold",
     f"""
     WITH {USER_STATE_HIST_CTES},
@@ -2100,8 +2028,6 @@ def j11_runtime_bloom_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def j12_scd2_incremental_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os as _os
-    import shutil
-    import tempfile
 
     from tts_etl_pipeline_spark.functions.bands import N_BANDS, band_states
     from tts_etl_pipeline_spark.sources.scd import (
@@ -2111,9 +2037,8 @@ def j12_scd2_incremental_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tts_etl_pipeline_spark.sources.versioned import manifest, read_version
 
     states, _, _, _, _ = band_states(spark, sf_dir)
-    base = tempfile.mkdtemp(prefix="j12_")
-    path = f"{base}/user_state_dim"
-    try:
+    with scratch_dir("j12_") as base:
+        path = f"{base}/user_state_dim"
         for i in range(1, N_BANDS + 1):
             batch = states.filter(F.col("band") == i).select(
                 "user_id",
@@ -2151,7 +2076,7 @@ def j12_scd2_incremental_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("closed_span_us"),
         )
-        return (
+        return materialize(
             per_user.groupBy("n_versions")
             .agg(
                 F.count(F.lit(1)).alias("n_users"),
@@ -2159,10 +2084,7 @@ def j12_scd2_incremental_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum("closed_span_us").cast("bigint").alias("sum_closed_span_us"),
             )
             .orderBy("n_versions")
-            .localCheckpoint(eager=True)  # materialize before tmp vanishes
         )
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -2179,7 +2101,7 @@ def j12_scd2_incremental_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
 # j12 checks file-identity for). Scale shape: identical to j10's folds;
 # the AS OF read costs one manifest parse + the v2 file set.
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "j13_scd2_asof_history",
     f"""
     WITH {user_state_hist_ctes(2)}
@@ -2193,17 +2115,13 @@ def j12_scd2_incremental_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def j13_scd2_asof_history(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from tts_etl_pipeline_spark.functions.bands import N_BANDS, band_states
     from tts_etl_pipeline_spark.sources.scd import scd2_apply
     from tts_etl_pipeline_spark.sources.versioned import read_version
 
     states, _, _, _, _ = band_states(spark, sf_dir)
-    base = tempfile.mkdtemp(prefix="j13_")
-    path = f"{base}/user_state_dim"
-    try:
+    with scratch_dir("j13_") as base:
+        path = f"{base}/user_state_dim"
         versions = []
         for i in range(1, N_BANDS + 1):
             batch = states.filter(F.col("band") == i).select(
@@ -2221,7 +2139,7 @@ def j13_scd2_asof_history(spark: SparkSession, sf_dir: str) -> DataFrame:
         # THE COMPOSITION: time travel to the mid-fold commit; band 3's
         # states must be invisible, bands 1-2 a consistent SCD2 prefix
         hist_v2 = read_version(spark, path, versions[1])
-        return (
+        return materialize(
             hist_v2.groupBy(F.col("event_type").alias("state"))
             .agg(
                 F.count(F.lit(1)).alias("n_versions"),
@@ -2234,10 +2152,7 @@ def j13_scd2_asof_history(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .alias("closed_span_us"),
             )
             .orderBy("state")
-            .localCheckpoint(eager=True)  # materialize before tmp vanishes
         )
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -2259,7 +2174,7 @@ def j13_scd2_asof_history(spark: SparkSession, sf_dir: str) -> DataFrame:
 # at fixture scale and shuffle at 100 TB. Oracle: the shared hist CTEs +
 # the identical LEFT JOIN in SQL.
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "j14_scd2_point_in_time_join",
     f"""
     WITH {USER_STATE_HIST_CTES},
@@ -2285,18 +2200,14 @@ def j13_scd2_asof_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def j14_scd2_point_in_time_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from tts_etl_pipeline_spark.functions.bands import N_BANDS, band_states
     from tts_etl_pipeline_spark.functions.exact import money
     from tts_etl_pipeline_spark.sources.scd import scd2_apply
     from tts_etl_pipeline_spark.sources.versioned import read_version
 
     states, _, _, _, _ = band_states(spark, sf_dir)
-    base = tempfile.mkdtemp(prefix="j14_")
-    path = f"{base}/user_state_dim"
-    try:
+    with scratch_dir("j14_") as base:
+        path = f"{base}/user_state_dim"
         for i in range(1, N_BANDS + 1):
             batch = states.filter(F.col("band") == i).select(
                 "user_id",
@@ -2322,7 +2233,7 @@ def j14_scd2_point_in_time_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (h.valid_to.isNull() | (ev.tss < h.valid_to)),
             "left",
         )
-        return (
+        return materialize(
             enriched.groupBy(
                 F.col("valid_from").isNotNull().alias("matched"),
                 "state",
@@ -2333,10 +2244,7 @@ def j14_scd2_point_in_time_join(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum("cents").cast("bigint").alias("sum_cents"),
             )
             .orderBy("matched", "state")
-            .localCheckpoint(eager=True)  # materialize before tmp vanishes
         )
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -2364,7 +2272,7 @@ def j14_scd2_point_in_time_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 # into O(touched) ones; sources/scd.py::recluster_current restores the
 # layout when accumulated folds erode it.
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "j15_scd2_clustered_fold",
     f"""
     WITH ub AS (
@@ -2383,8 +2291,6 @@ def j14_scd2_point_in_time_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def j15_scd2_clustered_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os as _os
-    import shutil
-    import tempfile
 
     from tts_etl_pipeline_spark.functions.bands import N_BANDS, band_states
     from tts_etl_pipeline_spark.sources.scd import scd2_apply
@@ -2396,9 +2302,8 @@ def j15_scd2_clustered_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).collect()[0]
     # integer midpoint of the key RANGE — floor division in both engines
     mid = 0 if bounds["mn"] is None else (bounds["mn"] + bounds["mx"]) // 2
-    base = tempfile.mkdtemp(prefix="j15_")
-    path = f"{base}/user_state_dim"
-    try:
+    with scratch_dir("j15_") as base:
+        path = f"{base}/user_state_dim"
         versions = []
         for i in range(1, N_BANDS + 1):
             batch = states.filter(
@@ -2474,7 +2379,7 @@ def j15_scd2_clustered_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
             "valid_from",
             "valid_to",
         )
-        return (
+        return materialize(
             hist.groupBy("state")
             .agg(
                 F.count(F.lit(1)).alias("n_versions"),
@@ -2487,10 +2392,7 @@ def j15_scd2_clustered_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .alias("closed_span_us"),
             )
             .orderBy("state")
-            .localCheckpoint(eager=True)  # materialize before tmp vanishes
         )
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -2511,7 +2413,7 @@ def j15_scd2_clustered_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
 # O(touched files) read+rewrite + one manifest commit — never O(table);
 # unpruned mutations degrade to the full rewrite, never to a lost row.
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "j16_delete_update_pruned",
     """
     WITH b AS (
@@ -2536,8 +2438,6 @@ def j15_scd2_clustered_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def j16_delete_update_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os as _os
-    import shutil
-    import tempfile
 
     from tts_etl_pipeline_spark.sources.versioned import (
         delete_where,
@@ -2557,9 +2457,8 @@ def j16_delete_update_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     mx = 0 if b["mx"] is None else b["mx"]
     u_lo, u_hi = mn, mn + ((mx - mn) // 8)
     d_lo, d_hi = mn + (((mx - mn) * 6) // 8), mx
-    base = tempfile.mkdtemp(prefix="j16_")
-    path = f"{base}/orders_v"
-    try:
+    with scratch_dir("j16_") as base:
+        path = f"{base}/orders_v"
         write_version(
             orders.repartitionByRange(8, "o_orderkey"),
             path,
@@ -2622,7 +2521,7 @@ def j16_delete_update_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
             _assert_reused(keep_d, v3, "DELETE")
         from tts_etl_pipeline_spark.functions.exact import money
 
-        return (
+        return materialize(
             read_version(spark, path)
             .groupBy("o_orderstatus")
             .agg(
@@ -2633,10 +2532,7 @@ def j16_delete_update_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .alias("sum_cents"),
             )
             .orderBy("o_orderstatus")
-            .localCheckpoint(eager=True)  # materialize before tmp vanishes
         )
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -2657,7 +2553,7 @@ def j16_delete_update_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
 # CHECK-probe job per commit over the STAGED rows only (never the table),
 # zero when no constraints are recorded.
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "j17_check_constraints",
     """
     SELECT o_orderstatus,
@@ -2670,9 +2566,6 @@ def j16_delete_update_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def j17_check_constraints(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from tts_etl_pipeline_spark.functions.exact import money
     from tts_etl_pipeline_spark.sources.versioned import (
         ConstraintViolationError,
@@ -2687,9 +2580,8 @@ def j17_check_constraints(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"
     )
-    base = tempfile.mkdtemp(prefix="j17_")
-    path = f"{base}/orders_v"
-    try:
+    with scratch_dir("j17_") as base:
+        path = f"{base}/orders_v"
         write_version(orders.filter(F.col("o_orderkey") % 2 == 0), path)
         v2 = add_constraint(spark, path, "price_nonneg", "o_totalprice >= 0")
         v3 = add_constraint(
@@ -2729,7 +2621,7 @@ def j17_check_constraints(spark: SparkSession, sf_dir: str) -> DataFrame:
             raise RuntimeError("refused append still advanced the head")
         if read_version(spark, path).count() != n_before:
             raise RuntimeError("refused append changed the table contents")
-        return (
+        return materialize(
             read_version(spark, path)
             .groupBy("o_orderstatus")
             .agg(
@@ -2740,10 +2632,7 @@ def j17_check_constraints(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .alias("sum_cents"),
             )
             .orderBy("o_orderstatus")
-            .localCheckpoint(eager=True)  # materialize before tmp vanishes
         )
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -2767,7 +2656,7 @@ def j17_check_constraints(spark: SparkSession, sf_dir: str) -> DataFrame:
 # blooms have no such hazard, and test_versioned.py pins a string-key
 # lookup).
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "j18_bloom_point_lookup",
     """
     WITH b AS (
@@ -2787,9 +2676,6 @@ def j17_check_constraints(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def j18_bloom_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from tts_etl_pipeline_spark.sources.versioned import (
         manifest,
         read_version,
@@ -2804,9 +2690,8 @@ def j18_bloom_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = docs.agg(
         F.min("doc_id").alias("mn"), F.max("doc_id").alias("mx")
     ).collect()[0]
-    base = tempfile.mkdtemp(prefix="j18_")
-    path = f"{base}/docs_v"
-    try:
+    with scratch_dir("j18_") as base:
+        path = f"{base}/docs_v"
         write_version(
             docs.repartition(8, "doc_id"),
             path,
@@ -2814,7 +2699,7 @@ def j18_bloom_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
             collect_blooms=("doc_id",),
         )
         if b["mn"] is None:  # empty corpus: schema-stable empty answer
-            return (
+            return materialize(
                 read_version(spark, path)
                 .filter(F.lit(False))
                 .groupBy("doc_id")
@@ -2823,7 +2708,6 @@ def j18_bloom_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.sum("n_chars").cast("bigint").alias("sum_chars"),
                     F.min("lang").alias("lang_min"),
                 )
-                .localCheckpoint(eager=True)
             )
         probes = sorted({b["mn"], b["mx"], b["mn"] + ((b["mx"] - b["mn"]) // 2)})
         m1 = manifest(path, 1)
@@ -2861,7 +2745,7 @@ def j18_bloom_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
         out = parts[0]
         for p_df in parts[1:]:
             out = out.unionByName(p_df)
-        return (
+        return materialize(
             out.groupBy("doc_id")
             .agg(
                 F.count(F.lit(1)).alias("n_rows"),
@@ -2869,10 +2753,7 @@ def j18_bloom_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.min("lang").alias("lang_min"),
             )
             .orderBy("doc_id")
-            .localCheckpoint(eager=True)  # materialize before tmp vanishes
         )
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -2894,7 +2775,7 @@ def j18_bloom_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # alternative (rewrite 100 TB to rename a column) is exactly what column
 # mapping exists to avoid.
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "j19_column_evolution",
     """
     SELECT o_orderstatus,
@@ -2909,9 +2790,6 @@ def j18_bloom_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def j19_column_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from tts_etl_pipeline_spark.functions.exact import money
     from tts_etl_pipeline_spark.sources.versioned import (
         drop_column,
@@ -2926,9 +2804,8 @@ def j19_column_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
         "o_orderpriority",
     )
-    base = tempfile.mkdtemp(prefix="j19_")
-    path = f"{base}/orders_v"
-    try:
+    with scratch_dir("j19_") as base:
+        path = f"{base}/orders_v"
         write_version(
             orders.filter(F.col("o_orderkey") % 2 == 0)
             .repartitionByRange(4, "o_orderkey"),
@@ -2978,7 +2855,7 @@ def j19_column_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "range pruning died across the rename/drop — manifest "
                     "stats lost their physical keying"
                 )
-        return (
+        return materialize(
             read_version(spark, path)
             .groupBy("o_orderstatus")
             .agg(
@@ -2991,10 +2868,7 @@ def j19_column_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .alias("sum_cents"),
             )
             .orderBy("o_orderstatus")
-            .localCheckpoint(eager=True)  # materialize before tmp vanishes
         )
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -3015,7 +2889,7 @@ def j19_column_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
 # reproduces the mutations declaratively (WHERE NOT ...), so value
 # equality proves the read path applies vectors exactly.
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "j20_deletion_vectors",
     """
     WITH b AS (
@@ -3039,8 +2913,6 @@ def j19_column_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def j20_deletion_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os as _os
-    import shutil
-    import tempfile
 
     from tts_etl_pipeline_spark.functions.exact import money
     from tts_etl_pipeline_spark.sources.versioned import (
@@ -3061,9 +2933,8 @@ def j20_deletion_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     mx = 0 if b["mx"] is None else b["mx"]
     b_lo = mn + (((mx - mn) * 3) // 8)
     b_hi = b_lo + ((mx - mn) // 64)
-    base = tempfile.mkdtemp(prefix="j20_")
-    path = f"{base}/orders_v"
-    try:
+    with scratch_dir("j20_") as base:
+        path = f"{base}/orders_v"
         write_version(
             orders.repartitionByRange(8, "o_orderkey"),
             path,
@@ -3115,7 +2986,7 @@ def j20_deletion_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
             head = v3 or v2
             if not (manifest(path, head).get("dvs") or {}):
                 raise RuntimeError("head manifest carries no deletion vectors")
-        return (
+        return materialize(
             read_version(spark, path)
             .groupBy("o_orderstatus")
             .agg(
@@ -3126,10 +2997,7 @@ def j20_deletion_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .alias("sum_cents"),
             )
             .orderBy("o_orderstatus")
-            .localCheckpoint(eager=True)  # materialize before tmp vanishes
         )
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -3149,7 +3017,7 @@ def j20_deletion_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the difference between a driver-side dictionary lookup and a
 # distributed footer sweep before the first byte of data moves.
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "j21_string_pruned_scan",
     """
     SELECT p_brand,
@@ -3163,9 +3031,6 @@ def j20_deletion_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def j21_string_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from tts_etl_pipeline_spark.functions.exact import money
     from tts_etl_pipeline_spark.sources.versioned import (
         manifest,
@@ -3176,9 +3041,8 @@ def j21_string_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     part = table(spark, sf_dir, "part").select(
         "p_partkey", "p_name", "p_brand", "p_size", "p_retailprice"
     )
-    base = tempfile.mkdtemp(prefix="j21_")
-    path = f"{base}/part_v"
-    try:
+    with scratch_dir("j21_") as base:
+        path = f"{base}/part_v"
         write_version(
             part.repartitionByRange(8, "p_name"),
             path,
@@ -3212,7 +3076,7 @@ def j21_string_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "files on a range-clustered string key — bounds pruning "
                 "regressed"
             )
-        return (
+        return materialize(
             pruned.groupBy("p_brand")
             .agg(
                 F.count(F.lit(1)).alias("n_parts"),
@@ -3222,10 +3086,7 @@ def j21_string_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .alias("sum_cents"),
             )
             .orderBy("p_brand")
-            .localCheckpoint(eager=True)  # materialize before tmp vanishes
         )
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -3244,7 +3105,7 @@ def j21_string_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 # reads/writes O(vectored file bytes) — never O(table) — which is the
 # maintenance cost model a 100 TB table needs once narrow updates accrete.
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "j22_dv_update_purge",
     """
     WITH b AS (
@@ -3268,8 +3129,6 @@ def j21_string_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def j22_dv_update_purge(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os as _os
-    import shutil
-    import tempfile
 
     from tts_etl_pipeline_spark.functions.exact import money
     from tts_etl_pipeline_spark.sources.versioned import (
@@ -3291,9 +3150,8 @@ def j22_dv_update_purge(spark: SparkSession, sf_dir: str) -> DataFrame:
     mx = 0 if b["mx"] is None else b["mx"]
     u_lo = mn + (((mx - mn) * 2) // 8)
     u_hi = u_lo + ((mx - mn) // 32)
-    base = tempfile.mkdtemp(prefix="j22_")
-    path = f"{base}/orders_v"
-    try:
+    with scratch_dir("j22_") as base:
+        path = f"{base}/orders_v"
         write_version(
             orders.repartitionByRange(8, "o_orderkey"),
             path,
@@ -3351,7 +3209,7 @@ def j22_dv_update_purge(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "change feed across the purge is not empty — purge "
                     "must be maintenance, never mutation"
                 )
-        return (
+        return materialize(
             read_version(spark, path)
             .groupBy("o_orderstatus")
             .agg(
@@ -3362,10 +3220,7 @@ def j22_dv_update_purge(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .alias("sum_cents"),
             )
             .orderBy("o_orderstatus")
-            .localCheckpoint(eager=True)  # materialize before tmp vanishes
         )
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -3386,7 +3241,7 @@ def j22_dv_update_purge(spark: SparkSession, sf_dir: str) -> DataFrame:
 # multi-dimension range workloads on a 100 TB versioned table plan from
 # the manifest alone.
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "j23_versioned_zorder_optimize",
     """
     WITH b AS (
@@ -3411,9 +3266,6 @@ def j22_dv_update_purge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def j23_versioned_zorder_optimize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from tts_etl_pipeline_spark.functions.exact import money
     from tts_etl_pipeline_spark.sources.versioned import (
         optimize_zorder,
@@ -3436,9 +3288,8 @@ def j23_versioned_zorder_optimize(spark: SparkSession, sf_dir: str) -> DataFrame
     pmx = 0 if b["pmx"] is None else b["pmx"]
     o_hi = omn + ((omx - omn) // 4)
     p_hi = pmn + ((pmx - pmn) // 4)
-    base = tempfile.mkdtemp(prefix="j23_")
-    path = f"{base}/lineitem_v"
-    try:
+    with scratch_dir("j23_") as base:
+        path = f"{base}/lineitem_v"
         # v1 hash-scattered: every file spans both key spaces
         write_version(li.repartition(16), path, collect_stats=("l_orderkey",))
         v2 = optimize_zorder(
@@ -3461,7 +3312,7 @@ def j23_versioned_zorder_optimize(spark: SparkSession, sf_dir: str) -> DataFrame
                 f"zorder pruning under contract: {so}/{to} on l_orderkey, "
                 f"{sp}/{tp} on l_partkey (>=25% each expected)"
             )
-        return (
+        return materialize(
             pruned_o.filter(F.col("l_partkey").between(pmn, p_hi))
             .groupBy("l_returnflag")
             .agg(
@@ -3474,10 +3325,7 @@ def j23_versioned_zorder_optimize(spark: SparkSession, sf_dir: str) -> DataFrame
                 .alias("sum_cents"),
             )
             .orderBy("l_returnflag")
-            .localCheckpoint(eager=True)  # materialize before tmp vanishes
         )
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -3493,7 +3341,7 @@ def j23_versioned_zorder_optimize(spark: SparkSession, sf_dir: str) -> DataFrame
 # list unchanged, tuples carried). DuckDB reproduces the result
 # declaratively, so value equality proves pruning never dropped a row.
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "j24_partition_spec_evolution",
     """
     WITH w AS (
@@ -3513,8 +3361,6 @@ def j23_versioned_zorder_optimize(spark: SparkSession, sf_dir: str) -> DataFrame
 )
 def j24_partition_spec_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os as _os
-    import shutil
-    import tempfile
 
     from tts_etl_pipeline_spark.functions.exact import money
     from tts_etl_pipeline_spark.sources.versioned import (
@@ -3535,9 +3381,8 @@ def j24_partition_spec_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     old = orders.filter(F.col("o_orderdate") < F.lit(split).cast("date"))
     new = orders.filter(F.col("o_orderdate") >= F.lit(split).cast("date"))
     n_rows = orders.count()
-    base = tempfile.mkdtemp(prefix="j24_")
-    path = f"{base}/orders_v"
-    try:
+    with scratch_dir("j24_") as base:
+        path = f"{base}/orders_v"
         write_version(old, path, partition_by=(("year", "o_orderdate"),))
         m1 = manifest(path, 1)
         n_years = old.selectExpr("year(o_orderdate)").distinct().count()
@@ -3594,7 +3439,7 @@ def j24_partition_spec_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "DV delete on a partitioned table changed the file list"
                 )
         final, _, _ = read_version_pruned(spark, path, "o_orderdate", lo, hi)
-        return (
+        return materialize(
             final.groupBy("o_orderstatus")
             .agg(
                 F.count(F.lit(1)).alias("n_orders"),
@@ -3604,10 +3449,7 @@ def j24_partition_spec_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .alias("sum_cents"),
             )
             .orderBy("o_orderstatus")
-            .localCheckpoint(eager=True)  # materialize before tmp vanishes
         )
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -3627,7 +3469,7 @@ def j24_partition_spec_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the final table declaratively, so value equality proves publish
 # delivered the staged rows (and the staged delete) exactly once.
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "j25_write_audit_publish",
     """
     WITH mx AS (
@@ -3643,9 +3485,6 @@ def j24_partition_spec_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def j25_write_audit_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from tts_etl_pipeline_spark.functions.exact import money
     from tts_etl_pipeline_spark.sources.versioned import (
         create_branch,
@@ -3668,9 +3507,8 @@ def j25_write_audit_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     second = orders.filter(F.col("o_orderkey") % 2 == 1)
     n_first, n_total = first.count(), orders.count()
     mx = second.agg(F.max("o_orderkey")).collect()[0][0]
-    base = tempfile.mkdtemp(prefix="j25_")
-    path = f"{base}/orders_v"
-    try:
+    with scratch_dir("j25_") as base:
+        path = f"{base}/orders_v"
         write_version(first, path)  # main v1
         create_branch(path, "audit")
         half = second.filter(F.col("o_custkey") % 2 == 0)
@@ -3732,7 +3570,7 @@ def j25_write_audit_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
         ):
             raise RuntimeError("publish did not deliver the staged rows")
         create_tag(path, "published")  # reproducible read of the release
-        return (
+        return materialize(
             read_tag(spark, path, "published")
             .groupBy("o_orderstatus")
             .agg(
@@ -3742,10 +3580,7 @@ def j25_write_audit_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .alias("sum_cents"),
             )
             .orderBy("o_orderstatus")
-            .localCheckpoint(eager=True)  # materialize before tmp vanishes
         )
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -3761,7 +3596,7 @@ def j25_write_audit_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the delete exactly. The streaming twin (equality deletes drained through
 # stream_changes into an SCD2 soft-close) extends st22's oracle.
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "j26_equality_deletes",
     """
     WITH mn AS (
@@ -3779,8 +3614,6 @@ def j25_write_audit_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def j26_equality_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os as _os
-    import shutil
-    import tempfile
 
     from tts_etl_pipeline_spark.functions.exact import money
     from tts_etl_pipeline_spark.sources.versioned import (
@@ -3801,9 +3634,8 @@ def j26_equality_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .collect()
     )
-    base = tempfile.mkdtemp(prefix="j26_")
-    path = f"{base}/orders_v"
-    try:
+    with scratch_dir("j26_") as base:
+        path = f"{base}/orders_v"
         write_version(
             orders.repartitionByRange(8, "o_orderkey"),
             path,
@@ -3864,7 +3696,7 @@ def j26_equality_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "a re-inserted key did not survive an EARLIER equality "
                     "delete — sequence-number scoping is broken"
                 )
-        return (
+        return materialize(
             read_version(spark, path)
             .groupBy("o_orderstatus")
             .agg(
@@ -3875,10 +3707,7 @@ def j26_equality_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .alias("sum_cents"),
             )
             .orderBy("o_orderstatus")
-            .localCheckpoint(eager=True)  # materialize before tmp vanishes
         )
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -3893,7 +3722,7 @@ def j26_equality_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
 # encodings read as one logical BIGINT column. DuckDB reproduces the
 # final table declaratively, so value equality proves exactly that.
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "j27_type_widening",
     """
     WITH base AS (
@@ -3915,8 +3744,6 @@ def j26_equality_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def j27_type_widening(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os as _os
-    import shutil
-    import tempfile
 
     from tts_etl_pipeline_spark.sources.versioned import (
         manifest,
@@ -3932,9 +3759,8 @@ def j27_type_widening(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l_quantity").cast("int").alias("q"),
     )
     n_rows = li.count()
-    base = tempfile.mkdtemp(prefix="j27_")
-    path = f"{base}/li_v"
-    try:
+    with scratch_dir("j27_") as base:
+        path = f"{base}/li_v"
         write_version(li, path, collect_stats=("k",))
         m1 = manifest(path, 1)
         sig = {
@@ -3969,7 +3795,7 @@ def j27_type_widening(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             path,
         )
-        return (
+        return materialize(
             read_version(spark, path)
             .groupBy("l_returnflag")
             .agg(
@@ -3978,10 +3804,7 @@ def j27_type_widening(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum("k").cast("bigint").alias("sum_keys"),
             )
             .orderBy("l_returnflag")
-            .localCheckpoint(eager=True)  # materialize before tmp vanishes
         )
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -3999,7 +3822,7 @@ def j27_type_widening(spark: SparkSession, sf_dir: str) -> DataFrame:
 # tests/test_spj.py. DuckDB reproduces the join declaratively, so value
 # equality proves bucket routing lost no row.
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "j28_storage_partitioned_join",
     """
     WITH la AS (
@@ -4018,9 +3841,6 @@ def j27_type_widening(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def j28_storage_partitioned_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from tts_etl_pipeline_spark.functions.exact import money
     from tts_etl_pipeline_spark.plans.inspect import (
         count_shuffles,
@@ -4048,62 +3868,60 @@ def j28_storage_partitioned_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("cents"),
         )
     )
-    base = tempfile.mkdtemp(prefix="j28_")
-    po, pl, px = f"{base}/orders_v", f"{base}/rollup_v", f"{base}/probe_v"
-    prior = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", None)
-    try:
-        write_version(orders, po, partition_by=(("sbucket", "o_orderkey", 16),))
-        write_version(rollup, pl, partition_by=(("sbucket", "l_orderkey", 16),))
-        # one file group per live bucket — the O(buckets) layout contract.
-        # The ==16 form needs every bucket OCCUPIED: at n rows the chance
-        # of an empty murmur3 bucket is ~16*(15/16)^n, non-trivial below a
-        # few hundred rows — gate on a count that makes it negligible
-        if orders.count() >= 1024 and len(manifest(po, 1)["files"]) != 16:
-            raise RuntimeError(
-                f"sbucket(16) wrote {len(manifest(po, 1)['files'])} file "
-                f"groups; want one per bucket"
+    with scratch_dir("j28_") as base:
+        po, pl, px = f"{base}/orders_v", f"{base}/rollup_v", f"{base}/probe_v"
+        prior = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", None)
+        try:
+            write_version(orders, po, partition_by=(("sbucket", "o_orderkey", 16),))
+            write_version(rollup, pl, partition_by=(("sbucket", "l_orderkey", 16),))
+            # one file group per live bucket — the O(buckets) layout contract.
+            # The ==16 form needs every bucket OCCUPIED: at n rows the chance
+            # of an empty murmur3 bucket is ~16*(15/16)^n, non-trivial below a
+            # few hundred rows — gate on a count that makes it negligible
+            if orders.count() >= 1024 and len(manifest(po, 1)["files"]) != 16:
+                raise RuntimeError(
+                    f"sbucket(16) wrote {len(manifest(po, 1)['files'])} file "
+                    f"groups; want one per bucket"
+                )
+            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+            joined, colocated = spj_join(
+                spark, po, pl, ("o_orderkey", "l_orderkey")
             )
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        joined, colocated = spj_join(
-            spark, po, pl, ("o_orderkey", "l_orderkey")
-        )
-        if not colocated:
-            raise RuntimeError("compatible sbucket(16) specs must co-locate")
-        plan = physical_plan(joined)
-        if "SortMergeJoin" not in plan or "Bucketed: true" not in plan:
-            raise RuntimeError(f"not a bucketed sort-merge join:\n{plan}")
-        if count_shuffles(joined) != 0:
-            raise RuntimeError(
-                f"storage-partitioned join must plan ZERO Exchange below "
-                f"the join:\n{plan}"
+            if not colocated:
+                raise RuntimeError("compatible sbucket(16) specs must co-locate")
+            plan = physical_plan(joined)
+            if "SortMergeJoin" not in plan or "Bucketed: true" not in plan:
+                raise RuntimeError(f"not a bucketed sort-merge join:\n{plan}")
+            if count_shuffles(joined) != 0:
+                raise RuntimeError(
+                    f"storage-partitioned join must plan ZERO Exchange below "
+                    f"the join:\n{plan}"
+                )
+            # the negative arm: a mismatched bucket count refuses co-location
+            write_version(
+                orders.limit(50), px, partition_by=(("sbucket", "o_orderkey", 8),)
             )
-        # the negative arm: a mismatched bucket count refuses co-location
-        write_version(
-            orders.limit(50), px, partition_by=(("sbucket", "o_orderkey", 8),)
-        )
-        n_bad, reason, _ = spj_compatibility(po, px, "o_orderkey", "o_orderkey")
-        if n_bad is not None or "bucket counts differ" not in str(reason):
-            raise RuntimeError(
-                f"mismatched bucket counts must refuse co-location, got "
-                f"{n_bad}: {reason}"
+            n_bad, reason, _ = spj_compatibility(po, px, "o_orderkey", "o_orderkey")
+            if n_bad is not None or "bucket counts differ" not in str(reason):
+                raise RuntimeError(
+                    f"mismatched bucket counts must refuse co-location, got "
+                    f"{n_bad}: {reason}"
+                )
+            return materialize(
+                joined.groupBy("o_orderstatus")
+                .agg(
+                    F.count(F.lit(1)).alias("n_orders"),
+                    F.sum("qty").cast("bigint").alias("sum_qty"),
+                    F.sum("cents").cast("bigint").alias("sum_cents"),
+                )
+                .orderBy("o_orderstatus")
             )
-        return (
-            joined.groupBy("o_orderstatus")
-            .agg(
-                F.count(F.lit(1)).alias("n_orders"),
-                F.sum("qty").cast("bigint").alias("sum_qty"),
-                F.sum("cents").cast("bigint").alias("sum_cents"),
-            )
-            .orderBy("o_orderstatus")
-            .localCheckpoint(eager=True)  # materialize before tmp vanishes
-        )
-    finally:
-        if prior is None:
-            spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-        else:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prior)
-        drop_spj_exposures(spark)
-        shutil.rmtree(base, ignore_errors=True)
+        finally:
+            if prior is None:
+                spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+            else:
+                spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prior)
+            drop_spj_exposures(spark)
 
 
 # ---------------------------------------------------------------------------
@@ -4121,7 +3939,7 @@ def j28_storage_partitioned_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 # never stale bytes), rename, compact-materialization, clone-remap, DV
 # and eq-delete interplays are pinned in tests/test_versioned.py.
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "j29_default_column_values",
     """
     WITH pre AS (
@@ -4143,8 +3961,6 @@ def j28_storage_partitioned_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def j29_default_column_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os as _os
-    import shutil
-    import tempfile
 
     from tts_etl_pipeline_spark.functions.exact import money
     from tts_etl_pipeline_spark.sources.versioned import (
@@ -4162,9 +3978,8 @@ def j29_default_column_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     post = orders.filter(F.col("o_orderkey") % 2 == 1).withColumn(
         "score", (F.col("o_orderkey") % 10).cast("long")
     )
-    base = tempfile.mkdtemp(prefix="j29_")
-    path = f"{base}/orders_v"
-    try:
+    with scratch_dir("j29_") as base:
+        path = f"{base}/orders_v"
         write_version(pre, path)  # v1: no score column exists yet
         m1 = manifest(path, 1)
         sig = {
@@ -4188,7 +4003,7 @@ def j29_default_column_values(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "time travel before the add must serve the PRE-ADD schema"
             )
         write_version(post, path)  # v3: post-add files carry real scores
-        return (
+        return materialize(
             read_version(spark, path)
             .groupBy("score")
             .agg(
@@ -4198,10 +4013,7 @@ def j29_default_column_values(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .alias("sum_cents"),
             )
             .orderBy("score")
-            .localCheckpoint(eager=True)  # materialize before tmp vanishes
         )
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -4220,7 +4032,7 @@ def j29_default_column_values(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Clone/rollback carry and the copy-on-write fresh-id rule for DV
 # updates are pinned in tests/test_versioned.py.
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "j30_row_lineage",
     """
     WITH base AS (
@@ -4248,9 +4060,6 @@ def j29_default_column_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def j30_row_lineage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from tts_etl_pipeline_spark.sources.versioned import (
         compact,
         current_version,
@@ -4275,9 +4084,8 @@ def j30_row_lineage(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.filter(F.col("l_partkey") % 5 == 1).drop("l_partkey")
         .repartition(1).sortWithinPartitions("k", "ln")
     )
-    base = tempfile.mkdtemp(prefix="j30_")
-    path = f"{base}/li_v"
-    try:
+    with scratch_dir("j30_") as base:
+        path = f"{base}/li_v"
         write_version(base_rows, path)  # ONE sorted file: id = sort rank
         enable_row_lineage(path)
         write_version(extra_rows, path)  # fresh block continues the count
@@ -4312,7 +4120,7 @@ def j30_row_lineage(spark: SparkSession, sf_dir: str) -> DataFrame:
             raise RuntimeError(
                 "optimize_zorder() changed row ids — lineage must survive"
             )
-        return (
+        return materialize(
             read_version_lineage(spark, path)
             .groupBy("l_returnflag")
             .agg(
@@ -4321,10 +4129,7 @@ def j30_row_lineage(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.max("_row_id").cast("bigint").alias("max_rid"),
             )
             .orderBy("l_returnflag")
-            .localCheckpoint(eager=True)  # materialize before tmp vanishes
         )
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -4340,7 +4145,7 @@ def j30_row_lineage(spark: SparkSession, sf_dir: str) -> DataFrame:
 # reproduces both levels declaratively, so value equality proves bucket
 # routing lost no row and no key straddles tasks.
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "j31_storage_bucketed_aggregate",
     """
     WITH per AS (
@@ -4359,9 +4164,6 @@ def j30_row_lineage(spark: SparkSession, sf_dir: str) -> DataFrame:
 def j31_storage_bucketed_aggregate(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import shutil
-    import tempfile
-
     from tts_etl_pipeline_spark.functions.exact import money
     from tts_etl_pipeline_spark.plans.inspect import (
         count_shuffles,
@@ -4376,39 +4178,37 @@ def j31_storage_bucketed_aggregate(
     orders = table(spark, sf_dir, "orders").select(
         "o_custkey", "o_totalprice"
     )
-    base = tempfile.mkdtemp(prefix="j31_")
-    path = f"{base}/orders_v"
-    try:
-        write_version(
-            orders, path, partition_by=(("sbucket", "o_custkey", 16),)
-        )
-        d, colocated = spj_read(spark, path, "o_custkey")
-        if not colocated:
-            raise RuntimeError("an sbucket(16) snapshot must expose bucketed")
-        per = d.groupBy("o_custkey").agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum((money("o_totalprice") * 100).cast("bigint"))
-            .cast("bigint")
-            .alias("cents"),
-        )
-        plan = physical_plan(per)
-        if count_shuffles(per) != 0 or "Bucketed: true" not in plan:
-            raise RuntimeError(
-                f"the per-key aggregate must plan ZERO Exchange on the "
-                f"bucketed scan:\n{plan}"
+    with scratch_dir("j31_") as base:
+        path = f"{base}/orders_v"
+        try:
+            write_version(
+                orders, path, partition_by=(("sbucket", "o_custkey", 16),)
             )
-        return (
-            per.groupBy(F.col("n").alias("orders_per_cust"))
-            .agg(
-                F.count(F.lit(1)).alias("n_cust"),
-                F.sum("cents").cast("bigint").alias("sum_cents"),
+            d, colocated = spj_read(spark, path, "o_custkey")
+            if not colocated:
+                raise RuntimeError("an sbucket(16) snapshot must expose bucketed")
+            per = d.groupBy("o_custkey").agg(
+                F.count(F.lit(1)).alias("n"),
+                F.sum((money("o_totalprice") * 100).cast("bigint"))
+                .cast("bigint")
+                .alias("cents"),
             )
-            .orderBy("orders_per_cust")
-            .localCheckpoint(eager=True)  # materialize before tmp vanishes
-        )
-    finally:
-        drop_spj_exposures(spark)
-        shutil.rmtree(base, ignore_errors=True)
+            plan = physical_plan(per)
+            if count_shuffles(per) != 0 or "Bucketed: true" not in plan:
+                raise RuntimeError(
+                    f"the per-key aggregate must plan ZERO Exchange on the "
+                    f"bucketed scan:\n{plan}"
+                )
+            return materialize(
+                per.groupBy(F.col("n").alias("orders_per_cust"))
+                .agg(
+                    F.count(F.lit(1)).alias("n_cust"),
+                    F.sum("cents").cast("bigint").alias("sum_cents"),
+                )
+                .orderBy("orders_per_cust")
+            )
+        finally:
+            drop_spj_exposures(spark)
 
 
 # ---------------------------------------------------------------------------
@@ -4425,7 +4225,7 @@ def j31_storage_bucketed_aggregate(
 # it declaratively, so value equality proves the manifest numbers ARE the
 # data's.
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "j32_metadata_only_aggregate",
     """
     SELECT
@@ -4446,8 +4246,6 @@ def j32_metadata_only_aggregate(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     import os as _os
-    import shutil
-    import tempfile
 
     from tts_etl_pipeline_spark.sources.versioned import (
         _read_manifest,
@@ -4462,9 +4260,8 @@ def j32_metadata_only_aggregate(
         "o_orderkey", "o_custkey", "o_totalprice"
     )
     stats = ("o_orderkey", "o_totalprice")
-    base = tempfile.mkdtemp(prefix="j32_")
-    path = f"{base}/orders_v"
-    try:
+    with scratch_dir("j32_") as base:
+        path = f"{base}/orders_v"
         write_version(
             orders.filter(F.col("o_orderkey") % 2 == 0), path,
             collect_stats=stats,
@@ -4509,7 +4306,7 @@ def j32_metadata_only_aggregate(
             )
         # the DV'd min/max: typed fallback, served exactly by the scan
         live_mm = aggregate_metadata(spark, path, ("o_orderkey",))
-        out = (
+        out = materialize(
             full.select(
                 F.col("count_rows").alias("cnt_all"),
                 F.col("min_o_orderkey").alias("min_key"),
@@ -4524,7 +4321,6 @@ def j32_metadata_only_aggregate(
                     F.col("max_o_orderkey").alias("max_key_live"),
                 )
             )
-            .localCheckpoint(eager=True)  # materialize before tmp vanishes
         )
         # the data-free proof: hide EVERY data file; the manifest still
         # answers the same COUNT — not one data byte was behind it
@@ -4538,8 +4334,6 @@ def j32_metadata_only_aggregate(
                 "something was reading data bytes"
             )
         return out
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -4555,7 +4349,7 @@ def j32_metadata_only_aggregate(
 # state declaratively (CASE WHEN in-slice THEN recomputed), so value
 # equality proves the swap lost nothing and resurrected nothing.
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "j33_replace_where",
     """
     SELECT o_orderstatus,
@@ -4570,8 +4364,6 @@ def j32_metadata_only_aggregate(
 )
 def j33_replace_where(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os as _os
-    import shutil
-    import tempfile
 
     from tts_etl_pipeline_spark.functions.exact import money
     from tts_etl_pipeline_spark.sources.versioned import (
@@ -4589,9 +4381,8 @@ def j33_replace_where(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
     lo, hi = 100, 999
-    base = tempfile.mkdtemp(prefix="j33_")
-    path = f"{base}/orders_v"
-    try:
+    with scratch_dir("j33_") as base:
+        path = f"{base}/orders_v"
         write_version(
             orders.repartitionByRange(8, "o_orderkey"), path,
             collect_stats=("o_orderkey",),
@@ -4647,7 +4438,7 @@ def j33_replace_where(spark: SparkSession, sf_dir: str) -> DataFrame:
             "insert", 0
         ) != n_slice:
             raise RuntimeError(f"change feed is not slice-for-slice: {counts}")
-        return (
+        return materialize(
             read_version(spark, path)
             .groupBy("o_orderstatus")
             .agg(
@@ -4657,10 +4448,7 @@ def j33_replace_where(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .alias("sum_cents"),
             )
             .orderBy("o_orderstatus")
-            .localCheckpoint(eager=True)  # materialize before tmp vanishes
         )
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -4679,7 +4467,7 @@ def j33_replace_where(spark: SparkSession, sf_dir: str) -> DataFrame:
 # DuckDB reproduces over the full inputs — value equality proves the
 # final pinned set is exactly whole-orders x whole-lineitem.
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "j34_catalog_multi_table_txn",
     """
     SELECT o.o_orderstatus,
@@ -4691,9 +4479,6 @@ def j33_replace_where(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def j34_catalog_multi_table_txn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from tts_etl_pipeline_spark.functions.exact import money
     from tts_etl_pipeline_spark.sources import catalog as C
     from tts_etl_pipeline_spark.sources.versioned import write_version
@@ -4704,9 +4489,8 @@ def j34_catalog_multi_table_txn(spark: SparkSession, sf_dir: str) -> DataFrame:
     lines = table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_extendedprice"
     )
-    base = tempfile.mkdtemp(prefix="j34_")
-    cat, po, pl = f"{base}/cat", f"{base}/orders_v", f"{base}/lines_v"
-    try:
+    with scratch_dir("j34_") as base:
+        cat, po, pl = f"{base}/cat", f"{base}/orders_v", f"{base}/lines_v"
         write_version(orders.filter(F.col("o_orderkey") % 2 == 0), po)
         write_version(lines.filter(F.col("l_orderkey") % 2 == 0), pl)
         txn0 = C.begin(cat)
@@ -4750,7 +4534,7 @@ def j34_catalog_multi_table_txn(spark: SparkSession, sf_dir: str) -> DataFrame:
             or C.read_catalog(spark, cat, "lines", version=1).count() != n_l1
         ):
             raise RuntimeError("catalog v1 lost the old version set")
-        return (
+        return materialize(
             C.read_catalog(spark, cat, "orders")
             .join(
                 C.read_catalog(spark, cat, "lines"),
@@ -4764,13 +4548,10 @@ def j34_catalog_multi_table_txn(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .alias("sum_cents"),
             )
             .orderBy("o_orderstatus")
-            .localCheckpoint(eager=True)  # materialize before tmp vanishes
         )
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
 
 
-@_register(
+@registry.query(
     "j40_auto_maintenance",
     """
     WITH base AS (
@@ -4801,8 +4582,6 @@ def j40_auto_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     vacuum marker, not the head number, drives the version trigger).
     DuckDB reproduces the degraded-then-maintained final state, so value
     equality proves maintenance reorganized bytes and lost nothing."""
-    import shutil
-    import tempfile
 
     from tts_etl_pipeline_spark.functions.exact import money
     from tts_etl_pipeline_spark.sources.maintenance import (
@@ -4819,9 +4598,8 @@ def j40_auto_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
-    base = tempfile.mkdtemp(prefix="j40_")
-    path = f"{base}/orders_v"
-    try:
+    with scratch_dir("j40_") as base:
+        path = f"{base}/orders_v"
         write_version(
             orders.repartitionByRange(8, "o_orderkey"), path,
             collect_stats=("o_orderkey",),
@@ -4886,7 +4664,7 @@ def j40_auto_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
         acts3 = auto_maintain(spark, path, policy)
         if acts3:
             raise RuntimeError(f"a debt-free pass must be empty: {acts3}")
-        return (
+        return materialize(
             read_version(spark, path)
             .groupBy("o_orderstatus")
             .agg(
@@ -4896,13 +4674,10 @@ def j40_auto_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .alias("sum_cents"),
             )
             .orderBy("o_orderstatus")
-            .localCheckpoint(eager=True)  # materialize before tmp vanishes
         )
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
 
 
-@_register(
+@registry.query(
     "j39_unique_constraint",
     """
     SELECT o_orderstatus, COUNT(*) AS n_rows,
@@ -4931,8 +4706,6 @@ def j39_unique_constraint(spark: SparkSession, sf_dir: str) -> DataFrame:
     state, so value equality proves enforcement blocked exactly the
     violating commits and nothing else."""
     import os as _os
-    import shutil
-    import tempfile
 
     from tts_etl_pipeline_spark.functions.exact import money
     from tts_etl_pipeline_spark.sources.versioned import (
@@ -4948,9 +4721,8 @@ def j39_unique_constraint(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
-    base = tempfile.mkdtemp(prefix="j39_")
-    path = f"{base}/orders_v"
-    try:
+    with scratch_dir("j39_") as base:
+        path = f"{base}/orders_v"
         write_version(
             orders.repartitionByRange(8, "o_orderkey"), path,
             collect_stats=("o_orderkey",),
@@ -5015,7 +4787,7 @@ def j39_unique_constraint(spark: SparkSession, sf_dir: str) -> DataFrame:
         src = cur.filter(F.col("o_orderkey").between(100, 999))
         if src.limit(1).count():
             merge(spark, path, src, "o_orderkey")
-        return (
+        return materialize(
             read_version(spark, path)
             .groupBy("o_orderstatus")
             .agg(
@@ -5025,13 +4797,10 @@ def j39_unique_constraint(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .alias("sum_cents"),
             )
             .orderBy("o_orderstatus")
-            .localCheckpoint(eager=True)  # materialize before tmp vanishes
         )
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
 
 
-@_register(
+@registry.query(
     "j38_python_datasource_pushdown",
     """
     SELECT o_orderstatus, COUNT(*) AS n_rows,
@@ -5056,8 +4825,6 @@ def j38_python_datasource_pushdown(spark: SparkSession, sf_dir: str) -> DataFram
     equality proves the source's Arrow read path (colmap renames, null
     fill, widening casts) is row-exact."""
     import json as _json
-    import shutil
-    import tempfile
 
     from tts_etl_pipeline_spark.sources.pyds_versioned import register
     from tts_etl_pipeline_spark.sources.versioned import write_version
@@ -5065,81 +4832,82 @@ def j38_python_datasource_pushdown(spark: SparkSession, sf_dir: str) -> DataFram
     orders = table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
-    base = tempfile.mkdtemp(prefix="j38_")
-    path = f"{base}/orders_v"
-    view = "j38_orders_v1"
-    prior = spark.conf.get("spark.sql.python.filterPushdown.enabled", "false")
-    try:
-        register(spark)
-        spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-        write_version(
-            orders.repartitionByRange(8, "o_orderkey"), path,
-            collect_stats=("o_orderkey",),
-        )
-        n1 = orders.count()
-        # head moves: v2 keeps only even keys — v1 must still serve whole
-        write_version(
-            orders.filter(F.col("o_orderkey") % 2 == 0), path,
-            mode="overwrite",
-        )
-        rpt = f"{base}/report.json"
-        spark.sql(
-            f"CREATE OR REPLACE TEMPORARY VIEW {view} USING versioned_table "
-            f"OPTIONS (path '{path}', version '1', report '{rpt}')"
-        )
-        if spark.table(view).count() != n1:
-            raise RuntimeError("the v1 view must serve the pre-overwrite rows")
-        head = (
-            spark.read.format("versioned_table").option("path", path).load()
-        )
-        if n1 and head.count() >= n1:
-            raise RuntimeError("the head read must see the overwrite")
-        out = spark.sql(
-            f"""
-            SELECT o_orderstatus, COUNT(*) AS n_rows,
-                   CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100
-                        AS BIGINT)) AS BIGINT) AS sum_cents
-            FROM {view} WHERE o_orderkey BETWEEN 100 AND 999
-            GROUP BY o_orderstatus ORDER BY o_orderstatus
-            """
-        ).localCheckpoint(eager=True)
-        if n1 > 0:
-            rep = _json.loads(open(rpt).read())
-            if rep["files_total"] > 1 and (
-                rep["files_planned"] >= rep["files_total"]
-            ):
-                raise RuntimeError(
-                    f"pushdown planned every file despite the key filter: "
-                    f"{rep}"
-                )
-            # merge-on-read snapshots refuse typed, never serve stale rows
-            from tts_etl_pipeline_spark.sources.versioned import (
-                delete_where_dv,
-            )
-
-            k0 = head.agg(F.min("o_orderkey")).first()[0]
-            if k0 is not None and delete_where_dv(
-                spark, path, "o_orderkey", k0, k0
-            ):
-                try:
-                    spark.read.format("versioned_table").option(
-                        "path", path
-                    ).load().count()
-                    raise RuntimeError("a DV-bearing snapshot must refuse")
-                except Exception as ex:
-                    if "deletion vectors" not in str(ex):
-                        raise
-        return out
-    finally:
-        spark.conf.set("spark.sql.python.filterPushdown.enabled", prior)
+    with scratch_dir("j38_") as base:
+        path = f"{base}/orders_v"
+        view = "j38_orders_v1"
+        prior = spark.conf.get("spark.sql.python.filterPushdown.enabled", "false")
         try:
-            spark.catalog.dropTempView(view)
-        except Exception:
-            pass
-        shutil.rmtree(base, ignore_errors=True)
+            register(spark)
+            spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
+            write_version(
+                orders.repartitionByRange(8, "o_orderkey"), path,
+                collect_stats=("o_orderkey",),
+            )
+            n1 = orders.count()
+            # head moves: v2 keeps only even keys — v1 must still serve whole
+            write_version(
+                orders.filter(F.col("o_orderkey") % 2 == 0), path,
+                mode="overwrite",
+            )
+            rpt = f"{base}/report.json"
+            spark.sql(
+                f"CREATE OR REPLACE TEMPORARY VIEW {view} USING versioned_table "
+                f"OPTIONS (path '{path}', version '1', report '{rpt}')"
+            )
+            if spark.table(view).count() != n1:
+                raise RuntimeError("the v1 view must serve the pre-overwrite rows")
+            head = (
+                spark.read.format("versioned_table").option("path", path).load()
+            )
+            if n1 and head.count() >= n1:
+                raise RuntimeError("the head read must see the overwrite")
+            out = materialize(
+                spark.sql(
+                    f"""
+                    SELECT o_orderstatus, COUNT(*) AS n_rows,
+                           CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(12,2))
+                                * 100 AS BIGINT)) AS BIGINT) AS sum_cents
+                    FROM {view} WHERE o_orderkey BETWEEN 100 AND 999
+                    GROUP BY o_orderstatus ORDER BY o_orderstatus
+                    """
+                )
+            )
+            if n1 > 0:
+                rep = _json.loads(open(rpt).read())
+                if rep["files_total"] > 1 and (
+                    rep["files_planned"] >= rep["files_total"]
+                ):
+                    raise RuntimeError(
+                        f"pushdown planned every file despite the key filter: "
+                        f"{rep}"
+                    )
+                # merge-on-read snapshots refuse typed, never serve stale rows
+                from tts_etl_pipeline_spark.sources.versioned import (
+                    delete_where_dv,
+                )
+
+                k0 = head.agg(F.min("o_orderkey")).first()[0]
+                if k0 is not None and delete_where_dv(
+                    spark, path, "o_orderkey", k0, k0
+                ):
+                    try:
+                        spark.read.format("versioned_table").option(
+                            "path", path
+                        ).load().count()
+                        raise RuntimeError("a DV-bearing snapshot must refuse")
+                    except Exception as ex:
+                        if "deletion vectors" not in str(ex):
+                            raise
+            return out
+        finally:
+            spark.conf.set("spark.sql.python.filterPushdown.enabled", prior)
+            try:
+                spark.catalog.dropTempView(view)
+            except Exception:
+                pass
 
 
-@_register(
+@registry.query(
     "j37_incremental_replication",
     """
     SELECT o_orderstatus, COUNT(*) AS n_rows,
@@ -5168,8 +4936,6 @@ def j37_incremental_replication(spark: SparkSession, sf_dir: str) -> DataFrame:
     the DR contract. At 100 TB a sync costs the commits since the last
     sync (immutable files + content-addressed sidecars), never the
     table."""
-    import shutil
-    import tempfile
 
     from tts_etl_pipeline_spark.functions.exact import money
     from tts_etl_pipeline_spark.sources.replicate import (
@@ -5189,9 +4955,8 @@ def j37_incremental_replication(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
-    base = tempfile.mkdtemp(prefix="j37_")
-    src, dst = f"{base}/src", f"{base}/replica"
-    try:
+    with scratch_dir("j37_") as base:
+        src, dst = f"{base}/src", f"{base}/replica"
         write_version(
             orders.repartitionByRange(8, "o_orderkey"), src,
             collect_stats=("o_orderkey",),
@@ -5252,7 +5017,7 @@ def j37_incremental_replication(spark: SparkSession, sf_dir: str) -> DataFrame:
             answer_v = head2
         else:
             answer_v = None
-        return (
+        return materialize(
             read_version(spark, dst, answer_v)
             .groupBy("o_orderstatus")
             .agg(
@@ -5262,10 +5027,7 @@ def j37_incremental_replication(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .alias("sum_cents"),
             )
             .orderBy("o_orderstatus")
-            .localCheckpoint(eager=True)  # materialize before tmp vanishes
         )
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -5285,7 +5047,7 @@ def j37_incremental_replication(spark: SparkSession, sf_dir: str) -> DataFrame:
 # UNION ALL for inserts), so value equality proves every clause fired on
 # exactly its rows.
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "j36_token_index_pruned_scan",
     """
     WITH probe AS (
@@ -5315,8 +5077,6 @@ def j36_token_index_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     plain SQL. At 100 TB the posting list turns a corpus-wide token
     predicate into O(matching files) IO, the min/max-stats story
     (j9/j21) extended to free text where ranges prune nothing."""
-    import shutil
-    import tempfile
 
     from tts_etl_pipeline_spark.sources.textindex import (
         build_text_index,
@@ -5329,9 +5089,8 @@ def j36_token_index_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "text", "lang", "n_chars"
     )
     out_schema = "lang string, n_docs bigint, sum_chars bigint"
-    base = tempfile.mkdtemp(prefix="j36_")
-    path = f"{base}/docs_v"
-    try:
+    with scratch_dir("j36_") as base:
+        path = f"{base}/docs_v"
         write_version(
             docs.repartitionByRange(8, "doc_id"), path,
             collect_stats=("doc_id",),
@@ -5381,20 +5140,17 @@ def j36_token_index_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
             raise RuntimeError(
                 f"posting list missed rows: pruned {n_pruned} vs full {n_full}"
             )
-        return (
+        return materialize(
             pruned.groupBy("lang")
             .agg(
                 F.count(F.lit(1)).alias("n_docs"),
                 F.sum("n_chars").cast("bigint").alias("sum_chars"),
             )
             .orderBy("lang")
-            .localCheckpoint(eager=True)  # materialize before tmp vanishes
         )
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
 
 
-@_register(
+@registry.query(
     "j35_merge_full_matrix",
     """
     WITH m1 AS (
@@ -5420,8 +5176,6 @@ def j36_token_index_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def j35_merge_full_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os as _os
-    import shutil
-    import tempfile
 
     from tts_etl_pipeline_spark.functions.exact import money
     from tts_etl_pipeline_spark.sources.versioned import (
@@ -5437,9 +5191,8 @@ def j35_merge_full_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
-    base = tempfile.mkdtemp(prefix="j35_")
-    path = f"{base}/orders_v"
-    try:
+    with scratch_dir("j35_") as base:
+        path = f"{base}/orders_v"
         write_version(
             orders.repartitionByRange(8, "o_orderkey"), path,
             collect_stats=("o_orderkey",),
@@ -5542,7 +5295,7 @@ def j35_merge_full_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
                 raise RuntimeError(
                     f"pruned-merge change feed is not row-exact: {counts}"
                 )
-        return (
+        return materialize(
             read_version(spark, path)
             .groupBy("o_orderstatus")
             .agg(
@@ -5552,7 +5305,4 @@ def j35_merge_full_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .alias("sum_cents"),
             )
             .orderBy("o_orderstatus")
-            .localCheckpoint(eager=True)  # materialize before tmp vanishes
         )
-    finally:
-        shutil.rmtree(base, ignore_errors=True)

@@ -13,23 +13,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from tts_etl_pipeline_spark import registry
 from tts_etl_pipeline_spark.sources.tables import rebalance_scan, table
 
-QUERIES: dict = {}
-ORACLES: dict = {}
 
-
-def _register(name: str, oracle: str | None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
-
-
-@_register(
+@registry.query(
     "f1_string_functions",
     """
     SELECT p_partkey,
@@ -63,7 +51,7 @@ def f1_string_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("p_partkey")
 
 
-@_register(
+@registry.query(
     "f2_datetime_functions",
     """
     SELECT o_orderkey,
@@ -102,7 +90,7 @@ def f2_datetime_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("o_orderkey")
 
 
-@_register(
+@registry.query(
     "f3_math_functions",
     """
     SELECT l_orderkey, l_linenumber,
@@ -137,7 +125,7 @@ def f3_math_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("l_orderkey", "l_linenumber")
 
 
-@_register(
+@registry.query(
     "f4_array_functions",
     """
     SELECT vec_id,
@@ -169,7 +157,7 @@ def f4_array_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("vec_id")
 
 
-@_register(
+@registry.query(
     "g5_pivot_revenue",
     """
     SELECT l_returnflag,
@@ -199,7 +187,7 @@ def g5_pivot_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@registry.query(
     "a1_asof_last_click_before_purchase",
     """
     SELECT event_id, user_id,
@@ -254,7 +242,7 @@ def a1_asof_last_click_before_purchase(spark: SparkSession, sf_dir: str) -> Data
 # f5 — map + conditional-null functions: JSON props -> MAP, map_keys/values,
 # element access, coalesce/nullif/CASE. DuckDB twin uses its MAP type.
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "f5_map_null_functions",
     """
     SELECT event_id,
@@ -300,7 +288,7 @@ def f5_map_null_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
 # f6 — regexp_replace / regexp_matches / split_part: the reference's regex
 # surface (pa.py:291-294,304) generalized.
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "f6_regex_functions",
     r"""
     SELECT doc_id,
@@ -339,7 +327,7 @@ PRICE_BANDS = [
 ]
 
 
-@_register(
+@registry.query(
     "r1_range_join_price_bands",
     """
     WITH bands(band, lo, hi) AS (VALUES
@@ -381,7 +369,7 @@ def r1_range_join_price_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
 # scale its cost is pure output width — no exchange is added beyond the
 # aggregation that produced the wide input.
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "g7_unpivot_revenue",
     """
     WITH wide AS (
@@ -419,7 +407,7 @@ def g7_unpivot_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 ASOF_TOLERANCE_S = 3600
 
 
-@_register(
+@registry.query(
     "a2_asof_next_purchase_tolerance",
     f"""
     SELECT event_id, user_id,
@@ -481,7 +469,7 @@ def a2_asof_next_purchase_tolerance(spark: SparkSession, sf_dir: str) -> DataFra
 # user_id-partitioned ordered window (no inequality join, one shuffle);
 # choosing between them is row-local column logic.
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "a3_asof_nearest_purchase",
     f"""
     WITH marked AS (
@@ -559,7 +547,7 @@ def a3_asof_nearest_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
 # agree bit-for-bit between Spark and DuckDB. Scan-side expressions + one
 # partial+final aggregate — whole-stage-codegen'd end to end.
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "f7_bitwise_functions",
     """
     WITH base AS (
@@ -625,7 +613,7 @@ def f7_bitwise_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
 # what was embedded. NULL source/lang rows coalesce to 'unknown' first
 # (the all-NULL robustness sweep covers this path).
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "f8_url_functions",
     """
     WITH urls AS (
@@ -694,7 +682,7 @@ def f8_url_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
 # DuckDB twin is string_agg(DISTINCT ... ORDER BY ...): hash-exact because
 # both engines sort the same distinct set with the same byte order.
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "f9_listagg_segments",
     """
     SELECT n_name,
@@ -751,7 +739,7 @@ def f9_listagg_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
 # The only unpartitioned window runs over the hourly rate relation —
 # calendar-bounded, the h3 discipline.
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "r2_interval_overlap_join",
     """
     WITH flagged AS (
@@ -943,7 +931,7 @@ def r2_interval_overlap_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 # salt deliberately changes the partitioning and therefore any float
 # accumulation order.
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "r3_salted_skew_join",
     """
     SELECT n.n_name AS nation,
@@ -996,7 +984,7 @@ def r3_salted_skew_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 # integer cents inside the XML so no float-to-string formatting is on
 # the comparison path.
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "f10_xml_functions",
     """
     SELECT p_brand,
@@ -1053,7 +1041,7 @@ def f10_xml_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
 # The decimal money discipline (functions/exact.py) rides through EXTEND
 # unchanged. A post-aggregation |> WHERE is the pipe spelling of HAVING.
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "f11_pipe_syntax",
     """
     SELECT l_returnflag, l_linestatus,
@@ -1103,7 +1091,7 @@ def f11_pipe_syntax(spark: SparkSession, sf_dir: str) -> DataFrame:
 # e.g. cents·10^12 overflows int64 exactly above 9 223 372 cents.
 # Aggregates stay order-independent (counts, min/max, integer sums).
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "f12_try_functions",
     """
     WITH src AS (
@@ -1211,7 +1199,7 @@ def f12_try_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the collated plan is its hash-exact equivalent. Title-casing is spelled
 # upper(first)||lower(rest) in BOTH engines (initcap is not portable).
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "f13_collated_grouping",
     """
     WITH m AS (
@@ -1284,7 +1272,7 @@ def f13_collated_grouping(spark: SparkSession, sf_dir: str) -> DataFrame:
 # plain-integer twin — proving the typed-interval plan computes exactly
 # the arithmetic the untyped one does.
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "f14_interval_arithmetic",
     """
     WITH s AS (

@@ -20,20 +20,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from tts_etl_pipeline_spark import registry
+from tts_etl_pipeline_spark.functions.checkpoints import materialize
 from tts_etl_pipeline_spark.sources.tables import rebalance_scan, table
-
-QUERIES: dict = {}
-ORACLES: dict = {}
-
-
-def _register(name: str, oracle: str | None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
 
 
 def dot(a: str, b: str) -> Column:
@@ -80,7 +69,7 @@ TOP_K = 10
 # ---------------------------------------------------------------------------
 # v1 — exact top-k cosine neighbors for a fixed query set (vec_id < 5).
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "v1_topk_cosine_exact",
     f"""
     WITH q AS (SELECT vec_id AS q_id, embedding AS q_emb FROM embeddings
@@ -149,7 +138,7 @@ def v1_topk_cosine_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 COSINE_DUP_THRESHOLD = 0.95
 
 
-@_register(
+@registry.query(
     "v2_embedding_neardup_pairs",
     f"""
     SELECT a.vec_id AS id_a, b.vec_id AS id_b,
@@ -236,8 +225,6 @@ def ivf_candidates(
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
     from pyspark.sql.window import Window as W
-
-    from tts_etl_pipeline_spark.functions.checkpoints import materialize
 
     spark = emb.sparkSession
     feats = emb.select(
@@ -339,7 +326,7 @@ def ivf_topk(
     )
 
 
-@_register("v3_ivf_ann_topk", None)
+@registry.query("v3_ivf_ann_topk")
 def v3_ivf_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ivf_topk(table(spark, sf_dir, "embeddings"))
 
@@ -353,7 +340,7 @@ def v3_ivf_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # rows-only driver check; recall + sublinearity floors in
 # tests/test_ann_recall.py.
 # ---------------------------------------------------------------------------
-@_register("v5_graph_ann_topk", None)
+@registry.query("v5_graph_ann_topk")
 def v5_graph_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tts_etl_pipeline_spark.functions.graph_ann import (
         build_knn_graph,
@@ -378,7 +365,7 @@ def v5_graph_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # v4 — random-hyperplane LSH ANN via pyspark.ml BucketedRandomProjectionLSH
 # (euclidean buckets); approximate => rows-only.
 # ---------------------------------------------------------------------------
-@_register("v4_lsh_ann_topk", None)
+@registry.query("v4_lsh_ann_topk")
 def v4_lsh_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.ml.feature import BucketedRandomProjectionLSH
     from pyspark.ml.functions import array_to_vector
@@ -516,7 +503,7 @@ def topk_cosine_scalable(
 SEMANTIC_DUP_THRESHOLD = 0.30
 
 
-@_register(
+@registry.query(
     "d14_semantic_dedup",
     f"""
     WITH RECURSIVE pairs AS (
@@ -546,7 +533,6 @@ SEMANTIC_DUP_THRESHOLD = 0.30
     """,
 )
 def d14_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tts_etl_pipeline_spark.functions.checkpoints import materialize
     from tts_etl_pipeline_spark.functions.graph import connected_components
 
     base = materialize(
@@ -618,9 +604,8 @@ def d14_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Lloyd, argmin ties to lowest index) but codebook-dependent => rows-only
 # driver check; recall + compression floors in tests/test_ann_recall.py.
 # ---------------------------------------------------------------------------
-@_register("v6_pq_ann_topk", None)
+@registry.query("v6_pq_ann_topk")
 def v6_pq_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tts_etl_pipeline_spark.functions.checkpoints import materialize
     from tts_etl_pipeline_spark.functions.pq import adc_topk, encode, train_codebooks
 
     # one parquet scan: the projection feeds codebook training, encoding,
@@ -658,7 +643,7 @@ def v6_pq_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 FILTER_LANG = "en"
 
 
-@_register(
+@registry.query(
     "v7_filtered_ann_topk",
     f"""
     WITH corp AS (
@@ -744,7 +729,7 @@ def v7_filtered_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 KNN_K = 3
 
 
-@_register(
+@registry.query(
     "v8_knn_graph_exact",
     f"""
     WITH nodes AS (
@@ -861,7 +846,7 @@ def _mmr_candidate_pool(spark: SparkSession, sf_dir: str) -> list:
     )
 
 
-@_register("v9_mmr_diversified_topk", None)
+@registry.query("v9_mmr_diversified_topk")
 def v9_mmr_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows = mmr_select(_mmr_candidate_pool(spark, sf_dir), MMR_K, MMR_LAMBDA)
     out_schema = "q_id bigint, rank bigint, n_id bigint, relevance double"

@@ -21,24 +21,13 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from tts_etl_pipeline_spark import registry
 from tts_etl_pipeline_spark.functions.cms import CountMinSketch
-from tts_etl_pipeline_spark.sources.tables import rebalance_scan, table
-
-QUERIES: dict = {}
-ORACLES: dict = {}
+from tts_etl_pipeline_spark.functions.checkpoints import materialize
+from tts_etl_pipeline_spark.sources.tables import table
 
 
-def _register(name: str, oracle: str | None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
-
-
-@_register("x1_approx_distinct_stats", None)
+@registry.query("x1_approx_distinct_stats")
 def x1_approx_distinct_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HyperLogLog++ cardinalities + approximate percentiles per priority —
     the sketch twins of g4 (exact distinct) and q21 (exact percentiles).
@@ -90,7 +79,7 @@ def build_token_cms(
     return merged
 
 
-@_register("x2_cms_heavy_hitters", None)
+@registry.query("x2_cms_heavy_hitters")
 def x2_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Count-min-sketch heavy hitters over the token stream — the sketch twin
     of t2_top_tokens. Candidates (distinct tokens) are probed against the
@@ -153,7 +142,7 @@ def kmv_hash_sql(col: str) -> str:
     )
 
 
-@_register(
+@registry.query(
     "x3_bottomk_sample",
     f"""
     WITH hashed AS (
@@ -225,7 +214,7 @@ def x3_bottomk_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 # merge order (the accuracy bound does not — pinned in
 # tests/test_sketches.py against the exact percentiles).
 # ---------------------------------------------------------------------------
-@_register("x4_tdigest_quantiles", None)
+@registry.query("x4_tdigest_quantiles")
 def x4_tdigest_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tts_etl_pipeline_spark.functions.tdigest import TDigest
 
@@ -285,7 +274,7 @@ def x4_tdigest_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 # convention (k = ceil(q·n)), reproduced verbatim in the oracle via
 # ORDER BY ... LIMIT 1 OFFSET k-1.
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "x5_exact_percentiles_by_counting",
     """
     WITH cents AS (
@@ -340,7 +329,7 @@ def x5_exact_percentiles_by_counting(spark: SparkSession, sf_dir: str) -> DataFr
 # mergeable digests. Lower-order-statistic convention (k = ceil(q*n/100)),
 # reproduced in the oracle via per-group ROW_NUMBER.
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "x6_grouped_exact_percentiles",
     """
     WITH cents AS (
@@ -407,7 +396,7 @@ def x6_grouped_exact_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 HH_K = 200  # support threshold 1/k of the token stream
 
 
-@_register(
+@registry.query(
     "x7_heavy_hitter_tokens",
     f"""
     WITH toks AS (
@@ -466,8 +455,6 @@ def x7_heavy_hitter_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
         out.append({"tok": None, "kind": "rows", "val": n_part})
         yield pd.DataFrame(out, columns=["tok", "kind", "val"])
 
-    from tts_etl_pipeline_spark.functions.checkpoints import materialize
-
     # the summary is k x partitions rows — materialize it once so the
     # candidate branch and the total-count branch don't each re-run the
     # MG pass (and re-scan documents)
@@ -509,7 +496,7 @@ def x7_heavy_hitter_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
 _X8H = kmv_hash_sql("user_id")
 
 
-@_register(
+@registry.query(
     "x8_kmv_set_ops",
     f"""
     WITH ha AS (
@@ -561,8 +548,6 @@ _X8H = kmv_hash_sql("user_id")
     """,
 )
 def x8_kmv_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tts_etl_pipeline_spark.functions.checkpoints import materialize
-
     ev = table(spark, sf_dir, "events").filter(
         F.col("event_type").isin("click", "purchase")
     )
@@ -643,10 +628,8 @@ def x8_kmv_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
 # within the configured-lgK error bound of exact counts and the union row
 # against the exact global distinct.
 # ---------------------------------------------------------------------------
-@_register("x9_hll_native_sketch", None)  # rows-only: order-dependent HIP
+@registry.query("x9_hll_native_sketch")  # rows-only: order-dependent HIP
 def x9_hll_native_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tts_etl_pipeline_spark.functions.checkpoints import materialize
-
     ev = table(spark, sf_dir, "events").select("event_type", "user_id")
     # one events scan: the |types|-row sketch relation feeds BOTH the
     # per-type rows and the union ALL row
@@ -683,7 +666,7 @@ def x9_hll_native_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
 X10_TOP_K = 5
 
 
-@_register(
+@registry.query(
     "x10_native_approx_topk",
     f"""
     WITH toks AS (

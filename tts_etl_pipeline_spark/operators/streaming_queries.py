@@ -10,7 +10,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from tts_etl_pipeline_spark import registry
 from tts_etl_pipeline_spark.functions.bands import USER_STATE_HIST_CTES
+from tts_etl_pipeline_spark.functions.checkpoints import materialize, scratch_dir
 from tts_etl_pipeline_spark.operators.sketches import (
     KMV_K,
     kmv_hash,
@@ -25,21 +27,8 @@ from tts_etl_pipeline_spark.streaming.events_stream import (
     user_sessions,
 )
 
-QUERIES: dict = {}
-ORACLES: dict = {}
 
-
-def _register(name: str, oracle: str | None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
-
-
-@_register(
+@registry.query(
     "st1_stream_hourly_counts",
     """
     SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS hour,
@@ -56,7 +45,7 @@ def st1_stream_hourly_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.orderBy("hour", "event_type")
 
 
-@_register(
+@registry.query(
     "st2_stream_dedup",
     """
     SELECT COUNT(*) AS n_rows, COUNT(DISTINCT event_id) AS n_ids
@@ -74,7 +63,7 @@ def st2_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@registry.query(
     "st3_stream_sessions",
     """
     WITH flagged AS (
@@ -117,7 +106,7 @@ def st3_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("user_id", "session_start_us")
 
 
-@_register(
+@registry.query(
     "st4_stream_sliding_counts",
     """
     SELECT strftime(win_start, '%Y-%m-%d %H:%M:%S') AS win_start,
@@ -166,7 +155,7 @@ def st4_stream_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@registry.query(
     "st5_stream_stream_join",
     """
     SELECT c.user_id AS user_id, c.event_id AS click_id, p.event_id AS purchase_id,
@@ -225,7 +214,7 @@ def st5_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_to_parquet(joined, "st5").orderBy("user_id", "click_id", "purchase_id")
 
 
-@_register(
+@registry.query(
     "st6_stream_static_join",
     """
     SELECT c_mktsegment,
@@ -256,7 +245,7 @@ def st6_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_to_memory(agg, "st6").orderBy("c_mktsegment")
 
 
-@_register(
+@registry.query(
     "st7_stream_foreachbatch_upsert",
     """
     SELECT event_type, COUNT(*) AS n_rows, COUNT(DISTINCT event_id) AS n_ids,
@@ -276,17 +265,14 @@ def st7_stream_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFram
     the final TABLE contents equal one clean copy of the input: replay
     safety is the property under test, exactly what makes foreachBatch
     sinks exactly-once-per-key at any scale."""
-    import shutil
-    import tempfile
 
     from tts_etl_pipeline_spark.streaming.events_stream import (
         stream_events,
         stream_to_table,
     )
 
-    tmp = tempfile.mkdtemp(prefix="st7_")
-    table_path = f"{tmp}/events_sink"
-    try:
+    with scratch_dir("st7_") as tmp:
+        table_path = f"{tmp}/events_sink"
         for run in range(2):  # second run = at-least-once replay
             src = stream_events(spark, sf_dir).filter(
                 F.col("event_type").isin("click", "purchase")
@@ -298,7 +284,7 @@ def st7_stream_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFram
             sunk = spark.read.parquet(table_path)
         else:  # zero qualifying rows ever arrived -> sink was never created
             sunk = spark.createDataFrame([], src.schema)
-        return (
+        return materialize(
             sunk.groupBy("event_type")
             .agg(
                 F.count(F.lit(1)).alias("n_rows"),
@@ -308,10 +294,7 @@ def st7_stream_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFram
                 ),
             )
             .orderBy("event_type")
-            .localCheckpoint(eager=True)  # materialize before the tmp dir vanishes
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def _purchase_totals_updates(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -355,7 +338,7 @@ def _purchase_totals_updates(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@registry.query(
     "st8_stateful_running_totals",
     """
     SELECT user_id,
@@ -396,7 +379,7 @@ def st8_stateful_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@registry.query(
     "st9_stream_daily_bars",
     """
     WITH keyed AS (
@@ -429,7 +412,7 @@ def st9_stream_daily_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.orderBy("day", "event_type")
 
 
-@_register(
+@registry.query(
     "st10_stream_transitions",
     """
     WITH paired AS (
@@ -531,7 +514,7 @@ def st10_stream_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register("st11_pyds_stream_counts", None)
+@registry.query("st11_pyds_stream_counts")
 def st11_pyds_stream_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming aggregation over the CUSTOM Python DataSource
     (sources/pyds.py `synthetic_events` — the Spark 4 datasource API):
@@ -552,8 +535,6 @@ def st11_pyds_stream_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     against the pure generator).
     `sf_dir` is unused (the uniform query signature). Value sums ride
     integer cents so the fold is order-independent (the st8 discipline)."""
-    import tempfile
-
     from tts_etl_pipeline_spark.sources.pyds import register_sources
 
     register_sources(spark)
@@ -574,7 +555,7 @@ def st11_pyds_stream_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max("event_id").alias("max_id"),
         F.sum((F.col("value") * 100).cast("long")).alias("value_cents"),
     )
-    with tempfile.TemporaryDirectory(prefix="st11_ckpt_") as ckpt:
+    with scratch_dir("st11_ckpt_") as ckpt:
         name = "st11_pyds"
         q = (
             agg.writeStream.format("memory")
@@ -608,7 +589,7 @@ def st11_pyds_stream_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             raise TimeoutError(f"st11 drain incomplete: {total}/{n_rows} rows")
         q.stop()
         q.awaitTermination()
-        out = spark.table(name).localCheckpoint(eager=True)
+        out = materialize(spark.table(name))
     return (
         out.select(
             "event_type",
@@ -621,7 +602,7 @@ def st11_pyds_stream_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@registry.query(
     "st12_stream_left_outer_complete",
     """
     SELECT c.user_id AS user_id, c.event_id AS click_id,
@@ -723,7 +704,7 @@ def st12_stream_left_outer_complete(spark: SparkSession, sf_dir: str) -> DataFra
     )
 
 
-@_register(
+@registry.query(
     "st13_versioned_cdf_stream",
     """
     WITH v1 AS (
@@ -765,7 +746,6 @@ def st13_versioned_cdf_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     each batch scans one commit's file-list symmetric difference; the
     compaction batch costs one rewritten-file scan and emits nothing."""
     import os as _os
-    import tempfile
 
     from tts_etl_pipeline_spark.sources.tables import table as _table
     from tts_etl_pipeline_spark.sources.versioned import (
@@ -774,39 +754,32 @@ def st13_versioned_cdf_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_version,
     )
 
-    base = tempfile.mkdtemp(prefix="st13_cdf_")
-    tbl, ckpt = _os.path.join(base, "tbl"), _os.path.join(base, "ckpt")
-    orders = _table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey", "o_orderstatus"
-    )
-    write_version(orders.filter(F.col("o_orderkey") % 10 == 0), tbl)  # v1
-    write_version(orders.filter(F.col("o_orderkey") % 10 == 1), tbl)  # v2
-    compact(spark, tbl)  # v3: rows identical -> empty feed batch
-    both = orders.filter((F.col("o_orderkey") % 10).isin(0, 1))
-    write_version(  # v4: point "updates" surface as delete+insert
-        both.withColumn(
-            "o_orderstatus",
-            F.when(F.col("o_orderkey") % 100 == 0, F.lit("X")).otherwise(
-                F.col("o_orderstatus")
+    with scratch_dir("st13_cdf_") as base:
+        tbl, ckpt = _os.path.join(base, "tbl"), _os.path.join(base, "ckpt")
+        orders = _table(spark, sf_dir, "orders").select(
+            "o_orderkey", "o_custkey", "o_orderstatus"
+        )
+        write_version(orders.filter(F.col("o_orderkey") % 10 == 0), tbl)  # v1
+        write_version(orders.filter(F.col("o_orderkey") % 10 == 1), tbl)  # v2
+        compact(spark, tbl)  # v3: rows identical -> empty feed batch
+        both = orders.filter((F.col("o_orderkey") % 10).isin(0, 1))
+        write_version(  # v4: point "updates" surface as delete+insert
+            both.withColumn(
+                "o_orderstatus",
+                F.when(F.col("o_orderkey") % 100 == 0, F.lit("X")).otherwise(
+                    F.col("o_orderstatus")
+                ),
             ),
-        ),
-        tbl,
-        mode="overwrite",
-    )
-    from tts_etl_pipeline_spark.functions.checkpoints import materialize
-
-    # materialize each batch ON DELIVERY (a foreachBatch consumer would do
-    # exactly this — process the micro-batch when it arrives, not hold a
-    # lazy plan while later commits land); it also keeps the drained
-    # union's plan from re-scanning a commit file that sits on the new
-    # side of one diff and the old side of the next
-    batches: list[DataFrame] = []
-    stream_changes(spark, tbl, ckpt, lambda df, v: batches.append(materialize(df)))
-    # every batch is materialized (executor-checkpointed) — the temp table
-    # and checkpoint are no longer referenced by any plan; reclaim them now
-    import shutil
-
-    shutil.rmtree(base, ignore_errors=True)
+            tbl,
+            mode="overwrite",
+        )
+        # materialize each batch ON DELIVERY (a foreachBatch consumer would do
+        # exactly this — process the micro-batch when it arrives, not hold a
+        # lazy plan while later commits land); it also keeps the drained
+        # union's plan from re-scanning a commit file that sits on the new
+        # side of one diff and the old side of the next
+        batches: list[DataFrame] = []
+        stream_changes(spark, tbl, ckpt, lambda df, v: batches.append(materialize(df)))
     feed = batches[0]
     for b in batches[1:]:
         feed = feed.unionByName(b)
@@ -819,7 +792,7 @@ def st13_versioned_cdf_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("commit_version", "change_type", "o_orderkey")
 
 
-@_register(
+@registry.query(
     "st14_streaming_kmv_distinct",
     f"""
     WITH hashed AS (
@@ -859,8 +832,6 @@ def st14_streaming_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     the summary table stays bounded by batches x types x k, and the final
     merge is a group-bounded window over that summary, never the stream."""
     import os
-    import shutil
-    import tempfile
 
     from pyspark.sql.window import Window as W
 
@@ -868,22 +839,21 @@ def st14_streaming_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     k = KMV_K
     h = kmv_hash("user_id")
-    tmp = tempfile.mkdtemp(prefix="st14_")
-    sink = f"{tmp}/kmv_summaries"
+    with scratch_dir("st14_") as tmp:
+        sink = f"{tmp}/kmv_summaries"
 
-    def fold_batch(batch: DataFrame, _bid: int) -> None:
-        w = W.partitionBy("event_type").orderBy("h")
-        (
-            batch.select("event_type", h.alias("h"))
-            .distinct()
-            .withColumn("rnk", F.row_number().over(w))
-            .filter(F.col("rnk") <= k)
-            .select("event_type", "h")
-            .write.mode("append")
-            .parquet(sink)
-        )
+        def fold_batch(batch: DataFrame, _bid: int) -> None:
+            w = W.partitionBy("event_type").orderBy("h")
+            (
+                batch.select("event_type", h.alias("h"))
+                .distinct()
+                .withColumn("rnk", F.row_number().over(w))
+                .filter(F.col("rnk") <= k)
+                .select("event_type", "h")
+                .write.mode("append")
+                .parquet(sink)
+            )
 
-    try:
         for run in range(2):  # second run = full at-least-once replay
             (
                 stream_events(spark, sf_dir)
@@ -898,7 +868,7 @@ def st14_streaming_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
         else:  # an empty stream never created the sink
             summaries = spark.createDataFrame([], "event_type string, h long")
         w = W.partitionBy("event_type").orderBy("h")
-        return (
+        return materialize(
             summaries.distinct()  # replay + cross-batch overlap collapse
             .withColumn("rnk", F.row_number().over(w))
             .filter(F.col("rnk") <= k)
@@ -918,13 +888,10 @@ def st14_streaming_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ),
             )
             .orderBy("event_type")
-            .localCheckpoint(eager=True)  # materialize before tmp vanishes
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
-@_register(
+@registry.query(
     "st15_statestore_read",
     """
     SELECT user_id,
@@ -952,12 +919,9 @@ def st15_statestore_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition) and the state grain is per-user — group-bounded, the st1-st4
     memory-sink contract. The state-metadata format is exercised as the
     guard: the operator path asserted before the expensive state read."""
-    import shutil
-    import tempfile
 
-    tmp = tempfile.mkdtemp(prefix="st15_")
-    ckpt = f"{tmp}/ckpt"
-    try:
+    with scratch_dir("st15_") as tmp:
+        ckpt = f"{tmp}/ckpt"
         (
             _purchase_totals_updates(spark, sf_dir)
             .writeStream.format("noop")
@@ -973,7 +937,7 @@ def st15_statestore_read(spark: SparkSession, sf_dir: str) -> DataFrame:
             "applyInPandasWithState"
         ), meta
         state = spark.read.format("statestore").load(ckpt)
-        return (
+        return materialize(
             state.select(
                 F.col("key.user_id").alias("user_id"),
                 F.col("value.groupState.n").alias("n_purchases"),
@@ -982,13 +946,10 @@ def st15_statestore_read(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).alias("total_value"),
             )
             .orderBy("user_id")
-            .localCheckpoint(eager=True)  # materialize before tmp vanishes
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
-@_register(
+@registry.query(
     "st16_stream_versioned_sink",
     """
     SELECT event_type,
@@ -1019,8 +980,6 @@ def st16_stream_versioned_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     manifest instead — the in-commit watermark maintain_counts_from_cdf
     (sources/versioned.py) already demonstrates. Final result reads the
     LATEST snapshot and must hash-match batch SQL over the whole stream."""
-    import shutil
-    import tempfile
 
     from tts_etl_pipeline_spark.sources.versioned import (
         current_version,
@@ -1028,24 +987,23 @@ def st16_stream_versioned_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_version,
     )
 
-    tmp = tempfile.mkdtemp(prefix="st16_")
-    tbl = f"{tmp}/events_versioned"
+    with scratch_dir("st16_") as tmp:
+        tbl = f"{tmp}/events_versioned"
 
-    def commit_batch(batch: DataFrame, bid: int) -> None:
-        if current_version(tbl) > 0:
-            seen = (
-                read_version(spark, tbl)
-                .filter(F.col("__batch_id") == bid)
-                .limit(1)
-                .count()
+        def commit_batch(batch: DataFrame, bid: int) -> None:
+            if current_version(tbl) > 0:
+                seen = (
+                    read_version(spark, tbl)
+                    .filter(F.col("__batch_id") == bid)
+                    .limit(1)
+                    .count()
+                )
+                if seen:
+                    return  # replayed delivery: version already committed
+            write_version(
+                batch.withColumn("__batch_id", F.lit(bid)), tbl, mode="append"
             )
-            if seen:
-                return  # replayed delivery: version already committed
-        write_version(
-            batch.withColumn("__batch_id", F.lit(bid)), tbl, mode="append"
-        )
 
-    try:
         for run in range(2):  # second run = full at-least-once replay
             (
                 stream_events(spark, sf_dir)
@@ -1061,7 +1019,7 @@ def st16_stream_versioned_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "event_type string, n_rows bigint, n_ids bigint,"
                 " sum_value double",
             )
-        return (
+        return materialize(
             read_version(spark, tbl)
             .groupBy("event_type")
             .agg(
@@ -1072,10 +1030,7 @@ def st16_stream_versioned_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .alias("sum_value"),
             )
             .orderBy("event_type")
-            .localCheckpoint(eager=True)  # materialize before tmp vanishes
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -1088,7 +1043,7 @@ def st16_stream_versioned_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
 # day_end <= max(ts) - 2h (the tail day legitimately stays in state — the
 # emission CONTRACT is part of what the oracle checks, not noise to strip).
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "st17_chained_window_aggs",
     """
     WITH hourly AS (
@@ -1135,7 +1090,7 @@ def st17_chained_window_aggs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (memory sink is fine); the matched ROWS themselves stay executor-side —
 # only window aggregates cross to the driver.
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "st18_join_then_window_agg",
     """
     WITH m AS (
@@ -1216,7 +1171,7 @@ def st18_join_then_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (fact-scale, linear in the stream) -> parquet FILE sink, never driver
 # memory. Oracle: EXISTS with the identical interval.
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "st19_stream_semi_join",
     """
     SELECT c.user_id AS user_id, c.event_id AS click_id, epoch_us(c.ts) AS click_us
@@ -1278,7 +1233,7 @@ def st19_stream_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 # aggregated; doubles survive the JSON hop because json.dumps writes the
 # shortest round-trip repr. Oracle aggregates the source directly.
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "st20_pyds_stream_writer",
     """
     SELECT event_type,
@@ -1292,16 +1247,13 @@ def st19_stream_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def st20_pyds_stream_writer(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import shutil
-    import tempfile
 
     from tts_etl_pipeline_spark.sources.pyds import register_sources
 
     register_sources(spark)
-    tmp = tempfile.mkdtemp(prefix="st20_")
-    out = os.path.join(tmp, "out")
-    os.makedirs(out)
-    try:
+    with scratch_dir("st20_") as tmp:
+        out = os.path.join(tmp, "out")
+        os.makedirs(out)
         def run(ckpt: str) -> None:
             stream = stream_events(spark, sf_dir).select(
                 "event_id",
@@ -1334,7 +1286,7 @@ def st20_pyds_stream_writer(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_id bigint, user_id bigint, event_type string, "
             "value double, ts_us bigint"
         ).json(out)
-        return (
+        return materialize(
             back.groupBy("event_type")
             .agg(
                 F.count(F.lit(1)).alias("n_events"),
@@ -1344,10 +1296,7 @@ def st20_pyds_stream_writer(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .alias("sum_value"),
             )
             .orderBy("event_type")
-            .localCheckpoint(eager=True)  # materialize before tmp vanishes
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -1369,7 +1318,7 @@ def st20_pyds_stream_writer(spark: SparkSession, sf_dir: str) -> DataFrame:
 # fold is O(one commit's changed rows) + a state-sized merge — never a
 # source recompute; the replay costs one watermark probe per version.
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "st21_ivm_counts_from_cdf",
     """
     SELECT event_type, COUNT(*) AS cnt
@@ -1382,10 +1331,7 @@ def st20_pyds_stream_writer(spark: SparkSession, sf_dir: str) -> DataFrame:
 def st21_ivm_counts_from_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
     import collections
     import os as _os
-    import shutil
-    import tempfile
 
-    from tts_etl_pipeline_spark.functions.checkpoints import materialize
     from tts_etl_pipeline_spark.sources.rollup import (
         maintain_counts_from_cdf,
         read_maintained_counts,
@@ -1396,10 +1342,9 @@ def st21_ivm_counts_from_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_version,
     )
 
-    base = tempfile.mkdtemp(prefix="st21_ivm_")
-    src = _os.path.join(base, "src")
-    state = _os.path.join(base, "state")
-    try:
+    with scratch_dir("st21_ivm_") as base:
+        src = _os.path.join(base, "src")
+        state = _os.path.join(base, "state")
         ev = _table(spark, sf_dir, "events").select("event_id", "event_type")
         write_version(ev.filter(F.col("event_id") % 2 == 0), src)  # v1
         write_version(ev.filter(F.col("event_id") % 2 == 1), src)  # v2
@@ -1432,8 +1377,6 @@ def st21_ivm_counts_from_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
                 f"IVM replay was not a no-op: {a - b} vs {b - a}"
             )
         return first.orderBy("event_type")
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -1458,7 +1401,7 @@ def st21_ivm_counts_from_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
 # each fold is one current-x-batch join + one delete left-join; each CDF
 # batch reads one commit's file-list symmetric difference.
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "st22_stream_scd2_sync",
     f"""
     WITH {USER_STATE_HIST_CTES},
@@ -1514,13 +1457,10 @@ def st21_ivm_counts_from_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
 def st22_stream_scd2_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
     import collections
     import os as _os
-    import shutil
-    import tempfile
 
     from pyspark.sql import Window
 
     from tts_etl_pipeline_spark.functions.bands import band_states
-    from tts_etl_pipeline_spark.functions.checkpoints import materialize
     from tts_etl_pipeline_spark.sources.scd import scd2_apply
     from tts_etl_pipeline_spark.sources.versioned import (
         read_version,
@@ -1541,10 +1481,9 @@ def st22_stream_scd2_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("user_id", "state", "tss")
         )
 
-    base = tempfile.mkdtemp(prefix="st22_")
-    src = _os.path.join(base, "user_state_src")
-    dim = _os.path.join(base, "user_state_dim")
-    try:
+    with scratch_dir("st22_") as base:
+        src = _os.path.join(base, "user_state_src")
+        dim = _os.path.join(base, "user_state_dim")
         write_version(cum(1), src)  # v1: snapshot after band 1
         write_version(cum(2), src, mode="overwrite")  # v2: after band 2
         write_version(  # v3: after band 3, error-current users REMOVED
@@ -1603,7 +1542,7 @@ def st22_stream_scd2_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
             raise RuntimeError(
                 f"SCD2 sync replay was not a no-op: {a - c} vs {c - a}"
             )
-        return (
+        return materialize(
             first.groupBy("state")
             .agg(
                 F.count(F.lit(1)).alias("n_versions"),
@@ -1616,10 +1555,7 @@ def st22_stream_scd2_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .alias("closed_span_us"),
             )
             .orderBy("state")
-            .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -1639,7 +1575,7 @@ def st22_stream_scd2_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
 # shape: per micro-batch one broadcast-or-shuffle equi-join (AQE's call —
 # the dim is SF-scaling) + a bounded-state aggregate.
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "st23_stream_pit_enrichment",
     f"""
     WITH {USER_STATE_HIST_CTES},
@@ -1663,18 +1599,14 @@ def st22_stream_scd2_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def st23_stream_pit_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from tts_etl_pipeline_spark.functions.bands import N_BANDS, band_states
     from tts_etl_pipeline_spark.functions.exact import money
     from tts_etl_pipeline_spark.sources.scd import scd2_apply
     from tts_etl_pipeline_spark.sources.versioned import read_version
 
     states, _, _, _, _ = band_states(spark, sf_dir)
-    base = tempfile.mkdtemp(prefix="st23_")
-    path = f"{base}/user_state_dim"
-    try:
+    with scratch_dir("st23_") as base:
+        path = f"{base}/user_state_dim"
         for i in range(1, N_BANDS + 1):
             batch = states.filter(F.col("band") == i).select(
                 "user_id",
@@ -1707,10 +1639,9 @@ def st23_stream_pit_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("cents").cast("bigint").alias("sum_cents"),
         )
         # the STREAM must fully drain before the dimension tempdir vanishes
-        out = run_to_memory(agg, "st23").orderBy("matched", "state")
-        return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+        return materialize(
+            run_to_memory(agg, "st23").orderBy("matched", "state")
+        )
 
 
 # ---------------------------------------------------------------------------
@@ -1727,7 +1658,7 @@ def st23_stream_pit_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
 # byte-identical at the head). Oracle: last-writer-wins per user across
 # the band sequence, minus users whose final state is the CDC delete.
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "st24_stream_cdc_upsert_sink",
     """
     WITH b AS (
@@ -1773,8 +1704,6 @@ def st23_stream_pit_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def st24_stream_cdc_upsert_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os as _os
-    import shutil
-    import tempfile
     import time
 
     from tts_etl_pipeline_spark.functions.bands import band_states
@@ -1788,10 +1717,9 @@ def st24_stream_cdc_upsert_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     states, empty, _, _, _ = band_states(spark, sf_dir)
     states = states.filter(F.col("user_id").isNotNull())
-    base = tempfile.mkdtemp(prefix="st24_")
-    feed = _os.path.join(base, "cdc_feed")
-    tbl = _os.path.join(base, "user_state_tbl")
-    try:
+    with scratch_dir("st24_") as base:
+        feed = _os.path.join(base, "cdc_feed")
+        tbl = _os.path.join(base, "user_state_tbl")
         # materialize the CDC feed: one parquet file per band, ascending
         # mtimes so the file stream delivers one micro-batch per band in
         # band order (FileStreamSource orders by timestamp, then path)
@@ -1878,7 +1806,7 @@ def st24_stream_cdc_upsert_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "CDC upserts rewrote v1's files — merge-on-read regressed "
                 "to a rewrite"
             )
-        return (
+        return materialize(
             read_version(spark, tbl)
             .groupBy("state")
             .agg(
@@ -1887,10 +1815,7 @@ def st24_stream_cdc_upsert_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.min("tss").cast("bigint").alias("min_tss"),
             )
             .orderBy("state")
-            .localCheckpoint(eager=True)  # materialize before tmp vanishes
         )
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -1913,7 +1838,7 @@ def st24_stream_cdc_upsert_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
 # batch join-aggregate over the final table states, so hash equality
 # proves the incremental path CONVERGES to the batch answer.
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "st25_ivm_join_from_cdf",
     """
     SELECT o_orderstatus, CAST(COUNT(*) AS BIGINT) AS n_items,
@@ -1926,8 +1851,6 @@ def st24_stream_cdc_upsert_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def st25_ivm_join_from_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os as _os
-    import shutil
-    import tempfile
 
     from tts_etl_pipeline_spark.sources.ivm import (
         maintain_join_agg_from_cdf,
@@ -1939,13 +1862,12 @@ def st25_ivm_join_from_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_version,
     )
 
-    base = tempfile.mkdtemp(prefix="st25_ivm_")
-    pa, pb, st = (
-        _os.path.join(base, "orders_v"),
-        _os.path.join(base, "lines_v"),
-        _os.path.join(base, "state"),
-    )
-    try:
+    with scratch_dir("st25_ivm_") as base:
+        pa, pb, st = (
+            _os.path.join(base, "orders_v"),
+            _os.path.join(base, "lines_v"),
+            _os.path.join(base, "state"),
+        )
         orders = _table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_orderstatus"
         )
@@ -2007,7 +1929,7 @@ def st25_ivm_join_from_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         if rep3["a_steps"] or rep3["b_steps"] or before != after:
             raise RuntimeError(f"IVM replay was not a no-op: {rep3}")
-        return (
+        return materialize(
             read_maintained_join_agg(spark, st)
             .select(
                 "o_orderstatus",
@@ -2015,7 +1937,4 @@ def st25_ivm_join_from_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("s").alias("sum_cents"),
             )
             .orderBy("o_orderstatus")
-            .localCheckpoint(eager=True)  # materialize before tmp vanishes
         )
-    finally:
-        shutil.rmtree(base, ignore_errors=True)

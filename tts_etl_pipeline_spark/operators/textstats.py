@@ -17,25 +17,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from tts_etl_pipeline_spark import registry
 from tts_etl_pipeline_spark.functions.checkpoints import materialize
 from tts_etl_pipeline_spark.sources.tables import rebalance_scan, table
-
-QUERIES: dict = {}
-ORACLES: dict = {}
 
 # Small stopword list used for the quality score (deterministic, shared with
 # the SQL oracle below).
 STOPWORDS = ["the", "a", "of", "and", "to", "in", "is", "it"]
-
-
-def _register(name: str, oracle: str | None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
 
 
 # Tokenization convention across t1-t8 (and the sketch twins in
@@ -66,7 +54,7 @@ def token_stream(docs: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------------------
 # t1 — per-language token statistics: tokenize + aggregate.
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "t1_lang_token_stats",
     """
     SELECT lang,
@@ -100,7 +88,7 @@ def t1_lang_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # "word count" — shuffle carries (token, partial_count) thanks to map-side
 # combine, so the explode never hits the wire raw.
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "t2_top_tokens",
     """
     SELECT token, COUNT(*) AS freq
@@ -129,7 +117,7 @@ def t2_top_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SW_SQL = "', '".join(STOPWORDS)
 
 
-@_register(
+@registry.query(
     "t3_quality_scores",
     f"""
     SELECT doc_id,
@@ -180,7 +168,7 @@ def t3_quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 # in Spark and DuckDB, so this is an oracle-checkable content hash). The
 # dedup operators build on the same fingerprint.
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "t4_fingerprints",
     """
     SELECT doc_id, md5(lower(trim(text))) AS fingerprint,
@@ -207,7 +195,7 @@ def t4_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
 # random lang labels, so the heuristic is exercised (and oracle-checked) on
 # marker-token counting + argmax-with-tiebreak semantics, not accuracy.
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "t5_lang_id_heuristic",
     """
     SELECT predicted, COUNT(*) AS n_docs,
@@ -275,7 +263,7 @@ def t5_lang_id_heuristic(spark: SparkSession, sf_dir: str) -> DataFrame:
 HALLUCINATION_RE = r"\[.*?\]|\(.*?\)|thanks for watching|thank you for watching"
 
 
-@_register(
+@registry.query(
     "t6_transcript_quality_gate",
     r"""
     SELECT source,
@@ -316,7 +304,7 @@ def t6_transcript_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 BPE_ISH_RE = r"[a-z]+|[0-9]+|[^a-z0-9\s]"
 
 
-@_register(
+@registry.query(
     "t7_bpe_token_counts",
     rf"""
     SELECT lang,
@@ -357,7 +345,7 @@ def t7_bpe_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 # unlike md5 (t4) this is an ORDER-SENSITIVE content signature, the
 # shift-resistant primitive used for chunk-level dedup.
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "t8_rolling_hash_fingerprint",
     """
     SELECT doc_id,
@@ -393,7 +381,7 @@ def t8_rolling_hash_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 # one on (lang, token) for TF, one on token for DF, then the per-lang
 # top-5 window over the already-aggregated (dimension-sized) score table.
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "t9_distinctive_tokens",
     """
     WITH tok AS (
@@ -473,7 +461,7 @@ EMAIL_RE = "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}"
 PHONE_RE = "\\+1 \\(555\\) 010-[0-9]{4}"
 
 
-@_register(
+@registry.query(
     "t10_pii_redaction",
     f"""
     WITH enriched AS (
@@ -552,7 +540,7 @@ def t10_pii_redaction(spark: SparkSession, sf_dir: str) -> DataFrame:
 # engines (Java and RE2 agree on these classes). Per-row map + one
 # fingerprint distinct + tiny agg.
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "t11_text_normalization",
     """
     WITH norm AS (
@@ -620,7 +608,7 @@ PACK_BUCKET = 100  # docs per prefix-sum bucket
 PACK_SUPER = 64  # buckets per superbucket; top window sees n/6400 rows
 
 
-@_register(
+@registry.query(
     "t12_sequence_packing",
     f"""
     WITH d AS (
@@ -650,7 +638,6 @@ def t12_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     ntok = F.size(
         F.split(F.lower(F.trim(F.coalesce("text", F.lit("")))), " ")
     ).cast("bigint")
-    from tts_etl_pipeline_spark.functions.checkpoints import materialize
 
     # Tokenize once: both the offset branch and the position branch read the
     # materialized (doc_id, ntok, bucket) projection — no double scan, no
@@ -732,7 +719,7 @@ TOP_TOKEN_FRAC_MAX = 0.20
 TOP_BIGRAM_FRAC_MAX = 0.18
 
 
-@_register(
+@registry.query(
     "t13_repetition_signals",
     f"""
     WITH base AS (
@@ -862,7 +849,7 @@ def t13_repetition_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
 # re-aggregation is one doc-keyed shuffle. The corpus totals relation is
 # one row and rides a broadcast cross join.
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "t14_rare_token_profile",
     """
     WITH base AS (
@@ -946,7 +933,7 @@ BIGRAM_MIN_SUPPORT = 5
 BIGRAM_TOP_K = 20
 
 
-@_register(
+@registry.query(
     "t15_bigram_lift",
     f"""
     WITH toks AS (
@@ -1035,7 +1022,7 @@ def t15_bigram_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
 ZIPF_TOP_K = 20
 
 
-@_register(
+@registry.query(
     "t16_zipf_coverage",
     f"""
     WITH uni AS (
@@ -1176,7 +1163,7 @@ def train_corpus_merges(
     return bpe_train_from_histogram([(r["token"], r["c"]) for r in hist], BPE_N_MERGES)
 
 
-@_register("t17_bpe_merge_training", None)
+@registry.query("t17_bpe_merge_training")
 def t17_bpe_merge_training(spark: SparkSession, sf_dir: str) -> DataFrame:
     merges = train_corpus_merges(spark, sf_dir)
     return spark.createDataFrame(
@@ -1193,7 +1180,7 @@ def t17_bpe_merge_training(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (|langs| × |classes| rows — bounded by label cardinality, never corpus
 # size), and recall is a single division of exact integers.
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "t18_langid_confusion",
     """
     WITH pred AS (
@@ -1301,7 +1288,7 @@ def bpe_encode_word(word: str, merges: list[tuple[str, str]]) -> list[str]:
     return seq
 
 
-@_register("t19_bpe_encode", None)
+@registry.query("t19_bpe_encode")
 def t19_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents")
     merges = [(left, right) for _, left, right, _ in train_corpus_merges(spark, sf_dir)]
@@ -1377,7 +1364,7 @@ def t19_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
 # distributed — hashing exists to shrink a DRIVER-side model, and nothing
 # here ever collects one.
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "t20_dsir_target_affinity",
     """
     WITH toks AS (
@@ -1410,8 +1397,6 @@ def t19_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def t20_dsir_target_affinity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tts_etl_pipeline_spark.functions.checkpoints import materialize
-
     docs = table(spark, sf_dir, "documents")
     toks = materialize(
         docs.select(
@@ -1461,7 +1446,7 @@ def t20_dsir_target_affinity(spark: SparkSession, sf_dir: str) -> DataFrame:
 # vocabulary sizes rejoin from the same materialized relation. All
 # outputs are exact integers + the dq10 floor-div basis points.
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "t21_lang_vocab_overlap",
     """
     WITH lt AS (

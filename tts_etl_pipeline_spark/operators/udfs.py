@@ -19,20 +19,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from tts_etl_pipeline_spark import registry
 from tts_etl_pipeline_spark.sources.tables import table
-
-QUERIES: dict = {}
-ORACLES: dict = {}
-
-
-def _register(name: str, oracle: str | None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
 
 
 def _balance_risk_kernel(acctbal: pd.Series, n_orders: pd.Series) -> pd.Series:
@@ -47,7 +35,7 @@ def _balance_risk_udf():
     return F.pandas_udf(_balance_risk_kernel, "double")
 
 
-@_register(
+@registry.query(
     "u1_pandas_udf_score",
     """
     SELECT c_custkey,
@@ -81,7 +69,7 @@ def u1_pandas_udf_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@registry.query(
     "u2_udtf_token_explode",
     """
     SELECT doc_id, pos, token, CAST(length(token) AS BIGINT) AS token_len
@@ -123,7 +111,7 @@ def u2_udtf_token_explode(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@registry.query(
     "u3_applyinpandas_zscore",
     """
     SELECT doc_id, lang,
@@ -173,7 +161,7 @@ def u3_applyinpandas_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@registry.query(
     "u4_grouped_agg_udf_median",
     """
     SELECT event_type,
@@ -220,7 +208,7 @@ def u4_grouped_agg_udf_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@registry.query(
     "u5_mapinarrow_charclasses",
     """
     SELECT lang,
@@ -291,7 +279,7 @@ def u5_mapinarrow_charclasses(spark: SparkSession, sf_dir: str) -> DataFrame:
 # reusable, SQL-visible abstraction. Quantity sum rides DECIMAL so the
 # float total is order-independent (functions/exact.py discipline).
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "u6_sql_udf_bands",
     """
     SELECT CASE WHEN l_quantity < 10 THEN 'small'
@@ -343,7 +331,7 @@ def u6_sql_udf_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
 # minimality of the bisection's fixpoint), so the driver cross-checks the
 # iterative path against the closed form. Integer-exact end to end.
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "u7_sql_script_bisection",
     """
     WITH t AS (
@@ -429,7 +417,7 @@ def u7_sql_script_bisection(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (n_chars DESC, doc_id ASC) is a total order, so the SQL oracle's
 # ROW_NUMBER twin is hash-exact.
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "u8_applyinarrow_toplen",
     """
     WITH ranked AS (
@@ -487,7 +475,7 @@ def u8_applyinarrow_toplen(spark: SparkSession, sf_dir: str) -> DataFrame:
 # O(1) (prev value, run counters). u2 pins the LATERAL row-UDTF surface;
 # u9 pins the table-argument surface.
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "u9_udtf_table_partition",
     """
     WITH s AS (

@@ -12,29 +12,17 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from tts_etl_pipeline_spark import registry
 from tts_etl_pipeline_spark.functions.checkpoints import materialize
 from tts_etl_pipeline_spark.functions.exact import SQL_DISC_PRICE, disc_price
-from tts_etl_pipeline_spark.sources.tables import rebalance_scan, scaled_broadcast, table
-
-QUERIES: dict = {}
-ORACLES: dict = {}
-
-
-def _register(name: str, oracle: str | None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
+from tts_etl_pipeline_spark.sources.tables import scaled_broadcast, table
 
 
 # ---------------------------------------------------------------------------
 # Top-k per group: top-3 suppliers by revenue within each nation.
 # row_number (not rank) + unique tiebreak => deterministic across engines.
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "w1_topk_suppliers_per_nation",
     f"""
     SELECT n_name, s_name, revenue, rn
@@ -81,7 +69,7 @@ def w1_topk_suppliers_per_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
 # running total and month-over-month delta. Exercises RANGE-free ROWS frames,
 # lag(), and date truncation.
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "w2_supplier_monthly_running",
     f"""
     SELECT l_suppkey, month,
@@ -137,7 +125,7 @@ def w2_supplier_monthly_running(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Rank with gaps + dense rank + ntile over customer balances per segment —
 # the full ranking-function family in one deterministic query.
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "w3_customer_balance_ranks",
     """
     SELECT c_mktsegment, c_custkey,
@@ -172,7 +160,7 @@ def w3_customer_balance_ranks(spark: SparkSession, sf_dir: str) -> DataFrame:
 # lineitem rows, and the day key is numeric (days since epoch) so the RANGE
 # frame is engine-portable. Decimal sums keep the trailing total exact.
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "w5_range_frame_revenue",
     f"""
     SELECT l_suppkey, ship_day,
@@ -219,7 +207,7 @@ def w5_range_frame_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 # customer — the sequential-adjacency primitive behind the reference's W1
 # overlap flag (process_audio.py:311-330), exercised on relational data.
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "w4_order_gaps",
     """
     SELECT o_custkey, o_orderkey,
@@ -261,7 +249,7 @@ def w4_order_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (c_custkey) so ranks are total and both ratios are deterministic integer
 # divisions — bit-identical across engines.
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "w6_distribution_ranks",
     """
     SELECT c_mktsegment, c_custkey,
@@ -297,7 +285,7 @@ def w6_distribution_ranks(spark: SparkSession, sf_dir: str) -> DataFrame:
 # dimension-grain work, never a fact-table blowup; the daily pre-aggregate
 # is checkpointed so the fact table is scanned once, not once per reuse.
 # ---------------------------------------------------------------------------
-@_register(
+@registry.query(
     "w7_gap_fill_forward",
     f"""
     WITH daily AS (

@@ -1,9 +1,10 @@
 """Central registry: query name -> builder, and name -> DuckDB oracle SQL.
 
 `__spark_entry__.py` (the driver contract) re-exports these. Each operator
-module contributes its own QUERIES/ORACLES dicts; names must be unique.
-Queries without an oracle entry get the driver's weaker rows-only check
-(reserved for genuinely non-SQL-expressible ops: LSH, streaming state, ASR).
+module registers its builders with the `query` decorator; names must be
+unique. Queries without an oracle entry get the driver's weaker rows-only
+check (reserved for genuinely non-SQL-expressible ops: LSH, streaming
+state, ASR).
 """
 
 from __future__ import annotations
@@ -11,6 +12,8 @@ from __future__ import annotations
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+
+Builder = Callable[[SparkSession, str], DataFrame]
 
 _MODULES = [
     "tts_etl_pipeline_spark.operators.relational",
@@ -55,24 +58,39 @@ def _priority() -> list[str]:
     return names
 
 
+# defining module -> {query name: builder}, filled in by `query` at import
+_BUILDERS: dict[str, dict[str, Builder]] = {}
+_ORACLES: dict[str, str] = {}
+
+
+def query(name: str, oracle: str | None = None) -> Callable[[Builder], Builder]:
+    """Decorator: register the builder as query `name`, checked against
+    the DuckDB `oracle` SQL (rows-only when None)."""
+
+    def deco(fn: Builder) -> Builder:
+        if any(name in qs for qs in _BUILDERS.values()):
+            raise ValueError(f"duplicate query name {name!r} from {fn.__module__}")
+        _BUILDERS.setdefault(fn.__module__, {})[name] = fn
+        if oracle is not None:
+            _ORACLES[name] = oracle
+        return fn
+
+    return deco
+
+
 def _load():
     import importlib
 
-    queries: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-    oracles: dict[str, str] = {}
-    for modname in _MODULES:
-        mod = importlib.import_module(modname)
-        for name, fn in mod.QUERIES.items():
-            if name in queries:
-                raise ValueError(f"duplicate query name {name!r} from {modname}")
-            queries[name] = fn
-        oracles.update(mod.ORACLES)
+    queries: dict[str, Builder] = {}
+    for modname in _MODULES:  # module order, whatever order they were imported
+        importlib.import_module(modname)
+        queries.update(_BUILDERS.get(modname, {}))
     rank = {n: i for i, n in enumerate(_priority())}
     ordered = sorted(queries, key=lambda n: rank.get(n, len(rank)))
-    return {n: queries[n] for n in ordered}, oracles
+    return {n: queries[n] for n in ordered}, dict(_ORACLES)
 
 
-def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+def all_queries() -> dict[str, Builder]:
     return _load()[0]
 
 

@@ -10,6 +10,7 @@ pushdown that the plain `spark.read.parquet` path already gets us.
 from __future__ import annotations
 
 import os
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -37,24 +38,63 @@ TABLE_NAMES = [
 # above the bound AQE's runtime size check chooses the join strategy.
 BROADCAST_LIMIT_BYTES = 32 << 20
 
+_SPLIT_BYTES = 128 << 20  # spark.sql.files.maxPartitionBytes default
 
-def table_disk_bytes(sf_dir: str, name: str) -> int | None:
-    """On-disk size of a test table's parquet (single file or directory):
-    the cheap, always-available stand-in for catalog statistics that sizes
-    the maybe_broadcast guard. None when the path cannot be statted."""
+
+class TableStats(NamedTuple):
+    """Catalog-statistics stand-in for a test table's parquet: on-disk
+    bytes, estimated scan splits (files-granular ceil(size / 128 MB) per
+    file — a LOWER bound Spark can only beat) and the footer row count
+    (None unless asked for, or unreadable)."""
+
+    bytes: int
+    splits: int
+    rows: int | None
+
+
+def table_stats(sf_dir: str, name: str, rows: bool = False) -> TableStats | None:
+    """Stats of test table `name` (single parquet file or a directory of
+    them) from one walk — zero Spark jobs. The footer is read only when
+    `rows` is set. None when the path cannot be statted."""
+    import math
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
     path = os.path.join(sf_dir, f"{name}.parquet")
     try:
         if os.path.isfile(path):
-            return os.path.getsize(path)
-        if os.path.isdir(path):
-            return sum(
-                os.path.getsize(os.path.join(root, f))
+            sizes = {path: os.path.getsize(path)}
+        elif os.path.isdir(path):
+            sizes = {
+                os.path.join(root, f): os.path.getsize(os.path.join(root, f))
                 for root, _, fs in os.walk(path)
                 for f in fs
-            )
+                if f.endswith(".parquet")
+            }
+        else:
+            return None
     except OSError:
-        pass
-    return None
+        return None
+    n = None
+    if rows:
+        try:
+            n = sum(pq.ParquetFile(f).metadata.num_rows for f in sizes)
+        except (OSError, pa.ArrowInvalid):
+            pass
+    return TableStats(
+        bytes=sum(sizes.values()),
+        splits=sum(max(1, math.ceil(sz / _SPLIT_BYTES)) for sz in sizes.values()),
+        rows=n,
+    )
+
+
+def table_disk_bytes(sf_dir: str, name: str) -> int | None:
+    """On-disk parquet bytes of a test table: the cheap, always-available
+    stand-in for catalog statistics that sizes the maybe_broadcast guard.
+    None when the path cannot be statted."""
+    stats = table_stats(sf_dir, name)
+    return None if stats is None else stats.bytes
 
 
 def maybe_broadcast(
@@ -121,33 +161,6 @@ def scaled_broadcast(
 # round-robin exchange and never calls this.
 
 REBALANCE_MIN_BYTES = 512 << 10  # below this, a shuffle costs more than it buys
-_SPLIT_BYTES = 128 << 20  # spark.sql.files.maxPartitionBytes default
-
-
-def _natural_splits(sf_dir: str, name: str) -> tuple[int, int]:
-    """(estimated scan split count, total bytes) for a test table's parquet.
-    Split estimate is files-granular (ceil(size / 128 MB) per file) — a
-    LOWER bound Spark can only beat, which makes the guard conservative:
-    we decline to rebalance as soon as the layout itself parallelizes."""
-    import math
-
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    files: list[int] = []
-    try:
-        if os.path.isfile(path):
-            files = [os.path.getsize(path)]
-        elif os.path.isdir(path):
-            files = [
-                os.path.getsize(os.path.join(root, f))
-                for root, _, fs in os.walk(path)
-                for f in fs
-                if f.endswith(".parquet")
-            ]
-    except OSError:
-        pass
-    if not files:
-        return (1 << 30, 0)  # unknown layout: report "already parallel", no-op
-    return (sum(max(1, math.ceil(sz / _SPLIT_BYTES)) for sz in files), sum(files))
 
 
 def rebalance_scan(
@@ -174,48 +187,26 @@ def rebalance_scan(
 
     from pyspark.sql import functions as F
 
-    splits, bytes_ = _natural_splits(sf_dir, name)
+    stats = table_stats(sf_dir, name)
     cores = spark.sparkContext.defaultParallelism
-    if splits >= cores or bytes_ < REBALANCE_MIN_BYTES:
+    # unknown layout: assume it already parallelizes (no-op)
+    if stats is None or stats.splits >= cores or stats.bytes < REBALANCE_MIN_BYTES:
         return df
-    n = max(2, min(cores, math.ceil(bytes_ / per_task_bytes)))
+    n = max(2, min(cores, math.ceil(stats.bytes / per_task_bytes)))
     # hash-partition on a deterministic row digest rather than round-robin:
     # keyless repartition(n) pays a local sort of its input for retry
     # determinism (SPARK-23207), which costs more than the parallelism buys
     # at this size. The digest is xxhash64 over the row POSITION
     # (monotonically_increasing_id = scan partition id + in-partition row
-    # index — deterministic under task retry because the same split replays
-    # in the same order, unlike rand(); guide §2.5): position is unique by
+    # index). A retried task replays the same split, usually in the same
+    # order, so retries normally land rows where they went before — but
+    # Spark marks the expression nondeterministic and does not guarantee
+    # it (filters cannot push through it either). Position is unique by
     # construction, so the spread stays uniform even when the projected
     # columns are low-cardinality/heavy-tailed (a value-hash collocates
     # duplicate rows — ADVICE r13), and it avoids hashing wide text columns
     # just to pick a partition.
     return df.repartition(n, F.xxhash64(F.monotonically_increasing_id()))
-
-
-def table_row_count(sf_dir: str, name: str) -> int | None:
-    """Row count of a test table from its parquet FOOTER metadata — zero
-    Spark jobs, no data scan; the row-count twin of table_disk_bytes (both
-    are the local stand-in for catalog statistics). Used to SIZE sketches
-    (d10's bloom capacity) where any upper bound on the item count works:
-    at cluster scale this is one stats lookup instead of a count() job.
-    None when the path cannot be read as parquet."""
-    import pyarrow.parquet as pq
-
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    try:
-        if os.path.isfile(path):
-            return pq.ParquetFile(path).metadata.num_rows
-        if os.path.isdir(path):
-            return sum(
-                pq.ParquetFile(os.path.join(root, f)).metadata.num_rows
-                for root, _, fs in os.walk(path)
-                for f in fs
-                if f.endswith(".parquet")
-            )
-    except Exception:
-        pass
-    return None
 
 
 def small_task_count(spark: SparkSession, sf_dir: str, name: str, per_task_bytes: int = 2 << 20) -> int:
@@ -226,14 +217,14 @@ def small_task_count(spark: SparkSession, sf_dir: str, name: str, per_task_bytes
     on a 32-task mapInPandas over 5000 rows). Grows with the data and is
     capped at the session's core count. An UNKNOWN layout (remote paths
     os.path cannot stat) reports the full core count — assuming BIG is
-    the safe direction, matching _natural_splits' conservative no-op."""
+    the safe direction, matching rebalance_scan's conservative no-op."""
     import math
 
-    _, bytes_ = _natural_splits(sf_dir, name)
+    stats = table_stats(sf_dir, name)
     cores = spark.sparkContext.defaultParallelism
-    if bytes_ == 0:
+    if not stats or not stats.bytes:
         return cores
-    return max(1, min(cores, math.ceil(bytes_ / per_task_bytes)))
+    return max(1, min(cores, math.ceil(stats.bytes / per_task_bytes)))
 
 
 # Parquet SCHEMA cache — the metadata a catalog/metastore would hold.

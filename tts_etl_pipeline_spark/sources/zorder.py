@@ -100,17 +100,6 @@ def quantile_cuts_multi(
     return out
 
 
-def quantile_cuts(
-    df: DataFrame,
-    col: str,
-    bits: int = Z_BITS,
-    sample_rows: int = SAMPLE_ROWS,
-    seed: int = 42,
-) -> list:
-    """Single-column convenience wrapper over quantile_cuts_multi."""
-    return quantile_cuts_multi(df, [col], bits, sample_rows, seed)[col]
-
-
 def _rank_expr(col: str, cuts: list) -> F.Column:
     """Scan-side quantile rank: count of cut points <= value (0..2^bits-1).
 
