@@ -118,8 +118,8 @@ def sharded(n: int) -> dict:
         }
         t0 = time.perf_counter()
         V._commit(
-            path, files, "overwrite",
-            schema_json=k_schema, stats=stats,
+            path, V._open_base(path, create=True), "overwrite",
+            files=files, schema=k_schema, stats=stats,
         )
         t_commit = time.perf_counter() - t0
 
@@ -127,7 +127,8 @@ def sharded(n: int) -> dict:
         new_f = f"data/{uuid.uuid4().hex}.parquet"
         new_stats = {new_f: {"k": [n * 100, n * 100 + 99], "__n": [100, 100]}}
         t0 = time.perf_counter()
-        m = V._read_manifest(path, 1, materialize=False)
+        base = V._open_base(path, materialize=False)
+        m = base.m
         plen = m["shards"]["prefix_len"]
         entries = dict(m["shards"]["entries"])
         b = V._bucket_of(new_f, plen)
@@ -143,8 +144,7 @@ def sharded(n: int) -> dict:
             old.get("dvs") or {},
         )
         V._commit(
-            path, [], "append",
-            schema_json=m.get("schema"),
+            path, base, "append",
             shards={"prefix_len": plen, "entries": entries},
         )
         t_append = time.perf_counter() - t0
@@ -156,20 +156,21 @@ def sharded(n: int) -> dict:
             path, {target: {"card": 1, "b64": V._dv_encode([0])}}
         )
         t0 = time.perf_counter()
-        m_dv = V._read_manifest(path, 2, materialize=False)
-        plan = V._sharded_delta_plan(path, m_dv, dv_updates={target: dv_sidecar})
+        base_dv = V._open_base(path, materialize=False)
+        plan = V._sharded_delta_plan(
+            path, base_dv.m, dv_updates={target: dv_sidecar}
+        )
         if plan is None:  # outgrown bucket (possible under shrunk _SHARD_SIZE)
             raise RuntimeError(
                 "delta plan refused — rerun with default shard constants"
             )
-        V._commit(
-            path, [], "delete-dv", schema_json=m_dv.get("schema"), shards=plan
-        )
+        V._commit(path, base_dv, "delete-dv", shards=plan)
         t_dv = time.perf_counter() - t0
 
-        # 1000-key EQUALITY-DELETE commit (r12): shards carry VERBATIM via
-        # _alter_payload_kwargs — the commit cost is one KB value sidecar
-        # + the manifest list, FLAT in n (no data read, no shard touched)
+        # 1000-key EQUALITY-DELETE commit (r12): a commit that names no file
+        # list carries the base's shards VERBATIM — the commit cost is one
+        # KB value sidecar + the manifest list, FLAT in n (no data read, no
+        # shard touched)
         t0 = time.perf_counter()
         V.delete_where_eq(path, "k", list(range(0, 100_000, 100)))
         t_eq = time.perf_counter() - t0
@@ -302,7 +303,10 @@ def metadata_tables_scale(spark, n: int) -> dict:
                 "__p:sbucket[16]:k": [i % 16, i % 16]}
             for i, f in enumerate(files)
         }
-        V._commit(path, files, "overwrite", schema_json=k_schema, stats=stats)
+        V._commit(
+            path, V._open_base(path, create=True), "overwrite",
+            files=files, schema=k_schema, stats=stats,
+        )
         del files, stats
         rss0 = resource.getrusage(resource.RUSAGE_SELF).ru_maxrss
         t0 = time.perf_counter()

@@ -103,6 +103,24 @@ def test_metadata_agg_dv_count_exact_minmax_refuses(spark, tmp_path):
     assert V.aggregate_metadata(spark, path).collect()[0][0] == 490
 
 
+def test_metadata_agg_after_dv_update(spark, tmp_path):
+    """update_where_dv's appended copies carry the "__n" record count
+    like every other staged file, so COUNT(*) stays a manifest fold
+    right after a DV update (a copy without it would refuse with
+    "predates per-file record counts")."""
+    path = str(tmp_path / "t")
+    V.write_version(
+        spark.range(100).selectExpr("id AS k", "id * 2 AS x")
+        .repartitionByRange(2, "k"),
+        path,
+        collect_stats=("k",),
+    )
+    assert V.update_where_dv(spark, path, "k", 10, 19, {"x": "x + 1"}) == 2
+    plan = V.plan_metadata_aggregate(path)
+    assert plan["metadata_only"], plan
+    assert plan["count"] == V.read_version(spark, path).count() == 100
+
+
 def test_metadata_agg_typed_refusals(spark, tmp_path):
     """Every unprovable case is a TYPED fallback, and the served answer
     is exact through the scan path."""

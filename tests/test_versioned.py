@@ -5270,3 +5270,132 @@ def test_replace_where_respects_live_deletes(spark, tmp_path):
     assert 5 not in got and 6 not in got and 150 not in got
     assert got[20] == -1 and all(k not in got for k in range(21, 30))
     assert got[30] == 30 and got[199] == 199
+
+
+def test_every_writer_carries_table_fields_forward(spark, tmp_path):
+    """The commit rule: a commit starts from its base manifest and states
+    only what it changes. Each public writer runs once on a table whose
+    manifest carries every table-level field the writers accept (CHECK
+    constraint, rename, dropped column, partition spec, column default,
+    row lineage); every new manifest keeps the parent's fields except the
+    ones that writer documents as changing, and every per-file map is
+    keyed only by files in the new file list. No writer refuses any of
+    these fields."""
+    from tts_etl_pipeline_spark.sources import versioned as V
+
+    table_fields = (
+        "schema", "constraints", "colmap", "dropped_physicals", "pspecs",
+        "pspec_id", "eqdeletes", "defaults", "row_lineage", "next_row_id",
+    )
+    path = str(tmp_path / "t")
+
+    def rows(ks):
+        return spark.createDataFrame(
+            [(k, k * 10, f"s{k}", 7) for k in ks],
+            "k long, x2 long, s string, z long",
+        )
+
+    V.write_version(
+        spark.createDataFrame(
+            [(k, k * 10, f"s{k}", k) for k in range(40)],
+            "k long, x long, s string, d long",
+        ),
+        path,
+        collect_stats=("k",),
+        partition_by=(("bucket", "k", 2),),
+    )
+    V.add_constraint(spark, path, "k_pos", "k >= 0")
+    V.rename_column(path, "x", "x2")
+    V.drop_column(path, "d")
+    V.add_column(path, "z", "long", default=7)
+    V.enable_row_lineage(path)
+    head = V._read_manifest(path, V.current_version(path))
+    for k in table_fields:
+        if k != "eqdeletes":  # a delete_where_eq below adds the last one
+            assert head.get(k), k
+
+    def check(name, parent, child, changes):
+        for k in table_fields:
+            if k not in changes:
+                assert child.get(k) == parent.get(k), (name, k)
+        live = set(child["files"])
+        for k in ("stats", "blooms", "dvs"):
+            assert set(child.get(k) or {}) <= live, (name, k)
+
+    def step(name, run, changes=("next_row_id",)):
+        parent = V._read_manifest(path, V.current_version(path))
+        v = run()
+        assert v == parent["version"] + 1, name
+        child = V._read_manifest(path, v)
+        check(name, parent, child, changes)
+        return parent, child
+
+    overwrite = ("eqdeletes", "next_row_id")  # an overwrite kills deletes
+    step("append", lambda: V.write_version(rows([100, 101]), path))
+    step(
+        "overwrite",
+        lambda: V.write_version(
+            V.read_version(spark, path), path, mode="overwrite"
+        ),
+        overwrite,
+    )
+    step(
+        "write_version_parts",
+        lambda: V.write_version_parts(
+            [rows([102])], path,
+            reuse_files=V.manifest(path, V.current_version(path))["files"],
+            expected_version=V.current_version(path),
+        ),
+    )
+    step("merge", lambda: V.merge(spark, path, rows([5, 200]), "k"))
+    step(
+        "merge_upsert",
+        lambda: V.merge_upsert(spark, path, rows([6, 201]), "k"),
+        overwrite,
+    )
+    step("delete_where", lambda: V.delete_where(spark, path, "k", 0, 2))
+    step(
+        "update_where",
+        lambda: V.update_where(spark, path, "k", 10, 12, {"x2": "x2 + 1"}),
+    )
+    step(
+        "replace_where",
+        lambda: V.replace_where(rows([20, 21]), path, "k", 20, 22),
+    )
+    step(
+        "delete_where_dv",
+        lambda: V.delete_where_dv(spark, path, "k", 30, 31), changes=(),
+    )
+    step(
+        "update_where_dv",
+        lambda: V.update_where_dv(spark, path, "k", 32, 33, {"x2": "0"}),
+    )
+    step("purge_dvs", lambda: V.purge_dvs(spark, path))
+    _, child = step(
+        "delete_where_eq",
+        lambda: V.delete_where_eq(path, "k", [34]), changes=("eqdeletes",),
+    )
+    assert len(child["eqdeletes"]) == 1
+    _, child = step("purge_eq", lambda: V.purge_eq(spark, path), overwrite)
+    assert not child.get("eqdeletes")
+    step("compact", lambda: V.compact(spark, path), overwrite)
+    _, child = step(
+        "alter",
+        lambda: V.add_constraint(spark, path, "x2_pos", "x2 >= 0"),
+        changes=("constraints",),
+    )
+    assert set(child["constraints"]) == {"k_pos", "x2_pos"}
+    # a branch commit inherits from the branch head; fast_forward
+    # publishes that manifest into main unchanged
+    main = V._read_manifest(path, V.current_version(path))
+    fork = V.create_branch(path, "b")
+    bv = V.write_version(rows([300]), path, branch="b")
+    staged = V._read_manifest(path, bv, branch="b", fork=fork)
+    check("branch", main, staged, ("next_row_id",))
+    assert V.fast_forward(path, "b") == bv
+    check(
+        "fast_forward", staged, V._read_manifest(path, bv), ()
+    )
+    assert sorted(r.k for r in V.read_version(spark, path).collect()) == sorted(
+        set(range(3, 40)) - {22, 30, 31, 34} | {100, 101, 102, 200, 201, 300}
+    )

@@ -11,9 +11,9 @@ itself is a tiny versioned object mapping table name -> (path, pinned
 version), and a multi-table transaction writes each table NORMALLY (new
 table versions are immutable and invisible to catalog readers until
 pointed at), then swaps the one catalog pointer. That swap — a single
-hard-link CAS, the exact idiom versioned._commit uses — is the only
-atomic primitive needed: catalog readers see the old version SET or the
-new version SET, never a mix.
+hard-link CAS, the versioned._cas_create every table commit uses — is
+the only atomic primitive needed: catalog readers see the old version
+SET or the new version SET, never a mix.
 
 Crash honesty: a transaction that dies after its table commits but
 before the catalog commit leaves only UNREFERENCED table versions —
@@ -38,12 +38,12 @@ from __future__ import annotations
 
 import json
 import os
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
 from tts_etl_pipeline_spark.sources.versioned import (
     CommitConflictError,
+    _cas_create,
     _write_atomic,
     current_version,
     read_version,
@@ -96,35 +96,23 @@ def catalog_snapshot(path: str, version: int | None = None) -> dict:
 
 
 def _commit_catalog(path: str, tables: dict, parent: int) -> int:
-    """One catalog version via the hard-link CAS (create-if-absent is
-    atomic on POSIX: exactly one racing writer can create c{v+1})."""
+    """One catalog version via the shared hard-link CAS
+    (versioned._cas_create: exactly one racing writer creates c{v+1})."""
     import time
 
     os.makedirs(_cdir(path), exist_ok=True)
     version = parent + 1
-    target = _cat_manifest(path, version)
-    tmp = target + f".tmp-{uuid.uuid4().hex[:8]}"
-    with open(tmp, "w", encoding="utf-8") as fh:
-        json.dump(
-            {
-                "version": version,
-                "parent": parent,
-                "committed_at": time.time(),
-                "tables": tables,
-            },
-            fh,
-        )
-        fh.flush()
-        os.fsync(fh.fileno())
-    try:
-        os.link(tmp, target)
-    except FileExistsError:
+    manifest = {
+        "version": version,
+        "parent": parent,
+        "committed_at": time.time(),
+        "tables": tables,
+    }
+    if not _cas_create(_cat_manifest(path, version), manifest):
         raise CommitConflictError(
             f"catalog version {version} at {path} was committed by another "
             f"writer; re-read the head and retry"
-        ) from None
-    finally:
-        os.remove(tmp)
+        )
     latest = os.path.join(_cdir(path), "_latest.json")
     cur = catalog_version(path)
     if cur <= version:

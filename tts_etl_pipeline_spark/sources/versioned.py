@@ -73,6 +73,18 @@ On a shared filesystem this is a complete multi-writer protocol; on an
 object store without atomic create-if-absent you'd swap step 2 for a
 catalog/DynamoDB-style CAS, as Delta and Iceberg do.
 
+Commit rule: a commit starts from a BASE manifest (_open_base: the head
+of main or of a branch, or the snapshot the writer computed its rows
+from) and states only what it changes (_commit). Table-level fields —
+schema, constraints, colmap, dropped_physicals, pspecs/pspec_id,
+eqdeletes, defaults, row_lineage, next_row_id — inherit from the base
+unless the writer passes them. The per-file payload — files, stats,
+blooms, dvs, shards — carries verbatim when the writer passes no file
+list (metadata-only commits: ALTERs, equality deletes), and is entirely
+the writer's when it passes `files` or a `shards` plan. Writers that add
+rows stage them through _stage_rows, which stamps every new file's add
+version ("__v"), record count ("__n"), requested min/max and row ids.
+
 Readers NEVER list data/: they read the manifest's file list, so a reader
 holding version N is isolated from any concurrent commit of N+1
 (snapshot isolation) and `read_version(path, n)` is time travel for free.
@@ -95,6 +107,7 @@ import json
 import numbers
 import os
 import uuid
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -189,13 +202,34 @@ class PublishConflictError(CommitConflictError):
     the new head (create a fresh branch) — never force-publish."""
 
 
-def _write_atomic(target: str, payload: dict) -> None:
+def _fsynced_tmp(target: str, payload: dict) -> str:
+    """`payload` as JSON in a durable temp file beside `target`."""
     tmp = target + f".tmp-{uuid.uuid4().hex[:8]}"
     with open(tmp, "w", encoding="utf-8") as fh:
         json.dump(payload, fh)
         fh.flush()
         os.fsync(fh.fileno())
-    os.replace(tmp, target)
+    return tmp
+
+
+def _write_atomic(target: str, payload: dict) -> None:
+    os.replace(_fsynced_tmp(target, payload), target)
+
+
+def _cas_create(target: str, payload: dict) -> bool:
+    """The commit CAS every lineage shares (table manifests, fast_forward's
+    publish, the catalog): create `target` holding `payload` only if the
+    name is free. A hard link is atomic create-if-absent on POSIX, so of
+    N racers exactly one gets True; the others get False and choose their
+    own conflict error."""
+    tmp = _fsynced_tmp(target, payload)
+    try:
+        os.link(tmp, target)
+    except FileExistsError:
+        return False
+    finally:
+        os.remove(tmp)
+    return True
 
 
 def current_version(path: str) -> int:
@@ -413,22 +447,6 @@ def _sharded_delta_plan(
     return {"prefix_len": plen, "entries": entries}
 
 
-def _alter_payload_kwargs(m_raw: dict) -> dict:
-    """The per-file-payload kwargs a METADATA-ONLY commit (ALTERs) passes
-    to _commit: a sharded parent's shard entries carry VERBATIM (zero
-    payload IO — re-bucketing 10^6 entries for a scalar change would be
-    exactly the O(table) cost sharding retires), an inline parent's maps
-    carry directly."""
-    if "shards" in m_raw:
-        return {"files": [], "shards": m_raw["shards"]}
-    return {
-        "files": m_raw["files"],
-        "stats": m_raw.get("stats"),
-        "blooms": m_raw.get("blooms"),
-        "dvs": m_raw.get("dvs"),
-    }
-
-
 def _read_manifest(
     path: str,
     version: int,
@@ -500,98 +518,92 @@ def _latest_lock(path: str):
         os.close(fd)
 
 
-def _commit(
-    path: str,
-    files: list[str],
-    mode: str,
-    expected_parent: int | None = None,
-    schema_json: str | None = None,
-    stats: dict | None = None,
-    constraints: dict | None = None,
-    blooms: dict | None = None,
-    colmap: dict | None = None,
-    dropped_physicals: list | None = None,
-    dvs: dict | None = None,
-    shards: dict | None = None,
-    pspecs: dict | None = None,
-    pspec_id: str | None = None,
-    branch: str | None = None,
-    eqdeletes: list | None = None,
-    defaults: list | None = None,
-    row_lineage: bool | None = None,
-    next_row_id: int | None = None,
-    marker: str | None = None,
-) -> int:
-    """Commit `files` as version expected_parent+1 via the manifest-name
-    CAS. `expected_parent=None` reads the head at commit time (sequential
-    callers); writers that computed their file list from a snapshot pass
-    the snapshot's version so a concurrent commit is DETECTED, not
-    silently overwritten. `schema_json` records the version's logical
-    schema (Iceberg/Delta's schema-per-snapshot — what makes add-column
-    evolution and time travel to the OLD schema both work).
+class _Base(NamedTuple):
+    """The snapshot a commit starts from: `version` is the parent its CAS
+    targets (the commit creates version+1), `branch`/`fork` name the
+    lineage it lands on (None = main), and `m` is the manifest whose
+    fields the commit inherits ({} for a table's first commit)."""
 
-    `constraints=None` INHERITS the parent version's CHECK constraints —
-    table constraints survive every commit (append, overwrite, compact,
-    merge, mutations) until drop_constraint removes them; add/drop pass
-    the new dict explicitly. The inherit path re-reads the parent
-    manifest: one driver-side JSON parse per commit, the same cost class
-    as the manifest rewrite this commit already pays."""
-    os.makedirs(_vdir(path), exist_ok=True)
-    fork: int | None = None
+    version: int
+    branch: str | None
+    fork: int | None
+    m: dict
+
+
+def _branch_info(path: str, branch: str) -> dict:
+    """The refs entry ({'fork', 'head'}) of a live branch."""
+    info = _load_refs(path)["branches"].get(branch)
+    if info is None:
+        raise ValueError(f"no branch {branch!r} at {path}")
+    return info
+
+
+def _open_base(
+    path: str,
+    branch: str | None = None,
+    version: int | None = None,
+    materialize: bool = True,
+    create: bool = False,
+) -> _Base:
+    """The base snapshot of one write: `version` when the caller computed
+    its rows from an earlier snapshot, else the head of `branch` (main
+    when None). An empty table refuses unless the writer `create`s it.
+    `materialize=False` keeps a sharded manifest as its KB manifest list
+    (see _read_manifest) for writers that plan from shard summaries or
+    carry untouched shards verbatim."""
+    fork = None
     if branch is not None:
-        info = _load_refs(path)["branches"].get(branch)
-        if info is None:
-            raise ValueError(f"no branch {branch!r} at {path}")
-        fork = info["fork"]
-        if expected_parent is None:
-            expected_parent = branch_head(path, branch)
-    parent = current_version(path) if expected_parent is None else expected_parent
-    if parent >= 1 and (
-        constraints is None
-        or colmap is None
-        or dropped_physicals is None
-        or pspecs is None
-        or eqdeletes is None
-        or defaults is None
-        or row_lineage is None
-    ):
-        # raw read: the inherited fields are manifest-list scalars
-        pm = _read_manifest(
-            path, parent, materialize=False, branch=branch, fork=fork
-        )
-        if constraints is None:
-            constraints = pm.get("constraints")
-        # column-mapping metadata inherits like constraints: None means
-        # "carry the parent's"; writers that legitimately reset (a full
-        # overwrite commits all-new files under identity naming) pass {}
-        if colmap is None:
-            colmap = pm.get("colmap")
-        if dropped_physicals is None:
-            dropped_physicals = pm.get("dropped_physicals")
-        # partition-spec metadata inherits as a PAIR: a commit that
-        # declares specs passes both; everyone else carries the parent's
-        if pspecs is None:
-            pspecs = pm.get("pspecs")
-            pspec_id = pm.get("pspec_id")
-        # equality deletes inherit like constraints: they stay live until
-        # a rewrite stamps every file past their seq (overwrite passes [])
-        if eqdeletes is None:
-            eqdeletes = pm.get("eqdeletes")
-        # column defaults inherit forever (metadata the old files serve
-        # from; a rewrite materializes values but the entry stays for any
-        # remaining pre-add files — harmless once none qualify)
-        if defaults is None:
-            defaults = pm.get("defaults")
-        # row lineage: the flag and the MONOTONE id counter both inherit
-        # (ids are never reused — a rollback inherits the HEAD's counter,
-        # so ids minted on the abandoned timeline stay burned)
-        if row_lineage is None:
-            row_lineage = pm.get("row_lineage")
-        if next_row_id is None:
-            next_row_id = pm.get("next_row_id")
-    version = parent + 1
-    target = _resolve_manifest_file(path, version, branch, fork)
-    tmp = target + f".tmp-{uuid.uuid4().hex[:8]}"
+        fork = _branch_info(path, branch)["fork"]
+        if version is None:
+            version = branch_head(path, branch)
+    if version is None:
+        version = current_version(path)
+    if version == 0:
+        if not create:
+            raise ValueError(f"no versions at {path}")
+        return _Base(0, branch, fork, {})
+    m = _read_manifest(path, version, materialize, branch=branch, fork=fork)
+    return _Base(version, branch, fork, m)
+
+
+# the fields a commit inherits from its base unless the writer passes them
+_TABLE_FIELDS = (
+    "schema", "constraints", "colmap", "dropped_physicals", "pspecs",
+    "pspec_id", "eqdeletes", "defaults", "row_lineage", "next_row_id",
+)
+# the per-file payload: carried verbatim from the base when the writer
+# names no file list (files or shards), the writer's own when it does
+_PAYLOAD_FIELDS = ("files", "stats", "blooms", "dvs", "shards")
+
+
+def _commit(
+    path: str, base: _Base, mode: str, marker: str | None = None, **changes
+) -> int:
+    """Commit version base.version+1 via the manifest-name CAS: the new
+    manifest is `base.m` with `changes` applied (the commit rule in the
+    module docstring). A concurrent commit of the same version surfaces
+    as CommitConflictError. `marker` records an idempotence token (see
+    marker_version)."""
+    unknown = sorted(set(changes) - set(_TABLE_FIELDS) - set(_PAYLOAD_FIELDS))
+    if unknown:
+        raise TypeError(f"_commit got unknown manifest fields {unknown}")
+    if "files" in changes or "shards" in changes:
+        payload = {k: changes.pop(k, None) for k in _PAYLOAD_FIELDS}
+    elif set(changes) & set(_PAYLOAD_FIELDS):
+        raise TypeError("per-file maps need the file list they key; pass files")
+    elif "shards" in base.m:
+        # zero payload IO: re-bucketing 10^6 entries for a scalar change
+        # would be exactly the O(table) cost sharding retires
+        payload = {"shards": base.m["shards"]}
+    else:
+        payload = {k: base.m.get(k) for k in _PAYLOAD_FIELDS}
+    table = {k: changes.get(k, base.m.get(k)) for k in _TABLE_FIELDS}
+    files = payload.get("files") or []
+    shards = payload.get("shards")
+    stats, blooms, dvs = (payload.get(k) for k in ("stats", "blooms", "dvs"))
+    os.makedirs(_vdir(path), exist_ok=True)
+    version = base.version + 1
+    target = _resolve_manifest_file(path, version, base.branch, base.fork)
     import time
 
     # beyond the inline envelope the per-file payload moves into bucket
@@ -604,7 +616,7 @@ def _commit(
         files, stats, blooms, dvs = [], None, None, None
     manifest = {
         "version": version,
-        "parent": parent,
+        "parent": base.version,
         "mode": mode,
         # Delta/Iceberg record a commit timestamp per snapshot; it powers
         # timestamp AS OF time travel (version_asof). Wall-clock honesty:
@@ -625,76 +637,58 @@ def _commit(
             )
     else:
         manifest["files"] = sorted(files)
-    if schema_json is not None:
-        manifest["schema"] = schema_json
-    if stats:
-        manifest["stats"] = stats
-    if constraints:
-        manifest["constraints"] = constraints
-    if blooms:
-        # file -> sidecar map ("blooms-<uuid>.json" under _versions/);
-        # an equality lookup lazy-loads only the sidecars it needs
-        manifest["blooms"] = blooms
-    if colmap:
-        manifest["colmap"] = colmap
-    if dropped_physicals:
-        manifest["dropped_physicals"] = dropped_physicals
-    if dvs:
-        # file -> DV sidecar map (deletion vectors): reads anti-apply the
-        # referenced positions; writers carry entries like blooms — always
-        # explicitly, since a rewritten file's vector dies with the file
-        manifest["dvs"] = dvs
-    if pspecs:
-        manifest["pspecs"] = pspecs
-        if pspec_id is not None:
-            manifest["pspec_id"] = pspec_id
-    if eqdeletes:
-        # [{sc, col, seq}]: small value-list sidecars; each applies to
-        # files whose "__v" add-version stat is BELOW its seq
-        manifest["eqdeletes"] = eqdeletes
-    if defaults:
-        # [{col: PHYSICAL, value, seq}] — Iceberg v3 initial-defaults:
-        # files added BEFORE seq serve `value` for the column instead of
-        # null (the _read_files_raw fill); inline values, no sidecar
-        manifest["defaults"] = defaults
-    if row_lineage:
+    # empty fields are omitted: "stats"/"blooms"/"dvs" are file -> record
+    # or file -> sidecar maps ("blooms-<uuid>.json", "dv-<uuid>.json"
+    # under _versions/); "eqdeletes" is [{sc, col, seq}] (each applies to
+    # files whose "__v" add-version stat is BELOW its seq); "defaults" is
+    # [{col: PHYSICAL, value, seq}] (Iceberg v3 initial-defaults: files
+    # added before seq serve `value` instead of null)
+    manifest.update(
+        (k, v)
+        for k, v in (
+            ("schema", table["schema"]),
+            ("stats", stats),
+            ("constraints", table["constraints"]),
+            ("blooms", blooms),
+            ("colmap", table["colmap"]),
+            ("dropped_physicals", table["dropped_physicals"]),
+            ("dvs", dvs),
+            ("pspecs", table["pspecs"]),
+            ("eqdeletes", table["eqdeletes"]),
+            ("defaults", table["defaults"]),
+        )
+        if v
+    )
+    if table["pspecs"] and table["pspec_id"] is not None:
+        manifest["pspec_id"] = table["pspec_id"]
+    if table["row_lineage"]:
         # Iceberg v3 row lineage: per-file first-row-id blocks live in the
         # stats channel ("__rid"); the counter only ever moves forward
         manifest["row_lineage"] = True
-        manifest["next_row_id"] = int(next_row_id or 0)
-    if branch is not None:
+        manifest["next_row_id"] = int(table["next_row_id"] or 0)
+    if base.branch is not None:
         # provenance marker: a staged (unpublished) commit names its
         # branch; fast_forward strips this when publishing into main
-        manifest["branch"] = branch
+        manifest["branch"] = base.branch
     if marker is not None:
         # caller-supplied IDEMPOTENCE token (e.g. a streaming batch id):
         # marker_version() probes committed manifests for it, so an
         # at-least-once redelivery can skip its already-landed commit
         # without scanning a single data row
         manifest["marker"] = marker
-    with open(tmp, "w", encoding="utf-8") as fh:
-        json.dump(manifest, fh)
-        fh.flush()
-        os.fsync(fh.fileno())
-    try:
-        # the CAS: hard-link is atomic create-if-absent on POSIX — exactly
-        # one racing writer can create v{version}; everyone else loses
-        os.link(tmp, target)
-    except FileExistsError:
+    if not _cas_create(target, manifest):
         raise CommitConflictError(
             f"version {version} at {path} was committed by another writer "
             f"(or is a torn commit — run vacuum() if no writer is active); "
             f"re-read the head and retry"
-        ) from None
-    finally:
-        os.remove(tmp)
+        )
     # forward-only pointer advance: a slow v(N+1) winner must never
     # regress _latest after v(N+2) already landed. Branch commits advance
     # the BRANCH head cache instead — main's pointer never sees them.
     with _latest_lock(path):
-        if branch is not None:
+        if base.branch is not None:
             refs = _load_refs(path)
-            info = refs["branches"].get(branch)
+            info = refs["branches"].get(base.branch)
             if info is not None and info.get("head", info["fork"]) < version:
                 info["head"] = version
                 _write_atomic(_refs_path(path), refs)
@@ -1256,6 +1250,66 @@ def _stage_files(df: DataFrame, path: str) -> list[str]:
     return new_files
 
 
+def _stage_rows(
+    path: str,
+    base: _Base,
+    parts: list,
+    colmap: dict | None,
+    collect_stats: tuple = (),
+    collect_blooms: tuple = (),
+    rid_materialized: bool = False,
+    layout: tuple | None = None,
+) -> tuple[list[str], dict, dict, int | None]:
+    """Stage every DataFrame in `parts` as its own file group and stamp
+    the new files' commit metadata — the one staging path of every writer
+    that adds rows. Returns (new_files, stats, blooms, next_row_id), the
+    maps covering the new files only.
+
+    Each file's stats entry comes from ONE footer read: "__v" (its add
+    version, the Iceberg data sequence number: equality deletes apply
+    only to files added BEFORE them), "__n" (Iceberg's record_count,
+    which makes COUNT(*) a manifest fold — aggregate_metadata), min/max
+    of `collect_stats` (logical names) and "__ridm" when the rows carry
+    materialized row ids. Row-lineage tables then get fresh id blocks
+    (_assign_row_ids) and `collect_blooms` a bloom sidecar. `layout` =
+    (active spec fields, commit schema) lays the files out one group per
+    partition tuple and records each tuple as synthetic [v, v] stats."""
+    phys_of = (colmap or {}).get
+    new_files: list[str] = []
+    pstats: dict = {}
+    for p in parts:
+        staged: list[str] = []
+        if layout:
+            staged, ps = _stage_partitioned(p, path, layout[0], colmap, layout[1])
+            pstats.update(ps)
+        if not staged:  # unpartitioned, or empty input under a spec
+            staged = _stage_files(_stage_physical(p, colmap), path)
+        new_files.extend(staged)
+    stats = _footer_minmax(
+        path, new_files, tuple(phys_of(c, c) for c in collect_stats),
+        with_counts=True,
+    )
+    for f in new_files:
+        rec = stats[f]
+        rec["__v"] = [base.version + 1, base.version + 1]
+        rec.update(pstats.get(f) or {})
+        if rid_materialized:
+            # this file's parquet bytes CARRY their row ids — the lineage
+            # read must trust them, never mint a fresh block
+            rec["__ridm"] = [1, 1]
+    next_rid = _assign_row_ids(path, base.m, new_files, stats)
+    blooms: dict = {}
+    if collect_blooms:
+        built = _collect_blooms_spark(
+            parts[0].sparkSession if parts else None, path, new_files,
+            tuple(phys_of(c, c) for c in collect_blooms),
+        )
+        if built:
+            sidecar = _write_bloom_sidecar(path, built)
+            blooms = {f: sidecar for f in built}
+    return new_files, stats, blooms, next_rid
+
+
 UNIQUE_PREFIX = "unique:"
 
 
@@ -1457,10 +1511,8 @@ def widen_column(path: str, col: str, new_type) -> int:
     typed."""
     from pyspark.sql.types import StructField, StructType, _parse_datatype_string
 
-    v = current_version(path)
-    if v == 0:
-        raise ValueError(f"no versions at {path}")
-    m = _read_manifest(path, v, materialize=False)
+    base = _open_base(path, materialize=False)
+    m = base.m
     if m.get("schema") is None:
         raise ValueError("legacy manifest records no schema to widen")
     schema = _schema_from_json(m["schema"])
@@ -1485,13 +1537,7 @@ def widen_column(path: str, col: str, new_type) -> int:
             for f in schema.fields
         ]
     )
-    return _commit(
-        path,
-        mode="alter-widen",
-        expected_parent=v,
-        schema_json=new_schema.json(),
-        **_alter_payload_kwargs(m),  # every sidecar map, or shards verbatim
-    )
+    return _commit(path, base, "alter-widen", schema=new_schema.json())
 
 
 def add_column(path: str, name: str, dtype, default=None) -> int:
@@ -1516,10 +1562,8 @@ def add_column(path: str, name: str, dtype, default=None) -> int:
     name gets a fresh physical (never aliasing retired bytes)."""
     from pyspark.sql.types import StructField, StructType, _parse_datatype_string
 
-    v = current_version(path)
-    if v == 0:
-        raise ValueError(f"no versions at {path}")
-    m = _read_manifest(path, v, materialize=False)
+    base = _open_base(path, materialize=False)
+    m = base.m
     if m.get("schema") is None:
         raise ValueError("legacy manifest records no schema to add to")
     schema = _schema_from_json(m["schema"])
@@ -1553,35 +1597,27 @@ def add_column(path: str, name: str, dtype, default=None) -> int:
             )
     # physical naming: a retired (dropped) physical must never be aliased
     # onto — old files still hold its stale bytes (the append-path rule)
-    cm = dict(m.get("colmap") or {})
-    dropped = list(m.get("dropped_physicals") or [])
+    changes: dict = {
+        "schema": StructType(
+            list(schema.fields) + [StructField(name, new_t, True)]
+        ).json()
+    }
+    cm = m.get("colmap") or {}
+    dropped = m.get("dropped_physicals") or []
+    phys = name
     if cm or dropped:
         full_cm = {n: cm.get(n, n) for n in schema.names}
         forbidden = set(full_cm.values()) | set(dropped)
-        phys = name if name not in forbidden else f"{name}_{uuid.uuid4().hex[:8]}"
-        full_cm[name] = phys
-        cm = full_cm
-    else:
-        phys, cm = name, None
-    new_schema = StructType(
-        list(schema.fields) + [StructField(name, new_t, True)]
-    )
-    defaults = list(m.get("defaults") or [])
+        if name in forbidden:
+            phys = f"{name}_{uuid.uuid4().hex[:8]}"
+        changes["colmap"] = {**full_cm, name: phys}
     if default is not None:
         # seq = this commit's version: covers every file in the current
         # snapshot (add versions <= v < v+1), nothing written after
-        defaults.append({"col": phys, "value": default, "seq": v + 1})
-    return _commit(
-        path,
-        mode="alter-add",
-        expected_parent=v,
-        schema_json=new_schema.json(),
-        constraints=m.get("constraints") or {},
-        colmap=cm if cm is not None else {},
-        dropped_physicals=dropped,
-        defaults=defaults,
-        **_alter_payload_kwargs(m),  # every sidecar map, or shards verbatim
-    )
+        changes["defaults"] = list(m.get("defaults") or []) + [
+            {"col": phys, "value": default, "seq": base.version + 1}
+        ]
+    return _commit(path, base, "alter-add", **changes)
 
 
 def rename_column(path: str, old: str, new: str) -> int:
@@ -1595,12 +1631,9 @@ def rename_column(path: str, old: str, new: str) -> int:
     Refused when a CHECK constraint mentions the old name (drop and
     re-add the constraint against the new name — silent rewrite of a
     recorded expression is how audits rot)."""
-    v = current_version(path)
-    if v == 0:
-        raise ValueError(f"no versions at {path}")
-    # raw read: everything an ALTER touches is a manifest-list scalar,
-    # and a sharded parent's payload carries verbatim (_alter_payload_kwargs)
-    m = _read_manifest(path, v, materialize=False)
+    # raw read: everything an ALTER touches is a manifest-list scalar
+    base = _open_base(path, materialize=False)
+    m = base.m
     if m.get("schema") is None:
         raise ValueError("legacy manifest has no recorded schema to rename in")
     schema = _schema_from_json(m["schema"])
@@ -1624,16 +1657,7 @@ def rename_column(path: str, old: str, new: str) -> int:
             for f in schema.fields
         ]
     )
-    return _commit(
-        path,
-        mode="alter",
-        expected_parent=v,
-        schema_json=new_schema.json(),
-        constraints=m.get("constraints") or {},
-        colmap=cm,
-        dropped_physicals=list(m.get("dropped_physicals") or []),
-        **_alter_payload_kwargs(m),  # DVs/stats/blooms or shards verbatim
-    )
+    return _commit(path, base, "alter", schema=new_schema.json(), colmap=cm)
 
 
 def drop_column(path: str, name: str) -> int:
@@ -1646,10 +1670,8 @@ def drop_column(path: str, name: str) -> int:
     never alias onto the stale data. Time travel before the drop still
     serves the column. Refused for the last column and when a CHECK
     constraint mentions it."""
-    v = current_version(path)
-    if v == 0:
-        raise ValueError(f"no versions at {path}")
-    m = _read_manifest(path, v, materialize=False)  # scalars suffice
+    base = _open_base(path, materialize=False)  # scalars suffice
+    m = base.m
     if m.get("schema") is None:
         raise ValueError("legacy manifest has no recorded schema to drop from")
     schema = _schema_from_json(m["schema"])
@@ -1675,7 +1697,7 @@ def drop_column(path: str, name: str) -> int:
     retired = cm.pop(name)
     dropped = list(m.get("dropped_physicals") or []) + [retired]
     new_schema = StructType([f for f in schema.fields if f.name != name])
-    payload = _alter_payload_kwargs(m)
+    payload: dict = {}
     if "shards" not in m:
         # strip the dead column's pruning metadata (stats are
         # physical-keyed). Sharded parents skip the strip: rewriting every
@@ -1687,13 +1709,17 @@ def drop_column(path: str, name: str) -> int:
             f: {c: r for c, r in rec.items() if c != retired}
             for f, rec in (m.get("stats") or {}).items()
         }
-        payload["stats"] = {f: rec for f, rec in stats.items() if rec} or None
+        payload = {
+            "files": m["files"],
+            "stats": {f: rec for f, rec in stats.items() if rec},
+            "blooms": m.get("blooms"),
+            "dvs": m.get("dvs"),
+        }
     return _commit(
         path,
-        mode="alter",
-        expected_parent=v,
-        schema_json=new_schema.json(),
-        constraints=m.get("constraints") or {},
+        base,
+        "alter",
+        schema=new_schema.json(),
         colmap=cm,
         dropped_physicals=dropped,
         # the retired physical's initial-default dies with the column (a
@@ -1734,16 +1760,13 @@ def add_constraint(
             f"the {UNIQUE_PREFIX!r} prefix is reserved for "
             "add_unique_constraint's recorded form"
         )
-    v = current_version(path)
-    if v == 0:
-        raise ValueError(f"no versions at {path}")
-    m = _read_manifest(path, v, materialize=False)  # scalars suffice
-    cons = dict(m.get("constraints") or {})
+    base = _open_base(path, materialize=False)  # scalars suffice
+    cons = dict(base.m.get("constraints") or {})
     if name in cons:
         raise ValueError(f"constraint {name!r} already exists: {cons[name]}")
     from pyspark.sql import functions as F
 
-    existing = read_version(spark, path, v)
+    existing = read_version(spark, path, base.version)
     hit = (
         existing.filter(~F.coalesce(F.expr(expr), F.lit(True)))
         .limit(1)
@@ -1755,14 +1778,7 @@ def add_constraint(
             f"violate it, e.g. {hit[0].asDict()}"
         )
     cons[name] = expr
-    return _commit(
-        path,
-        mode="alter",
-        expected_parent=v,
-        schema_json=m.get("schema"),
-        constraints=cons,
-        **_alter_payload_kwargs(m),  # every sidecar map, or shards verbatim
-    )
+    return _commit(path, base, "alter", constraints=cons)
 
 
 def add_unique_constraint(
@@ -1793,20 +1809,17 @@ def add_unique_constraint(
 
     NULL values never collide (SQL UNIQUE). drop_constraint removes the
     guarantee like any CHECK."""
-    v = current_version(path)
-    if v == 0:
-        raise ValueError(f"no versions at {path}")
-    m = _read_manifest(path, v, materialize=False)
-    schema_json = m.get("schema")
+    base = _open_base(path, materialize=False)
+    schema_json = base.m.get("schema")
     if schema_json and col not in _schema_from_json(schema_json).names:
         raise ValueError(f"{col!r} is not a column of {path}")
-    cons = dict(m.get("constraints") or {})
+    cons = dict(base.m.get("constraints") or {})
     if name in cons:
         raise ValueError(f"constraint {name!r} already exists: {cons[name]}")
     from pyspark.sql import functions as F
 
     dup = (
-        read_version(spark, path, v)
+        read_version(spark, path, base.version)
         .filter(F.col(col).isNotNull())
         .groupBy(col)
         .count()
@@ -1820,36 +1833,19 @@ def add_unique_constraint(
             f"duplicate value {dup[0][0]!r}"
         )
     cons[name] = f"{UNIQUE_PREFIX}{col}"
-    return _commit(
-        path,
-        mode="alter",
-        expected_parent=v,
-        schema_json=schema_json,
-        constraints=cons,
-        **_alter_payload_kwargs(m),
-    )
+    return _commit(path, base, "alter", constraints=cons)
 
 
 def drop_constraint(path: str, name: str) -> int:
     """ALTER TABLE DROP CONSTRAINT — a metadata-only commit without the
     named constraint. Raises if it does not exist (dropping a typo'd name
     silently would leave the caller believing enforcement stopped)."""
-    v = current_version(path)
-    if v == 0:
-        raise ValueError(f"no versions at {path}")
-    m = _read_manifest(path, v, materialize=False)  # scalars suffice
-    cons = dict(m.get("constraints") or {})
+    base = _open_base(path, materialize=False)  # scalars suffice
+    cons = dict(base.m.get("constraints") or {})
     if name not in cons:
         raise ValueError(f"no constraint {name!r} at {path}")
     del cons[name]
-    return _commit(
-        path,
-        mode="alter",
-        expected_parent=v,
-        schema_json=m.get("schema"),
-        constraints=cons or {},
-        **_alter_payload_kwargs(m),  # every sidecar map, or shards verbatim
-    )
+    return _commit(path, base, "alter", constraints=cons)
 
 
 # ---------------------------------------------------------------------------
@@ -2283,10 +2279,8 @@ def alter_partition_spec(path: str, partition_by) -> int:
     pruning under it — no data is rewritten, ever. `partition_by=()`
     evolves to UNPARTITIONED (new files get no tuple). Re-declaring an
     existing vintage reuses its id (idempotent)."""
-    v = current_version(path)
-    if v == 0:
-        raise ValueError(f"no versions at {path}")
-    m = _read_manifest(path, v, materialize=False)
+    base = _open_base(path, materialize=False)
+    m = base.m
     if m.get("schema") is None:
         raise ValueError(
             "legacy manifest records no schema; cannot validate a spec"
@@ -2295,13 +2289,7 @@ def alter_partition_spec(path: str, partition_by) -> int:
         m, tuple(partition_by), _schema_from_json(m["schema"]), m.get("colmap")
     )
     return _commit(
-        path,
-        mode="alter-partition-spec",
-        expected_parent=v,
-        schema_json=m.get("schema"),
-        pspecs=pspecs,
-        pspec_id=pspec_id,
-        **_alter_payload_kwargs(m),  # every sidecar map, or shards verbatim
+        path, base, "alter-partition-spec", pspecs=pspecs, pspec_id=pspec_id
     )
 
 
@@ -2398,27 +2386,15 @@ def write_version(
     marker_version() before re-applying an at-least-once redelivery."""
     if mode not in ("append", "overwrite"):
         raise ValueError(f"mode must be append|overwrite, got {mode!r}")
-    bfork: int | None = None
-    if branch is not None:
-        binfo = _load_refs(path)["branches"].get(branch)
-        if binfo is None:
-            raise ValueError(f"no branch {branch!r} at {path}")
-        bfork = binfo["fork"]
-        if expected_version is None:
-            expected_version = branch_head(path, branch)
-    base_version = current_version(path) if expected_version is None else expected_version
     # raw read: every field this function needs except the append base's
     # per-file payload is a manifest-list scalar, and the SHARDED append
     # path below carries untouched shards verbatim — materializing a
     # 10^6-entry parent here would be exactly the O(table) planning cost
     # sharding exists to retire
-    base_m = (
-        _read_manifest(
-            path, base_version, materialize=False, branch=branch, fork=bfork
-        )
-        if base_version > 0
-        else {}
+    base = _open_base(
+        path, branch, expected_version, materialize=False, create=True
     )
+    base_m = base.m
     from pyspark.sql.types import StructType as _ST
 
     if _rid_materialized and _RID_COL not in df.columns:
@@ -2431,12 +2407,11 @@ def write_version(
         else df.schema
     )
     commit_schema = logical_schema
-    if mode == "append" and base_version > 0:
-        base_schema_json = base_m.get("schema")
-        if base_schema_json is not None:  # legacy manifests have no schema
-            commit_schema = _evolved_schema(
-                _schema_from_json(base_schema_json), logical_schema, merge_schema
-            )
+    if mode == "append" and base_m.get("schema") is not None:
+        # legacy manifests have no schema
+        commit_schema = _evolved_schema(
+            _schema_from_json(base_m["schema"]), logical_schema, merge_schema
+        )
     # column mapping (rename/drop evolution): every commit keeps writing
     # the STABLE physical names — appends for their evolved schema,
     # overwrites for whichever logical names persist (physical identity
@@ -2444,12 +2419,13 @@ def write_version(
     # a rename). A column NEW to the mapping gets a collision-free
     # physical: a retired physical still lives in old files with stale
     # data, so a re-added logical name must never alias onto it.
-    cm_parent = base_m.get("colmap") if base_version > 0 else None
-    dropped = list(base_m.get("dropped_physicals") or []) if base_version > 0 else []
+    cm_parent = base_m.get("colmap")
     cm: dict | None = None
     if cm_parent is not None:
         cm = {}
-        forbidden = set(cm_parent.values()) | set(dropped)
+        forbidden = set(cm_parent.values()) | set(
+            base_m.get("dropped_physicals") or []
+        )
         for f in commit_schema.fields:
             if f.name in cm_parent:
                 cm[f.name] = cm_parent[f.name]
@@ -2462,7 +2438,13 @@ def write_version(
     pspecs, pspec_id, active_spec = _resolve_pspec(
         base_m, partition_by, commit_schema, cm
     )
-    eqds: list = []
+    changes: dict = {"schema": commit_schema.json(), "colmap": cm}
+    if partition_by is not None:
+        changes.update(pspecs=pspecs, pspec_id=pspec_id)
+    if mode == "overwrite":
+        # an overwrite replaces the snapshot: every staged file is stamped
+        # past any live delete's seq, so the entries are dead — drop them
+        changes["eqdeletes"] = []
     if eq_delete is not None:
         # the atomic CDC-upsert shape: this commit's staged files carry a
         # fresh "__v" stamp, so the delete (seq = this commit) covers
@@ -2478,30 +2460,17 @@ def write_version(
         _write_atomic(
             os.path.join(path, eq_rel), {"col": eq_phys, "values": eq_vals}
         )
-        eqds = list(base_m.get("eqdeletes") or [])
-        eqds.append({"sc": eq_rel, "col": eq_phys, "seq": base_version + 1})
-    pstats: dict = {}
-    if active_spec:
-        new_files, pstats = _stage_partitioned(
-            df, path, active_spec, cm, commit_schema
-        )
-        if not new_files:  # empty input: keep the one-empty-file contract
-            new_files = _stage_files(_stage_physical(df, cm), path)
-    else:
-        new_files = _stage_files(_stage_physical(df, cm), path)
-    base: list[str] = []
-    stats: dict = {}
-    blooms: dict = {}
-    dvs: dict = {}
-    parent_shards = base_m.get("shards") if mode == "append" else None
-    if mode == "append" and base_version > 0 and parent_shards is None:
-        base = base_m["files"]
-        # parent stats/blooms/deletion-vectors stay valid: data files are
-        # immutable, and an append adds files without resurrecting rows
-        stats.update(base_m.get("stats", {}))
-        blooms.update(base_m.get("blooms", {}))
-        dvs.update(base_m.get("dvs", {}))
-    if base_version > 0:
+        changes["eqdeletes"] = list(base_m.get("eqdeletes") or []) + [
+            {"sc": eq_rel, "col": eq_phys, "seq": base.version + 1}
+        ]
+    new_files, stats, blooms, next_rid = _stage_rows(
+        path, base, [df], cm, collect_stats, collect_blooms,
+        rid_materialized=_rid_materialized,
+        layout=(active_spec, commit_schema) if active_spec else None,
+    )
+    changes["next_row_id"] = next_rid
+    cons = base_m.get("constraints")
+    if cons:
         # CHECK constraints apply to appended AND overwriting rows alike;
         # UNIQUE cross-checks against the parent snapshot only on APPEND
         # (an overwrite retires every parent row in the same commit). A
@@ -2510,108 +2479,48 @@ def write_version(
         # for a unique column the delete covers — refusing there would
         # block every legitimate update (in-commit distinctness still
         # enforced)
-        cons = base_m.get("constraints")
-        if cons:
-            _enforce_constraints(
-                df.sparkSession, path, new_files, cons,
-                commit_schema.json(), colmap=cm,
-                unique_against=(base_m, None) if mode == "append" else None,
-                unique_exempt_col=(
-                    eq_delete[0] if eq_delete is not None else None
-                ),
+        _enforce_constraints(
+            df.sparkSession, path, new_files, cons,
+            commit_schema.json(), colmap=cm,
+            unique_against=(base_m, None) if mode == "append" else None,
+            unique_exempt_col=(
+                eq_delete[0] if eq_delete is not None else None
+            ),
+        )
+    payload: dict = {"files": new_files, "stats": stats, "blooms": blooms}
+    if mode == "append" and base.version > 0:
+        plan = None
+        if "shards" in base_m:
+            # SHARDED append fast path: untouched buckets carry by
+            # reference (same content-addressed sidecar — zero read, zero
+            # write); only the buckets the new files hash into are loaded,
+            # merged and rewritten. A k-file append therefore costs O(k
+            # shards), flat in the table's file count — measured in
+            # scripts/manifest_scale.py.
+            plan = _sharded_delta_plan(
+                path, base_m, new_files, new_stats=stats, new_blooms=blooms
             )
-    # stats/blooms are keyed by PHYSICAL names (stable across renames);
-    # per-FILE dict merge, not replace — a partitioned file's synthetic
-    # tuple stats and its footer min/max share one entry
-    phys_of = (cm or {}).get
-    # every freshly staged file records its ADD VERSION ("__v" — the
-    # Iceberg data sequence number): equality deletes apply only to files
-    # added BEFORE the delete, which is what lets a CDC re-insert of a
-    # deleted key survive. Files that predate the stamp read as ancient
-    # (affected by every delete) — the sound direction.
-    # "__n" is Iceberg's per-file record_count: ONE footer read at commit
-    # time makes COUNT(*) (aggregate_metadata) a pure manifest fold
-    # forever after — and when collect_stats is set, the min/max pass
-    # reads it from the footer it already opened (no second open)
-    if collect_stats:
-        footer = _footer_minmax(
-            path, new_files, tuple(phys_of(c, c) for c in collect_stats),
-            with_counts=True,
-        )
-    else:
-        footer = {
-            f: {"__n": [n, n]}
-            for f in new_files
-            for n in (_footer_num_rows(path, f),)
-        }
-    for f in new_files:
-        stats.setdefault(f, {})["__v"] = [base_version + 1, base_version + 1]
-        stats[f].update(footer.get(f) or {})
-        if "__n" not in stats[f]:  # stat-less footer entry: count anyway
-            n = _footer_num_rows(path, f)
-            stats[f]["__n"] = [n, n]
-        if _rid_materialized:
-            # this file's parquet bytes CARRY their row ids — the lineage
-            # read must trust them, never mint a fresh block
-            stats[f]["__ridm"] = [1, 1]
-    for f, rec in pstats.items():
-        stats.setdefault(f, {}).update(rec)
-    # row lineage: fresh contiguous id blocks for genuinely new rows
-    # (skipped for __ridm files, whose ids ride in their own bytes)
-    next_rid = _assign_row_ids(path, base_m, new_files, stats)
-    if collect_blooms:
-        built = _collect_blooms_spark(
-            df.sparkSession, path, new_files,
-            tuple(phys_of(c, c) for c in collect_blooms),
-        )
-        if built:
-            sidecar = _write_bloom_sidecar(path, built)
-            blooms.update({f: sidecar for f in built})
-    shard_plan = None
-    if parent_shards is not None:
-        # SHARDED append fast path: untouched buckets carry by reference
-        # (same content-addressed sidecar — zero read, zero write); only
-        # the buckets the new files hash into are loaded, merged and
-        # rewritten. A k-file append therefore costs O(k shards), flat in
-        # the table's file count — measured in scripts/manifest_scale.py.
-        shard_plan = _sharded_delta_plan(
-            path, base_m, new_files, new_stats=stats, new_blooms=blooms
-        )
-        if shard_plan is not None:
-            base, new_files, stats, blooms, dvs = [], [], {}, {}, {}
+        if plan is not None:
+            payload = {"shards": plan}
         else:
-            # a bucket outgrew the parent's frozen prefix_len: pay ONE
-            # full materialized reshard (fresh prefix_len via _commit's
-            # auto-shard) — amortized O(1) per ~16x growth, flat after
-            full = _read_manifest(path, base_version, branch=branch, fork=bfork)
-            base = full["files"]
-            stats = {**full.get("stats", {}), **stats}
-            blooms = {**full.get("blooms", {}), **blooms}
-            dvs = dict(full.get("dvs", {}))
-    return _commit(
-        path,
-        base + new_files,
-        mode,
-        expected_parent=base_version,
-        schema_json=commit_schema.json(),
-        stats=stats or None,
-        blooms=blooms or None,
-        # the (possibly extended) mapping and the retired-physical list
-        # carry on every mode — physical identity is what survives
-        colmap=cm or {},
-        dropped_physicals=dropped,
-        dvs=dvs or None,
-        shards=shard_plan,
-        pspecs=pspecs or {},
-        pspec_id=pspec_id,
-        branch=branch,
-        # an overwrite replaces the snapshot: every staged file is stamped
-        # past any live delete's seq, so the entries are dead — drop them
-        eqdeletes=eqds if eq_delete is not None
-        else ([] if mode == "overwrite" else None),
-        next_row_id=next_rid,
-        marker=marker,
-    )
+            # parent stats/blooms/deletion-vectors stay valid: data files
+            # are immutable, and an append adds files without resurrecting
+            # rows. A sharded parent whose bucket outgrew its frozen
+            # prefix_len pays ONE full materialized reshard (fresh
+            # prefix_len via _commit's auto-shard) — amortized O(1) per
+            # ~16x growth, flat after
+            parent = (
+                _read_manifest(path, base.version, branch=branch, fork=base.fork)
+                if "shards" in base_m
+                else base_m
+            )
+            payload = {
+                "files": parent["files"] + new_files,
+                "stats": {**parent.get("stats", {}), **stats},
+                "blooms": {**parent.get("blooms", {}), **blooms},
+                "dvs": parent.get("dvs"),
+            }
+    return _commit(path, base, mode, marker=marker, **payload, **changes)
 
 
 def write_version_parts(
@@ -2660,13 +2569,8 @@ def write_version_parts(
     exactly like write_version(expected_version=...)."""
     if expected_version <= 0:
         raise ValueError("write_version_parts requires a committed parent version")
-    bfork = None
-    if branch is not None:
-        binfo = _load_refs(path)["branches"].get(branch)
-        if binfo is None:
-            raise ValueError(f"no branch {branch!r} at {path}")
-        bfork = binfo["fork"]
-    base_m = _read_manifest(path, expected_version, branch=branch, fork=bfork)
+    base = _open_base(path, branch, expected_version)
+    base_m = base.m
     base_files = set(base_m["files"])
     foreign = [f for f in reuse_files if f not in base_files]
     if foreign:
@@ -2694,18 +2598,17 @@ def write_version_parts(
     elif parts:  # legacy manifest: adopt the parts' schema going forward
         schema_json = parts[0].schema.json()
 
-    import pyarrow.parquet as pq
-
     cm = base_m.get("colmap")
-    staged: list[str] = []
-    for p in parts:
-        staged.extend(_stage_files(_stage_physical(p, cm), path))
-    new_v = expected_version + 1  # freshly staged parts' add version
-    nrows = {
-        f: int(pq.ParquetFile(os.path.join(path, f)).metadata.num_rows)
-        for f in staged
-    }
-    new_files = [f for f in staged if nrows[f] > 0]
+    # staged parts are rewrites read through _read_files (live equality
+    # deletes already applied): their fresh "__v" stamps them past every
+    # live delete's seq, while REUSED files keep their original add
+    # version and so stay covered — the fold materializes deletes only
+    # for what it rewrote
+    staged, new_stats, new_blooms, next_rid = _stage_rows(
+        path, base, parts, cm, collect_stats, collect_blooms,
+        rid_materialized=_rid_materialized,
+    )
+    new_files = [f for f in staged if new_stats[f]["__n"][0] > 0]
     empties = [f for f in staged if f not in set(new_files)]
     if not new_files and not reuse_files and empties:
         # an all-empty snapshot still needs one schema-bearing file so
@@ -2724,59 +2627,28 @@ def write_version_parts(
             colmap=cm,
             unique_against=(base_m, list(reuse_files)),
         )
-    phys_of = (cm or {}).get
-    base_stats = base_m.get("stats", {})
-    stats = {f: base_stats[f] for f in reuse_files if f in base_stats}
-    if collect_stats:
-        for f, rec in _footer_minmax(
-            path, new_files, tuple(phys_of(c, c) for c in collect_stats)
-        ).items():
-            stats.setdefault(f, {}).update(rec)
-    # staged parts are rewrites read through _read_files (live equality
-    # deletes already applied): stamp them past every live delete's seq,
-    # while REUSED files keep their original add version and so stay
-    # covered — the fold materializes deletes only for what it rewrote
-    for f in new_files:
-        stats.setdefault(f, {})["__v"] = [new_v, new_v]
-        # record_count ("__n") from the footer this function ALREADY read
-        # for the empty-file filter — the COUNT(*) manifest fold is free
-        stats[f]["__n"] = [nrows[f], nrows[f]]
-        if _rid_materialized:
-            stats[f]["__ridm"] = [1, 1]  # ids ride in the file's own bytes
-    next_rid = _assign_row_ids(path, base_m, new_files, stats)
-    base_blooms = base_m.get("blooms", {})
-    blooms = {f: base_blooms[f] for f in reuse_files if f in base_blooms}
-    if collect_blooms:
-        built = _collect_blooms_spark(
-            parts[0].sparkSession if parts else None, path, new_files,
-            tuple(phys_of(c, c) for c in collect_blooms),
-        )
-        if built:
-            sidecar = _write_bloom_sidecar(path, built)
-            blooms.update({f: sidecar for f in built})
-    # reused files keep their deletion vectors (their deleted rows stay
-    # deleted); a REWRITTEN file's vector dies with the file — the rewrite
-    # read through _read_files, which already anti-applied it
-    base_dvs = base_m.get("dvs", {})
-    dvs = {f: base_dvs[f] for f in reuse_files if f in base_dvs}
+    # reused files keep their stats, blooms and deletion vectors (their
+    # deleted rows stay deleted); a REWRITTEN file's vector dies with the
+    # file — the rewrite read through _read_files, which already
+    # anti-applied it
+    keep = {
+        k: {f: base_m[k][f] for f in reuse_files if f in base_m.get(k, {})}
+        for k in ("stats", "blooms", "dvs")
+    }
+    # eqdeletes=None keeps the base's live deletes (reused files may still
+    # be covered); purge_eq passes [] once every affected file is rewritten
+    changes: dict = {} if eqdeletes is None else {"eqdeletes": eqdeletes}
     return _commit(
         path,
-        list(reuse_files) + new_files,
+        base,
         "overwrite",
-        expected_parent=expected_version,
-        schema_json=schema_json,
-        stats=stats or None,
-        blooms=blooms or None,
-        # a parts rewrite keeps the snapshot's naming: mapping carries
-        colmap=cm or {},
-        dropped_physicals=list(base_m.get("dropped_physicals") or []),
-        dvs=dvs or None,
-        # None inherits (reused files may still be covered by live
-        # equality deletes); purge_eq passes [] once every affected file
-        # is rewritten and the entries are provably dead
-        eqdeletes=eqdeletes,
+        files=list(reuse_files) + new_files,
+        stats={**keep["stats"], **{f: new_stats[f] for f in new_files}},
+        blooms={**keep["blooms"], **new_blooms},
+        dvs=keep["dvs"],
+        schema=schema_json,
         next_row_id=next_rid,
-        branch=branch,
+        **changes,
     )
 
 
@@ -3602,20 +3474,24 @@ def rollback(path: str, to_version: int) -> int:
                 f"version {to_version} was vacuumed concurrently; "
                 f"missing file: {f}"
             ) from None
-    # restore carries the restored version's SCHEMA too (a rollback across
-    # a schema evolution must serve the pre-evolution columns) — and its
-    # file STATS, BLOOMS and DELETION VECTORS (immutable files; the
-    # restored snapshot's row visibility IS its vectors)
+    # the restored version is the commit's BASE: its schema (a rollback
+    # across a schema evolution must serve the pre-evolution columns),
+    # its own constraints (they provably hold over its rows — the head's
+    # might never have been checked against them), its equality deletes
+    # and defaults (its row visibility) and its partition spec (the layout
+    # its files were written under); its file STATS, BLOOMS and DELETION
+    # VECTORS carry with the file list
+    head = current_version(path)
     stats = m.get("stats")
     rl_kwargs: dict = {}
-    head_raw = _read_manifest(path, current_version(path), materialize=False)
+    head_raw = _read_manifest(path, head, materialize=False)
     if head_raw.get("row_lineage"):
         # rollback ACROSS a lineage enable: the restored stats may predate
         # the id blocks — recover each file's block from the HEAD's stats
         # (same immutable file = same rows = same ids), minting fresh ones
         # only for files the head no longer tracks. The counter continues
         # the head's (ids burned on the abandoned timeline stay burned).
-        hstats = _read_manifest(path, current_version(path)).get("stats") or {}
+        hstats = _read_manifest(path, head).get("stats") or {}
         stats = {f: dict(rec) for f, rec in (stats or {}).items()}
         nxt = int(head_raw.get("next_row_id") or 0)
         for f in files:
@@ -3632,24 +3508,9 @@ def rollback(path: str, to_version: int) -> int:
                 nxt += _footer_num_rows(path, f)
         rl_kwargs = {"row_lineage": True, "next_row_id": nxt}
     return _commit(
-        path, files, "rollback", schema_json=m.get("schema"),
-        stats=stats, blooms=m.get("blooms"), dvs=m.get("dvs"),
+        path, _Base(head, None, None, m), "rollback",
+        files=files, stats=stats, blooms=m.get("blooms"), dvs=m.get("dvs"),
         **rl_kwargs,
-        # the restored version's OWN constraints: they provably hold over
-        # its rows (adds validate existing, commits validate staged) —
-        # inheriting the head's would record constraints over rows that
-        # were never checked against them
-        constraints=m.get("constraints") or {},
-        colmap=m.get("colmap") or {},
-        dropped_physicals=list(m.get("dropped_physicals") or []),
-        # the restored version's row VISIBILITY includes its equality
-        # deletes (inheriting the head's would keep a post-to_version
-        # delete applied after the rollback), and its partition spec —
-        # the layout the restored files were actually written under
-        eqdeletes=list(m.get("eqdeletes") or []),
-        defaults=list(m.get("defaults") or []),
-        pspecs=dict(m.get("pspecs") or {}),
-        pspec_id=m.get("pspec_id"),
     )
 
 
@@ -3763,38 +3624,25 @@ def clone_table(
                 os.path.join(src, e["sc"]), os.path.join(dst, new_rel)
             )
             cloned_eqs.append({**e, "sc": new_rel, "seq": remap[e["seq"]]})
+    # the source manifest is the clone's base (v0 -> v1): schema,
+    # constraints, column mapping, partition spec and row lineage carry
+    # verbatim — row ids are row identities, not version numbers, and the
+    # counter continues the source's so future rows never collide
     return _commit(
         dst,
-        files,
+        _Base(0, None, None, m),
         "clone",
-        expected_parent=0,
-        schema_json=m.get("schema"),
+        files=files,
         stats={
             os.path.join("data", os.path.basename(f)): (
                 {**s, "__v": [remap[s["__v"][0]]] * 2} if "__v" in s else s
             )
             for f, s in src_stats.items()
-        }
-        or None,
-        # the clone enforces what the source enforced (carried verbatim,
-        # independent thereafter like schema/stats)
-        constraints=m.get("constraints") or {},
-        blooms=cloned_blooms or None,
-        colmap=m.get("colmap") or {},
-        dropped_physicals=list(m.get("dropped_physicals") or []),
-        dvs=cloned_dvs or None,
-        eqdeletes=cloned_eqs or [],
-        defaults=cloned_defaults or [],
-        # row ids carry VERBATIM (they're row identities, not version
-        # numbers — no remap); the clone's counter continues the source's
-        # so its future rows never collide with carried ids
-        row_lineage=bool(m.get("row_lineage")) or None,
-        next_row_id=m.get("next_row_id"),
-        # the clone keeps the source's PARTITION SPEC (physical-keyed,
-        # and the colmap carries): its tuple stats keep pruning and its
-        # future writes keep the declared layout — rollback's rule
-        pspecs=dict(m.get("pspecs") or {}),
-        pspec_id=m.get("pspec_id"),
+        },
+        blooms=cloned_blooms,
+        dvs=cloned_dvs,
+        eqdeletes=cloned_eqs,
+        defaults=cloned_defaults,
     )
 
 
@@ -3919,9 +3767,7 @@ def branch_head(path: str, name: str) -> int:
     """The branch's newest staged version — the refs entry is a
     forward-only CACHE exactly like _latest (the manifest-name CAS is the
     truth), so probe past it for commits whose pointer advance was lost."""
-    info = _load_refs(path)["branches"].get(name)
-    if info is None:
-        raise ValueError(f"no branch {name!r} at {path}")
+    info = _branch_info(path, name)
     h = info.get("head", info["fork"])
     while os.path.exists(_branch_manifest_file(path, h + 1, name)):
         h += 1
@@ -3949,10 +3795,7 @@ def read_branch(
     at or before the fork it is simply main history. Deletion vectors,
     column mapping and recorded schema apply exactly as on main (one
     shared _read_files funnel)."""
-    info = _load_refs(path)["branches"].get(name)
-    if info is None:
-        raise ValueError(f"no branch {name!r} at {path}")
-    fork = info["fork"]
+    fork = _branch_info(path, name)["fork"]
     v = branch_head(path, name) if version is None else version
     if v <= fork:
         return read_version(spark, path, v)
@@ -3978,10 +3821,7 @@ def read_branch_pruned(
     (df, files_skipped, files_total); same soundness contract."""
     from pyspark.sql import functions as F
 
-    info = _load_refs(path)["branches"].get(name)
-    if info is None:
-        raise ValueError(f"no branch {name!r} at {path}")
-    fork = info["fork"]
+    fork = _branch_info(path, name)["fork"]
     v = branch_head(path, name) if version is None else version
     if v <= fork:
         return read_version_pruned(spark, path, col, lo, hi, version=v)
@@ -4070,10 +3910,7 @@ def fast_forward(path: str, branch: str) -> int:
     def _strip(d: dict) -> dict:
         return {k: v for k, v in d.items() if k not in ("branch", "published_from")}
 
-    info = _load_refs(path)["branches"].get(branch)
-    if info is None:
-        raise ValueError(f"no branch {branch!r} at {path}")
-    fork = info["fork"]
+    fork = _branch_info(path, branch)["fork"]
     head = branch_head(path, branch)
     with _latest_lock(path):
         linked_any = False
@@ -4083,50 +3920,26 @@ def fast_forward(path: str, branch: str) -> int:
             m.pop("branch", None)
             m["published_from"] = branch
             target = _manifest_path(path, v)
-
-            def _slot_matches() -> bool:
-                with open(target, encoding="utf-8") as fh:
-                    return _strip(json.load(fh)) == _strip(m)
-
-            if os.path.exists(target):
-                if _slot_matches():
+            if _cas_create(target, m):
+                linked_any = True
+                continue
+            with open(target, encoding="utf-8") as fh:
+                if _strip(json.load(fh)) == _strip(m):
                     continue  # resume: a prior (dead) publish landed this slot
-                # under the lock nobody else can link new slots mid-loop
-                # (writers target _latest+1 = fork+1, our first slot), so a
-                # foreign slot here predates this call: nothing of ours is
-                # linked yet and the publish is a clean no-op failure
-                assert not linked_any, (
-                    "publish invariant violated: foreign manifest appeared "
-                    "inside the locked publish loop"
-                )
-                raise PublishConflictError(
-                    f"cannot fast-forward {branch!r} into {path}: main already "
-                    f"holds a different v{v} (a concurrent commit landed after "
-                    f"the fork at v{fork}); re-stage onto the new head"
-                )
-            tmp = target + f".tmp-{uuid.uuid4().hex[:8]}"
-            with open(tmp, "w", encoding="utf-8") as fh:
-                json.dump(m, fh)
-                fh.flush()
-                os.fsync(fh.fileno())
-            try:
-                os.link(tmp, target)
-            except FileExistsError:
-                # lost the slot between probe and link (a CAS writer racing
-                # our very first slot): identical -> resume, else clean fail
-                if not _slot_matches():
-                    assert not linked_any, (
-                        "publish invariant violated: CAS lost mid-loop "
-                        "while holding the latest lock"
-                    )
-                    raise PublishConflictError(
-                        f"cannot fast-forward {branch!r} into {path}: a "
-                        f"concurrent commit won v{v} during the publish; "
-                        f"re-stage onto the new head"
-                    ) from None
-            finally:
-                os.remove(tmp)
-            linked_any = True
+            # under the lock nobody else can link new slots mid-loop
+            # (writers target _latest+1 = fork+1, our first slot), so a
+            # foreign slot here predates this call or raced our very first
+            # link: nothing of ours is linked yet and the publish is a
+            # clean no-op failure
+            assert not linked_any, (
+                "publish invariant violated: foreign manifest appeared "
+                "inside the locked publish loop"
+            )
+            raise PublishConflictError(
+                f"cannot fast-forward {branch!r} into {path}: main already "
+                f"holds a different v{v} (a concurrent commit landed after "
+                f"the fork at v{fork}); re-stage onto the new head"
+            )
         # pointer advance INLINE under the same (non-reentrant) flock
         if current_version(path) < head:
             _write_atomic(
@@ -4213,12 +4026,10 @@ def enable_row_lineage(path: str) -> int:
     commit assigns blocks to its new files automatically. Idempotent
     (returns the head untouched when already enabled). Refused when the
     schema claims the reserved '__rid' name."""
-    v = current_version(path)
-    if v == 0:
-        raise ValueError(f"no versions at {path}")
-    m = _read_manifest(path, v)
+    base = _open_base(path)
+    m = base.m
     if m.get("row_lineage"):
-        return v
+        return base.version
     if m.get("schema") is None:
         raise ValueError("legacy manifest records no schema; lineage needs one")
     schema = _schema_from_json(m["schema"])
@@ -4235,20 +4046,12 @@ def enable_row_lineage(path: str) -> int:
         nxt += _footer_num_rows(path, f)
     return _commit(
         path,
-        m["files"],
+        base,
         "alter-lineage",
-        expected_parent=v,
-        schema_json=m.get("schema"),
+        files=m["files"],
         stats=stats,
         blooms=m.get("blooms"),
         dvs=m.get("dvs"),
-        constraints=m.get("constraints") or {},
-        colmap=cm,
-        dropped_physicals=list(m.get("dropped_physicals") or []),
-        eqdeletes=list(m.get("eqdeletes") or []),
-        defaults=list(m.get("defaults") or []),
-        pspecs=dict(m.get("pspecs") or {}),
-        pspec_id=m.get("pspec_id"),
         row_lineage=True,
         next_row_id=nxt,
     )
@@ -5139,18 +4942,8 @@ def merge(
             continue
         raise ValueError(f"bad not_matched_by_source clause {cl!r}")
 
-    bfork = None
-    if branch is not None:
-        binfo = _load_refs(path)["branches"].get(branch)
-        if binfo is None:
-            raise ValueError(f"no branch {branch!r} at {path}")
-        bfork = binfo["fork"]
-        v = branch_head(path, branch)
-    else:
-        v = current_version(path)
-    if v == 0:
-        raise ValueError(f"no versions at {path}; write_version creates the table")
-    m = _read_manifest(path, v, branch=branch, fork=bfork)
+    base = _open_base(path, branch)
+    v, m = base.version, base.m
     if m.get("schema"):
         t_schema = [
             (f.name, f.dataType)
@@ -5285,17 +5078,6 @@ def _row_predicate(col: str, lo, hi, condition):
     return pred
 
 
-def _resolve_write_head(path: str, branch: str | None) -> tuple:
-    """(head version, branch fork) for a mutation's base snapshot: main's
-    head, or the branch head when the mutation stages on a WAP branch."""
-    if branch is None:
-        return current_version(path), None
-    binfo = _load_refs(path)["branches"].get(branch)
-    if binfo is None:
-        raise ValueError(f"no branch {branch!r} at {path}")
-    return branch_head(path, branch), binfo["fork"]
-
-
 def delete_where(
     spark: SparkSession,
     path: str,
@@ -5329,10 +5111,8 @@ def delete_where(
     stays byte-identical until fast_forward)."""
     from pyspark.sql import functions as F
 
-    v, bfork = _resolve_write_head(path, branch)
-    if v == 0:
-        raise ValueError(f"no versions at {path}")
-    m = _read_manifest(path, v, branch=branch, fork=bfork)
+    base = _open_base(path, branch)
+    v, m = base.version, base.m
     touched, untouched = _split_files_by_range(m, col, lo, hi)
     if not touched:
         return None  # every file provably disjoint: nothing to delete
@@ -5392,23 +5172,13 @@ def delete_where_dv(
     delete_where_eq discipline) — the position-finding scan runs against
     the BRANCH snapshot, the vector commit lands in the branch lineage,
     main readers never see it until fast_forward publishes."""
-    bfork: int | None = None
-    if branch is not None:
-        binfo = _load_refs(path)["branches"].get(branch)
-        if binfo is None:
-            raise ValueError(f"no branch {branch!r} at {path}")
-        bfork = binfo["fork"]
-        v = branch_head(path, branch)
-    else:
-        v = current_version(path)
-    if v == 0:
-        raise ValueError(f"no versions at {path}")
     # RAW read + summary-first range planning: on a SHARDED parent the
     # whole mutation is O(touched shards) — the manifest list plus only
     # the buckets whose summary intersects [lo, hi] load at plan time,
     # and only the buckets whose files gained a vector rewrite at commit
     # time (_sharded_delta_plan); inline parents keep the direct path.
-    m = _read_manifest(path, v, materialize=False, branch=branch, fork=bfork)
+    base = _open_base(path, branch, materialize=False)
+    m = base.m
     if m.get("schema") is None:
         raise ValueError(
             "deletion vectors require a schema-bearing manifest; this "
@@ -5425,40 +5195,43 @@ def delete_where_dv(
     updates = _grow_dv_map(spark, path, read_m, touched, df.filter(pred))
     if updates is None:
         return None  # no live row matches: no pointless commit
+    return _commit(
+        path, base, "delete-dv",
+        **_dv_payload(path, base, updates, shard_cache=shard_cache),
+    )
+
+
+def _dv_payload(
+    path: str,
+    base: _Base,
+    dv_updates: dict,
+    new_files: list[str] = (),
+    new_stats: dict | None = None,
+    shard_cache: dict | None = None,
+) -> dict:
+    """The per-file payload of a deletion-vector commit (delete_where_dv,
+    update_where_dv): the base's file list — IDENTICAL, the whole point —
+    plus any appended `new_files`, with `dv_updates` merged into the
+    vectors (untouched files keep theirs) and the base's stats and blooms
+    carried (immutable files: ranges stay valid bounds). A sharded base
+    rewrites only the touched buckets (_sharded_delta_plan), or reshards
+    once when a bucket outgrew its prefix."""
+    new_stats = new_stats or {}
+    m = base.m
     if "shards" in m:
         plan = _sharded_delta_plan(
-            path, m, dv_updates=updates, shard_cache=shard_cache
+            path, m, new_files, new_stats=new_stats, dv_updates=dv_updates,
+            shard_cache=shard_cache,
         )
         if plan is not None:
-            return _commit(
-                path,
-                [],
-                "delete-dv",
-                expected_parent=v,
-                schema_json=m.get("schema"),
-                constraints=m.get("constraints") or {},
-                colmap=m.get("colmap") or {},
-                dropped_physicals=list(m.get("dropped_physicals") or []),
-                shards=plan,
-                branch=branch,
-            )
-        m = _read_manifest(path, v, branch=branch, fork=bfork)  # reshard
-    dmap = dict(m.get("dvs") or {})  # untouched files keep their vectors
-    dmap.update(updates)
-    return _commit(
-        path,
-        m["files"],  # the whole point: the file list is IDENTICAL
-        "delete-dv",
-        expected_parent=v,
-        schema_json=m.get("schema"),
-        stats=m.get("stats"),  # immutable files: ranges stay valid bounds
-        blooms=m.get("blooms"),
-        constraints=m.get("constraints") or {},
-        colmap=m.get("colmap") or {},
-        dropped_physicals=list(m.get("dropped_physicals") or []),
-        dvs=dmap,
-        branch=branch,
-    )
+            return {"shards": plan}
+        m = _read_manifest(path, base.version, branch=base.branch, fork=base.fork)
+    return {
+        "files": m["files"] + list(new_files),
+        "stats": {**(m.get("stats") or {}), **new_stats},
+        "blooms": m.get("blooms"),
+        "dvs": {**(m.get("dvs") or {}), **dv_updates},
+    }
 
 
 def _grow_dv_map(
@@ -5662,18 +5435,8 @@ def delete_where_eq(
     CDC-mutation staging step: invisible to main readers until
     fast_forward, auditable via read_branch(_pruned)."""
     vals = list(values)
-    bfork: int | None = None
-    if branch is not None:
-        binfo = _load_refs(path)["branches"].get(branch)
-        if binfo is None:
-            raise ValueError(f"no branch {branch!r} at {path}")
-        bfork = binfo["fork"]
-        if expected_version is None:
-            expected_version = branch_head(path, branch)
-    v = current_version(path) if expected_version is None else expected_version
-    if v == 0:
-        raise ValueError(f"no versions at {path}")
-    m = _read_manifest(path, v, materialize=False, branch=branch, fork=bfork)
+    base = _open_base(path, branch, expected_version, materialize=False)
+    m = base.m
     if m.get("schema") is None:
         raise ValueError(
             "legacy manifest records no schema; equality deletes need one"
@@ -5683,19 +5446,12 @@ def delete_where_eq(
     os.makedirs(_vdir(path), exist_ok=True)
     rel = os.path.join("_versions", f"eqd-{uuid.uuid4().hex}.json")
     _write_atomic(os.path.join(path, rel), {"col": phys, "values": vals})
-    eqds = list(m.get("eqdeletes") or [])
     # seq = THIS commit's version: applies to every file in the current
     # snapshot (their add versions are <= v < v+1), to nothing after
-    eqds.append({"sc": rel, "col": phys, "seq": v + 1})
-    return _commit(
-        path,
-        mode="delete-eq",
-        expected_parent=v,
-        schema_json=m.get("schema"),
-        eqdeletes=eqds,
-        branch=branch,
-        **_alter_payload_kwargs(m),  # every sidecar map, or shards verbatim
-    )
+    eqds = list(m.get("eqdeletes") or []) + [
+        {"sc": rel, "col": phys, "seq": base.version + 1}
+    ]
+    return _commit(path, base, "delete-eq", eqdeletes=eqds)
 
 
 def update_where_dv(
@@ -5733,20 +5489,10 @@ def update_where_dv(
     from pyspark.sql import Column
     from pyspark.sql import functions as F
 
-    bfork: int | None = None
-    if branch is not None:
-        binfo = _load_refs(path)["branches"].get(branch)
-        if binfo is None:
-            raise ValueError(f"no branch {branch!r} at {path}")
-        bfork = binfo["fork"]
-        v = branch_head(path, branch)
-    else:
-        v = current_version(path)
-    if v == 0:
-        raise ValueError(f"no versions at {path}")
     # raw read + summary-first planning (the delete_where_dv discipline):
     # sharded parents pay O(touched shards) at plan AND commit time
-    m = _read_manifest(path, v, materialize=False, branch=branch, fork=bfork)
+    base = _open_base(path, branch, materialize=False)
+    m = base.m
     if m.get("schema") is None:
         raise ValueError(
             "deletion vectors require a schema-bearing manifest; this "
@@ -5821,64 +5567,25 @@ def update_where_dv(
         ],
         *([F.col(_RID_COL)] if lineage else []),
     )
-    cm = m.get("colmap")
-    new_files = _stage_files(_stage_physical(updated, cm), path)
+    # the appended updated-row files carry THIS commit's add version, so
+    # a live equality delete (seq <= v) never re-kills the fresh copies;
+    # on a lineage table they CARRY their rows' ids in their own bytes
+    new_files, new_stats, _, next_rid = _stage_rows(
+        path, base, [updated], m.get("colmap"),
+        (col,) if collect_stats is None else collect_stats,
+        rid_materialized=lineage,
+    )
     cons = m.get("constraints")
     if cons:
         _enforce_constraints(
-            spark, path, new_files, cons, m.get("schema"), colmap=cm
+            spark, path, new_files, cons, m.get("schema"),
+            colmap=m.get("colmap"),
         )
-    phys_of = (cm or {}).get
-    want_stats = (col,) if collect_stats is None else collect_stats
-    new_stats = _footer_minmax(
-        path, new_files, tuple(phys_of(c, c) for c in want_stats)
-    )
-    # the appended updated-row files carry THIS commit's add version, so
-    # a live equality delete (seq <= v) never re-kills the fresh copies
-    for f in new_files:
-        new_stats.setdefault(f, {})["__v"] = [v + 1, v + 1]
-        if lineage:
-            # the copies CARRY their rows' ids in their own bytes
-            new_stats[f]["__ridm"] = [1, 1]
-    next_rid = _assign_row_ids(path, m, new_files, new_stats)
-    if "shards" in m:
-        plan = _sharded_delta_plan(
-            path, m, new_files, new_stats=new_stats, dv_updates=updates,
-            shard_cache=shard_cache,
-        )
-        if plan is not None:
-            return _commit(
-                path,
-                [],
-                "update-dv",
-                expected_parent=v,
-                schema_json=m.get("schema"),
-                constraints=cons or {},
-                colmap=cm or {},
-                dropped_physicals=list(m.get("dropped_physicals") or []),
-                shards=plan,
-                branch=branch,
-                next_row_id=next_rid,
-            )
-        m = _read_manifest(path, v, branch=branch, fork=bfork)  # reshard
-    stats = dict(m.get("stats") or {})
-    stats.update(new_stats)
-    dmap = dict(m.get("dvs") or {})
-    dmap.update(updates)
     return _commit(
-        path,
-        m["files"] + new_files,
-        "update-dv",
-        expected_parent=v,
-        schema_json=m.get("schema"),
-        stats=stats or None,
-        blooms=m.get("blooms"),
-        constraints=cons or {},
-        colmap=cm or {},
-        dropped_physicals=list(m.get("dropped_physicals") or []),
-        dvs=dmap,
-        branch=branch,
-        next_row_id=next_rid,
+        path, base, "update-dv", next_row_id=next_rid,
+        **_dv_payload(
+            path, base, updates, new_files, new_stats, shard_cache=shard_cache
+        ),
     )
 
 
@@ -5905,10 +5612,8 @@ def purge_dvs(
     structures like the original (losing the bloom half silently would
     turn every later point lookup into a read of the purged files,
     forever); pass tuples to override."""
-    v = current_version(path)
-    if v == 0:
-        return None
-    m = _read_manifest(path, v)
+    base = _open_base(path, create=True)
+    v, m = base.version, base.m
     dv_files = sorted(f for f in (m.get("dvs") or {}) if f in set(m["files"]))
     if not dv_files:
         return None
@@ -5984,10 +5689,8 @@ def purge_eq(
     files carried (internal __-keys excluded; partition tuples are NOT
     reconstructed — rewritten files simply stop partition-pruning until
     the next spec-laid write, the compact()/zorder degradation)."""
-    v = current_version(path)
-    if v == 0:
-        return None
-    m = _read_manifest(path, v)
+    base = _open_base(path, create=True)
+    v, m = base.version, base.m
     if not m.get("eqdeletes"):
         return None
     affected: list[str] = []
@@ -5997,14 +5700,7 @@ def purge_eq(
     if not affected:
         # every entry is already dead (e.g. all covered files rewritten):
         # drop the bookkeeping with a metadata-only commit
-        return _commit(
-            path,
-            mode="purge-eq",
-            expected_parent=v,
-            schema_json=m.get("schema"),
-            eqdeletes=[],
-            **_alter_payload_kwargs(_read_manifest(path, v, materialize=False)),
-        )
+        return _commit(path, base, "purge-eq", eqdeletes=[])
     affected_sorted = sorted(affected)
     lineage = bool(m.get("row_lineage"))
     if lineage:
@@ -6063,10 +5759,8 @@ def update_where(
     from pyspark.sql import Column
     from pyspark.sql import functions as F
 
-    v, bfork = _resolve_write_head(path, branch)
-    if v == 0:
-        raise ValueError(f"no versions at {path}")
-    m = _read_manifest(path, v, branch=branch, fork=bfork)
+    base = _open_base(path, branch)
+    v, m = base.version, base.m
     if m.get("schema"):
         unknown = sorted(
             set(assignments) - set(_schema_from_json(m["schema"]).names)
@@ -6157,11 +5851,8 @@ def replace_where(
     from pyspark.sql import functions as F
 
     spark = df.sparkSession
-    v, bfork = _resolve_write_head(path, branch)
-    if v == 0:
-        raise ValueError(
-            f"no versions at {path}; write_version creates the table"
-        )
+    base = _open_base(path, branch)
+    v, m = base.version, base.m
     pred = _row_predicate(col, lo, hi, condition)
     stray = df.filter(~F.coalesce(pred, F.lit(False))).limit(1).collect()
     if stray:
@@ -6171,7 +5862,6 @@ def replace_where(
             f"{' AND <condition>' if condition is not None else ''}); "
             f"offending row: {stray[0]}"
         )
-    m = _read_manifest(path, v, branch=branch, fork=bfork)
     touched, untouched = _split_files_by_range(m, col, lo, hi)
     parts = []
     if touched:
@@ -6205,19 +5895,17 @@ def compact(
     writer's commit surfaces as CommitConflictError instead of being
     silently clobbered (retry by re-running: compaction is idempotent
     work, not state)."""
-    base_version = current_version(path)
-    lineage = base_version > 0 and bool(
-        _read_manifest(path, base_version, materialize=False).get("row_lineage")
-    )
+    base = _open_base(path, materialize=False, create=True)
+    lineage = bool(base.m.get("row_lineage"))
     if lineage:
         # row lineage: compaction must not change a single row's id — the
         # rewrite reads rows WITH their ids and materializes them into the
         # new files' own bytes (the "__ridm" channel)
-        snap = read_version_lineage(spark, path, base_version).withColumnRenamed(
+        snap = read_version_lineage(spark, path, base.version).withColumnRenamed(
             "_row_id", _RID_COL
         )
     else:
-        snap = read_version(spark, path, base_version if base_version else None)
+        snap = read_version(spark, path, base.version or None)
     # collect_stats: OPTIMIZE re-collects manifest column stats for the
     # rewritten files (an overwrite cannot inherit per-file ranges — the
     # files are new), so a pruned table stays pruned across compactions
@@ -6225,7 +5913,7 @@ def compact(
         snap.coalesce(max(1, target_files)),
         path,
         mode="overwrite",
-        expected_version=base_version,
+        expected_version=base.version,
         collect_stats=collect_stats,
         collect_blooms=collect_blooms,
         _rid_materialized=lineage,
@@ -6264,17 +5952,17 @@ def optimize_zorder(
 
     if target_files < 1:
         raise ValueError("target_files must be >= 1")
-    base = current_version(path)
-    m = _read_manifest(path, base) if base else {}
+    base = _open_base(path, create=True)
+    m = base.m
     lineage = bool(m.get("row_lineage"))
     if lineage:
         # the re-cluster moves every row between files: ids materialize
         # into the new files' bytes, the only way they can survive
-        snap = read_version_lineage(spark, path, base).withColumnRenamed(
+        snap = read_version_lineage(spark, path, base.version).withColumnRenamed(
             "_row_id", _RID_COL
         )
     else:
-        snap = read_version(spark, path, base if base else None)
+        snap = read_version(spark, path, base.version or None)
     missing = [c for c in cols if c not in snap.columns]
     if missing:
         raise ValueError(f"zorder columns not in the table: {missing}")
@@ -6302,7 +5990,7 @@ def optimize_zorder(
         zorder_cluster(snap, list(cols), target_files),
         path,
         mode="overwrite",
-        expected_version=base,
+        expected_version=base.version,
         collect_stats=collect_stats,
         collect_blooms=collect_blooms,
         _rid_materialized=lineage,
