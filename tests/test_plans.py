@@ -635,6 +635,34 @@ def test_checkpoints_and_scratch_dirs_go_through_the_helpers():
     )
 
 
+def test_snapshot_reads_go_through_the_opener():
+    """sources/versioned.py is the one reader of the manifest format:
+    every other module opens a snapshot through `_open_base` (or a public
+    reader), never `_read_manifest` / `_check_version` directly, and the
+    table reader never infers a schema from the files (mergeSchema) —
+    the manifest's recorded schema is the only one."""
+    import pathlib
+
+    import tts_etl_pipeline_spark
+
+    pkg = pathlib.Path(tts_etl_pipeline_spark.__file__).parent
+    offenders = []
+    for py in sorted(pkg.rglob("*.py")):
+        rel = py.relative_to(pkg).as_posix()
+        for i, line in enumerate(py.read_text().splitlines()):
+            if line.lstrip().startswith("#"):
+                continue
+            if rel != "sources/versioned.py" and (
+                "_read_manifest(" in line or "_check_version(" in line
+            ):
+                offenders.append(f"{rel}:{i + 1}: {line.strip()}")
+            if rel == "sources/versioned.py" and 'option("mergeSchema"' in line:
+                offenders.append(f"{rel}:{i + 1}: {line.strip()}")
+    assert not offenders, (
+        "open snapshots through versioned._open_base:\n" + "\n".join(offenders)
+    )
+
+
 def test_r3_salted_join_widens_key_and_keeps_sum_exact(spark, sf_dir):
     """r3 must genuinely join on the WIDENED (user_id, salt) key — the
     whole point of salting — and must not broadcast the replicated dim by

@@ -194,3 +194,22 @@ def test_ds_empty_table_serves_schema(spark):
         assert got.columns == ["k", "p"]
     finally:
         shutil.rmtree(base, ignore_errors=True)
+
+
+def test_pushed_cross_type_and_overflow_probes_read_the_file():
+    """Pushed filters never crash planning and never skip unsoundly: a
+    probe the recorded bounds cannot be ordered against (a number
+    against string bounds, a string or NULL against numeric bounds, an
+    int too large for the float-widened order) proves nothing, so the
+    file is read; a comparable disjoint probe still skips."""
+    from tts_etl_pipeline_spark.sources.pyds_versioned import _file_disjoint
+
+    num, text = {"k": [1, 10]}, {"g": ["a", "m"]}
+    for kind in ("eq", "ge", "le"):
+        assert not _file_disjoint(text, [("g", kind, [5])])
+        assert not _file_disjoint(num, [("k", kind, ["x"])])
+        assert not _file_disjoint(num, [("k", kind, [None])])
+        assert not _file_disjoint(num, [("k", kind, [10**400])])
+    assert _file_disjoint(num, [("k", "eq", [50])])
+    assert _file_disjoint(num, [("k", "ge", [11])])
+    assert _file_disjoint(text, [("g", "le", ["0"])])

@@ -587,41 +587,60 @@ def test_stream_changes_equals_batch_cdf_per_commit(spark, tmp_path):
     assert stream_changes(spark, path, ckpt, lambda df, v: 1 / 0) == 4
 
 
-def test_table_changes_mixed_legacy_manifest_unions_file_schema(spark, tmp_path):
-    """One side legacy (manifest without a recorded schema), the other
-    schema-bearing: the union column set must include legacy-only columns
-    probed from the legacy side's FILES — otherwise rows differing only in
-    a legacy-only column cancel out of the exceptAll diff and the change
-    is silently missed (round-7 ADVICE)."""
+@pytest.mark.parametrize("field", ["schema", "committed_at"])
+def test_manifest_without_schema_or_commit_time_refuses(spark, tmp_path, field):
+    """Every commit records "schema" and "committed_at"; a manifest
+    missing either was not written by a commit. Every reader and writer
+    refuses it with the one typed error naming the version, and nothing
+    is committed."""
     import json
-    import os as _os
+    import time as _time
 
-    from tts_etl_pipeline_spark.sources.versioned import table_changes
-
-    path = str(tmp_path / "tbl")
-    write_version(
-        spark.createDataFrame([("a", 1), ("b", 2)], "k string, extra int"), path
+    from tts_etl_pipeline_spark.sources.versioned import (
+        ManifestFormatError,
+        _manifest_path,
+        branch_head,
+        create_branch,
+        read_branch,
+        read_version_pruned,
+        table_changes,
+        update_where,
+        version_asof,
     )
-    # strip the recorded schema -> a legacy (pre-schema-tracking) manifest
-    mp = _os.path.join(path, "_versions", "v00000001.json")
+
+    path = str(tmp_path / "t")
+    write_version(
+        spark.createDataFrame([(1, 2.0), (2, 3.0)], "k int, price double"),
+        path,
+        collect_stats=("k",),
+    )
+    create_branch(path, "b")
+    mp = _manifest_path(path, 1)
     with open(mp) as fh:
         m = json.load(fh)
-    del m["schema"]
+    del m[field]
     with open(mp, "w") as fh:
         json.dump(m, fh)
-    # v2 overwrite drops the 'extra' column entirely (schema-bearing side)
-    write_version(
-        spark.createDataFrame([("a",), ("b",)], "k string"), path, "overwrite"
-    )
-    feed = table_changes(spark, path, 1, 2)
-    assert set(feed.columns) == {"k", "extra", "_change_type"}
-    got = {(r["k"], r["extra"], r["_change_type"]) for r in feed.collect()}
-    assert got == {
-        ("a", None, "insert"),
-        ("a", 1, "delete"),
-        ("b", None, "insert"),
-        ("b", 2, "delete"),
+    calls = {
+        "read_version": lambda: read_version(spark, path),
+        "read_version_pruned": lambda: read_version_pruned(
+            spark, path, "k", 1, 1
+        ),
+        "read_branch": lambda: read_branch(spark, path, "b"),
+        "table_changes": lambda: table_changes(spark, path, 1, 1),
+        "update_where": lambda: update_where(
+            spark, path, "k", 1, 1, {"price": "0.0"}
+        ),
+        "version_asof": lambda: version_asof(path, _time.time()),
     }
+    for name, call in calls.items():
+        with pytest.raises(ManifestFormatError, match="version 1 ") as exc:
+            call()
+        assert field in str(exc.value), name
+    assert current_version(path) == 1  # nothing committed
+    assert branch_head(path, "b") == 1
+    manifests = [f for f in os.listdir(os.path.dirname(mp)) if f[0] == "v"]
+    assert manifests == ["v00000001.json"]
 
 
 def test_stream_changes_refuses_reserved_change_type_at_v1(spark, tmp_path):
@@ -780,15 +799,10 @@ def test_compact_recollects_stats_and_pruning_survives(spark, tmp_path):
 
 def test_version_asof_timestamp_time_travel(spark, tmp_path):
     """timestamp AS OF: the newest version committed at-or-before ts;
-    before-everything raises; legacy manifests (no committed_at) resolve
-    through the manifest file's mtime."""
-    import json as _json
+    before-everything raises."""
     import time as _time
 
-    from tts_etl_pipeline_spark.sources.versioned import (
-        _manifest_path,
-        version_asof,
-    )
+    from tts_etl_pipeline_spark.sources.versioned import version_asof
 
     path = str(tmp_path / "t")
     write_version(spark.range(3).selectExpr("id AS k"), path)
@@ -802,13 +816,6 @@ def test_version_asof_timestamp_time_travel(spark, tmp_path):
     assert {r["k"] for r in read_version(spark, path, version_asof(path, t1)).collect()} == {0, 1, 2}
     with pytest.raises(ValueError, match="committed after"):
         version_asof(path, 1.0)
-    # legacy manifest: strip committed_at, resolver falls back to mtime
-    mp = _manifest_path(path, 2)
-    m = _json.load(open(mp))
-    m.pop("committed_at")
-    with open(mp, "w") as fh:
-        _json.dump(m, fh)
-    assert version_asof(path, _time.time()) == 2
 
 
 def test_pruned_read_pins_to_old_version(spark, tmp_path):
@@ -2845,34 +2852,6 @@ def test_constraint_alters_carry_bloom_sidecars(spark, tmp_path):
     drop_constraint(path, "pos")
     _, skipped, total = read_version_bloom_pruned(spark, path, "k", 1234)
     assert total == 8 and skipped >= 4
-
-
-def test_update_where_legacy_manifest_refuses_unknown_assignment(
-    spark, tmp_path
-):
-    """On a legacy (schemaless) manifest the READ's columns are the
-    authority: a typo'd assignment refuses instead of committing a
-    silent no-op rewrite (review finding 6)."""
-    import json as _json
-    import os as _os
-
-    from tts_etl_pipeline_spark.sources.versioned import (
-        current_version,
-        update_where,
-        write_version,
-    )
-
-    path = str(tmp_path / "t")
-    write_version(spark.createDataFrame([(1, 2.0)], "k int, price double"), path)
-    mp = _os.path.join(path, "_versions", "v00000001.json")
-    with open(mp) as fh:
-        m = _json.load(fh)
-    del m["schema"]
-    with open(mp, "w") as fh:
-        _json.dump(m, fh)
-    with pytest.raises(ValueError, match="unknown columns"):
-        update_where(spark, path, "k", 1, 1, {"pricee": "0.0"})
-    assert current_version(path) == 1  # nothing committed
 
 
 def test_overwrite_missing_constrained_column_refuses_typed(spark, tmp_path):

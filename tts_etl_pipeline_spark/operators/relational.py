@@ -4248,10 +4248,10 @@ def j32_metadata_only_aggregate(
     import os as _os
 
     from tts_etl_pipeline_spark.sources.versioned import (
-        _read_manifest,
         aggregate_metadata,
         current_version,
         delete_where_dv,
+        manifest,
         plan_metadata_aggregate,
         write_version,
     )
@@ -4324,7 +4324,7 @@ def j32_metadata_only_aggregate(
         )
         # the data-free proof: hide EVERY data file; the manifest still
         # answers the same COUNT — not one data byte was behind it
-        m = _read_manifest(path, head)
+        m = manifest(path, head)
         for f in m["files"]:
             _os.rename(_os.path.join(path, f), _os.path.join(path, f) + ".x")
         p_again = plan_metadata_aggregate(path)

@@ -226,7 +226,7 @@ def maintain_join_agg_from_cdf(
 
 
 def _empty_contrib(spark: SparkSession, path_a: str, group_col: str) -> DataFrame:
-    m = V._read_manifest(path_a, V.current_version(path_a))
+    m = V._open_base(path_a).m
     gtype = next(
         f.dataType
         for f in V._schema_from_json(m["schema"]).fields

@@ -71,16 +71,14 @@ def table_debt(path: str) -> dict:
     alone: live file count, DV'd-row ratio, equality-delete entry count,
     retained version count. KB-scale driver work at any table size
     (sharded manifests: the summary channel carries per-shard counts)."""
-    head = V.current_version(path)
-    if head == 0:
-        raise ValueError(f"no versions at {path}")
     # RAW read: a sharded manifest's summary channel ("n"/"rows"/"dvf"
     # per shard entry) answers everything below without loading shards —
     # materializing 10^6 per-file records to DECIDE maintenance would be
     # the O(table) planning cost the whole loop exists to avoid. Only
     # DV-BEARING shards load (for the dead-row cardinality), exactly the
     # aggregate_metadata discipline.
-    m = V._read_manifest(path, head, materialize=False)
+    base = V._open_base(path, materialize=False)
+    head, m = base.version, base.m
     total_rows = 0
     rows_known = True
     dv_dead = 0

@@ -64,19 +64,18 @@ def _file_disjoint(rec: dict, conj: list) -> bool:
         r = rec.get(phys)
         if not r or r[0] is None or r[1] is None:
             continue
-        try:
-            if kind == "eq":
-                if all(V._stat_disjoint(r, v, v) for v in vals):
-                    return True
-            elif kind == "ge":
-                # skip iff file_max < v, proven under both orders
-                if V._stat_disjoint(r, vals[0], r[1]):
-                    return True
-            elif kind == "le":
-                if V._stat_disjoint(r, r[0], vals[0]):
-                    return True
-        except Exception:
-            continue  # stats can never crash planning: read the file
+        # _stat_disjoint turns cross-type and overflowing probes into
+        # "read the file": stats can never crash planning
+        if kind == "eq":
+            if all(V._stat_disjoint(r, v, v) for v in vals):
+                return True
+        elif kind == "ge":
+            # skip iff file_max < v, proven under both orders
+            if V._stat_disjoint(r, vals[0], r[1]):
+                return True
+        elif kind == "le":
+            if V._stat_disjoint(r, r[0], vals[0]):
+                return True
     return False
 
 
@@ -90,11 +89,9 @@ class PlainVersionedReader(DataSourceReader):
     def __init__(self, schema, options: dict):
         self.path = options["path"]
         v = options.get("version")
-        self.version = (
-            int(v) if v is not None else V.current_version(self.path)
-        )
-        V._check_version(self.path, self.version)
-        m = V._read_manifest(self.path, self.version)
+        m = V._open_base(
+            self.path, version=int(v) if v is not None else None
+        ).m
         if m.get("dvs"):
             raise ValueError(
                 "snapshot carries deletion vectors; purge_dvs() first or "
@@ -208,14 +205,7 @@ class VersionedTableDataSource(DataSource):
     def schema(self):
         path = self.options["path"]
         v = self.options.get("version")
-        version = int(v) if v is not None else V.current_version(path)
-        V._check_version(path, version)
-        m = V._read_manifest(path, version)
-        if not m.get("schema"):
-            raise ValueError(
-                "legacy manifest records no schema; read it through "
-                "read_version"
-            )
+        m = V._open_base(path, version=int(v) if v is not None else None).m
         return V._schema_from_json(m["schema"])
 
     def reader(self, schema):

@@ -39,7 +39,7 @@ rewrite the whole history every batch):
   stages closed rows and current rows as separate file groups with
   is_current stats collected, so a closed-only file's recorded range is
   [false, false] and the NEXT fold reuses it without opening it. A file
-  without usable stats (legacy table, empty file) is conservatively
+  without usable stats (stats-free table, empty file) is conservatively
   treated as live — read and re-split once, correct either way.
   Closure-delta files accumulate one small group per fold; compact()
   folds them together when file count matters.
@@ -226,10 +226,7 @@ def _untouched_current_files(
     int/string/date types, which keep the fast path."""
     from tts_etl_pipeline_spark.sources.versioned import _schema_from_json
 
-    schema_json = m.get("schema")
-    if schema_json is None:
-        return []
-    dim_schema = _schema_from_json(schema_json)
+    dim_schema = _schema_from_json(m["schema"])
     if key not in dim_schema.names:
         return []
     key_type = dim_schema[key].dataType
@@ -419,7 +416,7 @@ def scd2_apply(
             f"SCD2 schema mismatch: dimension {sorted(c_types.items(), key=str)}"
             f" vs batch {sorted(f_types.items(), key=str)}"
         )
-    # closed rows still living in unclassified files (legacy table, or the
+    # closed rows still living in unclassified files (stats-free table, or the
     # pre-split first fold) migrate into this fold's closed file group once
     closed_in_live = live.filter(~F.col("is_current"))
     current = live.filter(F.col("is_current"))

@@ -81,10 +81,10 @@ def spj_compatibility(path_a: str, path_b: str, key_a: str, key_b: str):
       resurrect deleted rows — purge/compact first, or fall back."""
     out = []
     for path, key in ((path_a, key_a), (path_b, key_b)):
-        v = V.current_version(path)
-        if v == 0:
+        if V.current_version(path) == 0:
             return None, f"{path} has no committed versions", None
-        m = V._read_manifest(path, v)
+        base = V._open_base(path)
+        v, m = base.version, base.m
         phys = V._phys(m, key)
         sb = _active_sbucket(m, phys)
         if sb is None:
@@ -249,10 +249,8 @@ def spj_read(spark: SparkSession, path: str, key: str, fallback: bool = True):
     every file carries its tuple, no pending merge-on-read state); an
     incompatible snapshot degrades to the plain read. Returns
     ``(df, colocated)``."""
-    v = V.current_version(path)
-    if v == 0:
-        raise ValueError(f"no committed versions at {path}")
-    m = V._read_manifest(path, v)
+    base = V._open_base(path)
+    v, m = base.version, base.m
     phys = V._phys(m, key)
     sb = _active_sbucket(m, phys)
     reason = None

@@ -85,12 +85,10 @@ def build_text_index(
         StructType,
     )
 
-    v = V.current_version(path) if version is None else version
-    V._check_version(path, v)
-    m = V._read_manifest(path, v)
+    base = V._open_base(path, version=version)
+    v, m = base.version, base.m
     phys = V._phys(m, col)
-    schema = V._schema_from_json(m["schema"]) if m.get("schema") else None
-    if schema is not None and col not in schema.names:
+    if col not in V._schema_from_json(m["schema"]).names:
         raise ValueError(f"{col!r} is not a column of {path}")
     d_seqs = [
         d["seq"] for d in (m.get("defaults") or []) if d.get("col") == phys
@@ -219,8 +217,8 @@ def read_version_token_pruned(
     make (version, col) the only sound cache key."""
     from pyspark.sql import functions as F
 
-    v = V.current_version(path) if version is None else version
-    V._check_version(path, v)
+    base = V._open_base(path, version=version)
+    v, m = base.version, base.m
     norm = token.lower()
     if not TOKEN_RE.fullmatch(norm):
         raise ValueError(
@@ -236,7 +234,6 @@ def read_version_token_pruned(
         )
     with open(meta_f) as fh:
         meta = json.load(fh)
-    m = V._read_manifest(path, v)
     total = len(meta["files"])
     shard_f = os.path.join(
         idx, f"shard_{_shard_of(norm, int(meta['shards'])):04d}.json"
@@ -252,10 +249,8 @@ def read_version_token_pruned(
     )
     if hit_files:
         df = V._read_files(spark, path, m, hit_files).filter(pred_col)
-    elif m.get("schema"):
-        df = spark.createDataFrame([], V._schema_from_json(m["schema"]))
     else:
-        df = V.read_version(spark, path, v).limit(0)
+        df = spark.createDataFrame([], V._schema_from_json(m["schema"]))
     return df, len(hit_files), total
 
 

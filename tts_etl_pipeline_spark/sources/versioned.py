@@ -10,9 +10,12 @@ Layout under a table root:
     data/<uuid>.parquet ...          immutable data files (never rewritten)
     _versions/v00000001.json ...     one manifest per committed version:
                                      {"version", "files", "parent", "mode",
-                                      "schema" (the version's logical
-                                      schema — add-column evolution +
+                                      "schema" (always present: the
+                                      version's logical schema —
+                                      add-column evolution +
                                       schema-correct time travel),
+                                      "committed_at" (always present: the
+                                      writer's commit time, version_asof),
                                       "stats" (optional per-file column
                                       min/max — manifest-level file
                                       skipping, read_version_pruned),
@@ -85,6 +88,17 @@ the writer's when it passes `files` or a `shards` plan. Writers that add
 rows stage them through _stage_rows, which stamps every new file's add
 version ("__v"), record count ("__n"), requested min/max and row ids.
 
+Read rule: a reader opens its snapshot through the same _open_base a
+writer does — the head of main or of a branch, or an explicitly passed
+version, which must be COMMITTED (1 <= v <= head and its manifest on
+disk: a manifest not yet pointed to by _latest stays invisible). An
+empty table refuses, and a reader that serves rows refuses a snapshot
+with no files. _read_manifest is the one place that knows the manifest
+format: a manifest without "schema" or "committed_at" was not written by
+_commit and refuses with ManifestFormatError, so every reader can take
+the recorded schema as given. Planning paths open sharded manifests raw
+(materialize=False) and load only the shards they need.
+
 Readers NEVER list data/: they read the manifest's file list, so a reader
 holding version N is isolated from any concurrent commit of N+1
 (snapshot isolation) and `read_version(path, n)` is time travel for free.
@@ -125,6 +139,13 @@ class ConstraintViolationError(ValueError):
     every commit path (append, overwrite, parts/merge/mutation commits)
     when STAGED rows violate a recorded constraint — the refused commit
     leaves only invisible staged files, which vacuum reclaims."""
+
+
+class ManifestFormatError(ValueError):
+    """A manifest lacks a field every commit records ("schema",
+    "committed_at"): _commit did not write it, so no reader can serve its
+    snapshot. Raised by _read_manifest, the one place that knows the
+    format."""
 
 
 def _vdir(path: str) -> str:
@@ -461,11 +482,20 @@ def _read_manifest(
     paths that use shard summaries to avoid loading the world
     (read_version_pruned) or writers that carry untouched shards
     verbatim (the write_version append fast path). branch/fork resolve
-    versions past the fork to the branch's own staged manifests."""
+    versions past the fork to the branch's own staged manifests. A
+    manifest missing "schema" or "committed_at" refuses with
+    ManifestFormatError."""
     with open(
         _resolve_manifest_file(path, version, branch, fork), encoding="utf-8"
     ) as fh:
         m = json.load(fh)
+    missing = [k for k in ("schema", "committed_at") if m.get(k) is None]
+    if missing:
+        raise ManifestFormatError(
+            f"manifest of version {version} at {path} records no "
+            f"{' or '.join(missing)}; every commit records both, so no "
+            "commit wrote it"
+        )
     if not materialize or "shards" not in m:
         return m
     files: list[str] = []
@@ -486,6 +516,12 @@ def _read_manifest(
     if dvs:
         m["dvs"] = dvs
     return m
+
+
+def _n_files(m: dict) -> int:
+    """A manifest's file count; sharded manifests record it, so counting
+    never materializes one."""
+    return m["n_files"] if "shards" in m else len(m["files"])
 
 
 def _load_shard(path: str, entry: dict, cache: dict | None = None) -> dict:
@@ -544,25 +580,46 @@ def _open_base(
     version: int | None = None,
     materialize: bool = True,
     create: bool = False,
+    refuse_empty: bool = False,
 ) -> _Base:
-    """The base snapshot of one write: `version` when the caller computed
-    its rows from an earlier snapshot, else the head of `branch` (main
-    when None). An empty table refuses unless the writer `create`s it.
-    `materialize=False` keeps a sharded manifest as its KB manifest list
-    (see _read_manifest) for writers that plan from shard summaries or
-    carry untouched shards verbatim."""
+    """The snapshot one read or write starts from (the read rule in the
+    module docstring): `version` when the caller names one — a time-travel
+    read, or a writer that computed its rows from an earlier snapshot —
+    else the head of `branch` (main when None). A named version must be
+    committed on that lineage. An empty table refuses unless the writer
+    `create`s it; `refuse_empty` also refuses a snapshot with no files
+    (readers that serve rows). `materialize=False` keeps a sharded
+    manifest as its KB manifest list (see _read_manifest) for callers
+    that plan from shard summaries or carry untouched shards verbatim."""
     fork = None
     if branch is not None:
         fork = _branch_info(path, branch)["fork"]
-        if version is None:
-            version = branch_head(path, branch)
     if version is None:
-        version = current_version(path)
-    if version == 0:
-        if not create:
+        version = (
+            branch_head(path, branch) if branch is not None
+            else current_version(path)
+        )
+        if version == 0 and not create:
             raise ValueError(f"no versions at {path}")
+    elif not (create and version == 0):
+        # a main manifest past _latest is a torn (unpointed) commit and
+        # stays invisible; a branch's staged manifest is committed once
+        # its CAS link exists (the branch_head probe)
+        staged = branch is not None and version > fork
+        if (
+            version < 1
+            or (not staged and version > current_version(path))
+            or not os.path.exists(
+                _resolve_manifest_file(path, version, branch, fork)
+            )
+        ):
+            raise ValueError(f"version {version} does not exist at {path}")
+    if version == 0:
         return _Base(0, branch, fork, {})
     m = _read_manifest(path, version, materialize, branch=branch, fork=fork)
+    if refuse_empty and _n_files(m) == 0:
+        on = "" if branch is None else f" of branch {branch!r}"
+        raise ValueError(f"version {version}{on} is empty")
     return _Base(version, branch, fork, m)
 
 
@@ -624,6 +681,7 @@ def _commit(
         # can record non-monotonic times, so the as-of resolver scans all
         # manifests rather than binary-searching.
         "committed_at": time.time(),
+        "schema": table["schema"],
     }
     if shards is not None:
         manifest["shards"] = shards
@@ -646,7 +704,6 @@ def _commit(
     manifest.update(
         (k, v)
         for k, v in (
-            ("schema", table["schema"]),
             ("stats", stats),
             ("constraints", table["constraints"]),
             ("blooms", blooms),
@@ -1387,7 +1444,7 @@ def _enforce_constraints(
     path: str,
     staged: list[str],
     constraints: dict,
-    schema_json: str | None,
+    schema_json: str,
     colmap: dict | None = None,
     unique_against: tuple | None = None,
     unique_exempt_col: str | None = None,
@@ -1398,7 +1455,7 @@ def _enforce_constraints(
     constraint expression is FALSE (SQL CHECK truth: NULL passes). ONE
     job for all constraints; raises ConstraintViolationError naming the
     first violated constraint, leaving the staged files as invisible
-    vacuum-able orphans. Reads with the COMMIT schema when available, so
+    vacuum-able orphans. Reads with the COMMIT schema, so
     a merge_schema append that omitted a constrained column serves NULL
     for it (which passes CHECK) instead of failing analysis.
 
@@ -1412,12 +1469,11 @@ def _enforce_constraints(
         return
     from pyspark.sql import functions as F
 
-    reader = spark.read
-    if schema_json is not None:
-        logical = _schema_from_json(schema_json)
-        reader = reader.schema(_physical_struct(logical, colmap))
-    df = reader.parquet(*[os.path.join(path, f) for f in staged])
-    if colmap and schema_json is not None:
+    logical = _schema_from_json(schema_json)
+    df = spark.read.schema(_physical_struct(logical, colmap)).parquet(
+        *[os.path.join(path, f) for f in staged]
+    )
+    if colmap:
         cm = {v: k for k, v in colmap.items()}
         df = df.select(*[F.col(c).alias(cm.get(c, c)) for c in df.columns])
     uniques = [
@@ -1437,6 +1493,8 @@ def _enforce_constraints(
     )
     if not checks:
         return
+    from pyspark.errors import AnalysisException
+
     try:
         probe = df.select(
             *[
@@ -1449,16 +1507,12 @@ def _enforce_constraints(
             c = F.col(f"__viol_{i}")
             any_viol = c if any_viol is None else (any_viol | c)
         hit = probe.filter(any_viol).limit(1).collect()
-    except Exception as ex:  # typed refusal beats a raw analysis error
-        from pyspark.errors import AnalysisException
-
-        if isinstance(ex, AnalysisException):
-            raise ValueError(
-                "a CHECK constraint references a column absent from this "
-                f"commit's schema ({[n for n, _ in checks]}); drop the "
-                "constraint before overwriting with a narrower schema"
-            ) from ex
-        raise
+    except AnalysisException as ex:  # typed refusal beats a raw analysis error
+        raise ValueError(
+            "a CHECK constraint references a column absent from this "
+            f"commit's schema ({[n for n, _ in checks]}); drop the "
+            "constraint before overwriting with a narrower schema"
+        ) from ex
     if hit:
         i = next(j for j in range(len(checks)) if hit[0][f"__viol_{j}"])
         name, expr = checks[i]
@@ -1513,8 +1567,6 @@ def widen_column(path: str, col: str, new_type) -> int:
 
     base = _open_base(path, materialize=False)
     m = base.m
-    if m.get("schema") is None:
-        raise ValueError("legacy manifest records no schema to widen")
     schema = _schema_from_json(m["schema"])
     if col not in schema.names:
         raise ValueError(f"no column {col!r} to widen")
@@ -1564,8 +1616,6 @@ def add_column(path: str, name: str, dtype, default=None) -> int:
 
     base = _open_base(path, materialize=False)
     m = base.m
-    if m.get("schema") is None:
-        raise ValueError("legacy manifest records no schema to add to")
     schema = _schema_from_json(m["schema"])
     if name in schema.names:
         raise ValueError(f"column {name!r} already exists")
@@ -1634,8 +1684,6 @@ def rename_column(path: str, old: str, new: str) -> int:
     # raw read: everything an ALTER touches is a manifest-list scalar
     base = _open_base(path, materialize=False)
     m = base.m
-    if m.get("schema") is None:
-        raise ValueError("legacy manifest has no recorded schema to rename in")
     schema = _schema_from_json(m["schema"])
     if old not in schema.names:
         raise ValueError(f"no column {old!r} to rename")
@@ -1672,8 +1720,6 @@ def drop_column(path: str, name: str) -> int:
     constraint mentions it."""
     base = _open_base(path, materialize=False)  # scalars suffice
     m = base.m
-    if m.get("schema") is None:
-        raise ValueError("legacy manifest has no recorded schema to drop from")
     schema = _schema_from_json(m["schema"])
     if name not in schema.names:
         raise ValueError(f"no column {name!r} to drop")
@@ -1736,14 +1782,10 @@ def table_constraints(path: str, version: int | None = None) -> dict:
     """The CHECK constraints recorded at `version` (default: head) —
     name -> SQL expression. Constraints are per-version metadata like the
     schema, so time travel answers 'what was enforced then'."""
-    v = current_version(path) if version is None else version
-    if v == 0:
-        return {}
-    _check_version(path, v)
-    # raw read: constraints are a manifest-list scalar
-    return dict(
-        _read_manifest(path, v, materialize=False).get("constraints") or {}
-    )
+    # raw read: constraints are a manifest-list scalar; an empty table
+    # opens as {} (create) and so has none
+    base = _open_base(path, version=version, materialize=False, create=True)
+    return dict(base.m.get("constraints") or {})
 
 
 def add_constraint(
@@ -1810,8 +1852,7 @@ def add_unique_constraint(
     NULL values never collide (SQL UNIQUE). drop_constraint removes the
     guarantee like any CHECK."""
     base = _open_base(path, materialize=False)
-    schema_json = base.m.get("schema")
-    if schema_json and col not in _schema_from_json(schema_json).names:
+    if col not in _schema_from_json(base.m["schema"]).names:
         raise ValueError(f"{col!r} is not a column of {path}")
     cons = dict(base.m.get("constraints") or {})
     if name in cons:
@@ -2139,13 +2180,11 @@ def _partition_probes(m: dict, pcol: str, lo, hi) -> list:
     specs = m.get("pspecs")
     if not specs:
         return []
-    bucket_tn = None
-    if m.get("schema") is not None:
-        cm = m.get("colmap") or {}
-        bucket_tn = {
-            cm.get(f.name, f.name): f.dataType.typeName()
-            for f in _schema_from_json(m["schema"]).fields
-        }.get(pcol)
+    cm = m.get("colmap") or {}
+    bucket_tn = {
+        cm.get(f.name, f.name): f.dataType.typeName()
+        for f in _schema_from_json(m["schema"]).fields
+    }.get(pcol)
     probes: list = []
     seen: set = set()
     for sid in specs:
@@ -2281,10 +2320,6 @@ def alter_partition_spec(path: str, partition_by) -> int:
     existing vintage reuses its id (idempotent)."""
     base = _open_base(path, materialize=False)
     m = base.m
-    if m.get("schema") is None:
-        raise ValueError(
-            "legacy manifest records no schema; cannot validate a spec"
-        )
     pspecs, pspec_id, _ = _resolve_pspec(
         m, tuple(partition_by), _schema_from_json(m["schema"]), m.get("colmap")
     )
@@ -2297,9 +2332,7 @@ def partition_spec(path: str, version: int | None = None) -> dict:
     """Introspection: {'id', 'fields', 'history'} at a version (default
     head) — fields is the ACTIVE spec's [transform, column, param] list
     (None when unpartitioned), history maps every vintage ever declared."""
-    v = current_version(path) if version is None else version
-    _check_version(path, v)
-    m = _read_manifest(path, v, materialize=False)
+    m = _open_base(path, version=version, materialize=False).m
     specs = m.get("pspecs") or {}
     sid = m.get("pspec_id")
     # an EMPTY evolved spec (alter to ()) reads as unpartitioned: None,
@@ -2407,8 +2440,7 @@ def write_version(
         else df.schema
     )
     commit_schema = logical_schema
-    if mode == "append" and base_m.get("schema") is not None:
-        # legacy manifests have no schema
+    if mode == "append" and base.version > 0:
         commit_schema = _evolved_schema(
             _schema_from_json(base_m["schema"]), logical_schema, merge_schema
         )
@@ -2578,25 +2610,22 @@ def write_version_parts(
             f"reuse_files not referenced by version {expected_version}: "
             f"{foreign[:3]}"
         )
-    schema_json = base_m.get("schema")
-    if schema_json is not None:
-        base_types = [
-            (f.name, f.dataType) for f in _schema_from_json(schema_json).fields
+    schema_json = base_m["schema"]
+    base_types = [
+        (f.name, f.dataType) for f in _schema_from_json(schema_json).fields
+    ]
+    for p in parts:
+        got = [
+            (f.name, f.dataType)
+            for f in p.schema.fields
+            if not (_rid_materialized and f.name == _RID_COL)
         ]
-        for p in parts:
-            got = [
-                (f.name, f.dataType)
-                for f in p.schema.fields
-                if not (_rid_materialized and f.name == _RID_COL)
-            ]
-            if got != base_types:
-                raise ValueError(
-                    f"part schema {got} differs from the table schema "
-                    f"{base_types}; write_version_parts rewrites one "
-                    "snapshot — it never evolves the schema"
-                )
-    elif parts:  # legacy manifest: adopt the parts' schema going forward
-        schema_json = parts[0].schema.json()
+        if got != base_types:
+            raise ValueError(
+                f"part schema {got} differs from the table schema "
+                f"{base_types}; write_version_parts rewrites one "
+                "snapshot — it never evolves the schema"
+            )
 
     cm = base_m.get("colmap")
     # staged parts are rewrites read through _read_files (live equality
@@ -2646,7 +2675,6 @@ def write_version_parts(
         stats={**keep["stats"], **{f: new_stats[f] for f in new_files}},
         blooms={**keep["blooms"], **new_blooms},
         dvs=keep["dvs"],
-        schema=schema_json,
         next_row_id=next_rid,
         **changes,
     )
@@ -2657,8 +2685,7 @@ def manifest(path: str, version: int) -> dict:
     schema, per-file stats, committed_at) — the public read surface callers
     use to PLAN against a snapshot driver-side (file classification from
     stats, file-identity assertions) without touching any data file."""
-    _check_version(path, version)
-    return _read_manifest(path, version)
+    return _open_base(path, version=version).m
 
 
 def read_version_files(
@@ -2669,8 +2696,7 @@ def read_version_files(
     partial read (read_version_pruned's range pruning, the SCD2 fold's
     live-slice read). `files` must belong to the version's manifest:
     reading unreferenced files would break snapshot isolation."""
-    _check_version(path, version)
-    m = _read_manifest(path, version)
+    m = _open_base(path, version=version).m
     member = set(m["files"])
     foreign = [f for f in files if f not in member]
     if foreign:
@@ -2682,35 +2708,19 @@ def read_version_files(
     return _read_files(spark, path, m, list(files))
 
 
-def _check_version(path: str, v: int) -> int:
-    """Validate that `v` is a COMMITTED version and return the head.
-
-    v > head guards the torn-crash window: a manifest written but never
-    pointed to by _latest is UNCOMMITTED and must stay invisible."""
-    cur = current_version(path)
-    if v <= 0 or v > cur or not os.path.exists(_manifest_path(path, v)):
-        raise ValueError(f"version {v} does not exist at {path}")
-    return cur
-
-
 def read_version(
     spark: SparkSession, path: str, version: int | None = None
 ) -> DataFrame:
-    """Read the table at `version` (default: latest). Empty table (v0) is
-    an error — there is no schema to serve.
+    """Read the table at `version` (default: latest). An empty table or
+    an empty snapshot is an error (the read rule in the module docstring).
 
     Schema-evolved tables: the read is pinned to THIS version's recorded
-    schema — files written before a column existed serve null for it
-    (mergeSchema fills the gap), files from other schema lineages never
-    leak columns into this snapshot, and time travel to a pre-evolution
-    version serves the pre-evolution schema."""
-    v = current_version(path) if version is None else version
-    _check_version(path, v)
-    m = _read_manifest(path, v)
-    files = m["files"]
-    if not files:
-        raise ValueError(f"version {v} is empty")
-    return _read_files(spark, path, m, files)
+    schema — files written before a column existed serve null for it,
+    files from other schema lineages never leak columns into this
+    snapshot, and time travel to a pre-evolution version serves the
+    pre-evolution schema."""
+    m = _open_base(path, version=version, refuse_empty=True).m
+    return _read_files(spark, path, m, m["files"])
 
 
 # explicit multi-path reads are resolved by Spark ONE PATH AT A TIME on the
@@ -2834,14 +2844,10 @@ def _read_files(
             spark, path, manifest, files, with_positions, extra_phys_cols
         )
     cm_inv = {v: k for k, v in (manifest.get("colmap") or {}).items()}
-    phys_types = (
-        {
-            (manifest.get("colmap") or {}).get(f.name, f.name): f.dataType
-            for f in _schema_from_json(manifest["schema"]).fields
-        }
-        if manifest.get("schema")
-        else {}
-    )
+    phys_types = {
+        (manifest.get("colmap") or {}).get(f.name, f.name): f.dataType
+        for f in _schema_from_json(manifest["schema"]).fields
+    }
     parts = []
     for fs, eqds in groups:
         d = _read_files_raw(
@@ -3001,46 +3007,27 @@ def _read_files_raw(
 
     `with_positions=True` (DV writers only) keeps the `__dv_file`
     (file base name) and `__dv_pos` (row position) columns on the result
-    so a new delete can record positions; requires a schema-bearing
-    manifest (every commit this writer makes — legacy tables predate
-    DVs).
+    so a new delete can record positions.
 
-    Schema-bearing manifests (every commit this writer makes) read with
-    the RECORDED schema passed explicitly — planning then costs ZERO
-    footer IO in the file count, where option(mergeSchema) runs a
-    distributed footer-merge job over every file before the first byte of
-    data moves (the j9 lesson, applied to the read side: at 10^5 files
-    that job IS the planning cost). The recorded schema is authoritative
-    by protocol — evolution is append-only and type-stable
-    (_evolved_schema) — so files predating a column serve null for it via
-    parquet missing-column semantics, identical to what the mergeSchema +
-    alignment path produced. Fields are read nullable: a file written
-    before a column existed serves nulls regardless of the declared
-    nullability, and lying to the optimizer about non-nullness would be
-    wrong in exactly that case. Legacy manifests (no recorded schema)
-    keep the mergeSchema + alignment path.
+    Files read with the manifest's RECORDED schema passed explicitly —
+    planning then costs ZERO footer IO in the file count (the j9 lesson,
+    applied to the read side: a footer-merge job over 10^5 files IS the
+    planning cost). The recorded schema is authoritative by protocol —
+    evolution is append-only and type-stable (_evolved_schema) — so files
+    predating a column serve null for it via parquet missing-column
+    semantics. Fields are read nullable: a file written before a column
+    existed serves nulls regardless of the declared nullability, and
+    lying to the optimizer about non-nullness would be wrong in exactly
+    that case.
 
     Large file sets (>= _LINKDIR_MIN_FILES) read through the snapshot
     hardlink directory — driver-side path resolution is the OTHER
     O(files) planning cost, and a single directory path retires it."""
     from pyspark.sql import functions as F
 
-    schema_json = manifest.get("schema")
     dv_pos = _load_dvs(path, manifest, files)
     need_meta = with_positions or bool(dv_pos)
-    if schema_json is None:
-        if need_meta:
-            # unreachable by protocol: DVs are committed only by
-            # delete_where_dv, which refuses legacy manifests
-            raise ValueError(
-                "deletion vectors / row positions require a schema-bearing "
-                "manifest; this legacy table predates both"
-            )
-        df = spark.read.option("mergeSchema", "true").parquet(
-            *[os.path.join(path, f) for f in files]
-        )
-        return _align_to_schema(df, manifest)
-    recorded = _schema_from_json(schema_json)
+    recorded = _schema_from_json(manifest["schema"])
     dgroups = _default_groups(manifest, files)
     if dgroups and (len(dgroups) > 1 or dgroups[0][1]):
         from functools import reduce
@@ -3122,25 +3109,6 @@ def _read_files_raw(
     if need_meta and not with_positions:
         df = df.drop("__dv_file", "__dv_pos")
     return df
-
-
-def _align_to_schema(df: DataFrame, manifest: dict) -> DataFrame:
-    """Pin a snapshot read to the manifest's recorded schema (column set,
-    order and types); files predating a column serve null for it. Legacy
-    manifests (no schema) serve the merged file schema as-is."""
-    from pyspark.sql import functions as F
-
-    schema_json = manifest.get("schema")
-    if schema_json is None:
-        return df
-    schema = _schema_from_json(schema_json)
-    have = set(df.columns)
-    return df.select(
-        *[
-            F.col(f.name) if f.name in have else F.lit(None).cast(f.dataType).alias(f.name)
-            for f in schema.fields
-        ]
-    )
 
 
 def _stat_disjoint(r, lo, hi) -> bool:
@@ -3262,28 +3230,28 @@ def read_version_pruned(
     everything that is read — pruning can degrade to a full scan, never
     to a wrong answer. Snapshot semantics match read_version (version
     pinning, schema alignment, empty-version refusal)."""
+    return _read_pruned(spark, path, None, col, lo, hi, version)
+
+
+def _read_pruned(
+    spark: SparkSession, path: str, branch: str | None, col: str, lo, hi,
+    version: int | None,
+) -> tuple[DataFrame, int, int]:
+    """The one body of read_version_pruned and read_branch_pruned."""
     from pyspark.sql import functions as F
 
-    v = current_version(path) if version is None else version
-    _check_version(path, v)
     # RAW read: sharded manifests plan summary-first in _plan_pruned_files
     # (loading every shard here would be the O(files) cost to avoid)
-    m = _read_manifest(path, v, materialize=False)
-    if ("shards" not in m and not m["files"]) or (
-        "shards" in m and m.get("n_files", 0) == 0
-    ):
-        raise ValueError(f"version {v} is empty")
+    m = _open_base(
+        path, branch, version, materialize=False, refuse_empty=True
+    ).m
     read_m, kept, skipped, total = _plan_pruned_files(path, m, col, lo, hi)
     if kept:
         df = _read_files(spark, path, read_m, kept)
-    elif m.get("schema") is not None:
-        # everything pruned: the manifest already records the schema, so
-        # the zero-row frame costs ZERO file IO — reading all footers via
-        # read_version().limit(0) here would be exactly the O(files)
-        # planning cost this feature exists to avoid
+    else:
+        # everything pruned: the manifest records the schema, so the
+        # zero-row frame costs ZERO file IO
         df = spark.createDataFrame([], _schema_from_json(m["schema"]))
-    else:  # legacy manifest: the files are the only schema source
-        df = read_version(spark, path, v).limit(0)
     return (
         df.filter(F.col(col).between(F.lit(lo), F.lit(hi))),
         skipped,
@@ -3328,14 +3296,15 @@ def read_version_bloom_pruned(
     encoding of every numeric-looking string on ID columns)."""
     from pyspark.sql import functions as F
 
-    v = current_version(path) if version is None else version
-    _check_version(path, v)
     # raw read + summary-first planning: an equality probe IS the range
     # [value, value], so recorded RANGE stats pre-prune for free (r11 —
     # the two structures compose: ranges skip whole shards/files, blooms
     # refine what ranges keep)
-    m = _read_manifest(path, v, materialize=False)
-    if value is not None and m.get("schema") is not None:
+    base = _open_base(
+        path, version=version, materialize=False, refuse_empty=True
+    )
+    v, m = base.version, base.m
+    if value is not None:
         field = {f.name: f.dataType for f in
                  _schema_from_json(m["schema"]).fields}.get(col)
         tname = field.typeName() if field is not None else None
@@ -3369,10 +3338,6 @@ def read_version_bloom_pruned(
                 "bloom's exact encoding disagree across kinds — pass the "
                 "probe in the column's own type"
             )
-    if ("shards" not in m and not m["files"]) or (
-        "shards" in m and m.get("n_files", 0) == 0
-    ):
-        raise ValueError(f"version {v} is empty")
     candidates: list[str] | None = None
     total = None
     read_m = None
@@ -3406,10 +3371,8 @@ def read_version_bloom_pruned(
         kept.append(f)
     if kept:
         df = _read_files(spark, path, read_m, kept)
-    elif m.get("schema") is not None:
+    else:
         df = spark.createDataFrame([], _schema_from_json(m["schema"]))
-    else:  # legacy manifest: files are the only schema source
-        df = read_version(spark, path, v).limit(0)
     return (
         df.filter(F.col(col) == F.lit(value)),
         total - len(kept),
@@ -3421,10 +3384,8 @@ def version_asof(path: str, ts: float) -> int:
     """TIMESTAMP AS OF resolution (Delta's `timestampAsOf` /
     Iceberg's snapshot-at): the newest COMMITTED version whose recorded
     commit time is <= `ts` (epoch seconds). Pass the result to
-    read_version for the actual time-travel read. Legacy manifests without
-    a recorded time fall back to the manifest file's mtime (same signal
-    vacuum's age gates trust). Raises if the table predates nothing —
-    i.e. every version is newer than `ts`."""
+    read_version for the actual time-travel read. Raises if the table
+    predates nothing — i.e. every version is newer than `ts`."""
     head = current_version(path)
     if head == 0:
         raise ValueError(f"no versions at {path}")
@@ -3433,11 +3394,7 @@ def version_asof(path: str, ts: float) -> int:
         # raw read: committed_at is a manifest-list scalar — materializing
         # a sharded manifest's payload here would turn a timestamp lookup
         # into the very O(files) parse sharding retires
-        m = _read_manifest(path, v, materialize=False)
-        t = m.get("committed_at")
-        if t is None:  # legacy manifest: the file's own mtime
-            t = os.path.getmtime(_manifest_path(path, v))
-        if t <= ts:
+        if _read_manifest(path, v, materialize=False)["committed_at"] <= ts:
             best = v
     if best is None:
         raise ValueError(
@@ -3451,8 +3408,7 @@ def rollback(path: str, to_version: int) -> int:
     """Append-only restore: commit a NEW version with `to_version`'s files.
     Refuses if vacuum already deleted any of them — committing a head that
     references missing files would brick every subsequent read."""
-    _check_version(path, to_version)
-    m = _read_manifest(path, to_version)
+    m = _open_base(path, version=to_version).m
     files = m["files"]
     missing = [f for f in files if not os.path.exists(os.path.join(path, f))]
     if missing:
@@ -3481,19 +3437,18 @@ def rollback(path: str, to_version: int) -> int:
     # and defaults (its row visibility) and its partition spec (the layout
     # its files were written under); its file STATS, BLOOMS and DELETION
     # VECTORS carry with the file list
-    head = current_version(path)
+    head = _open_base(path, materialize=False)
     stats = m.get("stats")
     rl_kwargs: dict = {}
-    head_raw = _read_manifest(path, head, materialize=False)
-    if head_raw.get("row_lineage"):
+    if head.m.get("row_lineage"):
         # rollback ACROSS a lineage enable: the restored stats may predate
         # the id blocks — recover each file's block from the HEAD's stats
         # (same immutable file = same rows = same ids), minting fresh ones
         # only for files the head no longer tracks. The counter continues
         # the head's (ids burned on the abandoned timeline stay burned).
-        hstats = _read_manifest(path, head).get("stats") or {}
+        hstats = _read_manifest(path, head.version).get("stats") or {}
         stats = {f: dict(rec) for f, rec in (stats or {}).items()}
-        nxt = int(head_raw.get("next_row_id") or 0)
+        nxt = int(head.m.get("next_row_id") or 0)
         for f in files:
             rec = stats.setdefault(f, {})
             if _RID_COL in rec or "__ridm" in rec:
@@ -3508,7 +3463,7 @@ def rollback(path: str, to_version: int) -> int:
                 nxt += _footer_num_rows(path, f)
         rl_kwargs = {"row_lineage": True, "next_row_id": nxt}
     return _commit(
-        path, _Base(head, None, None, m), "rollback",
+        path, _Base(head.version, None, None, m), "rollback",
         files=files, stats=stats, blooms=m.get("blooms"), dvs=m.get("dvs"),
         **rl_kwargs,
     )
@@ -3530,9 +3485,7 @@ def clone_table(
     are the local-filesystem analogue of what Delta/Iceberg do on object
     stores with shallow (absolute-URI) clones; a cross-filesystem dst
     raises (no silent fallback to a full copy)."""
-    v = current_version(src) if version is None else version
-    _check_version(src, v)
-    m = _read_manifest(src, v)
+    m = _open_base(src, version=version).m
     if os.path.isdir(_vdir(dst)) and current_version(dst) > 0:
         raise ValueError(f"clone destination {dst} is already a table")
     data_dir = os.path.join(dst, "data")
@@ -3655,9 +3608,8 @@ def table_detail(path: str, version: int | None = None) -> dict:
     O(files) cost class as the vacuum/compaction maintenance calls this
     sits beside; every other field is manifest-resident."""
     head = current_version(path)
-    v = head if version is None else version
-    _check_version(path, v)
-    m = _read_manifest(path, v)
+    base = _open_base(path, version=version)
+    v, m = base.version, base.m
     size = 0
     missing = 0
     for f in m["files"]:
@@ -3694,9 +3646,6 @@ def table_detail(path: str, version: int | None = None) -> dict:
             if dv_map.get(f) == sc  # only entries this manifest references
         )
     cm = m.get("colmap") or {}
-    schema = (
-        _schema_from_json(m["schema"]).names if m.get("schema") else None
-    )
     return {
         "path": path,
         "version": v,
@@ -3706,7 +3655,7 @@ def table_detail(path: str, version: int | None = None) -> dict:
         "num_files": len(m["files"]),
         "missing_files": missing,
         "size_bytes": size,
-        "columns": schema,
+        "columns": _schema_from_json(m["schema"]).names,
         "stats_columns": sorted(stats_cols),
         "bloom_columns": sorted(bloom_cols),
         "constraints": dict(m.get("constraints") or {}),
@@ -3721,12 +3670,11 @@ def table_detail(path: str, version: int | None = None) -> dict:
 def history(path: str) -> list[dict]:
     out = []
     for v in range(1, current_version(path) + 1):
-        # raw read: n_files/mode are manifest-list scalars on sharded
-        # manifests (n_files recorded at commit); inline manifests count
-        # their files list directly
+        # raw read: n_files/mode are manifest-list scalars
         m = _read_manifest(path, v, materialize=False)
-        n = m.get("n_files") if "shards" in m else len(m["files"])
-        out.append({"version": v, "n_files": n, "mode": m.get("mode", "?")})
+        out.append(
+            {"version": v, "n_files": _n_files(m), "mode": m.get("mode", "?")}
+        )
     return out
 
 
@@ -3755,9 +3703,12 @@ def create_branch(path: str, name: str, at_version: int | None = None) -> int:
         refs = _load_refs(path)
         if name in refs["branches"]:
             raise ValueError(f"branch {name!r} already exists at {path}")
-        v = current_version(path) if at_version is None else at_version
-        if at_version is not None:
-            _check_version(path, v)
+        # a named fork must be a committed version; the default fork of
+        # an empty table is 0 (create)
+        v = _open_base(
+            path, version=at_version, materialize=False,
+            create=at_version is None,
+        ).version
         refs["branches"][name] = {"fork": v, "head": v}
         _write_atomic(_refs_path(path), refs)
     return v
@@ -3795,13 +3746,7 @@ def read_branch(
     at or before the fork it is simply main history. Deletion vectors,
     column mapping and recorded schema apply exactly as on main (one
     shared _read_files funnel)."""
-    fork = _branch_info(path, name)["fork"]
-    v = branch_head(path, name) if version is None else version
-    if v <= fork:
-        return read_version(spark, path, v)
-    m = _read_manifest(path, v, branch=name, fork=fork)
-    if not m["files"]:
-        raise ValueError(f"branch {name!r} version {v} is empty")
+    m = _open_base(path, name, version, refuse_empty=True).m
     return _read_files(spark, path, m, m["files"])
 
 
@@ -3819,29 +3764,7 @@ def read_branch_pruned(
     planned from manifest stats (and partition-transform probes) exactly
     like read_version_pruned on main, not a full scan. Returns
     (df, files_skipped, files_total); same soundness contract."""
-    from pyspark.sql import functions as F
-
-    fork = _branch_info(path, name)["fork"]
-    v = branch_head(path, name) if version is None else version
-    if v <= fork:
-        return read_version_pruned(spark, path, col, lo, hi, version=v)
-    m = _read_manifest(path, v, materialize=False, branch=name, fork=fork)
-    if ("shards" not in m and not m["files"]) or (
-        "shards" in m and m.get("n_files", 0) == 0
-    ):
-        raise ValueError(f"branch {name!r} version {v} is empty")
-    read_m, kept, skipped, total = _plan_pruned_files(path, m, col, lo, hi)
-    if kept:
-        df = _read_files(spark, path, read_m, kept)
-    elif m.get("schema") is not None:
-        df = spark.createDataFrame([], _schema_from_json(m["schema"]))
-    else:
-        df = read_branch(spark, path, name, version=v).limit(0)
-    return (
-        df.filter(F.col(col).between(F.lit(lo), F.lit(hi))),
-        skipped,
-        total,
-    )
+    return _read_pruned(spark, path, name, col, lo, hi, version)
 
 
 def create_tag(path: str, name: str, at_version: int | None = None) -> int:
@@ -3853,8 +3776,8 @@ def create_tag(path: str, name: str, at_version: int | None = None) -> int:
         refs = _load_refs(path)
         if name in refs["tags"]:
             raise ValueError(f"tag {name!r} already exists at {path}")
-        v = current_version(path) if at_version is None else at_version
-        _check_version(path, v)  # a tag must name a committed main version
+        # a tag must name a committed main version
+        v = _open_base(path, version=at_version, materialize=False).version
         refs["tags"][name] = v
         _write_atomic(_refs_path(path), refs)
     return v
@@ -4030,8 +3953,6 @@ def enable_row_lineage(path: str) -> int:
     m = base.m
     if m.get("row_lineage"):
         return base.version
-    if m.get("schema") is None:
-        raise ValueError("legacy manifest records no schema; lineage needs one")
     schema = _schema_from_json(m["schema"])
     cm = m.get("colmap") or {}
     if _RID_COL in schema.names or _RID_COL in {
@@ -4100,9 +4021,7 @@ def read_version_lineage(
 ) -> DataFrame:
     """The snapshot with its `_row_id` column — stable across every
     maintenance rewrite, fresh only for genuinely new rows."""
-    v = current_version(path) if version is None else version
-    _check_version(path, v)
-    m = _read_manifest(path, v)
+    m = _open_base(path, version=version).m
     if not m.get("row_lineage"):
         raise ValueError(
             f"row lineage is not enabled at {path} (enable_row_lineage)"
@@ -4166,14 +4085,13 @@ def metadata_table(
         rows = []
         for v in range(1, head + 1):
             m = _read_manifest(path, v, materialize=False)
-            n = m.get("n_files") if "shards" in m else len(m["files"])
             rows.append(
                 (
                     v,
                     m.get("parent"),
                     m.get("mode", "?"),
-                    float(m.get("committed_at") or 0.0),
-                    n,
+                    float(m["committed_at"]),
+                    _n_files(m),
                     m.get("published_from"),
                     m.get("marker"),
                 )
@@ -4210,8 +4128,6 @@ def metadata_table(
             ),
         )
     if kind in ("files", "partitions"):
-        v = head if version is None else version
-        _check_version(path, v)
         files_schema = StructType(
             [
                 StructField("file", StringType(), False),
@@ -4224,7 +4140,7 @@ def metadata_table(
             ]
         )
 
-        raw = _read_manifest(path, v, materialize=False)
+        raw = _open_base(path, version=version, materialize=False).m
         if "shards" in raw:
             # DISTRIBUTED build: one row per shard entry in, the shard's
             # file rows out — the driver never materializes the file list
@@ -4267,11 +4183,11 @@ def metadata_table(
             )
             if kind == "files":
                 return files_df
-        else:
-            m = _read_manifest(path, v)
+        else:  # an inline manifest's raw form is its whole payload
             rows = list(
                 _metadata_file_rows(
-                    path, m["files"], m.get("stats") or {}, m.get("dvs") or {}
+                    path, raw["files"], raw.get("stats") or {},
+                    raw.get("dvs") or {},
                 )
             )
             files_df = spark.createDataFrame(rows, files_schema)
@@ -4353,18 +4269,12 @@ def plan_metadata_aggregate(
         ShortType,
     )
 
-    v = current_version(path) if version is None else version
-    if version is not None:
-        _check_version(path, version)
-    if v == 0:
-        raise ValueError(f"no versions at {path}")
-    m = _read_manifest(path, v, materialize=False)
+    base = _open_base(path, version=version, materialize=False)
+    v, m = base.version, base.m
 
     def fallback(reason: str) -> dict:
         return {"metadata_only": False, "reason": reason, "version": v}
 
-    if m.get("schema") is None:
-        return fallback("legacy manifest without a recorded schema")
     schema = _schema_from_json(m["schema"])
     cm = m.get("colmap") or {}
     ok_types = (
@@ -4944,16 +4854,14 @@ def merge(
 
     base = _open_base(path, branch)
     v, m = base.version, base.m
-    if m.get("schema"):
-        t_schema = [
-            (f.name, f.dataType)
-            for f in _schema_from_json(m["schema"]).fields
-        ]
-        s_schema = [(f.name, f.dataType) for f in source.schema.fields]
-        if t_schema != s_schema:
-            raise ValueError(
-                f"merge schema mismatch: target {t_schema} vs source {s_schema}"
-            )
+    t_schema = [
+        (f.name, f.dataType) for f in _schema_from_json(m["schema"]).fields
+    ]
+    s_schema = [(f.name, f.dataType) for f in source.schema.fields]
+    if t_schema != s_schema:
+        raise ValueError(
+            f"merge schema mismatch: target {t_schema} vs source {s_schema}"
+        )
     cols = [f.name for f in source.schema.fields]
     if key not in cols:
         raise ValueError(f"merge key {key!r} is not a column")
@@ -4992,10 +4900,8 @@ def merge(
             return None  # nothing overlaps and inserts are impossible
     if touched:
         target = _read_files(spark, path, m, touched)
-    elif m.get("schema"):
-        target = spark.createDataFrame([], _schema_from_json(m["schema"]))
     else:
-        target = read_version(spark, path, v).limit(0)
+        target = spark.createDataFrame([], _schema_from_json(m["schema"]))
 
     t = target.withColumn("__t_ex", F.lit(True)).alias("t")
     s = source.withColumn("__s_ex", F.lit(True)).alias("s")
@@ -5179,11 +5085,6 @@ def delete_where_dv(
     # time (_sharded_delta_plan); inline parents keep the direct path.
     base = _open_base(path, branch, materialize=False)
     m = base.m
-    if m.get("schema") is None:
-        raise ValueError(
-            "deletion vectors require a schema-bearing manifest; this "
-            "legacy table predates them — use delete_where (copy-on-write)"
-        )
     shard_cache: dict = {}  # plan + commit parse each bucket ONCE
     read_m, touched, _, _ = _plan_pruned_files(
         path, m, col, lo, hi, shard_cache=shard_cache
@@ -5437,10 +5338,6 @@ def delete_where_eq(
     vals = list(values)
     base = _open_base(path, branch, expected_version, materialize=False)
     m = base.m
-    if m.get("schema") is None:
-        raise ValueError(
-            "legacy manifest records no schema; equality deletes need one"
-        )
     _validate_eq_values(_schema_from_json(m["schema"]), col, vals)
     phys = _phys(m, col)
     os.makedirs(_vdir(path), exist_ok=True)
@@ -5493,11 +5390,6 @@ def update_where_dv(
     # sharded parents pay O(touched shards) at plan AND commit time
     base = _open_base(path, branch, materialize=False)
     m = base.m
-    if m.get("schema") is None:
-        raise ValueError(
-            "deletion vectors require a schema-bearing manifest; this "
-            "legacy table predates them — use update_where (copy-on-write)"
-        )
     unknown = sorted(
         set(assignments) - set(_schema_from_json(m["schema"]).names)
     )
@@ -5578,7 +5470,7 @@ def update_where_dv(
     cons = m.get("constraints")
     if cons:
         _enforce_constraints(
-            spark, path, new_files, cons, m.get("schema"),
+            spark, path, new_files, cons, m["schema"],
             colmap=m.get("colmap"),
         )
     return _commit(
@@ -5761,21 +5653,15 @@ def update_where(
 
     base = _open_base(path, branch)
     v, m = base.version, base.m
-    if m.get("schema"):
-        unknown = sorted(
-            set(assignments) - set(_schema_from_json(m["schema"]).names)
-        )
-        if unknown:
-            raise ValueError(f"UPDATE assigns unknown columns {unknown}")
+    unknown = sorted(
+        set(assignments) - set(_schema_from_json(m["schema"]).names)
+    )
+    if unknown:
+        raise ValueError(f"UPDATE assigns unknown columns {unknown}")
     touched, untouched = _split_files_by_range(m, col, lo, hi)
     if not touched:
         return None
     df = _read_files(spark, path, m, touched)
-    # legacy manifests have no recorded schema: the read's columns are the
-    # authority — a typo'd assignment must refuse, never no-op silently
-    unknown = sorted(set(assignments) - set(df.columns))
-    if unknown:
-        raise ValueError(f"UPDATE assigns unknown columns {unknown}")
     pred = _row_predicate(col, lo, hi, condition)
     if not df.filter(pred).limit(1).collect():
         return None
@@ -6065,21 +5951,20 @@ def table_changes_lineage(
     feeds instead."""
     from pyspark.sql import functions as F
 
-    for v in (from_version, to_version):
-        _check_version(path, v)
+    old_m, new_m = (
+        _open_base(path, version=v).m for v in (from_version, to_version)
+    )
     if from_version > to_version:
         raise ValueError(
             f"from_version {from_version} must be <= to_version {to_version}"
         )
-    old_m = _read_manifest(path, from_version)
-    new_m = _read_manifest(path, to_version)
     for v, m in ((from_version, old_m), (to_version, new_m)):
         if not m.get("row_lineage"):
             raise ValueError(
                 f"version {v} does not track row lineage (enable_row_lineage "
                 f"before the window you want to feed from)"
             )
-    if old_m.get("schema") != new_m.get("schema") or (
+    if old_m["schema"] != new_m["schema"] or (
         old_m.get("colmap") or {}
     ) != (new_m.get("colmap") or {}):
         raise ValueError(
@@ -6143,14 +6028,13 @@ def table_changes(
     a feed over a vacuumed version raises like rollback does."""
     from pyspark.sql import functions as F
 
-    for v in (from_version, to_version):
-        _check_version(path, v)
+    old_m, new_m = (
+        _open_base(path, version=v).m for v in (from_version, to_version)
+    )
     if from_version > to_version:
         raise ValueError(
             f"from_version {from_version} must be <= to_version {to_version}"
         )
-    old_m = _read_manifest(path, from_version)
-    new_m = _read_manifest(path, to_version)
     old_only, new_only = _changed_file_sets(
         path, old_m, new_m, from_version, to_version
     )
@@ -6175,9 +6059,8 @@ def table_changes(
     canon: dict = {}  # physical -> [label, dtype], FROM-side order
 
     def _merge_side(m: dict, relabel: bool) -> None:
-        sj = m.get("schema")
         cm = m.get("colmap") or {}
-        for f in _schema_from_json(sj).fields:
+        for f in _schema_from_json(m["schema"]).fields:
             phys = cm.get(f.name, f.name)
             if phys in canon:
                 if canon[phys][1] != f.dataType:
@@ -6197,40 +6080,11 @@ def table_changes(
             else:
                 canon[phys] = [f.name, f.dataType]
 
-    legacy_probe: list[str] = []
     # FROM side first pins the column ORDER (old columns, then new-only);
     # the TO side then RELABELS shared physicals — a renamed column keeps
     # its position but carries the new name
-    for m, side, relabel in ((old_m, old_only, False), (new_m, new_only, True)):
-        if m.get("schema") is not None:
-            _merge_side(m, relabel)
-        else:
-            # legacy manifest (no recorded schema): its side's columns must
-            # come from the FILES — building the union from the
-            # schema-bearing side alone would silently drop legacy-only
-            # columns from BOTH sides of the diff, cancelling real changes
-            legacy_probe += side
-    if legacy_probe:
-        # probe all legacy-side files together so ONE union schema pins
-        # both sides — per-side inference could disagree on column
-        # order/set and turn exceptAll positional comparison into garbage
-        probe = spark.read.option("mergeSchema", "true").parquet(
-            *[os.path.join(path, f) for f in legacy_probe]
-        )
-        for f in probe.schema.fields:  # legacy: physical == logical
-            if f.name in canon:
-                if canon[f.name][1] != f.dataType:
-                    wide = _wider_type(canon[f.name][1], f.dataType)
-                    if wide is None:
-                        raise ValueError(
-                            f"column {f.name!r} was retyped between versions "
-                            f"({canon[f.name][1]} vs {f.dataType}); change "
-                            f"feed across a non-widening retype is not "
-                            f"supported"
-                        )
-                    canon[f.name][1] = wide
-            else:
-                canon[f.name] = [f.name, f.dataType]
+    _merge_side(old_m, relabel=False)
+    _merge_side(new_m, relabel=True)
     # two different physicals may claim one label (drop 'x' then re-add
     # 'x': both generations in the union) — later claimants disambiguate
     seen_labels: set = set()
@@ -6259,7 +6113,7 @@ def table_changes(
         if not files:
             return None
         # this version's recorded schema + mapping serve LOGICAL names
-        # (zero footer IO for schema-bearing manifests — the j9 lesson)
+        # (zero footer IO — the j9 lesson)
         df = _read_files(spark, path, m, files)
         cm = m.get("colmap") or {}
         own = {  # this side's logical name -> canonical label
