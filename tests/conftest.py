@@ -1,3 +1,4 @@
+import contextlib
 import os
 import sys
 
@@ -29,3 +30,27 @@ def record_floor(name: str, metric: str, value: float, bound: float) -> None:
     re-deriving ground truth by hand. Any measured value that moves >2
     points between rounds gets a named investigation."""
     print(f"\nFLOOR {name} {metric}={value:.4f} bound={bound}")
+
+
+# connected_components (functions/graph.py) labels an edge list on the
+# driver when it fits under spark.sql.autoBroadcastJoinThreshold // 16 rows
+# and runs the distributed large-star/small-star rounds otherwise. Every
+# test graph is far below the cap, so CC tests run under both settings:
+# the session's threshold (driver path) and -1 (rounds always).
+CC_PATHS = pytest.mark.parametrize(
+    "cc_threshold", [None, "-1"], ids=["driver", "rounds"]
+)
+
+
+@contextlib.contextmanager
+def broadcast_threshold(spark, value):
+    """Run the body with spark.sql.autoBroadcastJoinThreshold = `value`
+    (None keeps the session's), restoring the previous value after."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    if value is not None:
+        spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        spark.conf.set(key, prev)

@@ -153,6 +153,21 @@ def test_wav_export_and_naming(spark, decoded, tmp_path):
         assert base == f"{stem}_{r['start_ms']//1000:04d}s_{r['end_ms']//1000:04d}s.wav"
 
 
+def test_wav_export_failure_drops_the_row(spark, tmp_path):
+    """A clip whose WAV cannot be written (its directory is missing) gets a
+    null wav_path, which F7 drops (pa.py:348-352); the other clip is kept."""
+    out_dir = str(tmp_path / "clips")
+    segs = spark.createDataFrame(
+        [("ok.wav", 0, 3000, [0.0] * 160, 16_000),
+         ("missing_dir/lost.wav", 0, 3000, [0.0] * 160, 16_000)],
+        "original_name string, start_ms long, end_ms long, "
+        "samples array<float>, frame_rate int",
+    )
+    saved = export_wavs(segs, out_dir).filter(filters.saved_ok()).collect()
+    assert [r["original_name"] for r in saved] == ["ok.wav"]
+    assert os.listdir(out_dir) == ["ok_0000s_0003s.wav"]
+
+
 def test_insert_or_ignore_first_writer_wins(spark, tmp_path):
     path = str(tmp_path / "meta")
     df1 = spark.createDataFrame(

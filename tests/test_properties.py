@@ -12,6 +12,7 @@ from __future__ import annotations
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from tests.conftest import CC_PATHS, broadcast_threshold
 from tts_etl_pipeline_spark.audio import kernels
 from tts_etl_pipeline_spark.audio.params import (
     MAX_DURATION_MS,
@@ -148,18 +149,17 @@ def test_bloom_membership_and_merge_homomorphism(xs, ys):
 # shapes: self-loops, duplicate edges, both orientations, isolated from the
 # edge-incident contract's perspective).
 # ---------------------------------------------------------------------------
+@CC_PATHS
 @given(
     st.lists(
         st.tuples(st.integers(0, 25), st.integers(0, 25)), min_size=1, max_size=60
     )
 )
 @settings(max_examples=12, deadline=None)
-def test_bigstar_components_match_union_find(spark_module, edges):
+def test_bigstar_components_match_union_find(spark_module, cc_threshold, edges):
     from tts_etl_pipeline_spark.functions.graph import connected_components
 
     real = [e for e in edges if e[0] != e[1]]
-    if not real:
-        return
     parent = list(range(26))
 
     def find(x):
@@ -175,7 +175,8 @@ def test_bigstar_components_match_union_find(spark_module, edges):
     touched = {v for e in real for v in e}
     expected = {v: find(v) for v in touched}
     df = spark_module.createDataFrame(edges, "src long, dst long")
-    got = {r["node"]: r["label"] for r in connected_components(df).collect()}
+    with broadcast_threshold(spark_module, cc_threshold):
+        got = {r["node"]: r["label"] for r in connected_components(df).collect()}
     assert got == expected
 
 

@@ -8,6 +8,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from tests.conftest import CC_PATHS, broadcast_threshold
 from tts_etl_pipeline_spark.functions.skew import salted_join
 from tts_etl_pipeline_spark.plans.inspect import count_shuffles, physical_plan
 from tts_etl_pipeline_spark.sources.bucketing import (
@@ -213,7 +214,8 @@ def test_salted_join_spreads_duplicate_hot_key_rows(spark):
 # the default lane (big-star vs union-find in test_properties + the 5k-node
 # stress below; propagation's fixpoint guard in test_scale_patterns) — the
 # cross-equivalence re-run stays one `-m slowtier` away (r13 verdict item 1)
-def test_bigstar_components_match_propagation(spark):
+@CC_PATHS
+def test_bigstar_components_match_propagation(spark, cc_threshold):
     """large-star/small-star (functions/graph.py) and min-label propagation
     must agree exactly — same (node, component-min) fixpoint — on chains
     (the propagation worst case) and random graphs. The big-star variant is
@@ -225,10 +227,11 @@ def test_bigstar_components_match_propagation(spark):
 
     def both(edges):
         df = spark.createDataFrame(edges, "src long, dst long")
-        lsss = {
-            (r["node"], r["label"])
-            for r in connected_components(df).collect()
-        }
+        with broadcast_threshold(spark, cc_threshold):
+            lsss = {
+                (r["node"], r["label"])
+                for r in connected_components(df).collect()
+            }
         sym = df.unionAll(df.selectExpr("dst as src", "src as dst"))
         prop = {
             (r["node"], r["label"])
@@ -248,19 +251,24 @@ def test_bigstar_components_match_propagation(spark):
     assert lsss == prop and len(lsss) > 0
 
 
-def test_bigstar_components_5k_node_stress(spark):
-    """graph.py vs a driver-side union-find oracle on a 5,000-node random
-    graph (~6,000 edges => many nontrivial components): the O(log n)
-    round bound must hold far beyond the toy sizes of the equivalence
-    test, and labels must be exactly the component minimum."""
+def _random_graph_5k():
     import random
-
-    from tts_etl_pipeline_spark.functions.graph import connected_components
 
     rng = random.Random(7)
     n = 5000
     edges = [(rng.randrange(n), rng.randrange(n)) for _ in range(6000)]
-    edges = [e for e in edges if e[0] != e[1]]
+    return n, [e for e in edges if e[0] != e[1]]
+
+
+@CC_PATHS
+def test_bigstar_components_5k_node_stress(spark, cc_threshold):
+    """graph.py vs a driver-side union-find oracle on a 5,000-node random
+    graph (~6,000 edges => many nontrivial components): the O(log n)
+    round bound must hold far beyond the toy sizes of the equivalence
+    test, and labels must be exactly the component minimum."""
+    from tts_etl_pipeline_spark.functions.graph import connected_components
+
+    n, edges = _random_graph_5k()
 
     parent = list(range(n))
 
@@ -279,8 +287,44 @@ def test_bigstar_components_5k_node_stress(spark):
     # union-find roots path-compress toward the minimum because we always
     # parent the larger root under the smaller — find(v) IS the comp min
     df = spark.createDataFrame(edges, "src long, dst long")
-    got = {r["node"]: r["label"] for r in connected_components(df).collect()}
+    with broadcast_threshold(spark, cc_threshold):
+        got = {r["node"]: r["label"] for r in connected_components(df).collect()}
     assert got == expected
+
+
+@CC_PATHS
+@pytest.mark.parametrize(
+    "edges", [[], [(1, 1), (2, 2), (2, 2)]], ids=["empty", "self_loops_only"]
+)
+def test_components_of_edgeless_graph_are_empty(spark, cc_threshold, edges):
+    """No non-self-loop edge => no node touches one => zero rows, with the
+    same (node bigint, label bigint) schema on both paths."""
+    from tts_etl_pipeline_spark.functions.graph import connected_components
+
+    df = spark.createDataFrame(edges, "src long, dst long")
+    with broadcast_threshold(spark, cc_threshold):
+        out = connected_components(df)
+        assert out.collect() == []
+    assert out.schema.simpleString() == "struct<node:bigint,label:bigint>"
+
+
+def test_small_components_solve_on_the_driver_in_few_jobs(spark):
+    """At the session's broadcast threshold the 5k-node graph is labeled on
+    the driver: the edge materialize (2 jobs) plus one bounded Arrow fetch
+    — 3 jobs at 4 and at 32 cores — instead of ~8 jobs per large-star/
+    small-star round (65 jobs for this graph at 4 cores)."""
+    from tts_etl_pipeline_spark.functions.graph import connected_components
+
+    _, edges = _random_graph_5k()
+    df = spark.createDataFrame(edges, "src long, dst long")
+    sc = spark.sparkContext
+    sc.setJobGroup("cc_driver_jobs", "connected_components job count")
+    try:
+        connected_components(df)
+    finally:
+        sc.setJobGroup(None, None)
+    jobs = sc.statusTracker().getJobIdsForGroup("cc_driver_jobs")
+    assert len(jobs) == 3, len(jobs)
 
 
 def test_bucket_pruning_reads_one_bucket(spark, sf_dir):

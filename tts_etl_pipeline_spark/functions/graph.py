@@ -21,11 +21,24 @@ Algorithm (edges undirected, no self-loops; Γ(u) = neighbors of u):
                  v ∈ Γ(u) ∪ {u}, v ≠ m
 Alternate until the edge set reaches its fixpoint: a forest of depth-1
 stars, each rooted at its component's minimum.
+
+Each round costs ~8 Spark jobs to materialize plus a 2-job convergence
+probe, and the fixpoint needs at least two rounds plus a 3-job exact
+confirmation: with the edge materialize, 37 jobs for d14's ~100-node
+graph, where scheduling, not data, is the whole cost. So an edge list small enough that the session
+would broadcast it whole is solved on the driver instead: one bounded
+Arrow fetch, then vectorised hook-to-min + pointer jumping in numpy. The
+cap is spark.sql.autoBroadcastJoinThreshold // 16 edges (two longs per
+edge); a threshold <= 0 disables the driver path, so the rounds always
+run. Both paths return the same unique fixpoint.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import numpy as np
+import pyarrow as pa
+
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tts_etl_pipeline_spark.functions.checkpoints import materialize
@@ -39,15 +52,30 @@ def connected_components(edges: DataFrame, max_rounds: int = 50) -> DataFrame:
     minimum node id in the node's component, for every node incident to at
     least one edge — identical contract to dedup._min_label_propagation.
 
-    Raises RuntimeError if no fixpoint within `max_rounds` (with the
-    O(log n) bound, hitting 50 means the input is pathological — silently
-    returning a non-fixpoint would mislabel components).
+    Which path runs: after the edge list is materialized, at most
+    `cap + 1` edges are fetched to the driver (cap = the session's
+    autoBroadcastJoinThreshold // 16, two longs per edge). If no more than
+    `cap` come back, the components are labeled there (`_driver_components`,
+    a handful of jobs in all) and returned as a (node bigint, label bigint)
+    frame; otherwise — or when the threshold is <= 0 — the large-star/
+    small-star rounds run, ~10 Spark jobs each (materialize + probe).
+
+    Raises RuntimeError if the rounds reach no fixpoint within `max_rounds`
+    (with the O(log n) bound, hitting 50 means the input is pathological —
+    silently returning a non-fixpoint would mislabel components).
     """
+    spark = edges.sparkSession
     edges = materialize(
         edges.select("src", "dst")
         .filter(F.col("src") != F.col("dst"))
         .distinct()
     )
+    # the threshold in bytes as the planner reads it (the conf may say "10MB")
+    cap = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold() // 16
+    if cap > 0:
+        head = edges.limit(cap + 1).toArrow()
+        if head.num_rows <= cap:
+            return _driver_components(spark, head)
     prev_probe = None
     for _ in range(max_rounds):
         # -------- large-star: group the SYMMETRIC adjacency by u ----------
@@ -106,3 +134,31 @@ def connected_components(edges: DataFrame, max_rounds: int = 50) -> DataFrame:
         .withColumn("label", F.col("node"))
     )
     return members.unionAll(roots).distinct()
+
+
+def _driver_components(spark: SparkSession, edges: pa.Table) -> DataFrame:
+    """Label the components of a small Arrow edge list (src, dst; distinct,
+    no self-loops) in numpy: hook each edge's larger root under its smaller
+    one, pointer-jump to roots, repeat until no edge spans two roots.
+    Roots only ever move to smaller ids, so each component's root is its
+    minimum node."""
+    src = edges.column("src").to_numpy()
+    dst = edges.column("dst").to_numpy()
+    nodes, idx = np.unique(np.concatenate([src, dst]), return_inverse=True)
+    u, v = idx[: len(src)], idx[len(src) :]
+    # nodes is sorted, so the minimum index of a component is its minimum id
+    parent = np.arange(len(nodes))
+    while True:
+        pu, pv = parent[u], parent[v]
+        live = pu != pv
+        if not live.any():
+            break
+        np.minimum.at(parent, np.maximum(pu, pv)[live], np.minimum(pu, pv)[live])
+        while True:
+            jumped = parent[parent]
+            if np.array_equal(jumped, parent):
+                break
+            parent = jumped
+    return spark.createDataFrame(
+        pa.table({"node": nodes, "label": nodes[parent]}), "node bigint, label bigint"
+    )

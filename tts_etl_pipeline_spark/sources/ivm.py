@@ -265,8 +265,9 @@ def maintain_components_from_cdf(
     The incremental insight: a committed labeling L is itself a
     contracted graph. A new edge batch only ever MERGES existing
     components, so each step runs connected_components (functions/
-    graph.py, the O(log n) large-star/small-star kernel) on the LABEL
-    GRAPH — edges (L[u], L[v]) for the batch's endpoints — whose size is
+    graph.py: solved on the driver when small, else the O(log n)
+    large-star/small-star rounds) on the LABEL GRAPH — edges
+    (L[u], L[v]) for the batch's endpoints — whose size is
     O(components touched by the batch), never O(all nodes). The
     resulting label remap is batch-sized: broadcast it, relabel the
     state rows whose label changed, insert the batch's new nodes, ONE
@@ -351,22 +352,19 @@ def maintain_components_from_cdf(
             .filter(F.col("src") != F.col("dst"))
             .distinct()
         )
-        remap = connected_components(lgraph) if lgraph.limit(1).count() else None
-        # remap is LABEL-GRAPH-sized (merged components only): broadcast it
+        # remap is LABEL-GRAPH-sized (merged components only; empty when
+        # the batch merges nothing): broadcast it
+        remap = connected_components(lgraph)
+        r = F.broadcast(
+            remap.select(F.col("node").alias("__old"), F.col("label").alias("__new"))
+        )
+
         def relabeled(df):
-            if remap is None:
-                return df
-            r = F.broadcast(
-                remap.select(
-                    F.col("node").alias("__old"), F.col("label").alias("__new")
-                )
-            )
             return df.join(r, df["label"] == F.col("__old"), "left").select(
                 "node", F.coalesce("__new", "label").alias("label")
             )
 
-        if remap is not None:
-            report["label_merges"] += remap.count()
+        report["label_merges"] += remap.count()
 
         def _rows(df, vv):
             return df.select(
@@ -400,18 +398,9 @@ def maintain_components_from_cdf(
             # the Iceberg-CDC path (fresh files + one equality delete on
             # `node`) — the unchanged millions ride by reference. compact()
             # / purge_eq bound the accreted delete list like DV debt.
-            if remap is None:
-                changed_old = fresh.limit(0)
-            else:
-                r = F.broadcast(
-                    remap.select(
-                        F.col("node").alias("__old"),
-                        F.col("label").alias("__new"),
-                    )
-                )
-                changed_old = state.join(
-                    r, state["label"] == F.col("__old")
-                ).select("node", F.col("__new").alias("label"))
+            changed_old = state.join(
+                r, state["label"] == F.col("__old")
+            ).select("node", F.col("__new").alias("label"))
             batch = _rows(
                 changed_old.unionByName(relabeled(fresh)), v
             ).unionByName(meta_row)

@@ -124,7 +124,7 @@ def export_wavs(segments_df: DataFrame, out_dir: str) -> DataFrame:
                         w.setframerate(int(rate))
                         w.writeframes(ints.tobytes())
                     paths.append(path)
-                except Exception:
+                except (OSError, wave_mod.Error):
                     paths.append(None)  # pa.py:348-352 -> dropped by F7
             pdf = pdf.drop(columns=["wav_name"]).copy()
             pdf["wav_path"] = paths
