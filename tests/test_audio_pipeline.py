@@ -185,6 +185,93 @@ def test_insert_or_ignore_first_writer_wins(spark, tmp_path):
     assert final["a.wav"] != "NEW"  # first writer wins
 
 
+def test_insert_into_existing_table_reads_keys_without_schema_job(spark, tmp_path):
+    """The existing keys are read with the key column's own schema, so a
+    second insert fires no parquet schema-inference job: 6 jobs, where
+    inferring the table's schema made it 7."""
+    path = str(tmp_path / "meta")
+    schema = "wav_path string, text string"
+    insert_or_ignore(spark.createDataFrame([("a.wav", "x")], schema), path)
+    df = spark.createDataFrame([("a.wav", "NEW"), ("c.wav", "w")], schema)
+    sc = spark.sparkContext
+    sc.setJobGroup("sink_second_insert", "insert_or_ignore job count")
+    try:
+        assert insert_or_ignore(df, path) == 1
+    finally:
+        sc.setJobGroup(None, None)
+    jobs = sc.statusTracker().getJobIdsForGroup("sink_second_insert")
+    assert len(jobs) == 6, len(jobs)
+
+
+def _riff(fmt_body: bytes, data: bytes) -> bytes:
+    import struct
+
+    chunks = b"fmt " + struct.pack("<I", len(fmt_body)) + fmt_body
+    chunks += b"data" + struct.pack("<I", len(data)) + data
+    return b"RIFF" + struct.pack("<I", 4 + len(chunks)) + b"WAVE" + chunks
+
+
+def test_undecodable_files_are_skipped(spark, tmp_path):
+    """Garbage bytes, an empty file, a truncated header, a RIFF with no
+    fmt/data chunks, a PCM header with frame rate 0 and a non-PCM fmt chunk
+    too short for its fields are each skipped (pa.py:91-92); the good file
+    next to them decodes and is the only one whose clips are written."""
+    import struct
+
+    wav_dir = tmp_path / "wavs"
+    wav_dir.mkdir()
+    good = dict(synth.standard_fixture_files())["clean_three_bursts.wav"]
+    (wav_dir / "good.wav").write_bytes(synth.to_wav_bytes(good))
+    (wav_dir / "garbage.wav").write_bytes(b"\x07not a wav file at all" * 8)
+    (wav_dir / "empty.wav").write_bytes(b"")
+    (wav_dir / "truncated.wav").write_bytes(synth.to_wav_bytes(good)[:20])
+    (wav_dir / "no_chunks.wav").write_bytes(b"RIFF\x04\x00\x00\x00WAVE")
+    pcm16_rate0 = struct.pack("<HHIIHH", 1, 1, 0, 0, 2, 16)
+    (wav_dir / "rate0.wav").write_bytes(_riff(pcm16_rate0, b"\x00\x10" * 800))
+    mulaw_short_fmt = struct.pack("<HHIIH", 7, 1, 8000, 8000, 1)
+    (wav_dir / "short_fmt.wav").write_bytes(_riff(mulaw_short_fmt, b"\x7f" * 800))
+    rows = decode_files(read_wav_dir(spark, str(wav_dir))).collect()
+    assert [r["original_name"] for r in rows] == ["good.wav"]
+    out_dir = tmp_path / "clips"
+    n = run_pipeline(spark, str(wav_dir), str(out_dir), str(tmp_path / "meta"))
+    clips = os.listdir(out_dir)
+    assert n == len(clips) > 0
+    assert all(c.startswith("good_") for c in clips)
+
+
+def test_fused_stage_matches_stage_functions(spark, wav_dir, tmp_path):
+    """run_pipeline's one-pass decode/segment/score stage is the public
+    stage functions composed: the same metadata rows, floats included, and
+    byte-identical clips."""
+    import hashlib
+
+    out_a, out_b = tmp_path / "fused", tmp_path / "staged"
+    run_pipeline(spark, wav_dir, str(out_a), str(tmp_path / "meta"))
+    fused = spark.read.parquet(str(tmp_path / "meta"))
+
+    scored = with_metrics(segment(decode_files(read_wav_dir(spark, wav_dir))))
+    gated = scored.filter(filters.audio_quality_gate()).filter(filters.asr_length_guard())
+    clean = transcribe(gated, model="fake").filter(filters.text_quality_gate())
+    flagged = with_overlap_flag(export_wavs(clean, str(out_b))).filter(filters.saved_ok())
+    staged = flagged.withColumn(
+        "overlap_flag", F.coalesce("overlap_flag", F.lit(False))
+    ).select(*fused.columns)
+
+    def rows(df):
+        return sorted(
+            tuple(os.path.basename(v) if k == "wav_path" else v for k, v in r.asDict().items())
+            for r in df.collect()
+        )
+
+    got, want = rows(fused), rows(staged)
+    assert got == want and got
+
+    def digests(d):
+        return {f.name: hashlib.sha1(f.read_bytes()).hexdigest() for f in d.iterdir()}
+
+    assert digests(out_a) == digests(out_b) and len(digests(out_a)) == len(got)
+
+
 def test_e2e_golden(spark, wav_dir, tmp_path):
     out_dir = str(tmp_path / "clips")
     table = str(tmp_path / "processed_data")

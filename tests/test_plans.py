@@ -1168,3 +1168,57 @@ def test_rebalance_scan_fired_path_and_guard(spark, tmp_path):
     assert small_bytes < REBALANCE_MIN_BYTES
     sdf = spark.read.parquet(os.path.join(sf, "small.parquet"))
     assert rebalance_scan(sdf, spark, sf, "small", per_task_bytes=per_task) is sdf
+
+
+def _python_nodes(plan: str) -> list[tuple[str, str]]:
+    """(node name, detail block) for each Python-evaluating node of a
+    formatted plan: MapInArrow / MapInPandas / ArrowEvalPython / ..."""
+    out = []
+    for block in re.split(r"\n(?=\(\d+\) )", plan):
+        m = re.match(r"\(\d+\) (\w*(?:Python|InArrow|InPandas)\w*)", block)
+        if m:
+            out.append((m.group(1), block))
+    return out
+
+
+@pytest.fixture(scope="module")
+def fixture_wavs(tmp_path_factory):
+    from tts_etl_pipeline_spark.audio import synth
+
+    d = tmp_path_factory.mktemp("plan_wavs")
+    synth.write_fixture_dir(str(d))
+    return str(d)
+
+
+def test_audio_stages_slice_in_python_and_score_once(spark, fixture_wavs):
+    """decode -> segment -> metrics -> F2 is three Arrow map stages: no
+    Generate (segment rows never carry the whole file's array) and no
+    ArrowEvalPython, and the metrics come out of exactly one Python node —
+    the F2 filter sits above it and cannot re-run it on whole files."""
+    from tts_etl_pipeline_spark.audio import filters
+    from tts_etl_pipeline_spark.audio.decode import decode_files, read_wav_dir
+    from tts_etl_pipeline_spark.audio.dsp import with_metrics
+    from tts_etl_pipeline_spark.audio.segmentation import segment
+
+    files = decode_files(read_wav_dir(spark, fixture_wavs))
+    df = with_metrics(segment(files)).filter(filters.audio_quality_gate())
+    plan = physical_plan(df)
+    assert "Generate" not in plan, plan
+    nodes = _python_nodes(plan)
+    assert [name for name, _ in nodes] == ["MapInArrow"] * 3, plan
+    scoring = [b for _, b in nodes if "rms#" in b.split("Arguments:")[1]]
+    assert len(scoring) == 1, plan
+
+
+def test_pipeline_window_shuffles_no_samples(spark, fixture_wavs, tmp_path):
+    """run_pipeline's DAG (explained, not run): no Generate, and the W1
+    window's one Exchange moves metadata only — the clips are exported
+    before it, so `samples` is no longer a column there."""
+    from tts_etl_pipeline_spark.audio.pipeline import build_pipeline
+
+    plan = physical_plan(build_pipeline(spark, fixture_wavs, str(tmp_path / "clips")))
+    assert "Generate" not in plan, plan
+    exchanges = re.findall(r"^\(\d+\) Exchange\nInput \[\d+\]: \[(.*)\]$", plan, re.MULTILINE)
+    assert len(exchanges) == 1, plan
+    assert "original_name#" in exchanges[0]
+    assert "samples#" not in exchanges[0], exchanges[0]

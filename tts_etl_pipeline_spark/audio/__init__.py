@@ -2,10 +2,11 @@
 as a PySpark library.
 
 Stage map (reference file:line -> module):
-    glob/scan + decode (pa.py:79-92,396)  -> decode.py  (binaryFile + mapInPandas)
-    normalize/downmix/resample (pa.py:85-89) -> dsp.py
-    segmentation T1 (pa.py:95-164)        -> segmentation.py (pandas UDF + explode)
+    glob/scan + decode (pa.py:79-92,396)  -> decode.py  (binaryFile + mapInArrow)
+    normalize/downmix/resample (pa.py:85-89) -> decode.py (kernels.py math)
+    segmentation T1 (pa.py:95-164)        -> segmentation.py (numpy slice per file)
     metrics P4-P7 (pa.py:167-210)         -> dsp.py
+    decode -> T1 -> P4-P7 fused, one Python pass per file -> pipeline.py
     quality gate F2 (pa.py:212-238)       -> filters.py
     ASR M1 (pa.py:241-278)                -> asr.py (mapInPandas, injectable model)
     text filters F4-F6 + overlap W1 (pa.py:281-333) -> filters.py / overlap.py

@@ -44,6 +44,8 @@ def parse_riff(content: bytes) -> dict:
         (size,) = struct.unpack_from("<I", content, pos + 4)
         body = content[pos + 8 : pos + 8 + size]
         if tag == b"fmt ":
+            if len(body) < 16:
+                raise ValueError("WAV fmt chunk too short")
             (fmt_tag, channels, rate, _byterate, block_align, bits) = (
                 struct.unpack_from("<HHIIHH", body, 0)
             )

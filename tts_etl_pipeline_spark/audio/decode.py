@@ -2,7 +2,7 @@
 
 Spark-first design: `binaryFile` gives one row per file with the raw bytes
 (path, modificationTime, length, content); decode happens executor-side in
-mapInPandas, so a 100 TB corpus decodes in parallel with no driver
+mapInArrow, so a 100 TB corpus decodes in parallel with no driver
 involvement and bounded memory per task (the reference's lazy one-file
 generator, pa.py:79-92, is exactly Spark's partition iterator).
 
@@ -18,12 +18,13 @@ import wave
 from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame, SparkSession
 
 from tts_etl_pipeline_spark.audio import kernels
 from tts_etl_pipeline_spark.audio import params as P
+from tts_etl_pipeline_spark.audio.batches import float_list_array, record_batch
 from tts_etl_pipeline_spark.audio.schema import AUDIO_FILE_SCHEMA
 
 
@@ -66,49 +67,66 @@ def decode_wav_bytes(content: bytes) -> tuple[np.ndarray, int, int]:
         else:
             raise ValueError(f"unsupported WAV format tag 0x{tag:04x}")
         x = pcm.astype(np.float32) / 32767.0
-        return x, fmt["rate"], fmt["channels"]
-    if width == 2:
-        x = np.frombuffer(raw, dtype="<i2").astype(np.float32) / 32767.0
-    elif width == 4:
-        x = np.frombuffer(raw, dtype="<i4").astype(np.float32) / 2147483647.0
-    elif width == 1:  # unsigned 8-bit PCM
-        x = (np.frombuffer(raw, dtype=np.uint8).astype(np.float32) - 128.0) / 127.0
+        rate, channels = fmt["rate"], fmt["channels"]
     else:
-        raise ValueError(f"unsupported PCM sample width {width}")
+        if width == 2:
+            x = np.frombuffer(raw, dtype="<i2").astype(np.float32) / 32767.0
+        elif width == 4:
+            x = np.frombuffer(raw, dtype="<i4").astype(np.float32) / 2147483647.0
+        elif width == 1:  # unsigned 8-bit PCM
+            x = (np.frombuffer(raw, dtype=np.uint8).astype(np.float32) - 128.0) / 127.0
+        else:
+            raise ValueError(f"unsupported PCM sample width {width}")
+    if rate <= 0:
+        raise ValueError(f"bad frame rate {rate}")
     return x, rate, channels
 
 
+def decode_file(content: bytes, normalize: bool = True) -> np.ndarray | None:
+    """One WAV file -> mono float32 at TARGET_FRAME_RATE: decode, P1
+    peak-normalize, P2 downmix, P3 resample. None for a file that does not
+    decode — the reference's skip-and-continue (pa.py:91-92). The catch
+    names what a bad file raises: garbage bytes, a RIFF without fmt/data
+    and a header the decoders refuse give ValueError, an empty or truncated
+    header EOFError, and wave.Error is the stdlib reader's own refusal;
+    anything else is a bug and fails the task."""
+    try:
+        x, rate, channels = decode_wav_bytes(content)
+    except (wave.Error, ValueError, EOFError):
+        return None
+    x = kernels.downmix_mono(x, channels)
+    if normalize:
+        x = kernels.peak_normalize(x)
+    return kernels.resample_linear(x, rate, P.TARGET_FRAME_RATE)
+
+
+def decoded_files(
+    batches: Iterator[pa.RecordBatch], normalize: bool = True
+) -> Iterator[tuple[str, np.ndarray]]:
+    """binaryFile (path, content) batches -> (original_name, samples) per
+    decodable file, one file's content in Python at a time."""
+    for batch in batches:
+        paths, contents = batch.column("path"), batch.column("content")
+        for i in range(batch.num_rows):
+            x = decode_file(contents[i].as_py(), normalize)
+            if x is not None:
+                yield paths[i].as_py().rsplit("/", 1)[-1], x
+
+
 def decode_files(binary_df: DataFrame, normalize: bool = True) -> DataFrame:
-    """mapInPandas decode + P1 peak-normalize + P2 downmix + P3 resample.
+    """binaryFile rows -> one AUDIO_FILE_SCHEMA row per decodable file
+    (mapInArrow, one output batch per file)."""
 
-    Per-file decode failures are skipped with a warning row dropped, matching
-    the reference's skip-and-continue (pa.py:91-92) but without losing the
-    whole batch.
-    """
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            names, samples_col, rates, chans = [], [], [], []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                try:
-                    x, rate, channels = decode_wav_bytes(content)
-                    x = kernels.downmix_mono(x, channels)
-                    if normalize:
-                        x = kernels.peak_normalize(x)
-                    x = kernels.resample_linear(x, rate, P.TARGET_FRAME_RATE)
-                except Exception:
-                    continue  # pa.py:91-92 — skip undecodable file
-                names.append(path.rsplit("/", 1)[-1])
-                samples_col.append(x)
-                rates.append(P.TARGET_FRAME_RATE)
-                chans.append(1)
-            yield pd.DataFrame(
-                {
-                    "original_name": names,
-                    "samples": samples_col,
-                    "frame_rate": rates,
-                    "channels": chans,
-                }
+    def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for name, x in decoded_files(batches, normalize):
+            yield record_batch(
+                AUDIO_FILE_SCHEMA,
+                [
+                    pa.array([name]),
+                    float_list_array([x]),
+                    pa.array([P.TARGET_FRAME_RATE], pa.int32()),
+                    pa.array([P.TARGET_CHANNELS], pa.int32()),
+                ],
             )
 
-    return binary_df.select("path", "content").mapInPandas(gen, AUDIO_FILE_SCHEMA)
+    return binary_df.select("path", "content").mapInArrow(gen, AUDIO_FILE_SCHEMA)

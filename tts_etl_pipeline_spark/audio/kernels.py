@@ -1,6 +1,7 @@
 """Pure-numpy DSP kernels — the per-segment math, free of any Spark
 dependency so unit tests exercise them directly against hand-computed
-oracles, and the pandas UDFs in dsp.py/segmentation.py stay thin wrappers.
+oracles, and the Arrow stages in decode.py/segmentation.py/dsp.py/pipeline.py
+stay thin wrappers.
 
 All kernels take float32/float64 samples normalized to [-1, 1].
 """

@@ -19,19 +19,7 @@ AUDIO_FILE_SCHEMA = T.StructType(
     ]
 )
 
-# segment bounds produced by T1 (unpadded, pa.py:159-160)
-SEGMENT_BOUNDS_TYPE = T.ArrayType(
-    T.StructType(
-        [
-            T.StructField("start_ms", T.LongType(), False),
-            T.StructField("end_ms", T.LongType(), False),
-            T.StructField("pad_start_ms", T.LongType(), False),
-            T.StructField("pad_end_ms", T.LongType(), False),
-        ]
-    )
-)
-
-# one row per segment (post-explode + slice)
+# one row per segment: unpadded bounds, padded slice (segmentation.py)
 SEGMENT_SCHEMA = T.StructType(
     [
         T.StructField("original_name", T.StringType(), False),
@@ -49,6 +37,9 @@ METRICS_TYPE = T.StructType(
         T.StructField("music_ratio", T.DoubleType(), True),
     ]
 )
+
+# the pipeline's fused decode/segment/score stage: a segment plus its metrics
+SCORED_SEGMENT_SCHEMA = T.StructType(SEGMENT_SCHEMA.fields + METRICS_TYPE.fields)
 
 # mirror of the reference's SQLite processed_data table (pa.py:58-69) with the
 # modeling fix from SURVEY §1.2: start/end stored as columns, not only in the

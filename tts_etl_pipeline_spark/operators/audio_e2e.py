@@ -2,7 +2,7 @@
 
 Runs the end-to-end DAG S1 (binaryFile scan) -> decode -> T1 segmentation ->
 P4-P7 metrics -> F2 gate -> F3 guard -> fake-M1 ASR -> F4-F6 text gates ->
-W1 overlap window -> S5 wav export -> F7 -> S4 insert-or-ignore over the
+S5 wav export -> W1 overlap window -> F7 -> S4 insert-or-ignore over the
 deterministic synthesized fixture set (audio/synth.py), then returns the
 metadata table contents (pa.py:393-426 is the reference spec).
 

@@ -22,6 +22,7 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from tts_etl_pipeline_spark.audio import params as P
 
@@ -45,7 +46,8 @@ def insert_or_ignore(
     spark = df.sparkSession
     incoming = df.dropDuplicates([key])
     if _table_exists(spark, table_path):
-        existing_keys = spark.read.parquet(table_path).select(key)
+        # an explicit one-column schema: no parquet schema-inference job
+        existing_keys = spark.read.schema(StructType([df.schema[key]])).parquet(table_path)
         incoming = incoming.join(existing_keys, key, "left_anti")
     # persist before count+write: without it the count action and the write
     # action would each execute the FULL upstream DAG (in run_pipeline that
@@ -92,7 +94,9 @@ def clip_filename(stem_col, start_col, end_col):
 
 def export_wavs(segments_df: DataFrame, out_dir: str) -> DataFrame:
     """S5 (pa.py:335-352): write each segment's padded samples as a WAV clip;
-    wav_path column holds the written path or null on failure."""
+    wav_path column holds the written path or null on failure. The output
+    drops `samples`: once the clip is on disk nothing downstream reads
+    them, so later shuffles move metadata only."""
     os.makedirs(out_dir, exist_ok=True)
     stem = F.regexp_replace("original_name", r"\.wav$", "")
     named = segments_df.withColumn(
@@ -100,7 +104,9 @@ def export_wavs(segments_df: DataFrame, out_dir: str) -> DataFrame:
     )
     fields = named.schema.fields
     out_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in fields if f.name != "wav_name"
+        f"{f.name} {f.dataType.simpleString()}"
+        for f in fields
+        if f.name not in ("wav_name", "samples")
     )
     out_schema += ", wav_path string"
 
@@ -126,7 +132,7 @@ def export_wavs(segments_df: DataFrame, out_dir: str) -> DataFrame:
                     paths.append(path)
                 except (OSError, wave_mod.Error):
                     paths.append(None)  # pa.py:348-352 -> dropped by F7
-            pdf = pdf.drop(columns=["wav_name"]).copy()
+            pdf = pdf.drop(columns=["wav_name", "samples"])
             pdf["wav_path"] = paths
             yield pdf
 
