@@ -635,6 +635,30 @@ def test_checkpoints_and_scratch_dirs_go_through_the_helpers():
     )
 
 
+def test_sessions_are_configured_only_by_get_spark():
+    """session.py::get_spark is the one place sessions are configured, so
+    no second builder can bypass its settings (the worker daemon among
+    them)."""
+    import pathlib
+
+    import tts_etl_pipeline_spark
+
+    pkg = pathlib.Path(tts_etl_pipeline_spark.__file__).parent
+    offenders = []
+    for py in sorted(pkg.rglob("*.py")):
+        rel = py.relative_to(pkg).as_posix()
+        if rel == "session.py":
+            continue
+        for i, line in enumerate(py.read_text().splitlines()):
+            if line.lstrip().startswith("#"):
+                continue
+            if "SparkSession.builder" in line:
+                offenders.append(f"{rel}:{i + 1}: {line.strip()}")
+    assert not offenders, (
+        "build sessions with session.get_spark:\n" + "\n".join(offenders)
+    )
+
+
 def test_snapshot_reads_go_through_the_opener():
     """sources/versioned.py is the one reader of the manifest format:
     every other module opens a snapshot through `_open_base` (or a public
