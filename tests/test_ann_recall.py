@@ -15,9 +15,6 @@ Measured at sf0.001 (2026-08-13, pyspark 4.1.2):
      ivf tests for why the fixture number is the data's ceiling, not the
      operator's;
   v4 BRP-LSH radius join: recall(r<=10) = 0.935;
-  d5 MinHash-LSH at the 0.2-distance production threshold:
-     recall(jaccard>=0.8) ~ 1.0 (OR-amplified, catches everything; its cost
-     is the candidate blowup d11's AND-amplified banding fixes);
   d11 banded MinHash: recall(j>=0.9) = 0.897, zero false positives;
   d6 SimHash: recall(tf-cosine>=0.95) = 0.964.
 
@@ -27,7 +24,7 @@ angle between term-FREQUENCY vectors. On this vocab-saturated corpus most
 doc pairs share nearly all tokens (set-Jaccard >= 0.6 for tens of
 thousands of pairs) while their frequency profiles differ — measured
 against set-Jaccard d6 would show 3% "recall", which is a property of the
-metric mismatch, not the operator. MinHash (d5) is the set-similarity
+metric mismatch, not the operator. MinHash (d11) is the set-similarity
 tool; SimHash is the frequency-direction tool; a pipeline picks by which
 notion of "near-duplicate" it means.
 """
@@ -39,7 +36,6 @@ import numpy as np
 from pyspark.sql import functions as F
 
 from tests.conftest import record_floor
-from tts_etl_pipeline_spark.operators.dedup import d5_minhash_lsh_neardup
 from tts_etl_pipeline_spark.operators.similarity import (
     N_QUERY_VECS,
     v1_topk_cosine_exact,
@@ -320,26 +316,6 @@ def test_dedup_e2e_agreement_floor(spark, sf_dir):
     agree = sum((d in exact_kept) == (d in got_kept) for d in ids) / len(ids)
     record_floor("d12_neardup_dedup_e2e", "keep_agreement", agree, 0.95)
     assert agree >= 0.95, f"dedup-e2e agreement collapsed to {agree:.3f}"
-
-
-def test_minhash_lsh_recall_floor(spark, sf_dir):
-    docs = (
-        table(spark, sf_dir, "documents")
-        .select("doc_id", F.lower(F.trim("text")).alias("t"))
-        .collect()
-    )
-    toks = {r.doc_id: set((r.t or "").split()) for r in docs}
-    ids = sorted(toks)
-    truth = set()
-    for i, a in enumerate(ids):
-        for b in ids[i + 1 :]:
-            sa, sb = toks[a], toks[b]
-            if (sa or sb) and len(sa & sb) / len(sa | sb) >= 0.8:
-                truth.add((a, b))
-    got = {(r.id_a, r.id_b) for r in d5_minhash_lsh_neardup(spark, sf_dir).collect()}
-    recall = len(truth & got) / max(len(truth), 1)
-    record_floor("d5_demo_minhash_lsh", "recall_j08", recall, 0.90)
-    assert recall >= 0.90, f"MinHash-LSH recall(j>=0.8) collapsed to {recall:.2f}"
 
 
 def test_pq_recall_compression_and_determinism(spark, sf_dir):

@@ -151,7 +151,7 @@ def test_merge_prunes_disjoint_files_by_reference(spark):
                 assert os.stat(os.path.join(path, f)).st_mtime_ns == sig[f]
                 carried += 1
         assert carried >= 6  # 8 range files, only the head overlaps
-        # cluster=True keeps the REWRITE key-clustered: a second confined
+        # the range exchange keeps the REWRITE key-clustered: a second confined
         # merge still prunes (the hash-partitioned rewrite would not)
         m2 = manifest(path, v)
         sig2 = {

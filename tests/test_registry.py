@@ -17,9 +17,9 @@ def test_registry_importable_and_consistent():
     # split rule is deterministic and replicated in SQL at full precision)
     # plus the audio E2E pipeline (inputs are synthesized WAVs, not the
     # driver's parquet tables — DuckDB has nothing equivalent to run)
-    # d5_minhash_lsh_neardup is deliberately ABSENT: the pyspark.ml demo is
-    # retired from the registry (OR-amplified LSH goes quadratic on
-    # self-similar corpora) — code + pytest remain, drivers can't reach it
+    # d5_minhash_lsh_neardup stays ABSENT: pyspark.ml's OR-amplified LSH
+    # goes quadratic on self-similar corpora; d11's banded MinHash is the
+    # one LSH near-dedup path
     assert "d5_minhash_lsh_neardup" not in qs
     rows_only = set(qs) - set(osql)
     assert rows_only == {

@@ -201,7 +201,7 @@ def test_cdf_maintained_counts_equal_recompute_across_commit_kinds(spark, tmp_pa
             [(2, "c"), (3, "DEL"), (7, "a")], "k long, grp string"
         ),
         key="k",
-        delete_on="grp = 'DEL'",
+        delete_on="s.grp = 'DEL'",
     )
     compact(spark, src)  # v4: empty feed batch
 

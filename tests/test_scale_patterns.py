@@ -92,45 +92,26 @@ def test_salted_join_left_outer(spark, sf_dir):
     assert names[(99, "orphan")] is None
 
 
-def test_scalable_topk_matches_window_topk(spark, sf_dir):
-    """The heap-merge top-k must rank identically to the window-based v1
-    (cosine VALUES differ in low bits — numpy matmul is not a sequential
-    fold — but the neighbor ranking must agree)."""
-    from tts_etl_pipeline_spark.operators.similarity import (
-        N_QUERY_VECS,
-        topk_cosine_scalable,
-        v1_topk_cosine_exact,
-    )
-    from tts_etl_pipeline_spark.sources.tables import table
-
-    emb = table(spark, sf_dir, "embeddings")
-    fast = topk_cosine_scalable(emb, list(range(N_QUERY_VECS)), k=10)
-    slow = v1_topk_cosine_exact(spark, sf_dir)
-    a = {(r["q_id"], r["rn"]): r["n_id"] for r in fast.collect()}
-    b = {(r["q_id"], r["rn"]): r["n_id"] for r in slow.collect()}
-    assert a == b and len(a) == N_QUERY_VECS * 10
-
-
-def test_label_propagation_fixpoint_guard(spark):
-    """d8's connected components must never silently return unconverged
-    labels: a chain longer than the iteration cap raises instead of
-    mislabeling (VERDICT r2 item 3), and a chain within the cap converges
-    to the true single component."""
-    from tts_etl_pipeline_spark.operators.dedup import _min_label_propagation
+def test_components_rounds_fixpoint_guard(spark):
+    """connected_components must never silently return unconverged
+    labels: on the distributed rounds, a chain that needs more rounds than
+    the cap raises instead of mislabeling (VERDICT r2 item 3), and a chain
+    within the same cap converges to the true single component (a 30-node
+    chain needs 6 rounds, an 8-node chain 4)."""
+    from tts_etl_pipeline_spark.functions.graph import connected_components
 
     def chain(n):
-        edges = [(i, i + 1) for i in range(n - 1)]
         return spark.createDataFrame(
-            edges + [(b, a) for a, b in edges], "src long, dst long"
+            [(i, i + 1) for i in range(n - 1)], "src long, dst long"
         )
 
-    with pytest.raises(RuntimeError, match="did not converge"):
-        _min_label_propagation(chain(30), max_iters=5)
-
-    labels = {
-        r["node"]: r["label"]
-        for r in _min_label_propagation(chain(8), max_iters=10).collect()
-    }
+    with broadcast_threshold(spark, "-1"):
+        with pytest.raises(RuntimeError, match="did not converge"):
+            connected_components(chain(30), max_rounds=5)
+        labels = {
+            r["node"]: r["label"]
+            for r in connected_components(chain(8), max_rounds=5).collect()
+        }
     assert labels == {i: 0 for i in range(8)}
 
 
@@ -209,68 +190,18 @@ def test_salted_join_spreads_duplicate_hot_key_rows(spark):
         salted_join(fact, dim, "k", how="cross")
 
 
-@pytest.mark.slowtier  # 53 s: the 63-round propagation side of the chain is
-# the whole cost, and both algorithms carry their own ground-truth pins in
-# the default lane (big-star vs union-find in test_properties + the 5k-node
-# stress below; propagation's fixpoint guard in test_scale_patterns) — the
-# cross-equivalence re-run stays one `-m slowtier` away (r13 verdict item 1)
-@CC_PATHS
-def test_bigstar_components_match_propagation(spark, cc_threshold):
-    """large-star/small-star (functions/graph.py) and min-label propagation
-    must agree exactly — same (node, component-min) fixpoint — on chains
-    (the propagation worst case) and random graphs. The big-star variant is
-    the 100 TB path: O(log n) rounds vs O(diameter)."""
-    import random
-
-    from tts_etl_pipeline_spark.functions.graph import connected_components
-    from tts_etl_pipeline_spark.operators.dedup import _min_label_propagation
-
-    def both(edges):
-        df = spark.createDataFrame(edges, "src long, dst long")
-        with broadcast_threshold(spark, cc_threshold):
-            lsss = {
-                (r["node"], r["label"])
-                for r in connected_components(df).collect()
-            }
-        sym = df.unionAll(df.selectExpr("dst as src", "src as dst"))
-        prop = {
-            (r["node"], r["label"])
-            for r in _min_label_propagation(sym, max_iters=200).collect()
-        }
-        return lsss, prop
-
-    # a 64-node chain: diameter 63 >> the 50-round cap would doom a
-    # propagation-style algorithm; star contraction handles it easily
-    lsss, prop = both([(i, i + 1) for i in range(63)])
-    assert lsss == prop == {(i, 0) for i in range(64)}
-
-    rng = random.Random(11)
-    edges = [(rng.randrange(60), rng.randrange(60)) for _ in range(70)]
-    edges = [e for e in edges if e[0] != e[1]]
-    lsss, prop = both(edges)
-    assert lsss == prop and len(lsss) > 0
-
-
 def _random_graph_5k():
     import random
 
     rng = random.Random(7)
     n = 5000
     edges = [(rng.randrange(n), rng.randrange(n)) for _ in range(6000)]
-    return n, [e for e in edges if e[0] != e[1]]
+    return [e for e in edges if e[0] != e[1]]
 
 
-@CC_PATHS
-def test_bigstar_components_5k_node_stress(spark, cc_threshold):
-    """graph.py vs a driver-side union-find oracle on a 5,000-node random
-    graph (~6,000 edges => many nontrivial components): the O(log n)
-    round bound must hold far beyond the toy sizes of the equivalence
-    test, and labels must be exactly the component minimum."""
-    from tts_etl_pipeline_spark.functions.graph import connected_components
-
-    n, edges = _random_graph_5k()
-
-    parent = list(range(n))
+def _union_find_labels(edges):
+    """{node: component minimum} for every node touching an edge."""
+    parent = {v: v for e in edges for v in e}
 
     def find(x):
         while parent[x] != x:
@@ -282,14 +213,38 @@ def test_bigstar_components_5k_node_stress(spark, cc_threshold):
         ra, rb = find(a), find(b)
         if ra != rb:
             parent[max(ra, rb)] = min(ra, rb)
-    touched = {v for e in edges for v in e}
-    expected = {v: find(v) for v in sorted(touched)}
     # union-find roots path-compress toward the minimum because we always
     # parent the larger root under the smaller — find(v) IS the comp min
-    df = spark.createDataFrame(edges, "src long, dst long")
-    with broadcast_threshold(spark, cc_threshold):
-        got = {r["node"]: r["label"] for r in connected_components(df).collect()}
-    assert got == expected
+    return {v: find(v) for v in parent}
+
+
+@CC_PATHS
+def test_bigstar_components_5k_node_stress(spark, cc_threshold):
+    """graph.py vs a driver-side union-find oracle on a 5,000-node random
+    graph (~6,000 edges => many nontrivial components), a 64-node chain
+    (diameter 63: one round per hop would blow the 50-round cap) and a
+    60-node random graph: the O(log n) round bound must hold far beyond
+    toy sizes and diameters, and labels must be exactly the component
+    minimum."""
+    import random
+
+    from tts_etl_pipeline_spark.functions.graph import connected_components
+
+    rng = random.Random(11)
+    small = [(rng.randrange(60), rng.randrange(60)) for _ in range(70)]
+    graphs = [
+        _random_graph_5k(),
+        [(i, i + 1) for i in range(63)],
+        [e for e in small if e[0] != e[1]],
+    ]
+    for edges in graphs:
+        expected = _union_find_labels(edges)
+        df = spark.createDataFrame(edges, "src long, dst long")
+        with broadcast_threshold(spark, cc_threshold):
+            got = {
+                r["node"]: r["label"] for r in connected_components(df).collect()
+            }
+        assert got == expected, len(edges)
 
 
 @CC_PATHS
@@ -315,7 +270,7 @@ def test_small_components_solve_on_the_driver_in_few_jobs(spark):
     small-star round (65 jobs for this graph at 4 cores)."""
     from tts_etl_pipeline_spark.functions.graph import connected_components
 
-    _, edges = _random_graph_5k()
+    edges = _random_graph_5k()
     df = spark.createDataFrame(edges, "src long, dst long")
     sc = spark.sparkContext
     sc.setJobGroup("cc_driver_jobs", "connected_components job count")

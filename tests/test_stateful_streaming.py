@@ -1,45 +1,7 @@
-"""applyInPandasWithState: running per-user purchase totals must equal the
-batch aggregation after replaying the whole table through the stream."""
+"""Stateful streaming queries: st10's cross-batch transition deltas and
+st24's CDC upsert sink on a skewed fixture."""
 
 from __future__ import annotations
-
-from pyspark.sql import functions as F
-
-from tts_etl_pipeline_spark.sources.tables import table
-from tts_etl_pipeline_spark.streaming.events_stream import run_to_memory, stream_events
-from tts_etl_pipeline_spark.streaming.stateful import running_purchase_totals
-
-
-def test_running_totals_match_batch(spark, sf_dir):
-    out = run_to_memory(
-        running_purchase_totals(stream_events(spark, sf_dir)), "t_state"
-    )
-    # last update per user (no timeouts fire under availableNow) = batch agg
-    latest = (
-        out.filter(~F.col("flushed"))
-        .groupBy("user_id")
-        .agg(
-            F.max("n_purchases").alias("n_purchases"),
-            F.max("total_value").alias("total_value"),
-        )
-    )
-    got = {
-        r["user_id"]: (r["n_purchases"], round(r["total_value"], 6))
-        for r in latest.collect()
-    }
-    batch = {
-        r["user_id"]: (r["n"], round(r["t"], 6))
-        for r in (
-            table(spark, sf_dir, "events")
-            .filter(F.col("event_type") == "purchase")
-            .groupBy("user_id")
-            .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("t"))
-            .collect()
-        )
-    }
-    # users with zero purchases still get a state row with n=0; batch has none
-    got_nonzero = {k: v for k, v in got.items() if v[0] > 0}
-    assert got_nonzero == batch and len(batch) > 0
 
 
 # --------------------------------------------------------------------------

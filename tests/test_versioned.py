@@ -94,7 +94,7 @@ def test_merge_upsert_update_insert_delete(spark, tmp_path):
     source = spark.createDataFrame(
         [(2, "TWO", 200), (4, "four", 40), (3, "three", -1)], "k long, name string, v long"
     )
-    v = merge_upsert(spark, path, source, key="k", delete_on="v < 0")
+    v = merge_upsert(spark, path, source, key="k", delete_on="s.v < 0")
     assert v == 2
     got = {r["k"]: (r["name"], r["v"]) for r in read_version(spark, path).collect()}
     assert got == {
@@ -130,7 +130,7 @@ def test_merge_upsert_edge_semantics(spark, tmp_path):
     )
     # NULL v -> delete_on 'v < 0' is NULL -> must UPDATE, not delete
     src = spark.createDataFrame([(2, "TWO", None)], "k long, name string, v long")
-    merge_upsert(spark, path, src, key="k", delete_on="v < 0")
+    merge_upsert(spark, path, src, key="k", delete_on="s.v < 0")
     got = {r["k"]: (r["name"], r["v"]) for r in read_version(spark, path).collect()}
     assert got == {1: ("one", 10), 2: ("TWO", None)}
     # NULL key -> INSERT as its own row, no all-NULL ghost rows
@@ -142,7 +142,7 @@ def test_merge_upsert_edge_semantics(spark, tmp_path):
     assert not any(r["k"] is None and r["name"] is None and r["v"] is None for r in rows)
     # duplicate keys raise
     dup = spark.createDataFrame([(1, "a", 1), (1, "b", 2)], "k long, name string, v long")
-    with pytest.raises(ValueError, match="multiple source rows"):
+    with pytest.raises(ValueError, match="duplicate keys"):
         merge_upsert(spark, path, dup, key="k")
     # same names, different type -> schema mismatch
     typed = spark.createDataFrame([(1, "a", 1.5)], "k long, name string, v double")
@@ -152,9 +152,27 @@ def test_merge_upsert_edge_semantics(spark, tmp_path):
     # literal must NOT be rewritten — no row has name == 'v', so nothing
     # is deleted and the matched row updates normally
     lit = spark.createDataFrame([(1, "ONE", 11)], "k long, name string, v long")
-    merge_upsert(spark, path, lit, key="k", delete_on="name = 'v'")
+    merge_upsert(spark, path, lit, key="k", delete_on="s.name = 'v'")
     got = {r["k"]: r["name"] for r in read_version(spark, path).collect() if r["k"] == 1}
     assert got == {1: "ONE"}
+
+
+def test_merge_upsert_records_key_stats_for_pruned_reads(spark, tmp_path):
+    """merge_upsert commits through merge: every file it writes carries
+    the key's min/max in the manifest, so a narrow pruned read on the
+    merged snapshot skips files."""
+    import tts_etl_pipeline_spark.sources.versioned as V
+
+    path = str(tmp_path / "tbl")
+    V.write_version(spark.range(200).selectExpr("id AS k", "id * 2 AS v"), path)
+    for lo in (0, 200):  # update every seed row, then insert past them
+        src = spark.range(lo, lo + 200).selectExpr("id AS k", "id * 3 AS v")
+        v = V.merge_upsert(spark, path, src, key="k")
+    m = V.manifest(path, v)
+    assert all("k" in m["stats"].get(f, {}) for f in m["files"]), m["stats"]
+    df, skipped, total = V.read_version_pruned(spark, path, "k", 10, 12)
+    assert (skipped, total) == (1, 2)
+    assert sorted(r["v"] for r in df.collect()) == [30, 33, 36]
 
 
 def test_rollback_to_vacuumed_version_refuses(spark, tmp_path):
@@ -326,18 +344,18 @@ def test_merge_upsert_conflict_when_head_moves(spark, tmp_path, monkeypatch):
     src = spark.createDataFrame([("k2", 20), ("k3", 30)], "k string, v int")
 
     # interleave: a concurrent append lands AFTER merge captured its base
-    real_write = V.write_version
+    real_write = V.write_version_parts
     state = {"raced": False}
 
-    def racing_write(df, p, mode="append", expected_version=None):
+    def racing_write(parts, p, **kw):
         if not state["raced"]:
             state["raced"] = True
-            real_write(
+            V.write_version(
                 spark.createDataFrame([("k9", 99)], "k string, v int"), p, "append"
             )
-        return real_write(df, p, mode=mode, expected_version=expected_version)
+        return real_write(parts, p, **kw)
 
-    monkeypatch.setattr(V, "write_version", racing_write)
+    monkeypatch.setattr(V, "write_version_parts", racing_write)
     with pytest.raises(V.CommitConflictError):
         V.merge_upsert(spark, path, src, key="k")
     # the concurrent append survived untouched; merge changed nothing
@@ -347,7 +365,7 @@ def test_merge_upsert_conflict_when_head_moves(spark, tmp_path, monkeypatch):
         ("k9", 99),
     ]
     # retried merge on the fresh head applies cleanly over it
-    monkeypatch.setattr(V, "write_version", real_write)
+    monkeypatch.setattr(V, "write_version_parts", real_write)
     V.merge_upsert(spark, path, src, key="k")
     assert sorted(map(tuple, read_version(spark, path).collect())) == [
         ("k1", 1),
@@ -1867,21 +1885,19 @@ def test_conflict_matrix_delete_vs_merge(spark, tmp_path, monkeypatch):
     )
     src = spark.createDataFrame([(2, 200), (4, 400)], "k int, v int")
 
-    real_write = V.write_version
+    real_write = V.write_version_parts
     state = {"race": "cow"}
 
-    def racing_write(df, p, mode="append", expected_version=None, **kw):
+    def racing_write(parts, p, **kw):
         if state["race"] == "cow":
             state["race"] = None
             V.delete_where(spark, p, "k", 3, 3)
         elif state["race"] == "dv":
             state["race"] = None
             V.delete_where_dv(spark, p, "k", 1, 1)
-        return real_write(
-            df, p, mode=mode, expected_version=expected_version, **kw
-        )
+        return real_write(parts, p, **kw)
 
-    monkeypatch.setattr(V, "write_version", racing_write)
+    monkeypatch.setattr(V, "write_version_parts", racing_write)
     with pytest.raises(V.CommitConflictError):
         V.merge_upsert(spark, path, src, key="k")
     # the delete survived; the merge changed nothing
@@ -1890,7 +1906,7 @@ def test_conflict_matrix_delete_vs_merge(spark, tmp_path, monkeypatch):
     with pytest.raises(V.CommitConflictError):
         V.merge_upsert(spark, path, src, key="k")
     assert sorted(r["k"] for r in V.read_version(spark, path).collect()) == [2]
-    monkeypatch.setattr(V, "write_version", real_write)
+    monkeypatch.setattr(V, "write_version_parts", real_write)
     V.merge_upsert(spark, path, src, key="k")  # retry on the fresh head
     assert sorted(map(tuple, V.read_version(spark, path).collect())) == [
         (2, 200), (4, 400),

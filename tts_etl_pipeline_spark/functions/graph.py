@@ -1,14 +1,13 @@
 """Distributed connected components via alternating large-star / small-star
 (Kiveris et al., "Connected Components in MapReduce and Beyond", 2014).
 
-This is the 100 TB-scale companion to the min-label propagation in
-operators/dedup.py: propagation needs O(component diameter) rounds, so a
-pathological near-dup CHAIN (each doc similar to the next) costs one shuffle
-per hop — large-star/small-star contracts the graph toward stars and
-converges in O(log n) rounds regardless of diameter. Both compute the same
-unique fixpoint (every node labeled with its component's minimum node id),
-so they are interchangeable and oracle-checkable against the same DuckDB
-recursive-CTE transitive closure.
+The package's one connected-components implementation. Min-label
+propagation needs O(component diameter) rounds, so a pathological near-dup
+CHAIN (each doc similar to the next) would cost one shuffle per hop;
+large-star/small-star contracts the graph toward stars and converges in
+O(log n) rounds regardless of diameter. The result is the unique fixpoint
+(every node labeled with its component's minimum node id),
+oracle-checkable against a DuckDB recursive-CTE transitive closure.
 
 Per round, each step is one groupBy (min neighbor per node) + one join back
 to the edge list — all shuffles are keyed by node id, no global structure.
@@ -50,7 +49,7 @@ def connected_components(edges: DataFrame, max_rounds: int = 50) -> DataFrame:
     `edges` needs columns (src, dst); orientation and duplicates don't
     matter, self-loops are ignored. Returns (node, label) with label = the
     minimum node id in the node's component, for every node incident to at
-    least one edge — identical contract to dedup._min_label_propagation.
+    least one edge.
 
     Which path runs: after the edge list is materialized, at most
     `cap + 1` edges are fetched to the driver (cap = the session's

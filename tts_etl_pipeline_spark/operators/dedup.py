@@ -4,8 +4,9 @@
 - n-gram (shingle) Jaccard near-dedup, exact formulation: token-inverted-index
   self-join -> pair intersection counts -> Jaccard, so the cross join never
   materializes (pairs sharing zero tokens are never generated). This is the
-  scale path for exact Jaccard; MinHash-LSH below is the approximate path.
-- MinHash-LSH near-dedup (pyspark.ml) — approximate, rows-only check
+  scale path for exact Jaccard; banded MinHash below is the approximate path.
+- banded MinHash near-dedup (AND-amplified, exact-verified candidates) —
+  approximate, rows-only check
 - SimHash near-dedup — deterministic 64-bit simhash via xxhash64 over tokens,
   banded buckets; rows-only check (hash family is engine-specific)
 
@@ -238,60 +239,14 @@ def _jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# d8 — connected components over the near-dup graph (the step that turns
-# PAIRS into dedup CLUSTERS): iterative min-label propagation until
-# fixpoint — the one genuinely iterative algorithm in the engine, expressed
-# as a driver-controlled loop of joins. Each iteration: every node takes
-# min(own label, neighbors' labels); converges in <= graph-diameter rounds
-# (near-dup clusters are small, so a handful). materialize() truncates
-# lineage each round so the plan doesn't grow with iterations (reliable
-# checkpoint when a checkpoint dir is configured — see
-# functions/checkpoints.py); at cluster scale use the large-star/small-star
-# variant for skewed components. The result is the graph's unique fixpoint,
-# so it is deterministic and oracle-checkable against DuckDB's recursive CTE
-# transitive closure. A convergence GUARD raises instead of silently
-# returning partial labels if the cap is hit (VERDICT r2 item 3).
+# d8 / d9 — connected components over the near-dup graph (the step that
+# turns PAIRS into dedup CLUSTERS), one builder registered under both names:
+# large-star/small-star (functions/graph.py) converges in O(log n) rounds
+# regardless of component diameter, so a pathological near-dup CHAIN costs
+# no more than a star. The result is the graph's unique fixpoint (every doc
+# labeled with its component's minimum doc id), so it is deterministic and
+# oracle-checkable against DuckDB's recursive-CTE transitive closure.
 # ---------------------------------------------------------------------------
-def _min_label_propagation(sym: DataFrame, max_iters: int = 25) -> DataFrame:
-    """Connected components of the symmetric edge list `sym` (src, dst)
-    columns) via min-label propagation. Returns (node, label). Raises
-    RuntimeError if no fixpoint within `max_iters` iterations — silent
-    unconvergence would mislabel any component whose diameter exceeds the
-    cap, and wrong dedup clusters are corrupt output, not a degraded mode.
-    """
-    labels = materialize(
-        sym.select(F.col("src").alias("node"))
-        .distinct()
-        .withColumn("label", F.col("node"))
-    )
-    prev_sum = None
-    for _ in range(max_iters):
-        nbr = (
-            sym.join(labels, sym.dst == labels.node)
-            .groupBy("src")
-            .agg(F.min("label").alias("nbr_min"))
-        )
-        labels = materialize(
-            labels.join(nbr, labels.node == nbr.src, "left").select(
-                labels.node, F.least("label", "nbr_min").alias("label")
-            )
-        )
-        # labels decrease monotonically, so an unchanged sum == fixpoint;
-        # scalar control-flow probe only, no data comes to the driver
-        cur_sum = labels.agg(F.sum("label")).collect()[0][0]
-        if cur_sum == prev_sum:
-            break
-        prev_sum = cur_sum
-    else:
-        raise RuntimeError(
-            f"min-label propagation did not converge within {max_iters} "
-            "iterations: a component's diameter exceeds the cap. Raise "
-            "max_iters or switch to large-star/small-star for this graph."
-        )
-    return labels
-
-
-# d8's oracle: d9 computes the same clustering, so it shares it
 _D8_ORACLE = f"""
     WITH RECURSIVE {_PAIRS_CTES},
     sym AS (
@@ -311,31 +266,8 @@ _D8_ORACLE = f"""
 
 
 @registry.query("d8_neardup_components", _D8_ORACLE)
+@registry.query("d9_neardup_components_bigstar", _D8_ORACLE)
 def d8_neardup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pairs = _jaccard_pairs(spark, sf_dir).select("id_a", "id_b")
-    sym = pairs.selectExpr("id_a AS src", "id_b AS dst").unionAll(
-        pairs.selectExpr("id_b AS src", "id_a AS dst")
-    )
-    sym = materialize(sym)  # compute the pair graph ONCE
-    labels = _min_label_propagation(sym)
-    return labels.select(
-        F.col("node").alias("doc_id"), F.col("label").alias("component")
-    ).orderBy("doc_id")
-
-
-# ---------------------------------------------------------------------------
-# d9 — the SAME clustering as d8 via alternating large-star/small-star
-# (functions/graph.py): O(log n) rounds regardless of component diameter,
-# vs min-label propagation's O(diameter). Identical fixpoint => identical
-# oracle. At 100 TB this is the variant to run: a pathological near-dup
-# CHAIN costs propagation one shuffle round per hop, while star contraction
-# halves the graph's height every other round.
-# ---------------------------------------------------------------------------
-@registry.query(
-    "d9_neardup_components_bigstar",
-    _D8_ORACLE,  # same clustering contract, same oracle
-)
-def d9_neardup_components_bigstar(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tts_etl_pipeline_spark.functions.graph import connected_components
 
     pairs = _jaccard_pairs(spark, sf_dir).select("id_a", "id_b")
@@ -501,61 +433,12 @@ def d4_char_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# d5 — DEMO ONLY, RETIRED from queries() (round-5 verdict item 6): the
-# production near-dup path is d11 (banded pairs) -> d9 (components) ->
-# d12 (end-to-end). Kept as code + pytest coverage because it demonstrates
-# the pyspark.ml MinHashLSH API (Shingle -> HashingTF sparse vector ->
-# approxSimilarityJoin at jaccard distance <= 0.2, i.e. sim >= 0.8 — the
-# Lee-et-al dedup operating point), but deliberately NOT registered:
-# pyspark.ml's LSH is OR-amplified (a pair is a candidate if ANY of the 8
-# tables collides), so on a highly self-similar corpus the candidate set
-# grows toward quadratic — the r3 sf0.1 sweep measured the old 0.4-distance
-# setting at 6.9M output pairs / 32 min, and a driver rotation must never
-# be able to reach that path. The structural fix is AND-amplified banding —
-# see d11, the scale path.
-# ---------------------------------------------------------------------------
-def d5_minhash_lsh_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DEPRECATED DEMO — DO NOT REGISTER, DO NOT USE IN PRODUCTION PATHS.
-
-    Quarantined since round 5 (tests/test_registry.py pins it out of
-    queries() permanently): pyspark.ml's MinHashLSH is OR-amplified, so on
-    a self-similar corpus the candidate set grows toward QUADRATIC — the
-    r3 sf0.1 sweep measured 6.9M pairs / 32 min at the old operating
-    point. Kept only as executable documentation of the pyspark.ml LSH
-    API surface. The production near-dup path is d11 (AND-amplified
-    banded MinHash) -> d9 (components) -> d12 (end-to-end)."""
-    from pyspark.ml.feature import HashingTF, MinHashLSH, RegexTokenizer
-
-    docs = table(spark, sf_dir, "documents").select("doc_id", "text")
-    tokenizer = RegexTokenizer(inputCol="text", outputCol="tokens", pattern=r"\s+")
-    tokenized = tokenizer.transform(docs)
-    tf = HashingTF(inputCol="tokens", outputCol="features", numFeatures=1 << 18)
-    # both sides of the self-join read the materialized features — without
-    # the checkpoint the tokenize+TF+minhash pipeline runs twice per side
-    feats = materialize(
-        tf.transform(tokenized).filter(F.expr("size(tokens) > 0"))
-    )
-    lsh = MinHashLSH(inputCol="features", outputCol="hashes", numHashTables=8, seed=42)
-    model = lsh.fit(feats)
-    pairs = model.approxSimilarityJoin(feats, feats, 0.2, distCol="jaccard_dist")
-    return (
-        pairs.select(
-            F.col("datasetA.doc_id").alias("id_a"),
-            F.col("datasetB.doc_id").alias("id_b"),
-            F.col("jaccard_dist"),
-        )
-        .filter(F.col("id_a") < F.col("id_b"))
-        .orderBy("id_a", "id_b")
-    )
-
-
-# ---------------------------------------------------------------------------
 # d11 — banded MinHash near-dedup, the 100 TB-correct LSH: 32 xxhash64
 # minhashes per document grouped into 4 bands of 8, AND-amplified — a pair
 # becomes a candidate only when ALL 8 hashes of some band agree, so
 # P(candidate | sim s) = 1-(1-s^8)^4: ~0.07 at s=0.6, ~0.52 at s=0.8,
 # ~0.90 at s=0.9. Moderately-similar bulk pairs (the quadratic mass that
-# drowns OR-amplified LSH on self-similar corpora, see d5) never become
+# drowns OR-amplified LSH on self-similar corpora) never become
 # candidates; the true near-dups do. Candidates are then verified with the
 # EXACT token-set Jaccard (array_intersect on collected sets — candidate-
 # sized work, not corpus-squared), keeping only sim >= 0.8 with the exact
@@ -889,7 +772,7 @@ def d13_benchmark_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
 # LEFT SEMI join back — both hash-shuffles on g (sort-merge at scale; the
 # duplicated-gram set is corpus-sized, so NO broadcast). Island merging is
 # one doc_id window; everything after is doc-sized. No pair joins anywhere,
-# so there is no quadratic blowup on self-similar corpora (the d5 lesson).
+# so there is no quadratic blowup on self-similar corpora.
 # Posting-list bound (round-6 sf1 sweep: 7.5x wall at 10x data on the
 # adversarial fixture — the same relative-cap hazard d3 hit): a gram
 # counts as "duplicated" only while its document frequency stays <=

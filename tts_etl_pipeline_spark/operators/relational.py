@@ -1668,19 +1668,21 @@ def j7_zorder_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # j8 — MERGE INTO driver promotion (round-8 verdict task 1): the versioned
 # table's flagship write path — sources/versioned.py::merge_upsert's
-# matched-update / not-matched-insert / conditional-delete, expressed as
-# ONE full-outer join and committed under the manifest CAS — proven by a
-# driver-checked hash equality instead of pytest alone. The table is seeded
-# from orders (keys % 7 != 0, price in integer cents), then a derived delta
-# (keys % 3 == 0, price doubled) merges in: matched 'F' rows DELETE,
-# matched others UPDATE to the doubled price, unmatched source rows INSERT
-# (keys % 21 == 0 exercise the insert arm, including 'F' inserts — the
-# delete condition only fires WHEN MATCHED, per the Delta contract). The
-# read-back aggregate is layout- and protocol-invisible, like j5/j7: the
-# oracle computes the same merge as a textbook FULL OUTER JOIN projection
-# in DuckDB, so hash equality proves MERGE SEMANTICS, not a write detail.
+# matched-update / not-matched-insert / conditional-delete, the fixed
+# clause shape of versioned.merge, committed under the manifest CAS —
+# proven by a driver-checked hash equality instead of pytest alone. The
+# table is seeded from orders (keys % 7 != 0, price in integer cents), then
+# a derived delta (keys % 3 == 0, price doubled) merges in: matched 'F'
+# rows DELETE, matched others UPDATE to the doubled price, unmatched
+# source rows INSERT (keys % 21 == 0 exercise the insert arm, including
+# 'F' inserts — the delete condition only fires WHEN MATCHED, per the
+# Delta contract). The read-back aggregate is layout- and
+# protocol-invisible, like j5/j7: the oracle computes the same merge as a
+# textbook FULL OUTER JOIN projection in DuckDB, so hash equality proves
+# MERGE SEMANTICS, not a write detail.
 # Scale shape: the merge is one key-partitioned shuffle join (the
-# unavoidable cost of any merge) + an atomic manifest commit; the audit
+# unavoidable cost of any merge) over the target files the source key span
+# overlaps + a range exchange + an atomic manifest commit; the audit
 # aggregate is one partial+final pass over the merged snapshot.
 # ---------------------------------------------------------------------------
 @registry.query(
@@ -1734,7 +1736,7 @@ def j8_merge_upsert_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         path = f"{base}/orders_tbl"
         write_version(target, path)  # v1: the seed commit
         merge_upsert(  # v2: THE MERGE under test
-            spark, path, source, key="o_orderkey", delete_on="o_orderstatus = 'F'"
+            spark, path, source, key="o_orderkey", delete_on="s.o_orderstatus = 'F'"
         )
         back = read_version(spark, path)
         return materialize(
@@ -5038,12 +5040,11 @@ def j37_incremental_replication(spark: SparkSession, sf_dir: str) -> DataFrame:
 # second merge drops the not-matched-by-source clauses, which re-arms the
 # manifest pruner: only files whose key range intersects the source key
 # span are rewritten, every provably-disjoint file rides BY REFERENCE
-# (mtime-pinned in-query) — the 100 TB CDC shape merge_upsert's
-# whole-table full-outer join lacks. Further pins: duplicate source keys
-# and a retyped source column refuse TYPED with the head unmoved; the
-# change feed across the pruned merge is exactly the touched rows
-# (carried identical rows cancel); history gains exactly one version per
-# merge. DuckDB reproduces both merges declaratively (CASE chains +
+# (mtime-pinned in-query) — the 100 TB CDC shape. Further pins: duplicate
+# source keys and a retyped source column refuse TYPED with the head
+# unmoved; the change feed across the pruned merge is exactly the touched
+# rows (carried identical rows cancel); history gains exactly one version
+# per merge. DuckDB reproduces both merges declaratively (CASE chains +
 # UNION ALL for inserts), so value equality proves every clause fired on
 # exactly its rows.
 # ---------------------------------------------------------------------------

@@ -391,71 +391,6 @@ def v4_lsh_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Scale-path exact top-k (SURVEY §4(b)): per-partition numpy heap inside
-# mapInPandas (k rows out per partition per query), then a global
-# row_number over the tiny candidate set. Shuffle volume drops from
-# O(n_queries x corpus) scored rows to O(n_queries x k x n_partitions) —
-# the difference between "window over everything" and "merge of local
-# top-ks" at 100 TB. Results are identical to v1 (verified in tests).
-# ---------------------------------------------------------------------------
-def topk_cosine_scalable(
-    emb: DataFrame, query_ids: list[int], k: int = TOP_K
-) -> DataFrame:
-    from collections.abc import Iterator
-
-    import numpy as np
-    import pandas as pd
-
-    from pyspark.sql.window import Window as W
-
-    spark = emb.sparkSession
-    q_rows = emb.filter(F.col("vec_id").isin(query_ids)).collect()
-    q_ids = np.array([r["vec_id"] for r in q_rows], dtype=np.int64)
-    q_mat = np.array([r["embedding"] for r in q_rows], dtype=np.float64)
-    q_mat /= np.linalg.norm(q_mat, axis=1, keepdims=True)
-    bc = spark.sparkContext.broadcast((q_ids, q_mat))
-
-    def local_topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ids, qm = bc.value
-        for pdf in batches:
-            n_ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            mat = np.array(list(pdf["embedding"]), dtype=np.float64)
-            mat /= np.linalg.norm(mat, axis=1, keepdims=True)
-            sims = qm @ mat.T  # (n_queries, n_rows)
-            out = []
-            for qi, qid in enumerate(ids):
-                s = sims[qi]
-                mask = n_ids != qid
-                cand = np.flatnonzero(mask)
-                if cand.size == 0:
-                    continue
-                # tie-break exactly like v1: cosine DESC, then n_id ASC
-                # (lexsort keys are last-key-primary)
-                order = np.lexsort((n_ids[cand], -s[cand]))
-                take = cand[order[:k]]
-                out.append(
-                    pd.DataFrame(
-                        {"q_id": qid, "n_id": n_ids[take], "cosine": s[take]}
-                    )
-                )
-            yield (
-                pd.concat(out)
-                if out
-                else pd.DataFrame({"q_id": [], "n_id": [], "cosine": []})
-            )
-
-    local = emb.select("vec_id", "embedding").mapInPandas(
-        local_topk, "q_id long, n_id long, cosine double"
-    )
-    w = W.partitionBy("q_id").orderBy(F.desc("cosine"), "n_id")
-    return (
-        local.withColumn("rn", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rn") <= k)
-        .select("q_id", "n_id", "cosine", "rn")
-    )
-
-
-# ---------------------------------------------------------------------------
 # d14 — SEMANTIC dedup end-to-end (the SemDeDup pass, Abbas et al. 2023:
 # drop documents whose EMBEDDINGS nearly coincide, catching paraphrases
 # that text-hash dedup like d11/d12 cannot see). Pipeline: block pairs by

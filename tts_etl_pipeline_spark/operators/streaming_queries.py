@@ -362,8 +362,7 @@ def st8_stateful_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the batch-side max per user is the final state regardless of how
     availableNow slices the input into batches. The streaming twin of e4's
     batch aggregation, proving custom cross-batch state — not just built-in
-    windows — can stay bit-exact. Library variant (float state, optional
-    inactivity-timeout flush): streaming/stateful.py."""
+    windows — can stay bit-exact."""
     from tts_etl_pipeline_spark.streaming.events_stream import run_to_memory
 
     out = run_to_memory(_purchase_totals_updates(spark, sf_dir), "st8")
@@ -1650,13 +1649,14 @@ def st23_stream_pit_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
 # states; 'error' = CDC delete) drains through foreachBatch into ONE
 # atomic upsert_where_eq commit per micro-batch — staged rows + an
 # equality-delete file in the same snapshot, ZERO reads of the growing
-# table (contrast st7's OR-IGNORE anti-join and merge_upsert's full-outer
-# join, both O(table) per batch). Exactly-once comes from manifest-level
-# MARKER tokens (the "100 TB shape" st16's docstring points at): the
-# second, fresh-checkpoint run re-delivers every batch and must add ZERO
-# versions — asserted in-query, as is merge-on-read itself (v1's files
-# byte-identical at the head). Oracle: last-writer-wins per user across
-# the band sequence, minus users whose final state is the CDC delete.
+# table (contrast st7's OR-IGNORE anti-join, O(table) per batch, and
+# merge's read + rewrite of every file the batch's key span overlaps).
+# Exactly-once comes from manifest-level MARKER tokens (the "100 TB
+# shape" st16's docstring points at): the second, fresh-checkpoint run
+# re-delivers every batch and must add ZERO versions — asserted in-query,
+# as is merge-on-read itself (v1's files byte-identical at the head).
+# Oracle: last-writer-wins per user across the band sequence, minus users
+# whose final state is the CDC delete.
 # ---------------------------------------------------------------------------
 @registry.query(
     "st24_stream_cdc_upsert_sink",

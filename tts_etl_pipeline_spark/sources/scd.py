@@ -1,7 +1,7 @@
 """Type-2 slowly-changing-dimension maintenance on the versioned table —
 the warehouse pattern for "keep every historical value of a dimension
 row" (Kimball SCD type 2), composed from primitives this engine already
-has: one full-outer join per change batch (the merge_upsert shape) and an
+has: one full-outer join per change batch (the versioned.merge shape) and an
 atomic manifest commit (sources/versioned.py), so readers see either the
 old history or the new one, never a torn mix.
 
@@ -15,7 +15,7 @@ Fold semantics per change batch (key, attrs..., eff):
   (valid_to = eff) and a new current row opens (valid_from = eff);
 - key matched, all attrs equal: no-op (consecutive duplicates collapse —
   re-delivering an unchanged state never forks a version);
-- key only in the batch (including NULL keys, the merge_upsert contract):
+- key only in the batch (including NULL keys, the versioned.merge contract):
   a new current row opens;
 - key only in the dimension: untouched;
 - key in the optional `deletes` relation (key, eff): the current row

@@ -2370,9 +2370,10 @@ def write_version(
 
     Optimistic concurrency: the base version is captured ONCE, up front
     (or taken from `expected_version` when the caller computed `df` from
-    an earlier snapshot — merge_upsert does); if another writer commits
-    base+1 first, the manifest CAS raises CommitConflictError and this
-    writer's staged files stay invisible until vacuum.
+    an earlier snapshot — upsert_where_eq passes its caller's); if another
+    writer commits base+1 first, the manifest CAS raises
+    CommitConflictError and this writer's staged files stay invisible
+    until vacuum.
 
     Schema evolution (merge_schema=True, append mode): new nullable
     columns may be ADDED — old files serve null for them on read; the
@@ -4685,80 +4686,31 @@ def merge_upsert(
     source: DataFrame,
     key: str,
     delete_on: str | None = None,
-) -> int:
-    """Delta-style MERGE INTO on a versioned table, committed as one new
-    version (atomic at the manifest level — readers see either the old or
-    the new snapshot, never a mix):
+) -> int | None:
+    """Delta-style MERGE INTO on a versioned table, the fixed
+    update/delete/insert shape of `merge`:
 
       WHEN MATCHED AND <delete_on>  THEN DELETE
       WHEN MATCHED                  THEN UPDATE SET * (source row wins)
       WHEN NOT MATCHED              THEN INSERT *
 
-    Expressed as ONE full-outer join on `key` + row picks — the join is
-    the unavoidable cost of any merge; everything else is column logic.
-    Unmatched target rows pass through untouched. Semantics guards (the
-    Delta contract): `delete_on` evaluates on the SOURCE row BEFORE the
-    join (string literals are never rewritten) and a NULL condition falls
-    through to UPDATE; duplicate source keys raise (two updates for one
-    target row would multiply it); schema comparison checks names AND
-    types; a NULL-keyed source row never matches — it inserts."""
-    from pyspark.sql import functions as F
-
-    # snapshot-isolation conflict detection: the merge is computed against
-    # THIS version; if another writer commits before our CAS, the commit
-    # raises CommitConflictError instead of silently dropping their rows
-    base_version = current_version(path)
-    target = read_version(spark, path, base_version if base_version else None)
-    t_schema = {f.name: f.dataType for f in target.schema.fields}
-    s_schema = {f.name: f.dataType for f in source.schema.fields}
-    if t_schema != s_schema:
-        raise ValueError(
-            f"merge schema mismatch: target {sorted(t_schema.items(), key=str)} "
-            f"vs source {sorted(s_schema.items(), key=str)}"
-        )
-    if key not in t_schema:
-        raise ValueError(f"merge key {key!r} is not a column")
-    dup = (
-        source.filter(F.col(key).isNotNull())
-        .groupBy(key)
-        .count()
-        .filter(F.col("count") > 1)
-        .limit(1)
-        .collect()
+    `delete_on` is a condition over merge's aliases ("s.status = 'F'"); a
+    NULL condition falls through to UPDATE. Everything else is merge's
+    contract: unmatched target rows pass through, a NULL-keyed source row
+    never matches (it inserts), only files whose recorded key range meets
+    the source key span are rewritten (with fresh key stats), and the
+    commit is one snapshot CAS'd on its base version. Also merge's: an
+    empty source returns None and commits nothing; the schema check
+    compares column names, types AND order; duplicate non-NULL source
+    keys raise merge's "duplicate keys" ValueError."""
+    return merge(
+        spark,
+        path,
+        source,
+        key,
+        matched=((("delete", delete_on),) if delete_on is not None else ())
+        + (("update", None),),
     )
-    if dup:
-        raise ValueError(f"multiple source rows share merge key {dup[0][key]!r}")
-
-    cols = target.columns
-    # evaluate the delete predicate on the RAW source row (no identifier
-    # rewriting — a regex rename would also corrupt string literals), and
-    # carry existence markers so NULL keys never masquerade as 'no row'
-    s_prep = source.withColumn("__s_exists", F.lit(True))
-    if delete_on is not None:
-        s_prep = s_prep.withColumn(
-            "__s_del", F.coalesce(F.expr(delete_on), F.lit(False))
-        )
-    else:
-        s_prep = s_prep.withColumn("__s_del", F.lit(False))
-    t = target.select(
-        [F.col(c).alias(f"__t_{c}") for c in cols] + [F.lit(True).alias("__t_exists")]
-    )
-    s = s_prep.select(
-        [F.col(c).alias(f"__s_{c}") for c in cols] + ["__s_exists", "__s_del"]
-    )
-    joined = t.join(s, t[f"__t_{key}"] == s[f"__s_{key}"], "full_outer")
-    matched = F.col("__t_exists").isNotNull() & F.col("__s_exists").isNotNull()
-    from_source = F.col("__s_exists").isNotNull()
-    # NULL delete predicate already coalesced to False => falls through to
-    # UPDATE, per Delta semantics
-    joined = joined.filter(~(matched & F.coalesce("__s_del", F.lit(False))))
-    merged = joined.select(
-        *[
-            F.when(from_source, F.col(f"__s_{c}")).otherwise(F.col(f"__t_{c}")).alias(c)
-            for c in cols
-        ]
-    )
-    return write_version(merged, path, mode="overwrite", expected_version=base_version)
 
 
 def _merge_clause_decision(clauses, kind: str, default: str):
@@ -4789,13 +4741,11 @@ def merge(
     matched: tuple = (("update", None),),
     not_matched: tuple = (("insert", None),),
     not_matched_by_source: tuple = (),
-    collect_stats: tuple | None = None,
-    cluster: bool = True,
     branch: str | None = None,
 ) -> int | None:
     """Full-clause-matrix MERGE INTO on a versioned table — the complete
-    Delta / Iceberg `MERGE` surface that merge_upsert's fixed
-    update/delete/insert shape special-cases:
+    Delta / Iceberg `MERGE` surface (merge_upsert is its fixed
+    update/delete/insert shape):
 
       WHEN MATCHED [AND cond]               THEN UPDATE SET * | DELETE
       WHEN NOT MATCHED [AND cond]           THEN INSERT *
@@ -4812,25 +4762,25 @@ def merge(
     `not_matched` clauses are ("insert", cond); `not_matched_by_source`
     clauses are ("delete", cond) or ("update", cond, {col: expr-over-t}).
 
-    Pruning shape (the 100 TB point, and what merge_upsert's whole-table
-    rewrite lacks): when there are NO not-matched-by-source clauses, only
-    target files whose recorded `key` range intersects the SOURCE key
-    span [min, max] are read and rewritten; every provably-disjoint file
-    rides into the new version BY REFERENCE via write_version_parts — a
-    CDC batch against a key-clustered table costs O(overlapping files),
-    not O(table). Not-matched-by-source clauses must observe EVERY
-    target row, so their presence forces the full scan (the same rule
-    Delta applies). The commit is ONE snapshot (CAS on the base version:
+    Pruning shape (the 100 TB point): when there are NO not-matched-by-
+    source clauses, only target files whose recorded `key` range
+    intersects the SOURCE key span [min, max] are read and rewritten
+    (range-clustered on `key`, with fresh `key` stats); every
+    provably-disjoint file rides into the new version BY REFERENCE via
+    write_version_parts — a CDC batch against a key-clustered table costs
+    O(overlapping files), not O(table). Not-matched-by-source clauses
+    must observe EVERY target row, so their presence forces the full scan
+    (the same rule Delta applies). The commit is ONE snapshot (CAS on the base version:
     concurrent writers surface as CommitConflictError, never lost rows),
     and the change feed across it is exactly the changed rows — carried
     identical rows cancel under table_changes' bag-semantics diff.
 
-    Guards (shared with merge_upsert): source schema must equal the
-    table schema (names AND types); duplicate non-NULL source keys raise
-    (one target row cannot take two updates); NULL-keyed source rows
-    never match — they flow to the not_matched clauses. Returns the
-    committed version, or None when the merge provably touches nothing
-    (empty source, no pruned-in files, no NMBS clauses).
+    Guards: source schema must equal the table schema (names, types AND
+    column order); duplicate non-NULL source keys raise (one target row
+    cannot take two updates); NULL-keyed source rows never match — they
+    flow to the not_matched clauses. Returns the committed version, or
+    None when the merge provably touches nothing (empty source, no
+    pruned-in files, no NMBS clauses).
 
     `branch` stages the whole merge on a WAP branch (the delete_where_eq
     / upsert_where_eq discipline): the target is the BRANCH head, the
@@ -4875,7 +4825,7 @@ def merge(
                 )
 
     # ONE batch-sized job proves key uniqueness AND yields the key span
-    # the pruner needs (the merge_upsert discipline, extended)
+    # the pruner needs
     stat = source.agg(
         F.min(key).alias("lo"),
         F.max(key).alias("hi"),
@@ -4927,22 +4877,18 @@ def merge(
                     t_only & (F.col("__dec") == f"u{i}"), F.expr(cl[2][c])
                 ).otherwise(e)
         out.append(e.alias(c))
-    merged = j.select(*out)
-    if cluster:
-        # the join leaves the rewrite HASH-partitioned on the key — every
-        # output file would span the whole key domain and the NEXT merge
-        # could prune nothing. One extra range exchange of O(changed)
-        # keeps the rewritten files key-clustered (the optimized-write
-        # tradeoff), so the pruning above keeps paying off commit after
-        # commit; pass cluster=False to skip it when the caller reclusters
-        # via optimize_zorder anyway.
-        merged = merged.repartitionByRange(F.col(key))
+    # the join leaves the rewrite HASH-partitioned on the key — every
+    # output file would span the whole key domain and the NEXT merge could
+    # prune nothing. One extra range exchange of O(changed) keeps the
+    # rewritten files key-clustered (the optimized-write tradeoff), so the
+    # pruning above keeps paying off commit after commit.
+    merged = j.select(*out).repartitionByRange(F.col(key))
     return write_version_parts(
         [merged],
         path,
         reuse_files=untouched,
         expected_version=v,
-        collect_stats=(key,) if collect_stats is None else collect_stats,
+        collect_stats=(key,),
         branch=branch,
     )
 
@@ -5248,10 +5194,10 @@ def upsert_where_eq(
     this commit's add version, and one equality delete over df's key
     values plus `delete_keys` (seq = this commit) covers every OLDER copy
     while the fresh stamps exempt the staged rows. Cost is O(batch)
-    staging + a KB sidecar + the manifest — contrast merge_upsert's
-    full-outer join over the whole table: THIS is the 100 TB streaming
-    CDC shape, with compact()/purge bounding the accreted delete list
-    like DV debt.
+    staging + a KB sidecar + the manifest — contrast merge's read and
+    rewrite of every file the batch's key span overlaps: THIS is the
+    100 TB streaming CDC shape, with compact()/purge bounding the accreted
+    delete list like DV debt.
 
     In-batch discipline: `df` must hold at most one row per key (a real
     CDC apply dedups to the latest change first) — duplicate keys would
