@@ -187,8 +187,10 @@ def test_insert_or_ignore_first_writer_wins(spark, tmp_path):
 
 def test_insert_into_existing_table_reads_keys_without_schema_job(spark, tmp_path):
     """The existing keys are read with the key column's own schema, so a
-    second insert fires no parquet schema-inference job: 6 jobs, where
-    inferring the table's schema made it 7."""
+    second insert fires no parquet schema-inference job, and the rows are
+    written once and counted from the staged files' footers: 3 jobs, where
+    persist -> count -> write made it 6 and inferring the table's schema
+    made it 7."""
     path = str(tmp_path / "meta")
     schema = "wav_path string, text string"
     insert_or_ignore(spark.createDataFrame([("a.wav", "x")], schema), path)
@@ -200,7 +202,95 @@ def test_insert_into_existing_table_reads_keys_without_schema_job(spark, tmp_pat
     finally:
         sc.setJobGroup(None, None)
     jobs = sc.statusTracker().getJobIdsForGroup("sink_second_insert")
-    assert len(jobs) == 6, len(jobs)
+    assert len(jobs) == 3, len(jobs)
+
+
+def _table_files(path):
+    return sorted(os.listdir(path))
+
+
+def _staging_dirs(path):
+    parent, name = os.path.split(path)
+    return [d for d in os.listdir(parent) if d.startswith(f"{name}._staging-")]
+
+
+def test_failed_insert_leaves_the_table_as_it_was(spark, tmp_path):
+    """An upstream that fails on one row makes the insert raise; the table
+    keeps its file set and no staging directory is left behind."""
+    from pyspark.errors import PythonException
+
+    path = str(tmp_path / "meta")
+    schema = "wav_path string, text string"
+    insert_or_ignore(spark.createDataFrame([("a.wav", "x")], schema), path)
+    before = _table_files(path)
+
+    @F.udf("string")
+    def fail_on_bad(text):
+        if text == "bad":
+            raise ValueError("upstream failure")
+        return text
+
+    df = spark.createDataFrame(
+        [("b.wav", "y"), ("c.wav", "bad"), ("d.wav", "z")], schema
+    ).withColumn("text", fail_on_bad("text"))
+    with pytest.raises(PythonException, match="upstream failure"):
+        insert_or_ignore(df, path)
+    assert _table_files(path) == before
+    assert _staging_dirs(path) == []
+    assert [r["wav_path"] for r in spark.read.parquet(path).collect()] == ["a.wav"]
+
+
+def test_zero_row_insert_creates_and_adds_no_file(spark, tmp_path):
+    """An empty batch into a missing table returns 0 and leaves no table
+    directory (st7's "sink was never created" branch reads that); a
+    re-offered batch into an existing table returns 0 and adds no file."""
+    path = str(tmp_path / "meta")
+    schema = "wav_path string, text string"
+    assert insert_or_ignore(spark.createDataFrame([], schema), path) == 0
+    assert not os.path.exists(path)
+    batch = spark.createDataFrame([("a.wav", "x"), ("b.wav", "y")], schema)
+    assert insert_or_ignore(batch, path) == 2
+    before = _table_files(path)
+    assert insert_or_ignore(batch, path) == 0
+    assert _table_files(path) == before
+    assert _staging_dirs(path) == []
+
+
+def test_appended_files_keep_the_batch_column_order(spark, tmp_path):
+    """Every file of the table has the batch's column order, so the schema
+    read back does not depend on which footer Spark infers it from (the
+    anti join's USING key used to move `wav_path` first in appended files)."""
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "meta")
+    schema = "text string, wav_path string"
+    for rows in ([("x", "a.wav")], [("y", "b.wav")]):
+        assert insert_or_ignore(spark.createDataFrame(rows, schema), path) == 1
+    orders = {
+        tuple(pq.read_schema(os.path.join(path, f)).names)
+        for f in _table_files(path)
+        if f.endswith(".parquet")
+    }
+    assert orders == {("text", "wav_path")}, orders
+
+
+def test_run_pipeline_runs_its_dag_once(spark, wav_dir, tmp_path):
+    """A first ingest of the fixture WAVs runs 3 jobs and a re-ingest 4 (the
+    extra one reads the table's keys): the DAG runs once per batch, where
+    the persist -> count -> write sink ran it as 6 jobs each time."""
+    sc = spark.sparkContext
+    out_dir, table = str(tmp_path / "clips"), str(tmp_path / "meta")
+    counts = []
+    for group, refresh in (("pipeline_first_ingest", True), ("pipeline_reingest", False)):
+        sc.setJobGroup(group, "run_pipeline job count")
+        try:
+            n = run_pipeline(spark, wav_dir, out_dir, table, refresh=refresh)
+        finally:
+            sc.setJobGroup(None, None)
+        counts.append((n, len(sc.statusTracker().getJobIdsForGroup(group))))
+    assert counts[0][0] == spark.read.parquet(table).count() > 0
+    assert [jobs for _, jobs in counts] == [3, 4], counts
+    assert counts[1][0] == 0
 
 
 def _riff(fmt_body: bytes, data: bytes) -> bytes:

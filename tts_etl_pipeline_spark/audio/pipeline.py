@@ -9,7 +9,8 @@ README.md:33, SURVEY §4).
          resample (P1-P3), segment (T1), slice, metrics (P4-P7)
       -> F2 gate -> F3 ASR guard -> ASR (M1) -> F4-F6 text gates
       -> S5 wav export (drops `samples`) -> W1 overlap window -> F7
-      -> S4 insert-or-ignore metadata sink
+      -> S4 insert-or-ignore metadata sink: one write to a staging dir,
+         rows counted from its parquet footers, files renamed in
 
 Like the reference loop (pa.py:393-426), each file's waveform enters
 Python once: it is decoded, cut and scored in memory, and only the

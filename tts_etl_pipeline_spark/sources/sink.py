@@ -3,10 +3,13 @@
 - `create_table` / `insert_or_ignore`: the SQLite DDL + `INSERT OR IGNORE`
   surface re-expressed as a Parquet table with first-writer-wins append:
   dedup within the incoming batch on the key, then LEFT ANTI join against the
-  existing table's keys, then append (SURVEY §2.1-S4). The anti join's build
-  side is keys-only — at 100 TB the sink table's key column is a fraction of
-  the data and the join is AQE-optimized; with Delta available this becomes
-  MERGE WHEN NOT MATCHED.
+  existing table's keys, then append (SURVEY §2.1-S4). The append is one
+  Spark action, like the reference's one `executemany`: the rows are
+  written to a sibling staging directory, counted from the parquet footers
+  and renamed into the table. The anti join's build side is keys-only — at
+  100 TB the sink table's key column is a fraction of the data and the join
+  is AQE-optimized; with Delta available this becomes MERGE WHEN NOT
+  MATCHED.
 - `export_wavs`: per-row WAV file sink via foreachPartition-style
   mapInPandas (Spark has no native per-row binary sink); failures yield a
   null wav_path which the F7 filter drops (pa.py:348-352).
@@ -37,30 +40,58 @@ def insert_or_ignore(
     rows in order; we keep an arbitrary single row per key via
     dropDuplicates, matching the reference's per-batch uniqueness).
 
+    One Spark action per call: the new rows are written once, to a sibling
+    staging directory; the count is the sum of the staged files' parquet
+    footers (no job), and the part files that hold rows are then renamed
+    into `table_path`. The upstream DAG (in run_pipeline: decode, ASR and
+    the side-effecting WAV export) therefore runs once, and the count is
+    exactly what was written. A failed write leaves the table as it was;
+    a zero-row insert creates no `table_path`.
+
     Concurrency: single-writer only, like the SQLite original. The
     read-keys/anti-join/append sequence is not transactional — two writers
     racing on the same table can both miss the other's keys and append
     duplicates. A multi-writer deployment needs a table format with
     optimistic transactions (Delta/Iceberg MERGE WHEN NOT MATCHED).
+    Readers can see part of a batch while its files are being renamed in,
+    as they can during Spark's own job commit of a direct append.
     """
+    import shutil
+    import uuid
+
+    import pyarrow.parquet as pq
+
     spark = df.sparkSession
     incoming = df.dropDuplicates([key])
     if _table_exists(spark, table_path):
         # an explicit one-column schema: no parquet schema-inference job
         existing_keys = spark.read.schema(StructType([df.schema[key]])).parquet(table_path)
-        incoming = incoming.join(existing_keys, key, "left_anti")
-    # persist before count+write: without it the count action and the write
-    # action would each execute the FULL upstream DAG (in run_pipeline that
-    # means decode, ASR inference, and the side-effecting WAV export — twice),
-    # and a nondeterministic upstream could write different rows than counted
-    incoming = incoming.persist()
+        # a USING join moves the key column first; every file keeps df's
+        # column order, else the read-back schema depends on which
+        # footer Spark happens to infer it from
+        incoming = incoming.join(existing_keys, key, "left_anti").select(*df.columns)
+    staging = f"{table_path.rstrip('/')}._staging-{uuid.uuid4().hex[:8]}"
     try:
-        n = incoming.count()
-        if n:
-            incoming.write.mode("append").parquet(table_path)
+        incoming.write.parquet(staging)
+        staged = {}
+        for name in sorted(os.listdir(staging)):
+            if name.endswith(".parquet"):
+                rows = pq.ParquetFile(os.path.join(staging, name)).metadata.num_rows
+                if rows:
+                    staged[name] = rows
+        # part names carry the write job's UUID: a clash is a bug, never
+        # a file to overwrite — checked before the first rename
+        clash = [f for f in staged if os.path.exists(os.path.join(table_path, f))]
+        if clash:
+            raise FileExistsError(f"staged part files already in {table_path}: {clash}")
+        if staged:
+            os.makedirs(table_path, exist_ok=True)
+        for name in staged:
+            os.replace(os.path.join(staging, name), os.path.join(table_path, name))
     finally:
-        incoming.unpersist()
-    return n
+        if os.path.exists(staging):
+            shutil.rmtree(staging)
+    return sum(staged.values())
 
 
 def create_table(spark: SparkSession, table_path: str, refresh: bool = True) -> None:
