@@ -2,14 +2,20 @@
 """Benchmark driver: runs the headline queries at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
 compact JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
-"cpu_total": ..., "sf": ..., "n_queries": ..., "detail": "bench_detail.json"}.
+"cpu_total": ..., "sf": ..., "n_queries": ..., "detail": "bench_detail_c{N}.json"}.
 
 Per-query wall/cpu detail goes to the SIDECAR file named by "detail"
-(bench_detail.json next to this script), NOT to stdout: the round-10
+(bench_detail_c{N}.json next to this script, N = the core count), NOT to stdout: the round-10
 record came back `parsed: null` because the old single line carrying 52
 per-query walls + cpus overflowed the 2000-char stdout tail the driver
 keeps — the headline line must stay small enough to survive that tail
 whatever the query count grows to (r10 verdict task 1).
+
+One sidecar per core count, so a 32-core and an 8-core run both keep
+their detail. Beside wall and CPU it records `codegen_compiles`: the
+classes Spark's code generator compiled during each query's min-wall
+repetition (0 once the query's shape is in the JVM's codegen cache), so
+compile thrash shows per query.
 
 Each query is materialized with collect() (results are small aggregates /
 top-k) or a noop-count for large outputs. Timing includes plan + execution,
@@ -26,7 +32,11 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from tts_etl_pipeline_spark.registry import all_queries  # noqa: E402
-from tts_etl_pipeline_spark.session import DEFAULT_SF_DIR, get_spark  # noqa: E402
+from tts_etl_pipeline_spark.session import (  # noqa: E402
+    DEFAULT_SF_DIR,
+    cpu_count,
+    get_spark,
+)
 
 # Queries timed per-round; grows as operators land. Names must exist in the
 # registry. Keep this the "one of each shape" set, not the full inventory.
@@ -219,10 +229,32 @@ def _cpu_seconds() -> float:
     return total / os.sysconf("SC_CLK_TCK")
 
 
+def _codegen_compiles(spark) -> int:
+    """Classes this JVM's code generator has compiled so far (Spark's
+    CodegenMetrics: one compile-time sample per Janino compile)."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
+def _warm(what: str, run) -> None:
+    """Run one warm-up step. A failure degrades the bench to an unwarmed
+    measurement and never aborts it, but is reported."""
+    try:
+        run()
+    except Exception as e:  # noqa: BLE001
+        msg = str(e).strip().splitlines()
+        print(
+            f"bench: warm-up {what} failed, timing unwarmed: "
+            f"{type(e).__name__}: {msg[0] if msg else ''}",
+            file=sys.stderr,
+        )
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", DEFAULT_SF_DIR)
     sf = sf_dir.rstrip("/").split("sf")[-1]
-    spark = get_spark("bench")
+    cpus = cpu_count()
+    spark = get_spark("bench", cpus=cpus)
     queries = all_queries()
     pool = SPOT_CHECK if "--spot-check" in sys.argv[1:] else HEADLINE
     names = [n for n in pool if n in queries]
@@ -231,10 +263,10 @@ def main() -> None:
     # all JIT on first use — run the flagship once at the smallest sf so the
     # timed loop measures steady-state execution, not JVM warmup
     spark.range(1).count()
-    try:
+    def flagship():
         queries["q1_pricing_summary"](spark, "/root/testdata/sf0.001").collect()
-    except Exception:
-        pass
+
+    _warm("q1_pricing_summary", flagship)
     # warm the shuffle exchange path too (hash partitioner, shuffle
     # writer/reader, AQE stage machinery): the sf0.001 flagship plan has no
     # Exchange to exercise, so without this the FIRST timed query that
@@ -244,16 +276,16 @@ def main() -> None:
     # caches their results.
     from pyspark.sql import functions as _F
 
-    try:  # degrade to an unwarmed measurement, never abort the bench (ADVICE r13)
-        (
+    _warm(
+        "shuffle",
+        lambda: (
             spark.range(100_000)
             .repartition(8, _F.xxhash64("id"))
             .groupBy((_F.col("id") % 7).alias("g"))
             .count()
             .collect()
-        )
-    except Exception:
-        pass
+        ),
+    )
 
     # Each query is timed twice back-to-back and the MIN recorded: the
     # shared host shows transient contention spikes (BASELINE.md documents
@@ -269,9 +301,11 @@ def main() -> None:
     # from one run now).
     timings: dict[str, float] = {}
     cpu: dict[str, float] = {}
+    compiles: dict[str, int] = {}
     for name in names:
-        best, best_cpu = float("inf"), 0.0
+        best, best_cpu, best_compiles = float("inf"), 0.0, 0
         for _ in range(2):
+            k0 = _codegen_compiles(spark)
             c0 = _cpu_seconds()
             t0 = time.perf_counter()
             df = queries[name](spark, sf_dir)
@@ -279,8 +313,10 @@ def main() -> None:
             wall = time.perf_counter() - t0
             if wall < best:
                 best, best_cpu = wall, _cpu_seconds() - c0
+                best_compiles = _codegen_compiles(spark) - k0
         timings[name] = round(best, 4)
         cpu[name] = round(best_cpu, 4)
+        compiles[name] = best_compiles
 
     total = round(sum(timings.values()), 4)
     metric = (
@@ -288,9 +324,8 @@ def main() -> None:
     )
     sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
     # per-query detail -> sidecar (never stdout: see module docstring)
-    detail_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "bench_detail.json"
-    )
+    detail = f"bench_detail_c{cpus}.json"
+    detail_path = os.path.join(os.path.dirname(os.path.abspath(__file__)), detail)
     with open(detail_path, "w", encoding="utf-8") as fh:
         json.dump(
             {
@@ -300,6 +335,7 @@ def main() -> None:
                 "queries": timings,
                 "cpu": cpu,
                 "cpu_total": round(sum(cpu.values()), 4),
+                "codegen_compiles": compiles,
                 "sf": sf_val,
             },
             fh,
@@ -314,7 +350,7 @@ def main() -> None:
                 "cpu_total": round(sum(cpu.values()), 4),
                 "sf": sf_val,
                 "n_queries": len(timings),
-                "detail": "bench_detail.json",
+                "detail": detail,
             }
         )
     )

@@ -659,6 +659,48 @@ def test_sessions_are_configured_only_by_get_spark():
     )
 
 
+# perfbench's `queries` set: at sf0.001 it compiles 189 classes in a fresh
+# JVM, more than the 100 entries of Spark's default codegen cache
+WARM_RERUN_QUERIES = (
+    "q1_pricing_summary",
+    "q3_shipping_priority",
+    "q5_local_supplier",
+    "q9_product_profit",
+    "q18_large_volume_customer",
+    "h1_time_rollup_hierarchy",
+    "d3_jaccard_neardup_pairs",
+    "d14_semantic_dedup",
+    "c9_mixture_downsample",
+    "c14_pareto_skyline",
+)
+
+
+def test_warm_rerun_compiles_no_generated_class(spark, sf_dir):
+    """get_spark sizes Spark's JVM-wide codegen cache
+    (spark.sql.codegen.cache.maxEntries) above the registry's working set,
+    so a query shape that has run once in this JVM is not compiled again.
+    With Spark's default of 100 entries this set cycles the LRU and its
+    re-run recompiles."""
+    from tts_etl_pipeline_spark.registry import all_queries
+    from tts_etl_pipeline_spark.session import CODEGEN_CACHE_ENTRIES
+
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == str(
+        CODEGEN_CACHE_ENTRIES
+    )
+    queries = all_queries()
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    for name in WARM_RERUN_QUERIES:
+        queries[name](spark, sf_dir).collect()
+    recompiled = {}
+    for name in WARM_RERUN_QUERIES:
+        before = codegen.METRIC_COMPILATION_TIME().getCount()
+        queries[name](spark, sf_dir).collect()
+        n = codegen.METRIC_COMPILATION_TIME().getCount() - before
+        if n:
+            recompiled[name] = n
+    assert not recompiled, f"classes compiled again on a warm re-run: {recompiled}"
+
+
 def test_snapshot_reads_go_through_the_opener():
     """sources/versioned.py is the one reader of the manifest format:
     every other module opens a snapshot through `_open_base` (or a public
