@@ -17,7 +17,11 @@ from tts_etl_pipeline_spark.audio.asr import (
     _get_model,
     transcribe,
 )
-from tts_etl_pipeline_spark.audio.testing import MockHfPipeline, mock_whisper_factory
+from tts_etl_pipeline_spark.audio.testing import (
+    MockHfPipeline,
+    mock_whisper_factory,
+    mock_whisper_wordy_factory,
+)
 
 
 @pytest.fixture(autouse=True)
@@ -81,3 +85,27 @@ def test_whisper_path_microbatches_through_spark(spark):
     sizes = sorted(int(r.text.split()[0].split("=")[1]) for r in got)
     assert sizes == [4] * 4 + [8] * 16, f"micro-batch sizes wrong: {sizes}"
     assert all(r.text == r.text.strip() for r in got)  # P8 strip applied
+
+
+def test_whisper_path_runs_in_the_pipeline_stage(spark, tmp_path):
+    """run_pipeline takes a model factory as `transcribe` does. Its per-file
+    stage hands the model each file's gated segments with their float32
+    samples and frame rate (the mock asserts both) in one micro-batch per
+    file, as pa.py:268-271 batches one file's segments: every transcript
+    names a chunk as large as its file's row count."""
+    from collections import Counter
+
+    from tts_etl_pipeline_spark.audio import synth
+    from tts_etl_pipeline_spark.audio.pipeline import run_pipeline
+
+    wav_dir = tmp_path / "wavs"
+    synth.write_fixture_dir(str(wav_dir))
+    table = str(tmp_path / "meta")
+    n = run_pipeline(spark, str(wav_dir), str(tmp_path / "clips"), table,
+                     asr_model=mock_whisper_wordy_factory)
+    rows = spark.read.parquet(table).select("original_name", "text").collect()
+    assert n == len(rows) > 0
+    per_file = Counter(r.original_name for r in rows)
+    assert max(per_file.values()) > 1
+    for r in rows:
+        assert r.text == f"chunk={per_file[r.original_name]} sr=16000 words", r

@@ -168,6 +168,22 @@ def test_wav_export_failure_drops_the_row(spark, tmp_path):
     assert os.listdir(out_dir) == ["ok_0000s_0003s.wav"]
 
 
+def test_failed_clip_write_leaves_no_file(spark, tmp_path):
+    """A clip whose write fails after its file is opened (frame rate 0 is
+    refused by the WAV writer) leaves no file behind: clips are written
+    under a temporary name and renamed into place only when complete."""
+    out_dir = str(tmp_path / "clips")
+    segs = spark.createDataFrame(
+        [("ok.wav", 0, 3000, [0.0] * 160, 16_000),
+         ("bad.wav", 0, 3000, [0.0] * 160, 0)],
+        "original_name string, start_ms long, end_ms long, "
+        "samples array<float>, frame_rate int",
+    )
+    saved = export_wavs(segs, out_dir).filter(filters.saved_ok()).collect()
+    assert [r["original_name"] for r in saved] == ["ok.wav"]
+    assert os.listdir(out_dir) == ["ok_0000s_0003s.wav"]
+
+
 def test_insert_or_ignore_first_writer_wins(spark, tmp_path):
     path = str(tmp_path / "meta")
     df1 = spark.createDataFrame(
@@ -275,9 +291,10 @@ def test_appended_files_keep_the_batch_column_order(spark, tmp_path):
 
 
 def test_run_pipeline_runs_its_dag_once(spark, wav_dir, tmp_path):
-    """A first ingest of the fixture WAVs runs 3 jobs and a re-ingest 4 (the
-    extra one reads the table's keys): the DAG runs once per batch, where
-    the persist -> count -> write sink ran it as 6 jobs each time."""
+    """A first ingest of the fixture WAVs runs 2 jobs and a re-ingest 3 (the
+    extra one reads the table's keys): the DAG runs once per batch, as one
+    per-file Python stage with no W1 shuffle. The persist -> count -> write
+    sink ran it as 6 jobs each time, and the window stage added one."""
     sc = spark.sparkContext
     out_dir, table = str(tmp_path / "clips"), str(tmp_path / "meta")
     counts = []
@@ -289,7 +306,7 @@ def test_run_pipeline_runs_its_dag_once(spark, wav_dir, tmp_path):
             sc.setJobGroup(None, None)
         counts.append((n, len(sc.statusTracker().getJobIdsForGroup(group))))
     assert counts[0][0] == spark.read.parquet(table).count() > 0
-    assert [jobs for _, jobs in counts] == [3, 4], counts
+    assert [jobs for _, jobs in counts] == [2, 3], counts
     assert counts[1][0] == 0
 
 

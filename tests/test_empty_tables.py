@@ -127,6 +127,44 @@ def null_text_sf(sf_dir, tmp_path_factory):
     return str(root)
 
 
+@pytest.fixture(scope="module")
+def null_user_sf(sf_dir, tmp_path_factory):
+    """A NULL-key vintage: every third events.user_id is NULL, every other
+    table is copied as it is."""
+    root = tmp_path_factory.mktemp("null_user_sf")
+    for t in TABLE_NAMES:
+        tbl = pq.read_table(f"{sf_dir}/{t}.parquet")
+        if t == "events":
+            users = tbl.column("user_id").to_pylist()
+            tbl = tbl.set_column(
+                tbl.schema.get_field_index("user_id"),
+                "user_id",
+                pa.array(
+                    [None if i % 3 == 0 else u for i, u in enumerate(users)],
+                    type=tbl.schema.field("user_id").type,
+                ),
+            )
+        pq.write_table(tbl, str(root / f"{t}.parquet"))
+    return str(root)
+
+
+def test_r2_skips_null_users_like_its_oracle(spark, null_user_sf):
+    """r2 counts an incident's sessions and users as the oracle's
+    COUNT(s.user_id) and COUNT(DISTINCT s.user_id) do, which skip the
+    sessions of a NULL user; grouping the overlaps by (inc, user_id)
+    counted that user as one more user and its sessions with the rest."""
+    from tests.oracle_harness import compare, duckdb_connection
+
+    name = "r2_interval_overlap_join"
+    con = duckdb_connection(null_user_sf)
+    try:
+        oracle = con.execute(all_oracles()[name]).fetchdf()
+    finally:
+        con.close()
+    assert oracle["n_users"].sum() > 0
+    assert compare(all_queries()[name](spark, null_user_sf), oracle, name) == []
+
+
 @pytest.mark.parametrize("shard", range(_N_SHARDS))
 def test_readonly_queries_survive_all_null_text(spark, null_text_sf, shard):
     """All oracle-backed read-only queries must still run under the

@@ -1276,15 +1276,15 @@ def test_audio_stages_slice_in_python_and_score_once(spark, fixture_wavs):
     assert len(scoring) == 1, plan
 
 
-def test_pipeline_window_shuffles_no_samples(spark, fixture_wavs, tmp_path):
-    """run_pipeline's DAG (explained, not run): no Generate, and the W1
-    window's one Exchange moves metadata only — the clips are exported
-    before it, so `samples` is no longer a column there."""
+def test_pipeline_is_one_python_stage_with_no_samples(spark, fixture_wavs, tmp_path):
+    """run_pipeline's DAG (explained, not run) is the reference's per-file
+    loop as one Arrow stage: exactly one MapInArrow and no other Python
+    node, no Window and no Exchange (W1 runs inside the stage, where a
+    file's segments already are), and no node carries `samples`."""
     from tts_etl_pipeline_spark.audio.pipeline import build_pipeline
 
     plan = physical_plan(build_pipeline(spark, fixture_wavs, str(tmp_path / "clips")))
-    assert "Generate" not in plan, plan
-    exchanges = re.findall(r"^\(\d+\) Exchange\nInput \[\d+\]: \[(.*)\]$", plan, re.MULTILINE)
-    assert len(exchanges) == 1, plan
-    assert "original_name#" in exchanges[0]
-    assert "samples#" not in exchanges[0], exchanges[0]
+    assert [name for name, _ in _python_nodes(plan)] == ["MapInArrow"], plan
+    for node in ("Window", "Exchange", "Generate"):
+        assert not re.search(rf"^\(\d+\) {node}", plan, re.MULTILINE), plan
+    assert "samples#" not in plan, plan

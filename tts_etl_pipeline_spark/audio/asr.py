@@ -3,11 +3,12 @@
 Design (SURVEY §2.1-M1, §7 hard-part 5):
 - the model is a PER-EXECUTOR lazy singleton (the reference's module global,
   pa.py:40-46) — never pickled through the driver closure;
-- inference runs in mapInPandas with internal micro-batching
-  (reference batch_size=8, pa.py:268-271); mapInPandas is itself an
-  optimizer barrier, which is what keeps the cheap audio filters below the
-  ASR stage (SURVEY §4) — if this is ever refactored to a plain pandas_udf
-  column, mark it nonDeterministic() to retain that guarantee;
+- `transcribe_rows` is the one micro-batching loop (reference
+  batch_size=8, pa.py:268-271). `transcribe` runs it in mapInPandas, an
+  optimizer barrier that keeps the cheap audio filters below the ASR stage
+  (SURVEY §4) — if this is ever refactored to a plain pandas_udf column,
+  mark it nonDeterministic() to retain that guarantee. run_pipeline's
+  per-file stage (pipeline.py) calls it on each file's gated segments;
 - the real Whisper model is optional (transformers is not in this runtime);
   tests inject FakeAsrModel, a deterministic stand-in whose output is a pure
   function of (original_name, start_ms, end_ms).
@@ -16,7 +17,7 @@ Design (SURVEY §2.1-M1, §7 hard-part 5):
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import numpy as np
 import pandas as pd
@@ -84,8 +85,8 @@ class WhisperAsrModel:
     def transcribe_batch(self, rows: pd.DataFrame) -> list[str]:
         # HF long-form API: raw float32 waveform + its sampling rate
         # (pa.py:241-249); batch_size is HF's internal GPU micro-batch
-        # (pa.py:268-271) — our mapInPandas loop chunks to the same size
-        # above it so a straggler partition never queues unbounded audio.
+        # (pa.py:268-271) — transcribe_rows chunks to the same size above
+        # it so a straggler partition never queues unbounded audio.
         inputs = [
             {"sampling_rate": int(r), "raw": np.asarray(s, dtype=np.float32)}
             for s, r in zip(rows["samples"], rows["frame_rate"])
@@ -96,7 +97,7 @@ class WhisperAsrModel:
         return [r["text"] for r in results]
 
 
-# Named model kinds. A zero-arg factory travels through the mapInPandas
+# Named model kinds. A zero-arg factory travels through the Python stage's
 # closure pickled BY REFERENCE (module-level class/function), so the model
 # itself is only ever constructed executor-side — heavyweight weights never
 # enter a pickle.
@@ -115,27 +116,41 @@ def _get_model(kind: str, factory):
     return _MODEL[1]
 
 
-def transcribe(segments_df: DataFrame, model="fake") -> DataFrame:
-    """Add a `text` column (stripped, pa.py:275 / P8).
-
-    ``model`` is a MODEL_FACTORIES key ("fake", "whisper") or any
-    importable zero-arg factory (e.g. audio.testing.mock_whisper_factory)."""
+def model_loader(model) -> Callable[[], object]:
+    """A zero-arg loader of the per-executor model for `model`: a
+    MODEL_FACTORIES key ("fake", "whisper") or any importable zero-arg
+    factory (e.g. audio.testing.mock_whisper_factory). The key is resolved
+    here, on the driver, so an unknown one fails when the DAG is built."""
     if callable(model):
         kind, factory = f"{model.__module__}.{model.__qualname__}", model
     else:
         kind, factory = model, MODEL_FACTORIES[model]
+    return lambda: _get_model(kind, factory)
+
+
+def transcribe_rows(mdl, rows: pd.DataFrame) -> list[str]:
+    """One transcript per row of `rows`, in micro-batches of ASR_BATCH_SIZE
+    (pa.py:268-271), stripped (P8, pa.py:275)."""
+    texts: list[str] = []
+    for lo in range(0, len(rows), ASR_BATCH_SIZE):
+        texts.extend(mdl.transcribe_batch(rows.iloc[lo : lo + ASR_BATCH_SIZE]))
+    return [t.strip() for t in texts]
+
+
+def transcribe(segments_df: DataFrame, model="fake") -> DataFrame:
+    """Add a `text` column (stripped, pa.py:275 / P8).
+
+    ``model`` is what `model_loader` takes."""
+    load = model_loader(model)
     fields = segments_df.schema.fields
     out_schema = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in fields)
     out_schema += ", text string"
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        mdl = _get_model(kind, factory)
+        mdl = load()
         for pdf in batches:
-            texts: list[str] = []
-            for lo in range(0, len(pdf), ASR_BATCH_SIZE):  # micro-batch (pa.py:268-271)
-                texts.extend(mdl.transcribe_batch(pdf.iloc[lo : lo + ASR_BATCH_SIZE]))
             pdf = pdf.copy()
-            pdf["text"] = [t.strip() for t in texts]  # P8 (pa.py:275)
+            pdf["text"] = transcribe_rows(mdl, pdf)
             yield pdf
 
     return segments_df.mapInPandas(gen, out_schema)

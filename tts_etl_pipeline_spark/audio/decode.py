@@ -8,7 +8,7 @@ generator, pa.py:79-92, is exactly Spark's partition iterator).
 
 The reference's sorted() over the glob (pa.py:396) existed only to make the
 one-process loop deterministic; order is irrelevant here because downstream
-adjacency (W1) is expressed as a window over (original_name, start_ms).
+adjacency (W1) orders each file's segments by start_ms.
 """
 
 from __future__ import annotations

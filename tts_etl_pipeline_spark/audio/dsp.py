@@ -1,12 +1,12 @@
 """P4-P7 — per-segment signal metrics (pa.py:167-238 computes metrics and
 filters in a single fused pass). `segment_metrics` is the math for one
-segment; the pipeline's fused stage (pipeline.py) calls it on each slice
-right after segmentation, and `with_metrics` is the same step as a
-standalone mapInArrow. Either way the metrics come out of a Python map
-node, which Catalyst cannot push a filter beneath, so the F2 gate in
-filters.py stays a plain Catalyst filter above it and the metrics are
-computed exactly once per segment (SURVEY §4 'fused metric-compute +
-filter').
+segment; the pipeline's per-file stage (pipeline.py) calls it on each
+slice right after segmentation and gates it at once with F2's Python twin,
+like the reference's fused pass. `with_metrics` is the same step as a
+standalone mapInArrow; its metrics come out of a Python map node, which
+Catalyst cannot push a filter beneath, so the F2 Column of filters.py
+stays a plain Catalyst filter above it and the metrics are computed
+exactly once per segment (SURVEY §4 'fused metric-compute + filter').
 """
 
 from __future__ import annotations

@@ -9,7 +9,10 @@ Reference semantics, preserved exactly (SURVEY §2.1-W1 / Appendix bug B4):
 - default False (pa.py:298); null-safe via coalesce.
 
 One shuffle on original_name; within-file order is (start_ms) which
-reproduces the reference's file-sorted sequential scan.
+reproduces the reference's file-sorted sequential scan. `overlap_flags` is
+the same rule over one file's survivors in Python, for run_pipeline's
+per-file stage (pipeline.py), which needs no shuffle: a file's segments
+never leave the task that decoded it.
 """
 
 from __future__ import annotations
@@ -17,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
+
+from tts_etl_pipeline_spark.audio.filters import words
 
 
 def with_overlap_flag(df: DataFrame) -> DataFrame:
@@ -30,3 +35,17 @@ def with_overlap_flag(df: DataFrame) -> DataFrame:
         next_first == last_word, F.lit(False)
     )
     return df.withColumn("overlap_flag", overlap)
+
+
+def overlap_flags(texts: list[str | None]) -> list[bool]:
+    """`with_overlap_flag` over one file's texts in start_ms order: the
+    words are split(lower(trim(text)), '\\s+') as Spark splits them, and a
+    NULL text matches nothing."""
+    split = [None if t is None else words(t.lower()) for t in texts]
+    first = [None if w is None else w[0] for w in split]
+    last = [None if w is None else w[-1] for w in split]
+    flags = [False] * len(texts)
+    for i in range(1, len(texts)):
+        if last[i - 1] is not None and last[i - 1] == first[i]:
+            flags[i - 1] = flags[i] = True
+    return flags

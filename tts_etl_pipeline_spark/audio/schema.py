@@ -38,16 +38,14 @@ METRICS_TYPE = T.StructType(
     ]
 )
 
-# the pipeline's fused decode/segment/score stage: a segment plus its metrics
-SCORED_SEGMENT_SCHEMA = T.StructType(SEGMENT_SCHEMA.fields + METRICS_TYPE.fields)
-
 # mirror of the reference's SQLite processed_data table (pa.py:58-69) with the
 # modeling fix from SURVEY §1.2: start/end stored as columns, not only in the
-# file name.
+# file name. It is also the output of run_pipeline's per-file stage, where a
+# null wav_path marks a failed clip export that F7 drops before the sink.
 PROCESSED_DATA_SCHEMA = T.StructType(
     [
         T.StructField("original_name", T.StringType(), False),
-        T.StructField("wav_path", T.StringType(), False),  # UNIQUE dedup key
+        T.StructField("wav_path", T.StringType(), True),  # UNIQUE dedup key
         T.StructField("text", T.StringType(), False),
         T.StructField("rms", T.DoubleType(), True),
         T.StructField("clipping_percent", T.DoubleType(), True),

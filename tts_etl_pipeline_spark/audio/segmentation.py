@@ -4,7 +4,7 @@ The interval algebra (detect -> split -> merge -> pad) is sequential within
 one file, so `file_segments` runs per file in Python; cross-file
 parallelism is free (SURVEY §2.1-T1). It also cuts each padded slice out of
 the file's array in numpy, so a segment row carries only its own samples,
-never the whole file's. The pipeline's fused stage (pipeline.py) calls it
+never the whole file's. The pipeline's per-file stage (pipeline.py) calls it
 between decode and metrics inside one Python pass; `segment` is the same
 step as a standalone mapInArrow over decoded file rows.
 

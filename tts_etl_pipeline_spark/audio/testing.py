@@ -35,3 +35,16 @@ class MockHfPipeline:
 
 def mock_whisper_factory() -> WhisperAsrModel:
     return WhisperAsrModel("mock/whisper-tiny", pipeline_factory=MockHfPipeline)
+
+
+class WordyMockHfPipeline(MockHfPipeline):
+    """MockHfPipeline with one more word in each transcript, so the
+    transcripts pass the F4-F6 text gates and reach the metadata table."""
+
+    def __call__(self, inputs, batch_size=None, generate_kwargs=None):
+        out = super().__call__(inputs, batch_size, generate_kwargs)
+        return [{"text": r["text"] + "words "} for r in out]
+
+
+def mock_whisper_wordy_factory() -> WhisperAsrModel:
+    return WhisperAsrModel("mock/whisper-tiny", pipeline_factory=WordyMockHfPipeline)

@@ -1,10 +1,11 @@
 """P1 — the full reference audio pipeline as a driver-visible query.
 
-Runs the end-to-end DAG S1 (binaryFile scan) -> decode -> T1 segmentation ->
-P4-P7 metrics -> F2 gate -> F3 guard -> fake-M1 ASR -> F4-F6 text gates ->
-S5 wav export -> W1 overlap window -> F7 -> S4 insert-or-ignore over the
-deterministic synthesized fixture set (audio/synth.py), then returns the
-metadata table contents (pa.py:393-426 is the reference spec).
+Runs the end-to-end DAG S1 (binaryFile scan) -> one per-file Python stage
+(decode -> T1 segmentation -> F3 guard -> P4-P7 metrics -> F2 gate ->
+fake-M1 ASR -> F4-F6 text gates -> W1 overlap flag -> S5 wav export) -> F7
+-> S4 insert-or-ignore over the deterministic synthesized fixture set
+(audio/synth.py), then returns the metadata table contents (pa.py:393-426
+is the reference spec).
 
 Registered WITHOUT an oracle: the pipeline's inputs are synthesized WAV
 bytes, not the driver's parquet tables, so DuckDB has nothing equivalent to

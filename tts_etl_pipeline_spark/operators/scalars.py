@@ -891,7 +891,9 @@ def r2_interval_overlap_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter((F.col("s_start") < F.col("inc_end")) & (F.col("inc_start") <= F.col("s_end")))
         .select("inc", "user_id", "session_id")
     )
-    per_user = overlaps.groupBy("inc", "user_id").agg(
+    # the oracle's COUNT(s.user_id) / COUNT(DISTINCT s.user_id) skip the
+    # sessions of a NULL user, so they leave the per-user aggregate
+    per_user = overlaps.filter(F.col("user_id").isNotNull()).groupBy("inc", "user_id").agg(
         F.countDistinct("session_id").alias("ns")
     )
     per_inc = per_user.groupBy("inc").agg(

@@ -10,21 +10,25 @@
   100 TB the sink table's key column is a fraction of the data and the join
   is AQE-optimized; with Delta available this becomes MERGE WHEN NOT
   MATCHED.
-- `export_wavs`: per-row WAV file sink via foreachPartition-style
-  mapInPandas (Spark has no native per-row binary sink); failures yield a
-  null wav_path which the F7 filter drops (pa.py:348-352).
+- `write_clip` / `clip_name`: the one WAV clip writer and clip naming
+  (Spark has no native per-row binary sink). run_pipeline's per-file stage
+  (audio/pipeline.py) calls them for each surviving segment, and
+  `export_wavs` is the same step as a standalone mapInPandas; a failed
+  write yields a null wav_path, which the F7 filter drops (pa.py:348-352).
 """
 
 from __future__ import annotations
 
+import contextlib
 import os
+import uuid
+import wave
 from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from tts_etl_pipeline_spark.audio import params as P
@@ -43,10 +47,11 @@ def insert_or_ignore(
     One Spark action per call: the new rows are written once, to a sibling
     staging directory; the count is the sum of the staged files' parquet
     footers (no job), and the part files that hold rows are then renamed
-    into `table_path`. The upstream DAG (in run_pipeline: decode, ASR and
-    the side-effecting WAV export) therefore runs once, and the count is
-    exactly what was written. A failed write leaves the table as it was;
-    a zero-row insert creates no `table_path`.
+    into `table_path`. The upstream DAG (in run_pipeline: the one per-file
+    Python stage that decodes, gates, transcribes and writes the clips)
+    therefore runs once, and the count is exactly what was written. A
+    failed write leaves the table as it was; a zero-row insert creates no
+    `table_path`.
 
     Concurrency: single-writer only, like the SQLite original. The
     read-keys/anti-join/append sequence is not transactional — two writers
@@ -57,7 +62,6 @@ def insert_or_ignore(
     as they can during Spark's own job commit of a direct append.
     """
     import shutil
-    import uuid
 
     import pyarrow.parquet as pq
 
@@ -112,15 +116,34 @@ def _table_exists(spark: SparkSession, path: str) -> bool:
     return False
 
 
-def clip_filename(stem_col, start_col, end_col):
+def clip_name(original_name: str, start_ms: int, end_ms: int) -> str:
     """P9 (pa.py:339-343): {stem}_{start_s:04d}s_{end_s:04d}s.wav with
     integer-second zero padding."""
-    return F.format_string(
-        "%s_%04ds_%04ds.wav",
-        stem_col,
-        F.floor(start_col / 1000).cast("long"),
-        F.floor(end_col / 1000).cast("long"),
-    )
+    stem = original_name.removesuffix(".wav")
+    return P.OUTPUT_NAME_FORMAT % (stem, start_ms // 1000, end_ms // 1000)
+
+
+def write_clip(path: str, samples: np.ndarray, rate: int) -> str | None:
+    """S5 (pa.py:335-352): one clip as 16-bit mono PCM. Returns `path`, or
+    None when the clip cannot be written (pa.py:348-352), which F7 drops.
+    The clip is written under a temporary name and renamed into place, so a
+    failed write leaves no clip behind and keeps one already at `path`."""
+    tmp = f"{path}.{uuid.uuid4().hex[:8]}.part"
+    try:
+        ints = (
+            np.clip(np.asarray(samples, dtype=np.float64), -1.0, 1.0) * P.INT16_FULL_SCALE
+        ).astype("<i2")
+        with wave.open(tmp, "wb") as w:
+            w.setnchannels(1)
+            w.setsampwidth(2)
+            w.setframerate(int(rate))
+            w.writeframes(ints.tobytes())
+        os.replace(tmp, path)
+        return path
+    except (OSError, wave.Error):
+        with contextlib.suppress(OSError):
+            os.remove(tmp)
+        return None
 
 
 def export_wavs(segments_df: DataFrame, out_dir: str) -> DataFrame:
@@ -129,45 +152,27 @@ def export_wavs(segments_df: DataFrame, out_dir: str) -> DataFrame:
     drops `samples`: once the clip is on disk nothing downstream reads
     them, so later shuffles move metadata only."""
     os.makedirs(out_dir, exist_ok=True)
-    stem = F.regexp_replace("original_name", r"\.wav$", "")
-    named = segments_df.withColumn(
-        "wav_name", clip_filename(stem, F.col("start_ms"), F.col("end_ms"))
-    )
-    fields = named.schema.fields
     out_schema = ", ".join(
         f"{f.name} {f.dataType.simpleString()}"
-        for f in fields
-        if f.name not in ("wav_name", "samples")
+        for f in segments_df.schema.fields
+        if f.name != "samples"
     )
     out_schema += ", wav_path string"
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import wave as wave_mod
-
         for pdf in batches:
-            paths = []
-            for samples, rate, name in zip(
-                pdf["samples"], pdf["frame_rate"], pdf["wav_name"]
-            ):
-                path = os.path.join(out_dir, name)
-                try:
-                    ints = (
-                        np.clip(np.asarray(samples, dtype=np.float64), -1.0, 1.0)
-                        * P.INT16_FULL_SCALE
-                    ).astype("<i2")
-                    with wave_mod.open(path, "wb") as w:
-                        w.setnchannels(1)
-                        w.setsampwidth(2)
-                        w.setframerate(int(rate))
-                        w.writeframes(ints.tobytes())
-                    paths.append(path)
-                except (OSError, wave_mod.Error):
-                    paths.append(None)  # pa.py:348-352 -> dropped by F7
-            pdf = pdf.drop(columns=["wav_name", "samples"])
+            paths = [
+                write_clip(os.path.join(out_dir, clip_name(name, start, end)), x, rate)
+                for name, start, end, x, rate in zip(
+                    pdf["original_name"], pdf["start_ms"], pdf["end_ms"],
+                    pdf["samples"], pdf["frame_rate"],
+                )
+            ]
+            pdf = pdf.drop(columns=["samples"])
             pdf["wav_path"] = paths
             yield pdf
 
-    return named.mapInPandas(gen, out_schema)
+    return segments_df.mapInPandas(gen, out_schema)
 
 
 def overwrite_partitions(df: DataFrame, table_path: str, partition_cols: list[str]) -> None:
