@@ -222,14 +222,20 @@ def test_merge_insert_only_beyond_range_carries_everything(spark):
 def test_merge_null_key_source_rows_insert(spark):
     base, path, df = _mk(spark, n=20, parts=2)
     try:
+        # the range-clustered table, then one laid out by a partition spec:
+        # an all-NULL source has no key span, so every file is planned
+        # touched and the partition probes over None must not raise
+        bucketed = f"{base}/bucketed"
+        write_version(df, bucketed, partition_by=(("sbucket", "k", 4),))
         src = df.filter(F.col("k") <= 2).withColumn(
             "k", F.lit(None).cast("long")
         )
-        merge(spark, path, src, "k")
-        got = read_version(spark, path)
-        # NULL keys never match (Delta): both rows INSERT, nothing updates
-        assert got.count() == 22
-        assert got.filter(F.col("k").isNull()).count() == 2
+        for p in (path, bucketed):
+            merge(spark, p, src, "k")
+            got = read_version(spark, p)
+            # NULL keys never match (Delta): both rows INSERT, nothing updates
+            assert got.count() == 22
+            assert got.filter(F.col("k").isNull()).count() == 2
     finally:
         shutil.rmtree(base, ignore_errors=True)
 

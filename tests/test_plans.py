@@ -613,7 +613,10 @@ def test_checkpoints_and_scratch_dirs_go_through_the_helpers():
     """functions/checkpoints.py is the one discipline for intermediates:
     `materialize` holds the package's only localCheckpoint call (so a
     configured checkpoint dir reaches every query) and operators get temp
-    dirs only from `scratch_dir` (so a failed write cannot leak one)."""
+    dirs only from `scratch_dir` (so a failed write cannot leak one).
+    Emptiness probes use `isEmpty()`, never `.limit(1).count()`: a LIMIT
+    inside whole-stage codegen names its counter from a JVM-wide sequence,
+    so the probe compiles new classes on every warm run."""
     import pathlib
 
     import tts_etl_pipeline_spark
@@ -629,8 +632,11 @@ def test_checkpoints_and_scratch_dirs_go_through_the_helpers():
                 offenders.append(f"{rel}:{i + 1}: {line.strip()}")
             if "tempfile.mkdtemp(" in line and rel.startswith("operators/"):
                 offenders.append(f"{rel}:{i + 1}: {line.strip()}")
+            if ".limit(1).count(" in line:
+                offenders.append(f"{rel}:{i + 1}: {line.strip()}")
     assert not offenders, (
-        "use functions.checkpoints.materialize / scratch_dir instead:\n"
+        "use functions.checkpoints.materialize / scratch_dir / isEmpty() "
+        "instead:\n"
         + "\n".join(offenders)
     )
 

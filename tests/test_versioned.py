@@ -2528,31 +2528,32 @@ def test_sharded_append_resplits_outgrown_buckets(spark, tmp_path, monkeypatch):
     assert total >= 74 and skipped >= 60  # stats survived the resplit
 
 
-def test_purge_dvs_recollects_blooms(spark, tmp_path):
-    """purge_dvs re-collects BLOOMS for the rewritten files (review
+@pytest.mark.parametrize("purge", ["purge_dvs", "purge_eq"])
+def test_purge_dvs_recollects_blooms(spark, tmp_path, purge):
+    """Both purges re-collect BLOOMS for the rewritten files (review
     finding 5): a purged table keeps equality skipping, not just range
-    pruning."""
-    from tts_etl_pipeline_spark.sources.versioned import (
-        delete_where_dv,
-        manifest,
-        purge_dvs,
-        read_version_bloom_pruned,
-        write_version,
-    )
+    pruning. purge_dvs follows a deletion-vector delete, purge_eq an
+    equality delete."""
+    from tts_etl_pipeline_spark.sources import versioned as V
 
     path = str(tmp_path / "t")
-    write_version(
+    V.write_version(
         spark.range(400).selectExpr("id AS k", "id*2 AS v")
         .repartition(4, "k"),  # hash layout: blooms are the only skip
         path,
         collect_blooms=("k",),
     )
-    delete_where_dv(spark, path, "k", 10, 10)
-    v3 = purge_dvs(spark, path)
-    m3 = manifest(path, v3)
-    rewritten = [f for f in m3["files"] if f not in set(manifest(path, 1)["files"])]
+    if purge == "purge_dvs":
+        V.delete_where_dv(spark, path, "k", 10, 10)
+    else:
+        V.delete_where_eq(path, "k", [10])
+    v3 = getattr(V, purge)(spark, path)
+    m3 = V.manifest(path, v3)
+    rewritten = [
+        f for f in m3["files"] if f not in set(V.manifest(path, 1)["files"])
+    ]
     assert rewritten and all(f in (m3.get("blooms") or {}) for f in rewritten)
-    got, skipped, total = read_version_bloom_pruned(spark, path, "k", 123)
+    got, skipped, total = V.read_version_bloom_pruned(spark, path, "k", 123)
     assert skipped >= 1 and got.count() == 1
 
 
@@ -2932,6 +2933,59 @@ def test_table_detail_describes_the_version(spark, tmp_path):
     vacuum(path, keep_versions=1, grace_seconds=0.0)
     dv = table_detail(path, 1)
     assert dv["missing_files"] == dv["num_files"] == 2
+
+
+def test_table_detail_reports_logical_names_after_rename(spark, tmp_path):
+    """stats_columns and bloom_columns use the names `columns` shows: a
+    renamed column is reported under its new name, not its physical
+    one."""
+    from tts_etl_pipeline_spark.sources.versioned import (
+        rename_column,
+        table_detail,
+    )
+
+    path = str(tmp_path / "t")
+    write_version(
+        spark.createDataFrame([(1, "a"), (2, "b")], "k int, tag string"),
+        path,
+        collect_stats=("k",),
+        collect_blooms=("tag",),
+    )
+    rename_column(path, "k", "kk")
+    rename_column(path, "tag", "label")
+    d = table_detail(path)
+    assert d["columns"] == ["kk", "label"]
+    assert d["stats_columns"] == ["kk"] and d["bloom_columns"] == ["label"]
+
+
+def test_failed_write_leaves_no_staging_dir(spark, tmp_path, monkeypatch):
+    """A versioned write that fails while staging removes its staging
+    directory and commits nothing: a flat write whose Spark job raises,
+    and a partition-laid write that fails while walking its staged tree."""
+    from tts_etl_pipeline_spark.sources import versioned as V
+
+    path = str(tmp_path / "t")
+    write_version(spark.range(5).selectExpr("id AS k"), path)
+    bad = spark.range(20).select(
+        F.when(F.col("id") == 3, F.raise_error(F.lit("boom")))
+        .otherwise(F.col("id"))
+        .alias("k")
+    )
+    with pytest.raises(Exception, match="boom"):
+        write_version(bad, path)
+
+    def unparsable(*_args):
+        raise ValueError("bad partition value")
+
+    monkeypatch.setattr(V, "_pvalue_parse", unparsable)
+    with pytest.raises(ValueError, match="bad partition value"):
+        write_version(
+            spark.range(20).selectExpr("id AS k"),
+            path,
+            partition_by=(("truncate", "k", 10),),
+        )
+    assert not [n for n in os.listdir(path) if n.startswith("_staging")]
+    assert current_version(path) == 1
 
 
 def test_concurrent_writers_all_commit_exactly_once(spark, tmp_path):
@@ -3339,6 +3393,89 @@ def test_partition_spec_mutation_interplay(spark, tmp_path):
     assert got2.count() == exp
     # untouched (unvectored) files keep their tuples, so pruning survives
     assert sk2 > 0
+
+
+def test_copy_on_write_writers_prune_on_partition_tuples(spark, tmp_path):
+    """delete_where and merge plan with _plan_pruned_files, so on a table
+    laid out by partition_by with no collect_stats they rewrite only the
+    partitions their predicate or source key span meets. Files of
+    disjoint partitions ride by reference: same names, same mtimes."""
+    from tts_etl_pipeline_spark.sources.versioned import (
+        delete_where,
+        manifest,
+        merge,
+    )
+
+    path = str(tmp_path / "t")
+    write_version(
+        spark.range(400).selectExpr("id AS k", "id * 2 AS v"),
+        path,
+        partition_by=(("truncate", "k", 100),),
+    )
+    m1 = manifest(path, 1)
+    assert len(m1["files"]) == 4
+    assert not any("k" in m1["stats"][f] for f in m1["files"])
+    sig = {f: os.stat(os.path.join(path, f)).st_mtime_ns for f in m1["files"]}
+
+    def carried(v: int) -> int:
+        return sum(
+            1
+            for f in manifest(path, v)["files"]
+            if f in sig and os.stat(os.path.join(path, f)).st_mtime_ns == sig[f]
+        )
+
+    v2 = delete_where(spark, path, "k", 150, 160)
+    assert carried(v2) == 3  # the 0xx, 2xx and 3xx files
+    src = spark.range(310, 321).selectExpr("id AS k", "-id AS v")
+    v3 = merge(spark, path, src, "k")
+    assert carried(v3) == 2  # the 0xx and 2xx files
+    rows = {r.k: r.v for r in read_version(spark, path).collect()}
+    assert len(rows) == 389 and rows[315] == -315 and rows[100] == 200
+
+
+def test_widen_keeps_sbucket_probes_sound(spark, tmp_path):
+    """sbucket hashes with Spark's murmur3, which hashes byte/short/int as
+    one 4-byte block and long as 8 bytes. widen_column refuses int -> long
+    on an sbucket column, whose files' bucket ids would stop matching the
+    probe (delete_where would carry the file holding the key, and a
+    one-row merge would insert a duplicate). short -> int keeps every
+    bucket id, and the writers still prune and find their row after it."""
+    import pytest as _pytest
+
+    from tts_etl_pipeline_spark.sources.versioned import (
+        delete_where,
+        manifest,
+        merge,
+        widen_column,
+    )
+
+    spec = (("sbucket", "k", 4),)
+    ints = str(tmp_path / "ints")
+    write_version(
+        spark.range(40).selectExpr("CAST(id AS INT) AS k", "id AS v"),
+        ints,
+        partition_by=spec,
+    )
+    with _pytest.raises(ValueError, match="sbucket"):
+        widen_column(ints, "k", "long")
+    assert dict(read_version(spark, ints).dtypes)["k"] == "int"
+
+    path = str(tmp_path / "shorts")
+    write_version(
+        spark.range(40).selectExpr("CAST(id AS SHORT) AS k", "id AS v"),
+        path,
+        partition_by=spec,
+    )
+    m1 = manifest(path, 1)
+    assert len(m1["files"]) == 4
+    widen_column(path, "k", "int")
+    v3 = delete_where(spark, path, "k", 5, 5)
+    assert len(set(manifest(path, v3)["files"]) & set(m1["files"])) == 3
+    src = spark.createDataFrame([(7, -7)], "k int, v long")
+    merge(spark, path, src, "k")
+    rows = sorted((r.k, r.v) for r in read_version(spark, path).collect())
+    assert len(rows) == 39
+    assert (5, 5) not in rows and (7, -7) in rows and (7, 7) not in rows
 
 
 def test_partition_spec_rename_survives(spark, tmp_path):

@@ -114,7 +114,7 @@ def connected_components(edges: DataFrame, max_rounds: int = 50) -> DataFrame:
             F.count(F.lit(1)), F.sum("src"), F.sum("dst")
         ).collect()[0]
         probe = (row[0], row[1], row[2])
-        if probe == prev_probe and new_edges.exceptAll(edges).limit(1).count() == 0:
+        if probe == prev_probe and new_edges.exceptAll(edges).isEmpty():
             edges = new_edges
             break
         prev_probe = probe

@@ -866,7 +866,7 @@ def pr7_incremental_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         rep2 = maintain_components_from_cdf(spark, pe, st)
         if rep2["steps"] != 1:
             raise RuntimeError(f"the resume must apply the backlog: {rep2}")
-        if edges.limit(1).count() and rep2["label_merges"] == 0:
+        if not edges.isEmpty() and rep2["label_merges"] == 0:
             raise RuntimeError(
                 "the final batch bridges fragments from earlier commits — "
                 "zero label merges means the step did not merge components"
@@ -876,7 +876,7 @@ def pr7_incremental_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         if rep3["steps"] != 0:
             raise RuntimeError(f"IVM replay was not a no-op: {rep3}")
         # an edge DELETE refuses typed: components cannot un-merge
-        if edges.limit(1).count():
+        if not edges.isEmpty():
             write_version(
                 read_version(spark, pe).limit(1), pe, mode="overwrite"
             )

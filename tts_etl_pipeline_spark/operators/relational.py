@@ -1973,7 +1973,7 @@ def j11_runtime_bloom_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         plan = physical_plan(out)
         injected = "might_contain" in plan and "bloom_filter_agg" in plan
         populated = (  # control-plane 1-row probes: the rule may decline
-            li.limit(1).count() == 1 and orders_p.limit(1).count() == 1
+            not li.isEmpty() and not orders_p.isEmpty()
         )  # on empty-side statistics, and that is correct behavior
         if populated and not injected:
             from tts_etl_pipeline_spark.sources.zorder import (
@@ -2602,8 +2602,8 @@ def j17_check_constraints(spark: SparkSession, sf_dir: str) -> DataFrame:
         except ConstraintViolationError:
             pass
         else:
-            n = read_version(spark, path).limit(1).count()
-            if n:  # empty table satisfies everything — vacuous, not a bug
+            # an empty table satisfies everything — vacuous, not a bug
+            if not read_version(spark, path).isEmpty():
                 raise RuntimeError("violating ADD CONSTRAINT was accepted")
         # the odd half appends THROUGH the gate
         write_version(orders.filter(F.col("o_orderkey") % 2 == 1), path)
@@ -3060,7 +3060,7 @@ def j21_string_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         # -> nothing to bound); only ROW-BEARING files owe bounds. An
         # empty part table stages one schema-bearing empty file and the
         # sweep's contract is "runs, zero rows" — not "prunes".
-        nonempty = part.limit(1).count() > 0
+        nonempty = not part.isEmpty()
         if nonempty and len(with_bounds) < len(m["files"]) - 1:
             raise RuntimeError(
                 "string bounds missing from the manifest for "
@@ -4787,7 +4787,7 @@ def j39_unique_constraint(spark: SparkSession, sf_dir: str) -> DataFrame:
         # so their re-staged copies are not conflicts)
         cur = read_version(spark, path)
         src = cur.filter(F.col("o_orderkey").between(100, 999))
-        if src.limit(1).count():
+        if not src.isEmpty():
             merge(spark, path, src, "o_orderkey")
         return materialize(
             read_version(spark, path)

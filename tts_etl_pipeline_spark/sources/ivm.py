@@ -296,7 +296,7 @@ def maintain_components_from_cdf(
         w = 0
     for v in range(w + 1, head + 1):
         feed = _signed_changes(spark, edges_path, v)
-        if feed.filter(F.col("__sign") < 0).limit(1).count():
+        if not feed.filter(F.col("__sign") < 0).isEmpty():
             raise ValueError(
                 "edge feed contains deletes; incremental components are "
                 "append-only (a delete can SPLIT a component — recompute "
@@ -305,13 +305,13 @@ def maintain_components_from_cdf(
         batch = feed.select(
             F.col(a).alias("__u"), F.col(b).alias("__v")
         ).distinct()
-        if batch.filter(
+        if not batch.filter(
             F.col("__u").isNull() | F.col("__v").isNull()
-        ).limit(1).count():
+        ).isEmpty():
             raise ValueError("edge batch holds NULL endpoints")
-        if batch.filter(
+        if not batch.filter(
             (F.col("__u") < 0) | (F.col("__v") < 0)
-        ).limit(1).count():
+        ).isEmpty():
             raise ValueError(
                 "edge batch holds negative node ids; the state's watermark "
                 "sentinel reserves them (ids must be non-negative)"

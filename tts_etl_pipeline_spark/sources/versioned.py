@@ -1176,6 +1176,42 @@ def _write_bloom_sidecar(path: str, blooms: dict) -> str:
     return rel
 
 
+def _load_bloom_sidecar(path: str, sc: str, cache: dict) -> dict:
+    """The bloom sidecar `sc` ({file: {physical column: bloom}}), loaded
+    once per `cache`. A missing or damaged sidecar reads as {}: pruning
+    degrades to reading the file, never to an error."""
+    if sc not in cache:
+        try:
+            with open(os.path.join(path, sc), encoding="utf-8") as fh:
+                cache[sc] = json.load(fh)
+        except (OSError, json.JSONDecodeError):
+            cache[sc] = {}
+    return cache[sc]
+
+
+def _tracked_columns(path: str, m: dict, files) -> tuple[tuple, tuple]:
+    """(stats columns, bloom columns) that `files` carry in the
+    materialized manifest `m`, each sorted and in LOGICAL names (through
+    colmap) — what a rewrite of those files re-collects so the table
+    keeps both pruning structures. Protocol-internal stats keys ("__v",
+    "__n", "__ridm", "__p:*" partition tuples) are not columns."""
+    cm_inv = {p: c for c, p in (m.get("colmap") or {}).items()}
+    stats = m.get("stats") or {}
+    bmap = m.get("blooms") or {}
+    stat_phys: set = set()
+    bloom_phys: set = set()
+    sidecars: dict = {}
+    for f in files:
+        stat_phys.update(c for c in stats.get(f, {}) if not c.startswith("__"))
+        if f in bmap:
+            sidecar = _load_bloom_sidecar(path, bmap[f], sidecars)
+            bloom_phys.update(sidecar.get(f, {}))
+    return (
+        tuple(sorted(cm_inv.get(p, p) for p in stat_phys)),
+        tuple(sorted(cm_inv.get(p, p) for p in bloom_phys)),
+    )
+
+
 # --------------------------------------------------------------------------
 # Deletion vectors (merge-on-read row-level deletes — Delta's DV feature,
 # r10 verdict task 3): a per-file bitmap of DELETED ROW POSITIONS stored in
@@ -1284,29 +1320,6 @@ def _load_dvs(path: str, manifest: dict, files: list[str]) -> dict:
     return out
 
 
-def _stage_files(df: DataFrame, path: str) -> list[str]:
-    """Write `df`'s rows as new immutable data files under data/ and return
-    their table-relative names. Staged files are INVISIBLE until a manifest
-    commit references them (a crash here leaves only vacuum-able orphans) —
-    this is step 1 of the commit protocol, shared by write_version and
-    write_version_parts."""
-    data_dir = os.path.join(path, "data")
-    staging = os.path.join(path, f"_staging-{uuid.uuid4().hex[:8]}")
-    df.write.mode("overwrite").parquet(staging)
-    os.makedirs(data_dir, exist_ok=True)
-    new_files = []
-    for fn in sorted(os.listdir(staging)):
-        if fn.endswith(".parquet"):
-            dst = f"{uuid.uuid4().hex}.parquet"
-            os.replace(os.path.join(staging, fn), os.path.join(data_dir, dst))
-            new_files.append(os.path.join("data", dst))
-    # remove staging leftovers (_SUCCESS etc.)
-    for fn in os.listdir(staging):
-        os.remove(os.path.join(staging, fn))
-    os.rmdir(staging)
-    return new_files
-
-
 def _stage_rows(
     path: str,
     base: _Base,
@@ -1335,13 +1348,11 @@ def _stage_rows(
     new_files: list[str] = []
     pstats: dict = {}
     for p in parts:
-        staged: list[str] = []
-        if layout:
-            staged, ps = _stage_partitioned(p, path, layout[0], colmap, layout[1])
-            pstats.update(ps)
-        if not staged:  # unpartitioned, or empty input under a spec
-            staged = _stage_files(_stage_physical(p, colmap), path)
+        staged, ps = _stage_files(p, path, colmap, *(layout or ()))
+        if not staged and layout:  # empty input under a spec: stage flat
+            staged, ps = _stage_files(p, path, colmap)
         new_files.extend(staged)
+        pstats.update(ps)
     stats = _footer_minmax(
         path, new_files, tuple(phys_of(c, c) for c in collect_stats),
         with_counts=True,
@@ -1558,7 +1569,13 @@ def widen_column(path: str, col: str, new_type) -> int:
     and every read serves the recorded (wide) schema — Spark's parquet
     reader up-converts natively. Stats/blooms/partition tuples stay valid
     (numeric probes are type-insensitive by design throughout this
-    module). Appends after the widen must carry the WIDE type (the
+    module) with one exception, refused typed: widening to long a column
+    an sbucket spec field covers, in any spec vintage. Spark's murmur3
+    hashes byte/short/int as one 4-byte block and long as 8 bytes, so
+    the existing files' bucket ids would disagree with the probe (and
+    with the bucket a post-widen append lands in), and pruned readers
+    and copy-on-write writers would skip files holding matching rows.
+    Appends after the widen must carry the WIDE type (the
     no-silent-retype append rule still holds — cast explicitly). Time
     travel before the widen serves the narrow type, per the
     schema-per-snapshot contract. Anything not a legal promotion refuses
@@ -1582,6 +1599,17 @@ def widen_column(path: str, col: str, new_type) -> int:
             f"{new_t.simpleString()}: only byte->short->int->long, "
             f"float->double and same-scale decimal precision growth are "
             f"value-preserving promotions"
+        )
+    pcol = _phys(m, col)
+    if new_t.typeName() == "long" and any(
+        t == "sbucket" and c == pcol
+        for spec in (m.get("pspecs") or {}).values()
+        for t, c, _p in spec
+    ):
+        raise ValueError(
+            f"cannot widen {col!r} to long: an sbucket partition field "
+            f"covers it, and Spark hashes int and long differently, so its "
+            f"files' bucket ids would no longer match the column"
         )
     new_schema = StructType(
         [
@@ -2203,7 +2231,9 @@ def _partition_probes(m: dict, pcol: str, lo, hi) -> list:
             if t == "sbucket":
                 # Spark-hash bucket: derivable only from an EQUALITY probe,
                 # and the hash is TYPE-SENSITIVE (int vs long blocks), so
-                # the column's own type drives the driver-side twin
+                # the column's own type drives the driver-side twin — it is
+                # every file's write-time type, since widen_column refuses
+                # int->long on an sbucket column
                 if lo != hi:
                     continue
                 from tts_etl_pipeline_spark.functions.murmur3 import bucket_id
@@ -2220,24 +2250,33 @@ def _partition_probes(m: dict, pcol: str, lo, hi) -> list:
     return probes
 
 
-def _stage_partitioned(
-    df: DataFrame, path: str, fields: list, colmap: dict | None, schema
+def _stage_files(
+    df: DataFrame, path: str, colmap: dict | None, fields=(), schema=None
 ) -> tuple[list[str], dict]:
-    """Stage `df` laid out by the active partition spec: hash-repartition
-    on the transform columns (a tuple never straddles tasks, so the file
-    count is O(live partition tuples), not O(tasks x tuples)), write via
-    partitionBy, then walk the staging tree moving each file into data/
-    and recording its tuple values as synthetic [v, v] stats. NULL
-    transform values land in Spark's default partition dir and record no
-    stat for that field — never skipped, always read (the same sound
-    degradation as files that predate stats collection)."""
+    """Write `df`'s rows as new immutable data files under data/ and return
+    (their table-relative names, their partition tuples as synthetic
+    [v, v] stats) — step 1 of the commit protocol, under every writer that
+    adds rows. Staged files are INVISIBLE until a manifest commit
+    references them: a crash between the move and the commit leaves only
+    vacuum-able orphans, and the staging directory is removed whether or
+    not the Spark write succeeds.
+
+    With the active spec's `fields` (over the commit `schema`) the rows
+    are laid out by partition: hash-repartition on the transform columns
+    (a tuple never straddles tasks, so the file count is O(live partition
+    tuples), not O(tasks x tuples)), write via partitionBy, then walk the
+    staging tree moving each file into data/ and recording its tuple.
+    NULL transform values land in Spark's default partition dir and
+    record no stat for that field — never skipped, always read (the same
+    sound degradation as files that predate stats collection). With no
+    fields the write is flat and the walk visits one directory."""
     import shutil
     import urllib.parse
 
     from pyspark.sql import functions as F
 
     cm = colmap or {}
-    dtype_of = {cm.get(f.name, f.name): f.dataType for f in schema.fields}
+    dtype_of = {cm.get(f.name, f.name): f.dataType for f in schema or ()}
     staged = _stage_physical(df, colmap)
     meta: dict = {}  # stat key -> (transform, param, column dtype)
     for t, c, p in fields:
@@ -2251,42 +2290,47 @@ def _stage_partitioned(
         meta[key] = (t, p, dtype_of[c])
         staged = staged.withColumn(key, _partition_expr(t, c, p, dtype_of[c]))
     keys = list(meta)
-    staging = os.path.join(path, f"_staging-{uuid.uuid4().hex[:8]}")
-    (
-        staged.repartition(*[F.col(k) for k in keys])
-        .write.mode("overwrite")
-        .partitionBy(*keys)
-        .parquet(staging)
-    )
+    if keys:
+        writer = (
+            staged.repartition(*[F.col(k) for k in keys])
+            .write.mode("overwrite")
+            .partitionBy(*keys)
+        )
+    else:
+        writer = staged.write.mode("overwrite")
     data_dir = os.path.join(path, "data")
-    os.makedirs(data_dir, exist_ok=True)
+    staging = os.path.join(path, f"_staging-{uuid.uuid4().hex[:8]}")
     new_files: list[str] = []
     pstats: dict = {}
-    for root, _dirs, fns in sorted(os.walk(staging)):
-        rel_dir = os.path.relpath(root, staging)
-        parts = () if rel_dir == "." else tuple(rel_dir.split(os.sep))
-        for fn in sorted(fns):
-            if not fn.endswith(".parquet"):
-                continue
-            rec = {}
-            for part in parts:
-                k, _, raw = part.partition("=")
-                # Spark Hive-escapes special chars in dir names (the ':'
-                # in the synthetic key becomes %3A) — unquote BOTH sides
-                k = urllib.parse.unquote(k)
-                if k not in meta or raw == "__HIVE_DEFAULT_PARTITION__":
-                    continue  # null tuple value: unprunable on this field
-                t, p, dt = meta[k]
-                v = _pvalue_parse(t, p, urllib.parse.unquote(raw), dt)
-                if v is not None:
-                    rec[k] = [v, v]
-            dst = f"{uuid.uuid4().hex}.parquet"
-            os.replace(os.path.join(root, fn), os.path.join(data_dir, dst))
-            rel = os.path.join("data", dst)
-            new_files.append(rel)
-            if rec:
-                pstats[rel] = rec
-    shutil.rmtree(staging, ignore_errors=True)
+    try:
+        writer.parquet(staging)
+        os.makedirs(data_dir, exist_ok=True)
+        for root, _dirs, fns in sorted(os.walk(staging)):
+            rel_dir = os.path.relpath(root, staging)
+            parts = () if rel_dir == "." else tuple(rel_dir.split(os.sep))
+            for fn in sorted(fns):
+                if not fn.endswith(".parquet"):
+                    continue
+                rec = {}
+                for part in parts:
+                    k, _, raw = part.partition("=")
+                    # Spark Hive-escapes special chars in dir names (the
+                    # ':' in the synthetic key becomes %3A) — unquote BOTH
+                    k = urllib.parse.unquote(k)
+                    if k not in meta or raw == "__HIVE_DEFAULT_PARTITION__":
+                        continue  # null tuple value: unprunable on this field
+                    t, p, dt = meta[k]
+                    v = _pvalue_parse(t, p, urllib.parse.unquote(raw), dt)
+                    if v is not None:
+                        rec[k] = [v, v]
+                dst = f"{uuid.uuid4().hex}.parquet"
+                os.replace(os.path.join(root, fn), os.path.join(data_dir, dst))
+                rel = os.path.join("data", dst)
+                new_files.append(rel)
+                if rec:
+                    pstats[rel] = rec
+    finally:
+        shutil.rmtree(staging, ignore_errors=True)
     return new_files, pstats
 
 
@@ -3153,7 +3197,13 @@ def _plan_pruned_files(
     files (scripts/manifest_scale.py) — then per-file stats inside the
     loaded shards refine as usual. The returned read_manifest carries the
     scalar fields plus exactly the loaded shards' dvs, so _read_files
-    anti-applies deletion vectors for every kept file."""
+    anti-applies deletion vectors for every kept file.
+
+    The one file planner: the pruned readers, the DV writers and the
+    copy-on-write writers (merge, delete_where, update_where,
+    replace_where) all plan here. A copy-on-write writer reads and
+    rewrites the kept files and carries the manifest's other files by
+    reference."""
     pcol = _phys(m, col)
     # the raw-column probe plus every partition-transform derivation the
     # table's spec vintages admit: a file (or whole shard) is skipped when
@@ -3208,6 +3258,16 @@ def _plan_pruned_files(
         # (read_version_bloom_pruned) can refine the range-kept set
         read_m["blooms"] = blooms
     return read_m, kept, skipped, total
+
+
+def _split_touched(path: str, m: dict, col: str, lo, hi):
+    """(touched, untouched) for a copy-on-write writer on a materialized
+    manifest: the files _plan_pruned_files keeps for `col BETWEEN lo AND
+    hi`, which the writer reads and rewrites, and the rest, which it
+    carries by reference."""
+    _, touched, _, _ = _plan_pruned_files(path, m, col, lo, hi)
+    kept = set(touched)
+    return touched, [f for f in m["files"] if f not in kept]
 
 
 def read_version_pruned(
@@ -3360,13 +3420,11 @@ def read_version_bloom_pruned(
         sc = bmap.get(f)
         bloom = None
         if sc is not None and value is not None:
-            if sc not in sidecars:
-                try:
-                    with open(os.path.join(path, sc), encoding="utf-8") as fh:
-                        sidecars[sc] = json.load(fh)
-                except (OSError, json.JSONDecodeError):
-                    sidecars[sc] = {}  # damaged sidecar: degrade to reads
-            bloom = sidecars[sc].get(f, {}).get(_phys(m, col))
+            bloom = (
+                _load_bloom_sidecar(path, sc, sidecars)
+                .get(f, {})
+                .get(_phys(m, col))
+            )
         if bloom is not None and not _bloom_might_contain(bloom, value):
             continue  # provably lacks `value`
         kept.append(f)
@@ -3607,7 +3665,10 @@ def table_detail(path: str, version: int | None = None) -> dict:
     referenced bloom sidecars and one os.stat per data file — no Spark
     session, no data-file reads. At 10^5 files the stat pass is the same
     O(files) cost class as the vacuum/compaction maintenance calls this
-    sits beside; every other field is manifest-resident."""
+    sits beside; every other field is manifest-resident.
+    "stats_columns" and "bloom_columns" are the columns the live files
+    carry (_tracked_columns), in the same LOGICAL names as "columns" —
+    a rename shows the new name."""
     head = current_version(path)
     base = _open_base(path, version=version)
     v, m = base.version, base.m
@@ -3618,19 +3679,9 @@ def table_detail(path: str, version: int | None = None) -> dict:
             size += os.stat(os.path.join(path, f)).st_size
         except FileNotFoundError:
             missing += 1  # vacuumed history: report, don't raise
-    stats_cols: set = set()
-    for rec in (m.get("stats") or {}).values():
-        # protocol-internal keys (the "__v" add-version stamp, "__p:..."
-        # partition tuples) are not user pruning columns — hide them
-        stats_cols.update(c for c in rec if not c.startswith("__"))
-    bloom_cols: set = set()
-    for sc in sorted(set((m.get("blooms") or {}).values())):
-        try:
-            with open(os.path.join(path, sc), encoding="utf-8") as fh:
-                for rec in json.load(fh).values():
-                    bloom_cols.update(rec)
-        except (OSError, json.JSONDecodeError):
-            continue  # damaged/missing sidecar degrades reads, not detail
+    # logical names, like "columns"; a damaged sidecar degrades reads,
+    # not detail
+    stats_cols, bloom_cols = _tracked_columns(path, m, m["files"])
     # deletion vectors: files carrying one + total deleted-row count (the
     # "how much merge-on-read debt has accreted / time to compact()" gauge)
     dv_map = m.get("dvs") or {}
@@ -3657,8 +3708,8 @@ def table_detail(path: str, version: int | None = None) -> dict:
         "missing_files": missing,
         "size_bytes": size,
         "columns": _schema_from_json(m["schema"]).names,
-        "stats_columns": sorted(stats_cols),
-        "bloom_columns": sorted(bloom_cols),
+        "stats_columns": list(stats_cols),
+        "bloom_columns": list(bloom_cols),
         "constraints": dict(m.get("constraints") or {}),
         # only the NON-identity part of the mapping is interesting
         "renamed_columns": {k: p for k, p in cm.items() if k != p},
@@ -3988,6 +4039,8 @@ def _read_files_lineage(
     from pyspark.sql import functions as F
     from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+    if "_row_id" in _schema_from_json(m["schema"]).names:
+        raise ValueError("table has a _row_id column — the name is reserved")
     stats = m.get("stats") or {}
     d = _read_files(
         spark, path, m, files, with_positions=True,
@@ -4017,6 +4070,21 @@ def _read_files_lineage(
     return d.drop(_RID_COL, "__rl_file", "__rl_first", "__dv_file", "__dv_pos")
 
 
+def _rewrite_read(
+    spark: SparkSession, path: str, m: dict, files: list[str]
+) -> tuple[DataFrame, bool]:
+    """(rows of `files`, lineage) for a maintenance rewrite that must not
+    change a row's id (compact, optimize_zorder, purge_dvs, purge_eq).
+    On a row-lineage table the rows are read with their ids as "__rid",
+    so the write (`_rid_materialized=lineage`) stores them in the new
+    files' own bytes: positions change, ids must not. Otherwise the plain
+    read, deletion vectors and equality deletes applied either way."""
+    if not m.get("row_lineage"):
+        return _read_files(spark, path, m, files), False
+    df = _read_files_lineage(spark, path, m, files)
+    return df.withColumnRenamed("_row_id", _RID_COL), True
+
+
 def read_version_lineage(
     spark: SparkSession, path: str, version: int | None = None
 ) -> DataFrame:
@@ -4027,8 +4095,6 @@ def read_version_lineage(
         raise ValueError(
             f"row lineage is not enabled at {path} (enable_row_lineage)"
         )
-    if "_row_id" in _schema_from_json(m["schema"]).names:
-        raise ValueError("table has a _row_id column — the name is reserved")
     return _read_files_lineage(spark, path, m, m["files"])
 
 
@@ -4763,12 +4829,13 @@ def merge(
     clauses are ("delete", cond) or ("update", cond, {col: expr-over-t}).
 
     Pruning shape (the 100 TB point): when there are NO not-matched-by-
-    source clauses, only target files whose recorded `key` range
-    intersects the SOURCE key span [min, max] are read and rewritten
-    (range-clustered on `key`, with fresh `key` stats); every
-    provably-disjoint file rides into the new version BY REFERENCE via
-    write_version_parts — a CDC batch against a key-clustered table costs
-    O(overlapping files), not O(table). Not-matched-by-source clauses
+    source clauses, only target files whose recorded `key` range or
+    partition tuple meets the SOURCE key span [min, max]
+    (_plan_pruned_files; an all-NULL source has no span and plans every
+    file) are read and rewritten (range-clustered on `key`, with fresh
+    `key` stats); every provably-disjoint file rides into the new version
+    BY REFERENCE via write_version_parts — a CDC batch against a
+    key-clustered table costs O(overlapping files), not O(table). Not-matched-by-source clauses
     must observe EVERY target row, so their presence forces the full scan
     (the same rule Delta applies). The commit is ONE snapshot (CAS on the base version:
     concurrent writers surface as CommitConflictError, never lost rows),
@@ -4845,7 +4912,7 @@ def merge(
     elif stat["n"] == 0:
         return None  # no source rows, no NMBS clauses: nothing can change
     else:
-        touched, untouched = _split_files_by_range(m, key, stat["lo"], stat["hi"])
+        touched, untouched = _split_touched(path, m, key, stat["lo"], stat["hi"])
         if not touched and not any(True for _ in not_matched):
             return None  # nothing overlaps and inserts are impossible
     if touched:
@@ -4893,28 +4960,6 @@ def merge(
     )
 
 
-def _split_files_by_range(m: dict, col: str, lo, hi) -> tuple[list[str], list[str]]:
-    """(touched, untouched): a file is untouched when its recorded manifest
-    stats for `col` prove it DISJOINT from [lo, hi] (max < lo or min > hi —
-    the read_version_pruned rule); files without usable stats are always
-    touched (read), never skipped, so pruning degrades to a full rewrite,
-    never to a lost row."""
-    stats = m.get("stats", {})
-    pcol = _phys(m, col)  # stats are keyed by stable PHYSICAL names
-    touched: list[str] = []
-    untouched: list[str] = []
-    for f in m["files"]:
-        r = stats.get(f, {}).get(pcol)
-        # disjointness must hold under Spark's widened order too
-        # (_stat_disjoint), or a >2^53 mixed-type predicate could skip a
-        # file whose rows Spark's own comparison would mutate
-        if r is not None and _stat_disjoint(r, lo, hi):
-            untouched.append(f)
-        else:
-            touched.append(f)
-    return touched, untouched
-
-
 def _row_predicate(col: str, lo, hi, condition):
     """`col BETWEEN lo AND hi [AND condition]` as a Column. The range is
     BOTH the row filter and the file-pruning scope — callers never supply
@@ -4943,7 +4988,8 @@ def delete_where(
     """Row-level DELETE on the versioned table — Delta's `DELETE FROM t
     WHERE ...` with MANIFEST-level file pruning: rows matching
     `col BETWEEN lo AND hi [AND condition]` are removed by REWRITING ONLY
-    the data files whose recorded `col` range intersects [lo, hi]; every
+    the data files whose recorded `col` range or partition tuple meets
+    [lo, hi] (_plan_pruned_files); every
     provably-disjoint file rides into the new version BY REFERENCE (never
     read, never rewritten — the write_version_parts shape the SCD2 fold
     uses). On a range-clustered table a narrow delete therefore costs
@@ -4965,7 +5011,7 @@ def delete_where(
 
     base = _open_base(path, branch)
     v, m = base.version, base.m
-    touched, untouched = _split_files_by_range(m, col, lo, hi)
+    touched, untouched = _split_touched(path, m, col, lo, hi)
     if not touched:
         return None  # every file provably disjoint: nothing to delete
     df = _read_files(spark, path, m, touched)
@@ -5431,7 +5477,6 @@ def purge_dvs(
     spark: SparkSession,
     path: str,
     collect_stats: tuple | None = None,
-    collect_blooms: tuple | None = None,
 ) -> int | None:
     """Materialize the deletion-vector debt: rewrite ONLY the files that
     carry a vector (their survivors become fresh files), carrying every
@@ -5444,62 +5489,28 @@ def purge_dvs(
     compact() contract). Returns the committed version, or None when no
     file carries a vector.
 
-    `collect_stats=None` / `collect_blooms=None` re-collect, for the
-    rewritten files, stats and blooms for every LOGICAL column the parent
-    manifest already tracked on them — a purged table keeps BOTH pruning
-    structures like the original (losing the bloom half silently would
-    turn every later point lookup into a read of the purged files,
-    forever); pass tuples to override."""
+    The rewritten files get stats and blooms for every LOGICAL column the
+    parent tracked on them (_tracked_columns) — a purged table keeps BOTH
+    pruning structures like the original (losing the bloom half silently
+    would turn every later point lookup into a read of the purged files,
+    forever). A `collect_stats` tuple overrides the stats half; row ids
+    survive on row-lineage tables (_rewrite_read)."""
     base = _open_base(path, create=True)
     v, m = base.version, base.m
-    dv_files = sorted(f for f in (m.get("dvs") or {}) if f in set(m["files"]))
+    dvs = m.get("dvs") or {}
+    dv_files = [f for f in sorted(m["files"]) if f in dvs]
     if not dv_files:
         return None
-    reuse = [f for f in m["files"] if f not in set(dv_files)]
-    lineage = bool(m.get("row_lineage"))
-    if lineage:
-        # survivors keep their ids: read with lineage, materialize into
-        # the rewritten files' own bytes (positions change, ids must not)
-        survivors = _read_files_lineage(spark, path, m, dv_files).withColumnRenamed(
-            "_row_id", _RID_COL
-        )
-    else:
-        survivors = _read_files(spark, path, m, dv_files)  # vectors applied
-    cm_inv = {p: c for c, p in (m.get("colmap") or {}).items()}
-    if collect_stats is None:
-        phys_cols: set = set()
-        for f in dv_files:
-            phys_cols.update(
-                c
-                for c in (m.get("stats") or {}).get(f, {})
-                if not c.startswith("__")  # synthetic keys ('__v', '__p:*')
-            )
-        collect_stats = tuple(sorted(cm_inv.get(p, p) for p in phys_cols))
-    if collect_blooms is None:
-        # bloom columns live in the referenced sidecars (a small set —
-        # content shared across files); one driver-side pass recovers them
-        bmap = m.get("blooms") or {}
-        bloom_phys: set = set()
-        sidecars: dict = {}
-        for f in dv_files:
-            sc = bmap.get(f)
-            if sc is None:
-                continue
-            if sc not in sidecars:
-                try:
-                    with open(os.path.join(path, sc), encoding="utf-8") as fh:
-                        sidecars[sc] = json.load(fh)
-                except (OSError, json.JSONDecodeError):
-                    sidecars[sc] = {}
-            bloom_phys.update(sidecars[sc].get(f, {}))
-        collect_blooms = tuple(sorted(cm_inv.get(p, p) for p in bloom_phys))
+    reuse = [f for f in m["files"] if f not in dvs]
+    survivors, lineage = _rewrite_read(spark, path, m, dv_files)
+    stats_cols, bloom_cols = _tracked_columns(path, m, dv_files)
     return write_version_parts(
         [survivors],
         path,
         reuse_files=reuse,
         expected_version=v,
-        collect_stats=collect_stats,
-        collect_blooms=collect_blooms,
+        collect_stats=stats_cols if collect_stats is None else collect_stats,
+        collect_blooms=bloom_cols,
         _rid_materialized=lineage,
     )
 
@@ -5523,10 +5534,12 @@ def purge_eq(
     commit is EMPTY. Returns the committed version, or None when no live
     delete applies to any file.
 
-    `collect_stats=None` re-collects whatever stat columns the affected
-    files carried (internal __-keys excluded; partition tuples are NOT
-    reconstructed — rewritten files simply stop partition-pruning until
-    the next spec-laid write, the compact()/zorder degradation)."""
+    The rewritten files get stats and blooms for every column the parent
+    tracked on the affected files (_tracked_columns, the purge_dvs rule);
+    a `collect_stats` tuple overrides the stats half. Partition tuples
+    are NOT reconstructed — rewritten files simply stop partition-pruning
+    until the next spec-laid write, the compact()/zorder degradation.
+    Row ids survive on row-lineage tables (_rewrite_read)."""
     base = _open_base(path, create=True)
     v, m = base.version, base.m
     if not m.get("eqdeletes"):
@@ -5540,29 +5553,15 @@ def purge_eq(
         # drop the bookkeeping with a metadata-only commit
         return _commit(path, base, "purge-eq", eqdeletes=[])
     affected_sorted = sorted(affected)
-    lineage = bool(m.get("row_lineage"))
-    if lineage:
-        survivors = _read_files_lineage(
-            spark, path, m, affected_sorted
-        ).withColumnRenamed("_row_id", _RID_COL)
-    else:
-        survivors = _read_files(spark, path, m, affected_sorted)
-    cm_inv = {p: c for c, p in (m.get("colmap") or {}).items()}
-    if collect_stats is None:
-        phys_cols: set = set()
-        for f in affected_sorted:
-            phys_cols.update(
-                c
-                for c in (m.get("stats") or {}).get(f, {})
-                if not c.startswith("__")
-            )
-        collect_stats = tuple(sorted(cm_inv.get(p, p) for p in phys_cols))
+    survivors, lineage = _rewrite_read(spark, path, m, affected_sorted)
+    stats_cols, bloom_cols = _tracked_columns(path, m, affected_sorted)
     return write_version_parts(
         [survivors],
         path,
         reuse_files=sorted(clean),
         expected_version=v,
-        collect_stats=collect_stats,
+        collect_stats=stats_cols if collect_stats is None else collect_stats,
+        collect_blooms=bloom_cols,
         eqdeletes=[],  # every affected file rewritten: all entries dead
         _rid_materialized=lineage,
     )
@@ -5604,7 +5603,7 @@ def update_where(
     )
     if unknown:
         raise ValueError(f"UPDATE assigns unknown columns {unknown}")
-    touched, untouched = _split_files_by_range(m, col, lo, hi)
+    touched, untouched = _split_touched(path, m, col, lo, hi)
     if not touched:
         return None
     df = _read_files(spark, path, m, touched)
@@ -5694,7 +5693,7 @@ def replace_where(
             f"{' AND <condition>' if condition is not None else ''}); "
             f"offending row: {stray[0]}"
         )
-    touched, untouched = _split_files_by_range(m, col, lo, hi)
+    touched, untouched = _split_touched(path, m, col, lo, hi)
     parts = []
     if touched:
         survivors = _read_files(spark, path, m, touched).filter(
@@ -5726,18 +5725,10 @@ def compact(
     the commit carries the snapshot's expected_version so a concurrent
     writer's commit surfaces as CommitConflictError instead of being
     silently clobbered (retry by re-running: compaction is idempotent
-    work, not state)."""
-    base = _open_base(path, materialize=False, create=True)
-    lineage = bool(base.m.get("row_lineage"))
-    if lineage:
-        # row lineage: compaction must not change a single row's id — the
-        # rewrite reads rows WITH their ids and materializes them into the
-        # new files' own bytes (the "__ridm" channel)
-        snap = read_version_lineage(spark, path, base.version).withColumnRenamed(
-            "_row_id", _RID_COL
-        )
-    else:
-        snap = read_version(spark, path, base.version or None)
+    work, not state). Row ids survive on row-lineage tables
+    (_rewrite_read)."""
+    base = _open_base(path, refuse_empty=True)
+    snap, lineage = _rewrite_read(spark, path, base.m, base.m["files"])
     # collect_stats: OPTIMIZE re-collects manifest column stats for the
     # rewritten files (an overwrite cannot inherit per-file ranges — the
     # files are new), so a pruned table stays pruned across compactions
@@ -5757,74 +5748,45 @@ def optimize_zorder(
     path: str,
     cols: tuple,
     target_files: int = 8,
-    collect_stats: tuple | None = None,
-    collect_blooms: tuple | None = None,
 ) -> int:
     """OPTIMIZE ... ZORDER BY on the versioned table (Delta's flagship
     maintenance command): rewrite the head snapshot MORTON-clustered on
     `cols` into ~`target_files` key-range files and commit as one
-    overwrite version with fresh manifest stats on exactly those columns
-    — after it, read_version_pruned skips files on EVERY zorder column
-    (a linear sort covers one), which is what multi-dimension point/range
-    workloads need at 100 TB. Rows are bit-identical to the pre-optimize
-    VISIBLE set (deletion vectors are applied by the snapshot read and
-    cleared by the rewrite — OPTIMIZE doubles as a full purge), so the
-    change feed across the commit is EMPTY. Scale shape: one sampled
-    quantile-cuts pass + one range exchange (zorder_cluster's window-free
-    discipline, shared with zorder_write — no global sort, no ntile
-    window); conflict safety via the snapshot-version CAS like compact().
+    overwrite version with fresh manifest stats — after it,
+    read_version_pruned skips files on EVERY zorder column (a linear sort
+    covers one), which is what multi-dimension point/range workloads need
+    at 100 TB. Rows are bit-identical to the pre-optimize VISIBLE set
+    (deletion vectors are applied by the snapshot read and cleared by the
+    rewrite — OPTIMIZE doubles as a full purge), so the change feed
+    across the commit is EMPTY. Scale shape: one sampled quantile-cuts
+    pass + one range exchange (zorder_cluster's window-free discipline,
+    shared with zorder_write — no global sort, no ntile window); conflict
+    safety via the snapshot-version CAS like compact().
 
-    `collect_stats=None` / `collect_blooms=None` keep EVERY pruning
-    structure the parent tracked (stats columns from the parent manifest
-    UNION the zorder columns; bloom columns from the referenced sidecars
-    — the purge_dvs convention): OPTIMIZE rewrites 100% of files, so
-    defaulting to zorder-only stats would silently retire every other
-    column's file skipping forever. Pass tuples to override."""
+    The new files keep EVERY pruning structure the parent tracked: stats
+    on the zorder columns UNION the parent's stats columns, and blooms on
+    the parent's bloom columns (_tracked_columns, the purge_dvs rule).
+    OPTIMIZE rewrites 100% of files, so zorder-only stats would silently
+    retire every other column's file skipping forever. Row ids survive on
+    row-lineage tables (_rewrite_read)."""
     from tts_etl_pipeline_spark.sources.zorder import zorder_cluster
 
     if target_files < 1:
         raise ValueError("target_files must be >= 1")
-    base = _open_base(path, create=True)
+    base = _open_base(path, refuse_empty=True)
     m = base.m
-    lineage = bool(m.get("row_lineage"))
-    if lineage:
-        # the re-cluster moves every row between files: ids materialize
-        # into the new files' bytes, the only way they can survive
-        snap = read_version_lineage(spark, path, base.version).withColumnRenamed(
-            "_row_id", _RID_COL
-        )
-    else:
-        snap = read_version(spark, path, base.version or None)
+    snap, lineage = _rewrite_read(spark, path, m, m["files"])
     missing = [c for c in cols if c not in snap.columns]
     if missing:
         raise ValueError(f"zorder columns not in the table: {missing}")
-    cm_inv = {p: c for c, p in (m.get("colmap") or {}).items()}
-    if collect_stats is None:
-        phys_cols: set = set()
-        for rec in (m.get("stats") or {}).values():
-            phys_cols.update(c for c in rec if not c.startswith("__"))
-        collect_stats = tuple(
-            sorted(set(cols) | {cm_inv.get(p, p) for p in phys_cols})
-        )
-    if collect_blooms is None:
-        bloom_phys: set = set()
-        sidecars: dict = {}
-        for f, sc in (m.get("blooms") or {}).items():
-            if sc not in sidecars:
-                try:
-                    with open(os.path.join(path, sc), encoding="utf-8") as fh:
-                        sidecars[sc] = json.load(fh)
-                except (OSError, json.JSONDecodeError):
-                    sidecars[sc] = {}
-            bloom_phys.update(sidecars[sc].get(f, {}))
-        collect_blooms = tuple(sorted(cm_inv.get(p, p) for p in bloom_phys))
+    stats_cols, bloom_cols = _tracked_columns(path, m, m["files"])
     return write_version(
         zorder_cluster(snap, list(cols), target_files),
         path,
         mode="overwrite",
         expected_version=base.version,
-        collect_stats=collect_stats,
-        collect_blooms=collect_blooms,
+        collect_stats=tuple(sorted(set(cols) | set(stats_cols))),
+        collect_blooms=bloom_cols,
         _rid_materialized=lineage,
     )
 

@@ -45,6 +45,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from tts_etl_pipeline_spark.sources.versioned import _stat_disjoint
+
 Z_BITS = 8  # 256 rank cells per column; 2 cols -> 16-bit Morton key
 SAMPLE_ROWS = 65_536  # bounded cut-point sample per column (control-plane)
 
@@ -321,10 +323,12 @@ def file_column_ranges(path: str, cols: Sequence[str]) -> list[dict]:
 
 def pruning_ratio(ranges: list[dict], col: str, lo, hi) -> float:
     """Fraction of files a reader can SKIP for `col BETWEEN lo AND hi`
-    using footer stats alone (None stats = unprunable)."""
+    using footer stats alone (None stats = unprunable), by the versioned
+    table's skip rule (`_stat_disjoint`: disjoint in the exact and the
+    float-widened order; a cross-type probe skips nothing)."""
     skipped = 0
     for rec in ranges:
         r = rec.get(col)
-        if r is not None and (r[1] < lo or r[0] > hi):
+        if r is not None and _stat_disjoint(r, lo, hi):
             skipped += 1
     return skipped / max(1, len(ranges))
